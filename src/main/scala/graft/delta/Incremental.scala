@@ -13,13 +13,10 @@ import org.apache.spark.sql.functions._
   * (`<=>`) per column or all-null delay rows would never match and the delta
   * would grow without bound (SURVEY.md §7.4).
   *
-  * SCALE NOTE: whole-row anti join shuffles both sides on all columns. At
-  * 100 TB this is the dominant cost of an incremental load, so [[delta]]
-  * first hash-reduces each row to one 64-bit column when `hashReduce` is on:
-  * the shuffle then moves (hash, row) with the join on the hash — same
-  * result for exact-duplicate semantics, a fraction of the comparison cost.
-  * Better still is partition-pruned delta (only anti-join the date
-  * partitions the increment touches) — exposed via `partitionPruneOn`.
+  * SCALE NOTE: whole-row anti join shuffles both sides on all columns
+  * (or broadcasts the smaller side). At 100 TB this is the dominant cost of
+  * an incremental load; [[deltaPartitionPruned]] bounds it by anti-joining
+  * only the partitions of the accumulated table that the increment touches.
   */
 object Incremental {
 

@@ -1,22 +1,29 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.storage.StorageLevel
 
 import graft.delta.Incremental
 import graft.dims.Dims
 import graft.fact.FlightFact
 import graft.quality.Quality
-import graft.sources.Sources
 
-/** The reference's entire Airflow DAG (SURVEY.md §3.1) as ONE lazy Spark
-  * composition: extract -> dimension builds -> quality gates -> fact
-  * assembly -> incremental delta -> curated sinks.
+/** The reference's entire Airflow DAG (SURVEY.md §3.1) in one Spark
+  * session: extract -> dimension builds -> quality gates -> fact assembly
+  * -> incremental delta -> curated sinks.
   *
-  * Where the reference serializes every task boundary through XCom/Postgres
-  * (a full table round-trip per arrow), here each arrow is just a DataFrame
-  * reference: Catalyst plans the whole graph at once, and with broadcast
-  * dimension joins the main ETL executes with zero wide shuffles until the
-  * fact write (SURVEY.md §3.1 "thread/process/node boundaries").
+  * The reference re-reads the raw month in every task and serializes every
+  * task boundary through XCom/Postgres. [[build]] wires the tables as lazy
+  * DataFrames over shared inputs, and [[run]] shares the frames that more
+  * than one step reads: it persists the raw flights batch and the
+  * airports, dates and delays dimensions (each read by the quality gate,
+  * its own publish and the fact's broadcast FK joins), so one load parses
+  * the flights CSV once and builds each dimension once. Those caches live
+  * for one run: `run` unpersists them when it returns or fails, and only
+  * the frames it cached itself — an input the caller cached stays cached.
   */
 object Pipeline {
 
@@ -24,7 +31,14 @@ object Pipeline {
   final case class Warehouse(
       airports: DataFrame, carriers: DataFrame, time: DataFrame,
       dates: DataFrame, cancellations: DataFrame, delays: DataFrame,
-      flights: DataFrame)
+      flights: DataFrame) {
+
+    /** Every table under its published name (the keys of `Schemas.star`). */
+    def byName: Seq[(String, DataFrame)] = Seq(
+      "airports" -> airports, "air_carriers" -> carriers, "time" -> time,
+      "date" -> dates, "cancelations" -> cancellations, "delays" -> delays,
+      "flights" -> flights)
+  }
 
   /** Build every curated table from the raw inputs (no I/O triggered). */
   def build(spark: SparkSession, flightsRaw: DataFrame,
@@ -45,7 +59,6 @@ object Pipeline {
   /** Quality gates for every dimension (single scan per table); returns the
     * union of violations — empty means the warehouse is publishable. */
   def qualityReport(w: Warehouse): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val reports = Seq(
       "airports" -> Quality.report(w.airports, Quality.presets.airportDim),
       "date" -> Quality.report(w.dates, Quality.presets.dateDim),
@@ -58,20 +71,24 @@ object Pipeline {
 
   /** Incremental publish of one curated table: anti-join the accumulated
     * parquet, append only the delta (the reference's add_changes_to_* x6,
-    * ET:333-499, with intended — not inverted — emptiness semantics). */
+    * ET:333-499, with intended — not inverted — emptiness semantics).
+    * Returns the rows appended, counted by an observation on the write
+    * itself: one job, no persist, and exact under task retries.
+    *
+    * The append always runs, so a table's directory exists after its first
+    * publish even when the table is empty. An empty delta leaves no rows on
+    * disk and at most one schema-only part file (the write's first task
+    * writes one when no task has rows). */
   def publishIncremental(spark: SparkSession, table: DataFrame,
                          path: String): Long = {
     val delta = readAccumulated(spark, path) match {
       case Some(acc) => Incremental.delta(table, acc)
       case None => table
     }
-    // persist so count + write execute the (expensive) anti-join once
-    delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = delta.count()
-      if (n > 0) delta.write.mode("append").parquet(path)
-      n
-    } finally delta.unpersist()
+    val appended = Observation()
+    delta.observe(appended, count(lit(1)).as("rows"))
+      .write.mode("append").parquet(path)
+    appended.get("rows").asInstanceOf[Long]
   }
 
   /** The accumulated table, or None when there is genuinely no data yet:
@@ -94,20 +111,29 @@ object Pipeline {
     * `outDir`, register SQL views. Returns per-table appended row counts. */
   def run(spark: SparkSession, flightsRaw: DataFrame, airportsRaw: DataFrame,
           carriersRaw: DataFrame, outDir: String): Map[String, Long] = {
-    val w = build(spark, flightsRaw, airportsRaw, carriersRaw)
-    val violations = qualityReport(w)
-      .where(org.apache.spark.sql.functions.col("violations") > 0)
-    require(violations.isEmpty,
-      s"quality gate failed:\n${violations.collect().mkString("\n")}")
-    val tables = Map(
-      "airports" -> w.airports, "air_carriers" -> w.carriers,
-      "time" -> w.time, "date" -> w.dates,
-      "cancelations" -> w.cancellations, "delays" -> w.delays,
-      "flights" -> w.flights)
-    val counts = tables.map { case (name, df) =>
-      name -> publishIncremental(spark, df, s"$outDir/$name")
+    val cachedHere = mutable.ArrayBuffer.empty[DataFrame]
+    def shared(df: DataFrame): DataFrame = {
+      if (df.storageLevel == StorageLevel.NONE) {
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+        cachedHere += df
+      }
+      df
     }
-    graft.warehouse.Warehouse.registerStar(spark, outDir)
-    counts
+    try {
+      // flights first, so the dimension caches are built from its cache
+      val w = build(spark, shared(flightsRaw), airportsRaw, carriersRaw)
+      Seq(w.airports, w.dates, w.delays).foreach(shared)
+      val failed = qualityReport(w).where(col("violations") > 0).collect()
+      require(failed.isEmpty, s"quality gate failed:\n${failed.mkString("\n")}")
+      val counts = w.byName.map { case (name, df) =>
+        name -> publishIncremental(spark, df, s"$outDir/$name")
+      }.toMap
+      graft.warehouse.Warehouse.registerStar(spark, outDir)
+      counts
+    } finally {
+      // dependents first: uncaching flights while a dimension cache built
+      // from it is still registered would make Spark re-plan that cache
+      cachedHere.reverseIterator.foreach(_.unpersist())
+    }
   }
 }

@@ -1,5 +1,7 @@
 package graft.schemas
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.types._
 
 /** Explicit StructTypes for every source and curated table.
@@ -83,4 +85,36 @@ object Schemas {
     StructField("is_weekday", BooleanType),
     StructField("quarter", IntegerType),
     StructField("full_date", DateType)))
+
+  val cancellationDim: StructType = StructType(Seq(
+    StructField("cancelation_id_pk", LongType, nullable = false),
+    StructField("is_canceled", DoubleType),
+    StructField("cancellation_code", StringType)))
+
+  val delayDim: StructType = StructType(
+    StructField("delay_id_pk", LongType, nullable = false) +:
+      Seq("carrier_delay", "weather_delay", "nas_delay", "security_delay",
+        "late_aircraft_delay", "other_type_delay")
+        .map(StructField(_, DoubleType, nullable = false)))
+
+  val flightFact: StructType = StructType(Seq(
+    StructField("air_carrier_id_fk", LongType),
+    StructField("departure_delay", DoubleType),
+    StructField("arrival_delay", DoubleType),
+    StructField("arrival_airport_id_fk", LongType),
+    StructField("destination_airport_id_fk", LongType),
+    StructField("date_id_fk", LongType),
+    StructField("delay_id_fk", LongType),
+    StructField("departure_time_fk", LongType, nullable = false),
+    StructField("departure_final_time_fk", LongType, nullable = false),
+    StructField("arrival_time_fk", LongType, nullable = false),
+    StructField("arrivel_final_time_fk", LongType, nullable = false)))
+
+  /** The published star schema: each curated table under the directory and
+    * view name `Pipeline.run` gives it. Stored tables read back with these
+    * schemas made nullable (parquet readers relax nullability). */
+  val star: ListMap[String, StructType] = ListMap(
+    "flights" -> flightFact, "date" -> dateDim, "time" -> timeDim,
+    "airports" -> airportDim, "air_carriers" -> carrierDim,
+    "cancelations" -> cancellationDim, "delays" -> delayDim)
 }

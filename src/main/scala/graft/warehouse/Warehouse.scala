@@ -2,6 +2,7 @@ package graft.warehouse
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.schemas.Schemas
 import graft.sources.Sources
 
 /** SQL surface over the warehouse (SURVEY.md §3.3).
@@ -40,13 +41,15 @@ object Warehouse {
     }
   }
 
-  /** Register curated star-schema tables from a directory of parquet. */
+  /** Register curated star-schema tables from a directory of parquet, each
+    * read with its declared schema ([[Schemas.star]]): no parquet footer is
+    * read to infer it, so registering starts no Spark job. */
   def registerStar(spark: SparkSession, dir: String,
-                   tables: Seq[String] = Seq(
-                     "flights", "date", "time", "airports",
-                     "air_carriers", "cancelations", "delays")): Unit =
+                   tables: Seq[String] = Schemas.star.keys.toSeq): Unit =
     tables.foreach { t =>
-      spark.read.parquet(s"$dir/$t").createOrReplaceTempView(t)
+      val schema = Schemas.star.getOrElse(t,
+        throw new IllegalArgumentException(s"$t is not a star-schema table"))
+      spark.read.schema(schema).parquet(s"$dir/$t").createOrReplaceTempView(t)
     }
 
   /** ANSI SQL passthrough. */
