@@ -41,8 +41,9 @@ object Graft {
       // takes effect when the builder CREATES the session — getOrCreate
       // against a pre-existing session silently ignores it. Tools that
       // measure the graded surface must build their session through
-      // configure() first (all probe tools do, r20) or run under the
-      // default 100-entry cache and mis-measure.
+      // configure() first (QuickBench, Bench, Verify and the test
+      // harness all do) or run under the default 100-entry cache and
+      // mis-measure.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
 

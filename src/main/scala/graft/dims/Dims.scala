@@ -1,6 +1,6 @@
 package graft.dims
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -99,27 +99,33 @@ object Dims {
     "carrier_delay", "weather_delay", "nas_delay",
     "security_delay", "late_aircraft_delay", "other_type_delay")
 
-  /** DelayDim (ET:269-288): impute ACTUAL from CRS elapsed, zero-fill,
-    * derive other_type_delay = ACTUAL - CRS, dedup the 6 delay values,
-    * surrogate-key by value order (the reference's positional `df.index`
-    * key dangles post-dedup — bug #10; value-ordering is the deterministic
-    * distributed replacement, and FlightFact recovers the FK by value join). */
+  /** The delay natural key computed from raw BTS flight columns (ET:269-288),
+    * as (name, value) pairs in `delayValueCols` order: ACTUAL elapsed time
+    * imputed from CRS, every input zero-filled, and other_type_delay =
+    * ACTUAL - CRS. NULL and NaN are both missing, as in the reference's
+    * pandas `fillna`, so a literal `NaN` in the CSV keys like an empty cell.
+    * The one rule both the delay dimension and the fact's FK join use. */
+  val delayValues: Seq[(String, Column)] = {
+    def value(c: String): Column =
+      nanvl(col(c).cast(DoubleType), lit(null).cast(DoubleType))
+    val crs = coalesce(value("CRS_ELAPSED_TIME"), lit(0.0))
+    val actual = coalesce(value("ACTUAL_ELAPSED_TIME"),
+      value("CRS_ELAPSED_TIME"), lit(0.0))
+    val delays = Seq("CARRIER_DELAY", "WEATHER_DELAY", "NAS_DELAY",
+      "SECURITY_DELAY", "LATE_AIRCRAFT_DELAY")
+      .map(c => coalesce(value(c), lit(0.0)))
+    delayValueCols.zip(delays :+ (actual - crs))
+  }
+
+  /** DelayDim (ET:269-288): dedup the 6 [[delayValues]], surrogate-key by
+    * value order (the reference's positional `df.index` key dangles
+    * post-dedup — bug #10; value-ordering is the deterministic distributed
+    * replacement, and FlightFact recovers the FK by value join). */
   def delays(flightsRaw: DataFrame): DataFrame = {
-    val imputed = flightsRaw
-      .select(
-        col("CRS_ELAPSED_TIME").cast(DoubleType).as("crs"),
-        col("ACTUAL_ELAPSED_TIME").cast(DoubleType).as("actual"),
-        col("CARRIER_DELAY").cast(DoubleType).as("carrier_delay"),
-        col("WEATHER_DELAY").cast(DoubleType).as("weather_delay"),
-        col("NAS_DELAY").cast(DoubleType).as("nas_delay"),
-        col("SECURITY_DELAY").cast(DoubleType).as("security_delay"),
-        col("LATE_AIRCRAFT_DELAY").cast(DoubleType).as("late_aircraft_delay"))
-      .withColumn("actual", coalesce(col("actual"), col("crs")))
-      .na.fill(0.0)
-      .withColumn("other_type_delay", col("actual") - col("crs"))
-      .drop("crs", "actual")
+    val values = flightsRaw
+      .select(delayValues.map { case (n, v) => v.as(n) }: _*)
       .dropDuplicates()
-    withSurrogateKey(imputed, "delay_id_pk", delayValueCols.map(col): _*)
+    withSurrogateKey(values, "delay_id_pk", delayValueCols.map(col): _*)
       .select(("delay_id_pk" +: delayValueCols).map(col): _*)
   }
 }

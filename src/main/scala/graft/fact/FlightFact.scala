@@ -58,17 +58,9 @@ object FlightFact {
       .withColumnRenamed("OP_CARRIER_AIRLINE_ID", "air_carrier_id_fk")
 
     // J6: delay FK by VALUE join on the 6 delay columns (the distributed
-    // replacement for the reference's positional df.index, bug #10). Recompute
-    // the same imputation the delay dim applied, then equi-join.
-    val withDelayVals = withCarrier
-      .withColumn("carrier_delay", coalesce(col("CARRIER_DELAY").cast(DoubleType), lit(0.0)))
-      .withColumn("weather_delay", coalesce(col("WEATHER_DELAY").cast(DoubleType), lit(0.0)))
-      .withColumn("nas_delay", coalesce(col("NAS_DELAY").cast(DoubleType), lit(0.0)))
-      .withColumn("security_delay", coalesce(col("SECURITY_DELAY").cast(DoubleType), lit(0.0)))
-      .withColumn("late_aircraft_delay", coalesce(col("LATE_AIRCRAFT_DELAY").cast(DoubleType), lit(0.0)))
-      .withColumn("other_type_delay",
-        coalesce(col("ACTUAL_ELAPSED_TIME").cast(DoubleType), col("CRS_ELAPSED_TIME").cast(DoubleType), lit(0.0))
-          - coalesce(col("CRS_ELAPSED_TIME").cast(DoubleType), lit(0.0)))
+    // replacement for the reference's positional df.index, bug #10): the
+    // same Dims.delayValues rule the delay dim keyed on, then equi-join.
+    val withDelayVals = withCarrier.withColumns(Dims.delayValues.toMap)
     // Deduped delay dim is ~70k rows for 700k flights — broadcastable at
     // reference scale; at 100 TB AQE picks SMJ/shuffle-hash automatically.
     val withDelayFk = withDelayVals

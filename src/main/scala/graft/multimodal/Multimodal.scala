@@ -2709,53 +2709,9 @@ object Multimodal {
     }
   }
 
-  /** One sampled video frame (frame payload hashed — a real decoder would
-    * attach the pixel tensor). */
-  case class MediaFrame(media_id: Long, frame_idx: Int, frame_bytes: Long,
-                        frame_md5: String)
-
   private def md5hex(bytes: Array[Byte]): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(bytes).map("%02x".format(_)).mkString
-
-  /** STUB resize: a real implementation decodes pixels and rescales; the
-    * stub stride-samples the byte payload down to ~targetBytes. Byte-level
-    * media work lives in the `mapPartitions` decoder path (same place a
-    * codec would run), NOT in SQL expressions — the plumbing (binary in,
-    * smaller binary out, per-partition batching) is the real part. */
-  def resizeStub(spark: SparkSession, media: DataFrame,
-                 targetBytes: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    media.select("media_id", "kind", "content").as[MediaRow]
-      .mapPartitions { it =>
-        it.map { r =>
-          val stride =
-            math.max(1, (r.content.length + targetBytes - 1) / targetBytes)
-          r.copy(content =
-            r.content.grouped(stride).map(_.head).toArray)
-        }
-      }
-  }
-
-  /** STUB frame sampling for video-kind blobs: frames modeled as fixed-size
-    * byte windows; keeps every `everyNth` frame as (index, size, hash). One
-    * output row per kept frame — the explode-shaped decode that a real
-    * keyframe sampler produces. */
-  def frameSample(spark: SparkSession, media: DataFrame,
-                  frameBytes: Int, everyNth: Int): Dataset[MediaFrame] = {
-    import spark.implicits._
-    require(frameBytes > 0 && everyNth > 0)
-    media.select("media_id", "kind", "content").as[MediaRow]
-      .filter(_.kind == "video")
-      .mapPartitions { it =>
-        it.flatMap { r =>
-          r.content.grouped(frameBytes).zipWithIndex.collect {
-            case (frame, i) if i % everyNth == 0 =>
-              MediaFrame(r.media_id, i, frame.length.toLong, md5hex(frame))
-          }
-        }
-      }
-  }
 
   /** Batch feature extraction: `mapPartitions` so decoder init happens once
     * per partition (the pandas-UDF batch analogue). Repartitions to

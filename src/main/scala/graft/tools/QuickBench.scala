@@ -13,6 +13,9 @@ import org.apache.spark.sql.SparkSession
   * Bench's (no suite-wide JIT warmup); only same-harness ratios are.
   *
   * Usage: runMain graft.tools.QuickBench [sfDir] [q1,q2,...] [runs]
+  *        runMain graft.tools.QuickBench <sfDir> <q1,q2,...> explain
+  * (`explain` prints each query's formatted physical plan instead of
+  * timing it.)
   */
 object QuickBench {
   def main(args: Array[String]): Unit = {

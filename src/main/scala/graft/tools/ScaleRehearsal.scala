@@ -675,7 +675,7 @@ object ScaleRehearsal {
           .count()
         println(s"[rehearsal]   learned=$n (k=$k, driver loop)")
       }
-    for (k <- Seq(6, 64))
+    for (k <- Seq(6, 64, 256))
       timed(s"bpe learnMerges DISTRIBUTED path k=$k") {
         val n = graft.text.Bpe.learnMerges(bpePrepped, "bpe_text", k,
           maxDriverTypes = 0L).count()

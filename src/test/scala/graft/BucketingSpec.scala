@@ -9,6 +9,7 @@ class BucketingSpec extends SparkSpec {
 
   test("bucketed tables join without a shuffle exchange") {
     import graft.sources.Sources
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       Sources.table(spark, sf, "lineitem")
@@ -41,7 +42,7 @@ class BucketingSpec extends SparkSpec {
         .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
       assert(joined.exceptAll(want).isEmpty && want.exceptAll(joined).isEmpty)
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.sql("DROP TABLE IF EXISTS li_bucketed")
       spark.sql("DROP TABLE IF EXISTS o_bucketed")
     }

@@ -21,6 +21,10 @@ class FlightFactSpec extends SparkSpec {
       val origin = Seq("JFK", "LAX", "ORD")(i % 3)
       val dest = Seq("LAX", "ORD", "JFK")(i % 3)
       val nullify = i % 7 == 0
+      // a literal NaN in the CSV (the reader's nanValue) is missing, like
+      // NULL: it must key the delay dim and the fact's FK join the same way
+      val nanDelay = i % 11 == 3
+      val nanCrs = i % 13 == 4
       Row(
         date, 19000L + (i % 5), s"N$i", 100L + i,
         1L, 1L, 1L, origin, 2L, 2L, 2L, dest,
@@ -30,9 +34,10 @@ class FlightFactSpec extends SparkSpec {
         if (nullify) null else 1130L: Any,                // ARR_TIME
         if (nullify) null else (i % 90) - 30.0: Any, 0.0, // ARR_DELAY(_NEW)
         0.0, null,                                        // CANCELLED, CODE
-        150.0,
+        if (nanCrs) Double.NaN else 150.0,                // CRS_ELAPSED
         if (nullify) null else 155.0: Any,                // ACTUAL_ELAPSED
-        if (nullify) null else 3.0: Any,                  // CARRIER_DELAY
+        if (nullify) null else if (nanDelay) Double.NaN   // CARRIER_DELAY
+        else 3.0: Any,
         0.0, 1.0, 0.0, if (nullify) null else 2.0: Any,   // other delays
         null)
     }

@@ -3,17 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM-wide session). */
+/** Shared local SparkSession for all suites (one JVM-wide session), built
+  * through [[Graft.configure]] so the specs run under the same session
+  * configuration as Verify, Bench and QuickBench. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val s = Graft.configure(
+      SparkSession.builder().master("local[4]").appName("graft-test"), 4)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

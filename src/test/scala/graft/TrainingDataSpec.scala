@@ -1565,30 +1565,6 @@ class TrainingDataSpec extends SparkSpec {
     assert(bad.isEmpty, bad.limit(5).collect().mkString("; "))
   }
 
-  test("resize stub shrinks payloads toward the target; metadata intact") {
-    val media = Multimodal.asBinaryMedia(docs.limit(20), "doc_id", "text")
-    val resized = Multimodal.resizeStub(spark, media, 16)
-    val sizes = resized.collect().map(r => r.media_id -> r.content.length).toMap
-    assert(sizes.values.forall(n => n > 0 && n <= 16))
-    assert(sizes.keySet === media.select("media_id")
-      .as[Long].collect().toSet)
-  }
-
-  test("frame sampling emits every Nth fixed-size window of video blobs") {
-    val media = Multimodal.asBinaryMedia(docs.limit(30), "doc_id", "text")
-    val frames = Multimodal.frameSample(spark, media, frameBytes = 16, everyNth = 2)
-    val byDoc = frames.collect().groupBy(_.media_id)
-    assert(byDoc.nonEmpty)
-    byDoc.values.foreach { fs =>
-      // only even frame indices kept, hashes deterministic, sizes <= 16
-      assert(fs.forall(f => f.frame_idx % 2 == 0 && f.frame_bytes <= 16))
-    }
-    // video-kind only
-    val kinds = media.where($"kind" =!= "video").select("media_id")
-      .as[Long].collect().toSet
-    assert(byDoc.keySet.intersect(kinds).isEmpty)
-  }
-
   test("fake decoder keeps blob bytes out of the feature output schema") {
     val media = Multimodal.asBinaryMedia(docs.limit(5), "doc_id", "text")
     val out = Multimodal.extractFeatures(spark, media, 2)
