@@ -99,6 +99,12 @@ object Dims {
     "carrier_delay", "weather_delay", "nas_delay",
     "security_delay", "late_aircraft_delay", "other_type_delay")
 
+  /** A raw numeric flight column read as DOUBLE with a literal `NaN`
+    * turned into NULL, so NaN and an empty cell are the same missing value
+    * (the reference's pandas `fillna` view). */
+  def nanAsNull(c: String): Column =
+    nanvl(col(c).cast(DoubleType), lit(null).cast(DoubleType))
+
   /** The delay natural key computed from raw BTS flight columns (ET:269-288),
     * as (name, value) pairs in `delayValueCols` order: ACTUAL elapsed time
     * imputed from CRS, every input zero-filled, and other_type_delay =
@@ -106,8 +112,7 @@ object Dims {
     * pandas `fillna`, so a literal `NaN` in the CSV keys like an empty cell.
     * The one rule both the delay dimension and the fact's FK join use. */
   val delayValues: Seq[(String, Column)] = {
-    def value(c: String): Column =
-      nanvl(col(c).cast(DoubleType), lit(null).cast(DoubleType))
+    def value(c: String): Column = nanAsNull(c)
     val crs = coalesce(value("CRS_ELAPSED_TIME"), lit(0.0))
     val actual = coalesce(value("ACTUAL_ELAPSED_TIME"),
       value("CRS_ELAPSED_TIME"), lit(0.0))

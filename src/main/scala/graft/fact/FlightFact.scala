@@ -70,7 +70,8 @@ object FlightFact {
 
     // Time encodings (P14 faithful, P15) on the four time columns.
     val arrTime  = coalesce(col("ARR_TIME"), lit(0L)).cast(LongType)
-    val arrDelay = coalesce(col("ARR_DELAY"), lit(0.0)).cast(LongType)
+    // NaN is missing like NULL: an ANSI cast of NaN to BIGINT throws
+    val arrDelay = coalesce(Dims.nanAsNull("ARR_DELAY"), lit(0.0)).cast(LongType)
     val crsArr   = minutesDeltaToHhmm(arrTime, arrDelay)
     val encoded = withDelayFk
       .withColumn("departure_time_fk",

@@ -4,10 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.AudioFingerprint
+
 /** WAV-PCM content fingerprinting — the dHash treatment for audio,
   * closing the A/V modality at the same cost shape ([[Multimodal
-  * .avMetadata]] was headers-only; WAV PCM samples are expression-
-  * reachable exactly like BMP pixels).
+  * .avMetadata]] was headers-only; WAV PCM samples need no codec,
+  * exactly like BMP pixels).
   *
   * The fingerprint is a 64-bit FRAME-ENERGY signature: partition the
   * interleaved sample stream into 65 frames (frame(i) = floor(i·65/n) —
@@ -41,245 +43,29 @@ import org.apache.spark.sql.types._
   * per-frame sum itself is exact (integer-valued floats, the oracle's
   * case).
   *
-  * Expression-only: one hex pass (header walk) + one ISO-8859-1 decode
-  * pass (payload byte reads), a 16-round chunk walk (the
-  * [[Multimodal.avMetadata]] fold shape), then a THREE-array decode
-  * pipeline — payload bytes, per-format magnitudes, 65 frame energies —
-  * each stage a let-bound array column so interpreted lambda bodies
-  * read lambda variables instead of re-evaluating upstream stages
-  * (r19: the single-pass form measured 5.7 s for 2000 clips, ~all of
-  * it duplicated interpreted node evals; this shape measures ~3.0 s).
-  * Plan size O(1) in both frame count and sample count (the q133/q166
-  * plan-size discipline), runtime O(samples), no UDF. The ndZero
-  * barrier pins downstream predicates above the parse (the
-  * imageDims-family pushdown lesson); the ndTrue barrier keeps
-  * CollapseProject from inlining the single-use magnitude array into
-  * the per-sample energy lambda (O(n^2) per row without it). */
+  * The decoder is [[parseFingerprint]], exposed as the native
+  * `audio_fingerprint` expression ([[graft.functions.MediaParse]]).
+  */
 object Audio {
 
-  private def ndZero: Column = (rand(19L) * lit(0)).cast(LongType)
-  // always-true but nondeterministic: the array-column barrier (see
-  // __af_mg below) — CollapseProject never inlines a nondeterministic
-  // alias, so the guarded column stays a genuine let-binding
-  private def ndTrue: Column = rand(19L) * lit(0) === lit(0.0)
-
   /** Append `afp: bigint` — the 64-bit frame-energy fingerprint, NULL
-    * outside the documented subset. */
+    * outside the documented subset. `maxBytes` bounds the prefix read
+    * per blob (the data chunk must end inside it); `maxChunks` bounds
+    * the RIFF chunk walk. */
   def audioEnergyFingerprint(media: DataFrame,
                              contentCol: String = "content",
                              maxBytes: Int = 1 << 20,
-                             maxChunks: Int = 16): DataFrame = {
-    require(maxBytes >= 128, s"maxBytes too small: $maxBytes")
-    require(maxChunks >= 1 && maxChunks <= 256, s"maxChunks: $maxChunks")
-    Seq("afp", "__af_hx", "__af_lt", "__af_st", "__af_by", "__af_mg", "__af_e").foreach(c =>
-      require(!media.columns.contains(c),
-        s"Audio.audioEnergyFingerprint: media already has a '$c' column " +
-          "— rename it first; audioEnergyFingerprint appends its own"))
-    val hx = col("__af_hx")
-    // 1-based hex-char positions; byte b (0-based) lives at chars
-    // 2b+1..2b+2 — the avMetadata coordinate system
-    def le16(at: String) =
-      s"""CAST(conv(concat(substring(__af_hx, CAST(($at) AS INT) + 2, 2),
-         |substring(__af_hx, CAST(($at) AS INT), 2)), 16, 10) AS BIGINT)""".stripMargin
-    def le32(at: String) =
-      s"""CAST(conv(concat(substring(__af_hx, CAST(($at) AS INT) + 6, 2),
-         |substring(__af_hx, CAST(($at) AS INT) + 4, 2),
-         |substring(__af_hx, CAST(($at) AS INT) + 2, 2),
-         |substring(__af_hx, CAST(($at) AS INT), 2)), 16, 10) AS BIGINT)""".stripMargin
-    def st(pos: String, afmt: String, bits: String, dpos: String,
-           dsize: String, done: String) =
-      s"""named_struct('pos', $pos, 'afmt', $afmt, 'bits', $bits,
-         |'dpos', $dpos, 'dsize', $dsize, 'done', $done)""".stripMargin
-    val ckSize = le32("st.pos + 8")
-    val hop = s"st.pos + 16 + 2 * ($ckSize) + (($ckSize) % 2) * 2"
-    // chunk walk: find fmt (audio format + bits/sample) and data
-    // (payload position + byte size); done once both seen
-    val walk = expr(s"""
-      CASE WHEN substring(__af_hx, 1, 8) = '52494646'
-             AND substring(__af_hx, 17, 8) = '57415645' THEN
-        aggregate(
-          sequence(1, $maxChunks),
-          ${st("CAST(25 AS BIGINT)", "CAST(NULL AS BIGINT)",
-            "CAST(NULL AS BIGINT)", "CAST(NULL AS BIGINT)",
-            "CAST(NULL AS BIGINT)", "false")},
-          (st, i) -> CASE
-            WHEN st.done THEN st
-            WHEN st.pos IS NULL OR length(__af_hx) < st.pos + 15
-              THEN ${st("st.pos", "st.afmt", "st.bits", "st.dpos",
-                "st.dsize", "true")}
-            WHEN substring(__af_hx, CAST(st.pos AS INT), 8) = '666D7420'
-                 AND length(__af_hx) >= st.pos + 47
-                 AND ($ckSize) >= 16
-              THEN ${st(hop, le16("st.pos + 16"), le16("st.pos + 44"),
-                "st.dpos", "st.dsize", "st.dpos IS NOT NULL")}
-            WHEN substring(__af_hx, CAST(st.pos AS INT), 8) = '64617461'
-              THEN ${st(hop, "st.afmt", "st.bits",
-                "CAST(st.pos + 16 AS BIGINT)", ckSize,
-                "st.afmt IS NOT NULL")}
-            ELSE ${st(hop, "st.afmt", "st.bits", "st.dpos", "st.dsize",
-              "false")}
-          END,
-          st -> st)
-      END""")
-    val w = col("__af_st")
-    // bytes-per-sample drives both n and the reads: 2/1/3 for integer
-    // PCM at 16/8/24 bits, 4 for 32-bit IEEE float (fmt 3)
-    val bytesPer = floor(w.getField("bits") / 8).cast(LongType)
-    val n = floor(w.getField("dsize") / bytesPer).cast(LongType)
-    val fmtBits = (w.getField("afmt") === 1 &&
-        (w.getField("bits") === 16 || w.getField("bits") === 8 ||
-          w.getField("bits") === 24)) ||
-      (w.getField("afmt") === 3 && w.getField("bits") === 32)
-    val ok = w.isNotNull && fmtBits &&
-      w.getField("dpos").isNotNull && n >= 65 &&
-      length(hx) >= w.getField("dpos") - 1 + w.getField("dsize") * 2
-    // THREE-pass decode — the synth's let-binding-via-arrays idiom on
-    // the read side (r19 optimization round). Lambda bodies run
-    // INTERPRETED (no codegen, no common-subexpression elimination), so
-    // the previous shape — full byte decode (conv over hex substrings)
-    // with a per-sample format dispatch inside the per-frame aggregate —
-    // cost ~50-100 interpreted node evals per sample and measured 5.7 s
-    // for 2000 clips (the whole q176 wall; the banding join was noise).
-    // Now: (1) each payload byte is conv'd from hex exactly ONCE into a
-    // long array; (2) the FORMAT dispatch hoists out of the lambda — one
-    // `when` per ROW picks a per-format magnitude pass whose per-sample
-    // body is element_at arithmetic; (3) frame energies sum array reads.
-    // Same sample indices, same per-frame accumulation order — the
-    // energies are BIT-IDENTICAL (AudioSpec parity + q175/q176 oracles).
-    // Transient per-row arrays are bounded by maxBytes but FATTER than
-    // the hex string: __af_by is long[] (8 B/byte decoded) and the
-    // magnitude array double[] (8 B/sample) — together up to ~16x
-    // maxBytes per row vs the hex string's 2x chars. Account for that
-    // footprint when raising maxBytes (r20 advisor fix of the r19
-    // comment, which undercounted it).
-    val by = col("__af_by")
-    val nBytes = n * bytesPer
-    // byte reads go through ONE ISO-8859-1 decode of the payload (byte k
-    // <-> char k, all 256 values) + ascii(substr(.,p,1)) per byte — ~40%
-    // fewer interpreted nodes than conv(hex-pair, 16, 10) per byte, and
-    // no radix parse. dpos is a 1-based HEX-char position (byte b at
-    // chars 2b+1), so the 1-based CHAR position is (dpos+1)/2 + k.
-    val lt = col("__af_lt")
-    val bytesArr = transform(sequence(lit(0L), nBytes - 1), k =>
-      ascii(lt.substr(
-        ((w.getField("dpos") + 1) / 2 + k).cast(IntegerType), lit(1)))
-        .cast(LongType))
-    def byteAt(i: Column): Column = element_at(by, (i + 1).cast(IntegerType))
-    // |signed| branchless — abs(pmod(u + 2^(b-1), 2^b) - 2^(b-1)) — so
-    // the unsigned word `u` is referenced ONCE per sample (interpreted
-    // lambdas re-evaluate every reference; a when(cond, a).otherwise(b)
-    // on u would read it twice)
-    val mag16 = transform(sequence(lit(0L), n - 1), i => {
-      val u = byteAt(i * 2) + byteAt(i * 2 + 1) * 256L
-      abs(pmod(u + 32768L, lit(65536L)) - 32768L).cast(DoubleType)
-    })
-    val mag24 = transform(sequence(lit(0L), n - 1), i => {
-      val u = byteAt(i * 3) + byteAt(i * 3 + 1) * 256L +
-        byteAt(i * 3 + 2) * 65536L
-      abs(pmod(u + lit(1L << 23), lit(1L << 24)) - lit(1L << 23))
-        .cast(DoubleType)
-    })
-    val mag8 = transform(sequence(lit(0L), n - 1), i =>
-      abs(byteAt(i) - 128L).cast(DoubleType))
-    // IEEE-754 binary32, sign dropped via the field split: exact-double
-    // magnitude, e=255 (Inf/NaN) poisons the frame with NaN and the
-    // final gate NULLs the fingerprint
-    val magF32 = transform(sequence(lit(0L), n - 1), i => {
-      val fe = pmod(byteAt(i * 4 + 3), lit(128L)) * 2L +
-        floor(byteAt(i * 4 + 2) / lit(128L))
-      val fm = pmod(byteAt(i * 4 + 2), lit(128L)) * lit(65536L) +
-        byteAt(i * 4 + 1) * 256L + byteAt(i * 4)
-      when(fe === 0L, fm.cast(DoubleType) * pow(lit(2.0), lit(-149.0)))
-        .when(fe === 255L, lit(Double.NaN))
-        .otherwise((fm + lit(1L << 23)).cast(DoubleType) *
-          pow(lit(2.0), fe.cast(DoubleType) - lit(150.0)))
-    })
-    val mags = when(w.getField("afmt") === 3, magF32)
-      .when(w.getField("bits") === 16, mag16)
-      .when(w.getField("bits") === 24, mag24)
-      .otherwise(mag8)
-    val mg = col("__af_mg")
-    // energies: 65 frames, frame f covers samples i with
-    // floor(i*65/n) = f, i.e. i in [ceil(f*n/65), ceil((f+1)*n/65))
-    val energies = transform(sequence(lit(0), lit(64)), f => {
-      val lo = floor((f * n + 64) / lit(65)).cast(LongType)
-      val hi = floor(((f + 1) * n + 64) / lit(65)).cast(LongType)
-      aggregate(sequence(lo, hi - 1), lit(0.0), (acc, i) =>
-        acc + element_at(mg, (i + 1).cast(IntegerType)))
-    })
-    val e = col("__af_e")
-    val bits = expr(
-      """aggregate(sequence(0, 63), CAST(0 AS BIGINT), (acc, b) ->
-        |  acc + CASE WHEN element_at(__af_e, b + 2) >
-        |    element_at(__af_e, b + 1)
-        |  THEN shiftleft(CAST(1 AS BIGINT), b)
-        |  ELSE CAST(0 AS BIGINT) END)""".stripMargin)
-    media
-      .withColumn("__af_hx", hex(substring(col(contentCol), 1, maxBytes)))
-      .withColumn("__af_lt",
-        decode(substring(col(contentCol), 1, maxBytes), "ISO-8859-1"))
-      .withColumn("__af_st", walk)
-      .withColumn("__af_by", when(ok, bytesArr))
-      // ndTrue barrier — the array-column form of the ndZero let-binding
-      // idiom: __af_mg is referenced exactly ONCE (inside the energies
-      // lambda), and CollapseProject inlines single-use aliases — which
-      // would re-evaluate the whole magnitude-array construction PER
-      // SAMPLE read, O(n^2) per row (measured: 5.7 s -> 45 s for 2000
-      // clips). A nondeterministic guard is never inlined.
-      .withColumn("__af_mg", when(ndTrue && ok, mags))
-      .withColumn("__af_e", when(ok, energies))
-      .withColumn("afp",
-        when(e.isNotNull && !exists(e, x => isnan(x)), bits) + ndZero)
-      .drop("__af_hx", "__af_lt", "__af_st", "__af_by", "__af_mg", "__af_e")
-  }
+                             maxChunks: Int = 16): DataFrame =
+    Multimodal.appendParsed(media, "Audio.audioEnergyFingerprint",
+      "audio_fingerprint", contentCol, Seq(maxBytes, maxChunks),
+      AudioFingerprint.schema)
 
-  /** JVM decode rung for [[audioEnergyFingerprint]] — the mapPartitions
-    * twin (the [[graft.multimodal.AvFast]] / Png / Jpeg ladder, r20,
-    * guide §4): the expression fingerprint's per-row cost is
-    * interpreted HOF evaluation over every sample (~1.5 ms/clip at the
-    * exhibit sizes — the whole q176 wall); the same walk+decode in
-    * plain JVM code runs at ~µs/clip. Offset-for-offset translation of
-    * the expression pipeline — same chunk walk, same per-format
-    * magnitude formulas, same double accumulation ORDER per frame, so
-    * energies and every fingerprint bit are BIT-IDENTICAL (AudioSpec's
-    * parity test pins it across all four sample layouts, plants,
-    * truncation and garbage). The expression form stays the exhibit
-    * (q175); compositions (q176's banding) read this rung. */
-  def audioEnergyFingerprintFast(media: DataFrame,
-                                 contentCol: String = "content",
-                                 maxBytes: Int = 1 << 20,
-                                 maxChunks: Int = 16): DataFrame = {
-    require(maxBytes >= 128, s"maxBytes too small: $maxBytes")
-    require(maxChunks >= 1 && maxChunks <= 256, s"maxChunks: $maxChunks")
-    require(!media.columns.contains("afp"),
-      "Audio.audioEnergyFingerprintFast: media already has an 'afp' " +
-        "column — rename it first")
-    val schema = org.apache.spark.sql.types.StructType(
-      media.schema.fields :+
-        org.apache.spark.sql.types.StructField("afp", LongType))
-    val idx = media.schema.fieldIndex(contentCol)
-    val mb = maxBytes
-    val mc = maxChunks
-    media.mapPartitions { it =>
-      it.map { r =>
-        val content = if (r.isNullAt(idx)) null
-          else r.get(idx).asInstanceOf[Array[Byte]]
-        org.apache.spark.sql.Row.fromSeq(
-          r.toSeq :+ fingerprintJvm(content, mb, mc))
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
-  }
-
-  /** One blob's 64-bit frame-energy fingerprint, or null — the JVM twin
-    * of the expression pipeline (offsets in bytes; the expression works
-    * in 1-based hex chars, char 2b+1 <-> byte b). */
-  private[multimodal] def fingerprintJvm(content: Array[Byte],
-                                         maxBytes: Int,
-                                         maxChunks: Int): java.lang.Long = {
+  /** One blob's 64-bit frame-energy fingerprint, or null. */
+  def parseFingerprint(content: Array[Byte], maxBytes: Int,
+                       maxChunks: Int): java.lang.Long = {
     if (content == null) return null
-    val p = if (content.length <= maxBytes) content
-      else java.util.Arrays.copyOf(content, maxBytes)
-    val L = p.length
+    val p = content // read in place: every access is bounded by L
+    val L = math.min(content.length, maxBytes)
     @inline def u(i: Int): Int = p(i) & 0xFF
     def le16(i: Int): Long = u(i) | (u(i + 1).toLong << 8)
     def le32(i: Int): Long = u(i) | (u(i + 1).toLong << 8) |
@@ -319,7 +105,7 @@ object Audio {
     if (n < 65 || L < dpos + dsize) return null
     val d0 = dpos.toInt
     val nI = n.toInt
-    // magnitudes, per-format formulas identical to the expression twins
+    // per-sample magnitudes
     val mg = new Array[Double](nI)
     var k = 0
     if (afmt == 3L) {
@@ -350,9 +136,7 @@ object Audio {
     } else {
       while (k < nI) { mg(k) = math.abs(u(d0 + k) - 128L).toDouble; k += 1 }
     }
-    // 65 frame energies — SAME accumulation order as the expression
-    // aggregate (ascending sample index within the frame, seed 0.0),
-    // so the doubles are bit-identical
+    // 65 frame energies, accumulated in ascending sample order from 0.0
     val e = new Array[Double](65)
     var f = 0
     while (f < 65) {

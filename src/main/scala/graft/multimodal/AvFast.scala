@@ -1,68 +1,107 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types._
-
-/** JVM decode rung for [[Multimodal.avMetadata]] — the mapPartitions
-  * twin of the expression-only A/V chunk walk, bit-compatible by
-  * construction and pinned by AvFastSpec (same output for every synth
-  * family, golden fixture and malformed blob).
+/** The audio/video container-header decoder behind
+  * [[Multimodal.avMetadata]] and `av_metadata`: sample rate, channel
+  * count, bit depth, dimensions and duration straight from the bytes,
+  * never decoding a sample. It reads the first `headerBytes` bytes at
+  * most; malformed or truncated input yields NULL fields, never a throw.
+  * Walk positions are Longs, so an untrusted u32/u64 size cannot wrap an
+  * index. A u64 field at or above 2^63 (an MP4 `mvhd` v1 duration, an
+  * 8-byte EBML integer) reads as NULL, as does a duration whose
+  * millisecond value overflows a Long.
   *
-  * WHY (r20 optimization round, guide §4): the expression parser's
-  * per-row cost is interpreted HOF-fold evaluation — ~0.1 ms/row at
-  * sf0.1 (CensusProbe), the measured floor of expression-only parsing
-  * and the dominant term of the q133 census. The same walk in plain
-  * JVM code runs at ~1 µs/row. This is the documented decode-rung
-  * ladder ([[Png]]/[[Jpeg]] pattern): per-partition init amortized,
-  * blobs read once where they already are, only the metadata columns
-  * travel onward. The EXPRESSION parser remains the library's
-  * exhibit/reference implementation (q128/q153-class queries keep it;
-  * the oracle checks both).
+  * WAV: 'RIFF' + size + 'WAVE', then a CHUNK WALK — LIST/INFO (and any
+  * other) chunks may precede `fmt `, so fixed offsets are wrong for
+  * real files. Each hop reads fourcc + LE u32 size and skips
+  * 8 + size + (size odd ? 1 : 0) bytes — RIFF chunks are WORD-aligned,
+  * and a walk that forgets the pad byte desyncs after the first
+  * odd-sized chunk. `fmt ` yields channels (u16 LE), sample_rate
+  * (u32 LE), byte_rate (u32 LE), bits_per_sample (u16 LE) — only when
+  * its DECLARED size is >= 16 (the PCM core): a malformed fmt declaring
+  * fewer bytes would otherwise have fields read past its payload into
+  * the next chunk, producing plausible garbage instead of NULL; `data`
+  * yields its declared size; duration_ms = data_bytes * 1000 /
+  * byte_rate (the declared size is used on purpose — a header parser
+  * must price a streamed/truncated file from its header, not its tail).
   *
-  * Semantics are [[Multimodal.avMetadata]]'s, translated from 1-based
-  * hex-char positions to 0-based byte offsets (char 2b+1 <-> byte b).
-  * Every guard, field offset, walk budget, dispatch gate and NULL path
-  * mirrors the expression fold — see the scaladoc there for the
-  * format-level rationale. The one intentional divergence: u64 box
-  * sizes/durations >= 2^63 wrap negative here, where the expression
-  * path's ANSI BIGINT cast would THROW (such a value cannot occur in
-  * oracle-checked data — a throw is not a replayable contract either).
+  * MP4: a BOX WALK from byte 0 — u32 BE size + fourcc per box; `free`/
+  * `skip`/`wide` boxes commonly precede `moov`. `moov` and `trak` are
+  * pure containers, so the walk DESCENDS into them (pos += 8) and keeps
+  * walking — their children are boxes too. `mvhd` carries the movie
+  * timescale and duration: version 0 lays them at payload bytes 12/16
+  * as u32 BE; version 1 widens creation/modification to u64, moving
+  * timescale/duration to 20/24 (u32/u64 BE) — both versions read.
+  * The FIRST `tkhd` carries the track's presentation width/height as
+  * 16.16 fixed point at payload bytes 76/80 (v0) or 88/92 (v1); the
+  * integer part (the leading u16 of each field) is the resolution a
+  * curation filter wants. Phone-shot video stores a ROTATION in the
+  * tkhd transform matrix while width/height keep the coded (landscape)
+  * dims: when the matrix's a and d terms are both zero (the 90deg /
+  * 270deg shapes — b/c carry the +-1.0), the emitted width/height are
+  * SWAPPED so they are the DISPLAY resolution, matching what ffprobe's
+  * rotate-aware consumers filter on. An audio-only track stores 0x0 —
+  * emitted as stored (0), distinct from NULL = no tkhd found. A
+  * size == 1 box carries a u64 BE largesize after its fourcc and is
+  * hopped like any other box when its high u32 is 0 and the size is
+  * >= 16; anything larger (2^63 and up included) extends past the
+  * prefix and ends the walk with the fields found so far — same for
+  * size == 0 (to-EOF). This is a bounded header parser, not a demuxer:
+  * a non-faststart file whose moov sits after a multi-GiB mdat
+  * legitimately yields NULL metadata (raising `headerBytes` cannot
+  * reach it); route such files through a demuxer, don't trust a header.
+  *
+  * MP3 (MPEG audio, Layer III): an optional ID3v2 tag is hopped via its
+  * SYNCSAFE 28-bit size (four 7-bit bytes — a byte with the high bit
+  * set is malformed; the size includes any extended header, so one hop
+  * lands on the first frame; ID3v2 FOOTERS are not handled — rare, and
+  * they fail safe to NULL fields via the sync check). The frame header
+  * yields MPEG version (1/2/2.5), bitrate index and sample-rate index
+  * — mapped through the spec's Layer III tables — and the channel
+  * mode. duration_ms is the CBR estimate (audio bytes x 8 / bitrate)
+  * over the WHOLE blob, not the prefix; VBR files without a Xing header
+  * misestimate, as every header-only MP3 parser does. Non-Layer-III
+  * frames and reserved version/index values yield NULL fields ('mp3'
+  * format retained).
+  *
+  * FLAC: 'fLaC' then STREAMINFO, which the spec REQUIRES to be the
+  * first metadata block — a fixed-offset read of its bit-packed core:
+  * sample rate (20 bits), channels-1 (3), bits-per-sample-1 (5), total
+  * samples (36) packed MSB-first in 8 bytes, read as two u32s.
+  * duration_ms = total samples x 1000 / sample rate — exact.
+  *
+  * Ogg (Opus/Vorbis): 'OggS' + version 0; the first page's payload
+  * starts after the VARIABLE-length segment table (27 + the
+  * segment-count byte at offset 26 — a fixed payload offset is wrong
+  * for any page with more than one lacing value). The payload prefix
+  * selects the codec: 'OpusHead' (channel count u8 at payload byte 9,
+  * the STORED input_sample_rate u32 LE at 12 — informational per
+  * RFC 7845, decode is always 48 kHz; emitted as stored) or
+  * '\\x01vorbis' (channels u8 at 11, rate u32 LE at 12). duration needs
+  * the LAST page's granule position — end-of-file, unreachable by a
+  * header parser — so it is NULL for ogg.
+  *
+  * WebM/Matroska (EBML, magic 1A45DFA3): element IDs and sizes are
+  * VARINTS — the first byte's leading-bit class encodes each one's
+  * length (IDs 1-4 bytes kept with their marker, sizes 1-8 bytes with
+  * the marker stripped), so nothing sits at a fixed offset and a walk
+  * is mandatory. The walk descends into the EBML head, Segment, Info,
+  * Tracks, TrackEntry and Video/Audio (descending reads only id+size,
+  * so a container's size — including the all-ones UNKNOWN size live
+  * muxers write for Segment — is never trusted), reads DocType
+  * ('webm' -> av_format 'webm', anything else/missing -> generic
+  * 'mkv'), TimestampScale (default 1,000,000 ns when absent), Duration
+  * (an IEEE-754 BE float, f32 or f64, decoded arithmetically — sign
+  * bit, inf/nan or subnormal yields NULL), PixelWidth/PixelHeight,
+  * Channels, SamplingFrequency and the first CodecID, and generically
+  * hops everything else; the first Cluster ends the walk (media data —
+  * past it nothing a header parser may read remains). duration_ms =
+  * Duration ticks x TimestampScale / 1e6, exact for the
+  * integer-valued floats real muxers write. A file whose Info/Tracks
+  * follow the first Cluster (some live remuxes) legitimately yields
+  * NULL for the fields not yet seen — same header-parser contract as
+  * Ogg's NULL duration.
   */
 object AvFast {
-
-  private val appended: Seq[StructField] = Seq(
-    StructField("av_format", StringType), StructField("codec", StringType),
-    StructField("channels", LongType), StructField("sample_rate", LongType),
-    StructField("bits_per_sample", LongType), StructField("width", LongType),
-    StructField("height", LongType), StructField("duration_ms", LongType))
-
-  def avMetadataFast(media: DataFrame, contentCol: String = "content",
-                     maxChunks: Int = 16,
-                     headerBytes: Int = 64 * 1024,
-                     formats: Set[String] = Multimodal.AvFormats): DataFrame = {
-    require(maxChunks >= 1 && maxChunks <= 256,
-      s"maxChunks must be in [1, 256], got $maxChunks")
-    require(headerBytes >= 64,
-      s"headerBytes must cover the smallest fmt/mvhd layout (64), got $headerBytes")
-    require(formats.nonEmpty && formats.subsetOf(Multimodal.AvFormats),
-      s"formats must be a non-empty subset of ${Multimodal.AvFormats}, got $formats")
-    appended.map(_.name).foreach(c =>
-      require(!media.columns.contains(c),
-        s"Multimodal.avMetadataFast: media already has a '$c' column — " +
-          "rename it first; avMetadataFast appends its own"))
-    val schema = StructType(media.schema.fields ++ appended)
-    val idx = media.schema.fieldIndex(contentCol)
-    val mc = maxChunks
-    val hb = headerBytes
-    val fm = formats
-    media.mapPartitions { it =>
-      it.map { r =>
-        val content = if (r.isNullAt(idx)) null
-          else r.get(idx).asInstanceOf[Array[Byte]]
-        Row.fromSeq(r.toSeq ++ parse(content, mc, hb, fm))
-      }
-    }(Encoders.row(schema))
-  }
 
   // unsigned byte at offset (caller guarantees bounds)
   @inline private def u(p: Array[Byte], i: Int): Int = p(i) & 0xFF
@@ -82,24 +121,33 @@ object AvFast {
     true
   }
 
-  /** The appended 8 values for one blob, in [[appended]] order. */
-  private[multimodal] def parse(content: Array[Byte], maxChunks: Int,
-                                headerBytes: Int,
-                                formats: Set[String]): Seq[Any] = {
-    if (content == null) return Seq(null, null, null, null, null, null, null, null)
-    val p = if (content.length <= headerBytes) content
-      else java.util.Arrays.copyOf(content, headerBytes)
-    val L = p.length
-    def want(fs: String*): Boolean = fs.exists(formats.contains)
-    val ebml = want("webm", "mkv")
+  /** u64 BE at offset, or null at or above 2^63 (caller guarantees
+    * bounds). */
+  private def u64(p: Array[Byte], i: Int): java.lang.Long = {
+    val v = beN(p, i, 8)
+    if (v < 0) null else v
+  }
 
+  /** `units * 1000 / per`, or null when the product overflows a Long. */
+  private def millis(units: Long, per: Long): java.lang.Long =
+    try Math.multiplyExact(units, 1000L) / per
+    catch { case _: ArithmeticException => null }
+
+  /** The 8 fields of one blob, in `av_metadata`'s struct order: av_format,
+    * codec, channels, sample_rate, bits_per_sample, width, height,
+    * duration_ms. */
+  def parse(content: Array[Byte], maxChunks: Int,
+            headerBytes: Int): Seq[Any] = {
+    if (content == null) return Seq(null, null, null, null, null, null, null, null)
+    val p = content // read in place: every access is bounded by L
+    val L = math.min(content.length, headerBytes)
     // EBML walk first when the magic matches (av_format needs DocType)
     var web: WebSt = null
-    if (ebml && L >= 4 && u(p, 0) == 0x1A && u(p, 1) == 0x45 &&
+    if (L >= 4 && u(p, 0) == 0x1A && u(p, 1) == 0x45 &&
         u(p, 2) == 0xDF && u(p, 3) == 0xA3)
       web = webmWalk(p, L, 3 * maxChunks)
 
-    // sniff, in the expression when-chain's order
+    // sniff
     val fmt: String =
       if (L >= 12 && fourcc(p, 0, "RIFF") && fourcc(p, 8, "WAVE")) "wav"
       else if (L >= 8 && fourcc(p, 4, "ftyp")) "mp4"
@@ -118,28 +166,26 @@ object AvFast {
     var height: Any = null
     var durMs: Any = null
 
-    if (fmt == "wav" && want("wav")) {
+    if (fmt == "wav") {
       // chunk walk from byte 12; each iter needs 8 bytes (fourcc + size)
-      var b = 12
+      var b = 12L
       var ch, sr, br, bi, db: Any = null
       var done = false
       var i = 0
       while (i < maxChunks && !done) {
         if (L < b + 8) done = true
         else {
-          val size = le32(p, b + 4)
-          val hop = b + 8 + size + (size % 2)
-          if (fourcc(p, b, "fmt ") && L >= b + 24 && size >= 16) {
-            ch = le16(p, b + 10); sr = le32(p, b + 12)
-            br = le32(p, b + 16); bi = le16(p, b + 22)
+          val at = b.toInt
+          val size = le32(p, at + 4)
+          if (fourcc(p, at, "fmt ") && L >= b + 24 && size >= 16) {
+            ch = le16(p, at + 10); sr = le32(p, at + 12)
+            br = le32(p, at + 16); bi = le16(p, at + 22)
             done = db != null
-          } else if (fourcc(p, b, "data")) {
+          } else if (fourcc(p, at, "data")) {
             db = size
             done = ch != null
           }
-          // hop rides BIGINT in the expression; sizes here fit u32 so
-          // Int overflow is only reachable past headerBytes — clamp
-          b = math.min(hop, Int.MaxValue.toLong).toInt
+          b += 8 + size + (size % 2)
         }
         i += 1
       }
@@ -148,7 +194,7 @@ object AvFast {
         durMs = db.asInstanceOf[Long] * 1000 / br.asInstanceOf[Long]
     }
 
-    if (fmt == "mp4" && want("mp4")) {
+    if (fmt == "mp4") {
       var b = 0L
       var ts, dur, w, h: Any = null
       var done = false
@@ -158,21 +204,23 @@ object AvFast {
         else {
           val bi2 = b.toInt
           val size = beN(p, bi2, 4)
+          // a full box's version byte, or -1 when the prefix ends first
+          val version = if (L > b + 8) u(p, bi2 + 8) else -1
           if (fourcc(p, bi2 + 4, "mvhd")) {
-            if (u(p, bi2 + 8) == 0 && L >= b + 28) {
+            if (version == 0 && L >= b + 28) {
               ts = beN(p, bi2 + 20, 4); dur = beN(p, bi2 + 24, 4)
               done = w != null; b += size
-            } else if (u(p, bi2 + 8) == 1 && L >= b + 40) {
-              ts = beN(p, bi2 + 28, 4); dur = beN(p, bi2 + 32, 8)
+            } else if (version == 1 && L >= b + 40) {
+              ts = beN(p, bi2 + 28, 4); dur = u64(p, bi2 + 32)
               done = w != null; b += size
             } else { ts = null; dur = null; done = true }
           } else if (fourcc(p, bi2 + 4, "tkhd")) {
-            if (u(p, bi2 + 8) == 0 && L >= b + 90) {
+            if (version == 0 && L >= b + 90) {
               val rot = beN(p, bi2 + 48, 4) == 0 && beN(p, bi2 + 64, 4) == 0
               w = beN(p, bi2 + (if (rot) 88 else 84), 2)
               h = beN(p, bi2 + (if (rot) 84 else 88), 2)
               done = ts != null; b += size
-            } else if (u(p, bi2 + 8) == 1 && L >= b + 102) {
+            } else if (version == 1 && L >= b + 102) {
               val rot = beN(p, bi2 + 60, 4) == 0 && beN(p, bi2 + 76, 4) == 0
               w = beN(p, bi2 + (if (rot) 100 else 96), 2)
               h = beN(p, bi2 + (if (rot) 96 else 100), 2)
@@ -191,10 +239,10 @@ object AvFast {
       }
       width = w; height = h
       if (ts != null && ts.asInstanceOf[Long] > 0 && dur != null)
-        durMs = dur.asInstanceOf[Long] * 1000 / ts.asInstanceOf[Long]
+        durMs = millis(dur.asInstanceOf[Long], ts.asInstanceOf[Long])
     }
 
-    if (fmt == "mp3" && want("mp3")) {
+    if (fmt == "mp3") {
       // first-frame byte offset: one hop over an ID3v2 tag (syncsafe)
       val fp: Any =
         if (L >= 3 && fourcc(p, 0, "ID3")) {
@@ -226,7 +274,7 @@ object AvFast {
             }
             sampleRate = srT((h3 / 4) % 4)
             channels = if (u(p, fi + 3) / 64 == 3) 1L else 2L
-            // CBR estimate over the WHOLE blob, not the hexed prefix
+            // CBR estimate over the WHOLE blob, not the prefix
             if (kbps > 0)
               durMs = (content.length.toLong - fpL) * 8 / kbps
           }
@@ -234,7 +282,7 @@ object AvFast {
       }
     }
 
-    if (fmt == "flac" && want("flac")) {
+    if (fmt == "flac") {
       if (L >= 26 && u(p, 4) % 128 == 0) {
         val u32a = beN(p, 18, 4); val u32b = beN(p, 22, 4)
         sampleRate = u32a / 4096
@@ -245,7 +293,7 @@ object AvFast {
       }
     }
 
-    if (fmt == "ogg" && want("ogg")) {
+    if (fmt == "ogg") {
       if (L >= 27 && u(p, 4) == 0) {
         val pb = 27 + u(p, 26)
         if (L >= pb + 16 && fourcc(p, pb, "OpusHead")) {
@@ -260,8 +308,7 @@ object AvFast {
     }
 
     if ((fmt == "webm" || fmt == "mkv") && web != null) {
-      // CodecID: strict UTF-8 decode — invalid bytes -> NULL (the
-      // try_validate_utf8 twin)
+      // CodecID: strict UTF-8 decode — invalid bytes -> NULL
       if (web.cid != null) codec = strictUtf8(web.cid)
       channels = web.ch
       if (web.sr != null) sampleRate = web.sr.asInstanceOf[Double].toLong
@@ -294,7 +341,7 @@ object AvFast {
       dec.decode(java.nio.ByteBuffer.wrap(bytes)).toString
     } catch { case _: java.nio.charset.CharacterCodingException => null }
 
-  // IEEE-754 BE decode, the expression f32/f64 twins: sign bit set,
+  // IEEE-754 BE decode: sign bit set,
   // inf/nan (max exponent) or subnormal (zero exponent, unless the whole
   // word is zero = exact 0.0) -> null
   private def ebmlFloat(p: Array[Byte], i: Int, n: Int): Any =
@@ -331,8 +378,7 @@ object AvFast {
     sb.toString
   }
 
-  /** The EBML element walk — the webmFold twin (see avMetadata's
-    * scaladoc): descends into the six container ids, reads the known
+  /** The EBML element walk (see the object scaladoc): descends into the six container ids, reads the known
     * leaves, generically hops the rest; Cluster, malformed varints,
     * truncation or unknown-size end it keeping fields found so far. */
   private def webmWalk(p: Array[Byte], L: Int, budget: Int): WebSt = {
@@ -364,9 +410,8 @@ object AvFast {
             }
           if (szl == 0) done = true
           else {
-            // the expression reads the size varint CLAMPED to the hexed
-            // prefix (a truncated read parses the available bytes); an
-            // empty read is NULL -> walk ends
+            // the size varint is read CLAMPED to the prefix (a truncated
+            // read parses the available bytes); an empty read ends the walk
             val szAvail = math.min(szl.toLong, L - szpB).toInt
             if (szAvail <= 0) done = true
             else {
@@ -374,30 +419,27 @@ object AvFast {
               val dpB = szpB + szl
               def leafOk(lo: Long, hi: Long): Boolean =
                 szv >= lo && szv <= hi && L >= dpB + szv
+              // an unsigned integer leaf at or above 2^63 is malformed and
+              // ends the walk, like a leaf with a bad size
+              def intLeaf(set: Long => Unit): Unit =
+                if (leafOk(1, 8) && beN(p, dpB.toInt, szv.toInt) >= 0) {
+                  set(beN(p, dpB.toInt, szv.toInt)); b = dpB + szv
+                } else done = true
               if (containers.contains(idh)) b = dpB
               else if (idh == "1F43B675") done = true // Cluster
               else if (idh == "4282") { // DocType
                 if (leafOk(1, 16)) {
                   st.dt = hexUpper(p, dpB.toInt, szv.toInt); b = dpB + szv
                 } else done = true
-              } else if (idh == "2AD7B1") { // TimestampScale
-                if (leafOk(1, 8)) {
-                  st.scale = beN(p, dpB.toInt, szv.toInt); b = dpB + szv
-                } else done = true
-              } else if (idh == "4489") { // Duration (float)
+              } else if (idh == "2AD7B1") intLeaf(st.scale = _) // TimestampScale
+              else if (idh == "4489") { // Duration (float)
                 if ((szv == 4 || szv == 8) && L >= dpB + szv) {
                   st.dur = ebmlFloat(p, dpB.toInt, szv.toInt); b = dpB + szv
                 } else done = true
-              } else if (idh == "B0") {
-                if (leafOk(1, 8)) { st.w = beN(p, dpB.toInt, szv.toInt); b = dpB + szv }
-                else done = true
-              } else if (idh == "BA") {
-                if (leafOk(1, 8)) { st.h = beN(p, dpB.toInt, szv.toInt); b = dpB + szv }
-                else done = true
-              } else if (idh == "9F") {
-                if (leafOk(1, 8)) { st.ch = beN(p, dpB.toInt, szv.toInt); b = dpB + szv }
-                else done = true
-              } else if (idh == "B5") { // SamplingFrequency (float)
+              } else if (idh == "B0") intLeaf(st.w = _)
+              else if (idh == "BA") intLeaf(st.h = _)
+              else if (idh == "9F") intLeaf(st.ch = _)
+              else if (idh == "B5") { // SamplingFrequency (float)
                 if ((szv == 4 || szv == 8) && L >= dpB + szv) {
                   st.sr = ebmlFloat(p, dpB.toInt, szv.toInt); b = dpB + szv
                 } else done = true

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   * hash.
   *
   * The hash is [[Png.dhashFromRgb]] — the SAME 9×8 grid and unweighted
-  * first-three-channel luminance the BMP/ICO expression path and the
+  * first-three-channel luminance the BMP/ICO decoder and the
   * PNG rung use, so all THREE image rungs feed ONE
   * [[graft.dedup.Dedup.simhashBandedDups]] banding with mixed-container
   * signatures (q185): a BMP, a PNG and a JPEG of the same content
@@ -604,7 +604,7 @@ object Jpeg {
     * reproduces v bit-for-bit; chroma is constant 128 (coded DC 0) so
     * YCbCr→RGB is the identity on the gray axis. The dHash grid sample
     * srcX = 8·gx, srcY = 8·gy lands on block (gx, gy), so the hash
-    * equals the 9×8 expression exhibit's for congruent ids and the
+    * equals the 9×8 BMP exhibit's for congruent ids and the
     * q173 id-arithmetic oracle replays with one extra NULL class.
     *
     * Per-id coverage: pmod(id,5) cycles the CODEC SHAPE — 0 grayscale,

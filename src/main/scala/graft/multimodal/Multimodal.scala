@@ -1,41 +1,31 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Multimodal column plumbing: image/audio/video as opaque `binary` columns
-  * with typed metadata, plus batch decode/feature-extract scaffolding.
+import graft.functions.{AvMetadata, ImageDhash, ImageDims, MediaParse}
+
+/** Multimodal column plumbing: image/audio/video as opaque `binary`
+  * columns with typed metadata parsed straight from the container bytes.
   *
-  * METADATA is fully real: container-header parsing for images
-  * ([[imageDims]] — PNG/JPEG/GIF/WebP) and audio/video ([[avMetadata]] —
-  * WAV/MP4) reads dimensions, sample rate, channels and duration straight
-  * from the bytes with built-in expressions. REAL pixel/sample decode
-  * now exists for the perceptual-hash family — [[Png]] (r18), [[Jpeg]]
-  * (r19, baseline Huffman+IDCT from scratch) and WAV PCM
-  * ([[Audio.audioEnergyFingerprint]], 16/8/24-bit int + float32) — so
-  * only the generic feature-extract DECODE step remains a STUB
-  * (no codec libraries exist in this container):
-  * [[FakeDecoder.decode]] produces a deterministic fake "feature" from
-  * the bytes. Everything around it — the schema, the per-partition batch
-  * shape, the partitioning strategy — is real and tested, so a real
-  * decoder drops in by replacing one function.
+  * Each media parser has ONE implementation, a JVM decoder over the
+  * blob's bytes: [[parseImageDims]], [[parseImageDhash]],
+  * [[AvFast.parse]] and [[Audio.parseFingerprint]]. Each is exposed as a
+  * native Catalyst expression ([[graft.functions.MediaParse]]; `image_dims`,
+  * `image_dhash`, `av_metadata` and `audio_fingerprint` in SQL), and the
+  * DataFrame entry points [[imageDims]], [[imageDhash]], [[avMetadata]]
+  * and [[Audio.audioEnergyFingerprint]] project that expression's struct
+  * once and expand its fields into columns. Real pixel decode for the
+  * perceptual-hash family also exists as the [[Png]] and [[Jpeg]]
+  * `mapPartitions` decode rungs.
   *
-  * SCALE DESIGN: media blobs dominate bytes, so (1) metadata extraction is
-  * pure column expressions evaluated at scan (never materializes the blob
-  * downstream if pruned), (2) decoding runs inside `mapPartitions` so any
-  * native decoder amortizes per-partition init (model load, codec context),
-  * the Scala analogue of pandas-batch UDFs, and (3) outputs drop the blob
-  * column immediately — features travel, bytes don't.
+  * SCALE DESIGN: media blobs dominate bytes, so (1) every parser reads a
+  * bounded prefix of the blob where it already is, inside whole-stage
+  * codegen, (2) blobs never shuffle, and (3) outputs carry metadata, not
+  * bytes. [[archiveMetadata]] is still an expression-only hex parser.
   */
 object Multimodal {
-
-  /** A blob row with typed metadata — the multimodal storage schema. */
-  case class MediaRow(media_id: Long, kind: String, content: Array[Byte])
-
-  /** Extracted features (decode output batch shape). */
-  case class MediaFeatures(media_id: Long, kind: String, n_bytes: Long,
-                           content_md5: String, feature: Array[Double])
 
   /** Wrap a text table as opaque binary media (test/demo source: UTF-8
     * bytes stand in for undecodable media bytes). */
@@ -53,49 +43,100 @@ object Multimodal {
       .withColumn("n_bytes", octet_length(col("content")).cast(LongType))
       .withColumn("content_md5", md5(col("content")))
 
-  /** REAL image-header parsing — width/height straight from the container
-    * bytes with built-in expressions only (no decoder, no UDF, no
-    * mapPartitions): the one piece of image metadata a 100 TB curation
-    * pass needs (resolution filters, aspect-ratio buckets) that the
-    * opaque-blob metadata above can't give. Operates on the HEX form of
-    * the binary (Spark and DuckDB hex() agree byte-for-byte, so the
-    * oracle replays it exactly); everything is codegen'd scan-side
-    * arithmetic — blobs are read once and never shuffle.
+  /** Append the image container's `format`, `orientation`, `width` and
+    * `height` — the one piece of image metadata a 100 TB curation pass
+    * needs (resolution filters, aspect-ratio buckets) that the opaque-blob
+    * metadata above can't give. Formats and their header layouts are
+    * documented on [[parseImageDims]]: format is 'png'/'jpeg'/'gif'/
+    * 'webp'/'bmp'/'tiff'/'ico'/'avif'/'heic'/'heif' or NULL (unknown
+    * containers pass through — filter, don't fail, at corpus scale);
+    * width/height are NULL when unparseable; orientation is the JPEG EXIF
+    * value (NULL elsewhere). Malformed or truncated headers yield NULL
+    * fields, never a throw.
+    *
+    * `headerBytes` bounds the prefix read per blob (default 256 KiB — a
+    * JPEG segment length is at most 64 KiB-1, so this survives several
+    * EXIF-sized segments before SOF; PNG needs 24 bytes); a walk that
+    * runs off the prefix yields NULL dims, the same fail-safe as malformed
+    * input. `maxSegments` bounds the JPEG segment walk and the TIFF/EXIF
+    * entry scans (the ISO-BMFF box walk gets twice that). */
+  def imageDims(media: DataFrame, contentCol: String = "content",
+                maxSegments: Int = 16,
+                headerBytes: Int = 256 * 1024): DataFrame =
+    appendParsed(media, "Multimodal.imageDims", "image_dims", contentCol,
+      Seq(maxSegments, headerBytes), ImageDims.schema)
+
+  /** Register the media parsers and append `fn(content, bounds...)`'s
+    * struct fields as columns after `media`'s own. The struct is expanded
+    * by `inline` over a one-element array, a Generate node: it evaluates
+    * the parse once per row, and the optimizer keeps predicates on the
+    * parsed columns above it (predicates on `media`'s own columns still
+    * push through), so a `.where` on a parsed field never re-runs the
+    * parse or the expression that produced `content`. The parser's
+    * output names are reserved: a media table that already carries
+    * catalog `width`/`height` (say) is refused rather than having them
+    * silently replaced by parsed, possibly NULL, values. */
+  private[multimodal] def appendParsed(media: DataFrame, owner: String,
+                                       fn: String, contentCol: String,
+                                       bounds: Seq[Int],
+                                       schema: StructType): DataFrame = {
+    schema.fieldNames.foreach(c =>
+      require(!media.columns.contains(c),
+        s"$owner: media already has a '$c' column — rename it first; " +
+          s"$fn appends its own"))
+    MediaParse.register(media.sparkSession)
+    media.select(col("*"), inline(array(
+      call_function(fn, col(contentCol) +: bounds.map(lit(_)): _*))))
+  }
+
+  /** (format, orientation, width, height) of one image blob, the
+    * decoder behind [[imageDims]] and `image_dims`. It reads the first
+    * `headerBytes` bytes at most and never throws: the format gates below
+    * are length-guarded, and a field read that runs off the prefix CLAMPS
+    * — a big-endian read keeps the bytes it has as a smaller number, a
+    * little-endian read drops the missing high bytes, and a read with no
+    * byte in range is NULL. Formats, in sniff order:
     *
     * PNG: IHDR is mandatory-first (RFC 2083 §3.1 layout is fixed), so
-    * width/height are big-endian u32 at byte offsets 16/20 — hex chars
-    * 33-40/41-48 — guarded by the 8-byte signature.
+    * width/height are big-endian u32 at byte offsets 16/20, guarded by
+    * the 8-byte signature.
     *
     * JPEG: dimensions live in the first SOF marker — ANY of the frame
     * types FFC0-FFCF except C4 (DHT), C8 (JPG reserved) and CC (DAC),
     * covering baseline, progressive, lossless and the arithmetic-coded
-    * variants — whose position is VARIABLE: JFIF/EXIF/COM
-    * segments of arbitrary length precede it, so a fixed offset is
-    * wrong for real files. This walks the segment chain: a bounded
-    * `aggregate` fold (`maxSegments` hops, default 16 — headers hold a
-    * handful of APPn/COM/DQT/DHT segments; raise it for EXIF-heavy
-    * corpora; spec-legal FF fill bytes before a marker each consume one
-    * hop too) reads each marker, hops 2 + seglen bytes (the length field
-    * counts itself), and stops at SOF (capturing height then width:
-    * SOF payload is [len:2][precision:1][h:2][w:2]) or at EOI / a
-    * non-FF byte (malformed -> NULL dims, never a throw). The fold is a
-    * single whole-stage-codegen expression; entropy-coded data is never
-    * scanned because SOF precedes it in every legal stream. Standalone
-    * markers that carry no length field (TEM, RSTn) are not expected in
-    * the pre-SOF header region and read as malformed.
+    * variants — whose position is VARIABLE: JFIF/EXIF/COM segments of
+    * arbitrary length precede it, so a fixed offset is wrong for real
+    * files. The segment walk (`maxSegments` hops — headers hold a handful
+    * of APPn/COM/DQT/DHT segments; raise it for EXIF-heavy corpora;
+    * spec-legal FF fill bytes before a marker each consume one hop too)
+    * reads each marker, hops 2 + seglen bytes (the length field counts
+    * itself), and stops at SOF (capturing height then width: SOF payload
+    * is [len:2][precision:1][h:2][w:2]) or at EOI / a non-FF byte
+    * (malformed -> NULL dims). Entropy-coded data is never scanned
+    * because SOF precedes it in every legal stream. Standalone markers
+    * that carry no length field (TEM, RSTn) are not expected in the
+    * pre-SOF header region and read as malformed.
+    *
+    * EXIF orientation (JPEG): the segment walk records the first
+    * APP1/Exif segment's embedded TIFF header on its way to the SOF, and
+    * an endian-paired IFD scan reads tag 274 (type 3 SHORT, value 1..8;
+    * anything else NULLs). Orientations 5..8 mean the pixels are stored
+    * TRANSPOSED — phone portrait shots store landscape coded dims plus
+    * orientation 6/8 — so the emitted width/height are SWAPPED to the
+    * DISPLAY resolution there (the same display-dims convention as
+    * [[avMetadata]]'s rotated tkhd). JPEGs without EXIF (or with a
+    * non-Exif APP1, e.g. XMP) have orientation NULL and keep the SOF dims.
     *
     * GIF: both signatures (GIF87a/GIF89a); logical-screen width/height
-    * are LITTLE-endian u16 at bytes 6/8 — the one format here whose
-    * dimension bytes are LE, so the byte-swap is load-bearing, not a
-    * convention choice (a BE read of a 1024x17 GIF yields 4+4352).
+    * are LITTLE-endian u16 at bytes 6/8 — the byte-swap is load-bearing
+    * (a BE read of a 1024x17 GIF yields 4+4352).
     *
-    * WebP: RIFF('RIFF' + size + 'WEBP') then one chunk hop on the first
-    * chunk fourcc: 'VP8 ' (lossy — dims as 14-bit LE u16 pair after the
-    * 9D012A start code, which is verified: no start code, no dims),
-    * 'VP8L' (lossless — 0x2F signature byte then 14+14 bits packed
-    * LSB-first in a LE u32, both stored minus-one), 'VP8X' (extended —
-    * canvas w-1/h-1 as LE u24 pairs). All three live at fixed offsets
-    * once the fourcc is known, so this is a 1-hop parse, not a fold.
+    * WebP: RIFF('RIFF' + size + 'WEBP') then the first chunk's fourcc:
+    * 'VP8 ' (lossy — dims as 14-bit LE u16 pair after the 9D012A start
+    * code, which is verified: no start code, no dims), 'VP8L' (lossless —
+    * 0x2F signature byte then 14+14 bits packed LSB-first in a LE u32,
+    * both stored minus-one), 'VP8X' (extended — canvas w-1/h-1 as LE u24
+    * pairs). All three live at fixed offsets once the fourcc is known.
     *
     * BMP: 'BM', then the DIB header whose first u32 LE (byte 14) is its
     * own size and selects the layout: 12 (BITMAPCOREHEADER) stores
@@ -107,571 +148,50 @@ object Multimodal {
     * 'BM' sniff is weak on arbitrary binary; on an image corpus it is
     * the format's only signature.
     *
+    * TIFF: 'II*\\0' (little-endian) or 'MM\\0*' (big-endian) — EVERY
+    * multi-byte field including the IFD offset, entry count, tags and
+    * values follows the header's byte order. The u32 header offset points
+    * at the first IFD (commonly NOT at byte 8 — real writers put it after
+    * the image data); its u16 entry count prefixes count x 12-byte
+    * entries (tag u16, type u16, count u32, value field 4 bytes) sorted
+    * by tag. Tags 256/257 carry ImageWidth/ImageLength as type 3 SHORT or
+    * type 4 LONG; a SHORT value sits in the FIRST two bytes of the value
+    * field in FILE byte order — reading the value field as a u32 in a
+    * big-endian file yields width x 65536, the classic TIFF trap. Other
+    * value types for these tags (spec-illegal) yield NULL for that
+    * dimension. The entry scan is bounded by `maxSegments`; an IFD offset
+    * or entry beyond the prefix leaves the dims NULL.
+    *
     * ICO: reserved u16 0, type u16 1 (LE), entry count >= 1 (the count
     * gate rejects all-zero prefixes the 4-byte signature alone would
     * accept); the FIRST directory entry's width/height bytes are at 6/7,
     * where 0 means 256 (the classic byte-sized-dimension trap). Multi-
-    * image files report the first entry, not the largest — a header
-    * parser takes the directory as ordered.
-    *
-    * TIFF: 'II*\\0' (little-endian) or 'MM\\0*' (big-endian) — EVERY
-    * multi-byte field including the IFD offset, entry count, tags and
-    * values follows the header's byte order, so the whole walk is
-    * endian-paired. The u32 header offset points at the first IFD
-    * (commonly NOT at byte 8 — real writers put it after the image
-    * data); its u16 entry count prefixes count x 12-byte entries
-    * (tag u16, type u16, count u32, value field 4 bytes) sorted by tag.
-    * Tags 256/257 carry ImageWidth/ImageLength as type 3 SHORT or type 4
-    * LONG; a SHORT value sits in the FIRST two bytes of the value field
-    * in FILE byte order — reading the value field as a u32 in a
-    * big-endian file yields width x 65536, the classic TIFF trap. Other
-    * value types for these tags (spec-illegal) yield NULL for that
-    * dimension. The entry scan is bounded by `maxSegments`; entries are
-    * tag-sorted so 256/257 come before the strip/EXIF tags that dominate
-    * real IFDs. An IFD offset or entry beyond the hexed prefix skips in
-    * BIGINT (no INT cast on untrusted offsets) and leaves the dims NULL.
+    * image files report the first entry, not the largest.
     *
     * AVIF/HEIC/HEIF (ISO-BMFF images, sniffed by the ftyp major brand —
     * avif/avis -> 'avif', heic/heix -> 'heic', the brand-agnostic
     * mif1/msf1 -> 'heif'; video brands like isom/mp42 are NOT claimed,
     * they are [[avMetadata]]'s 'mp4'): the pixel dimensions live in an
     * `ispe` (ImageSpatialExtents) full-box nested meta > iprp > ipco,
-    * never at a fixed offset. A bounded box walk DESCENDS into those
-    * three containers (meta is a full-box: 4 version/flags bytes past
-    * its header) and hops everything else by its u32 size (u64 largesize
-    * when size==1); the first ispe's u32 BE width/height win. The dims
-    * are the CODED extents of the first ispe property — a HEIF `irot`
-    * transform or a grid-derivation's reassembled canvas is not applied
-    * (the single-ispe read is the header-parser contract, same spirit as
-    * Ogg's NULL duration). Walk budget is 2 x `maxSegments`: real muxers
-    * put hdlr/pitm/iloc/iinf/iref before iprp and colr/hvcC before ispe,
-    * and each descent spends an iteration.
-    *
-    * EXIF orientation (JPEG): the segment walk records the first
-    * APP1/Exif segment's embedded TIFF header on its way to the SOF, and
-    * a second endian-paired IFD scan reads tag 274 (type 3 SHORT,
-    * value 1..8; anything else NULLs). Orientations 5..8 mean the pixels
-    * are stored TRANSPOSED — phone portrait shots store landscape coded
-    * dims plus orientation 6/8 — so the emitted width/height are SWAPPED
-    * to the DISPLAY resolution there (the same display-dims convention
-    * as [[avMetadata]]'s rotated tkhd). The `orientation` column carries
-    * the raw stored value; JPEGs without EXIF (or with a non-Exif APP1,
-    * e.g. XMP) have it NULL and keep the SOF dims as-is.
-    *
-    * Output: input columns + format
-    * ('png'/'jpeg'/'gif'/'webp'/'bmp'/'tiff'/'ico'/'avif'/'heic'/
-    * 'heif'/NULL),
-    * width, height (NULL when unparseable), orientation (JPEG EXIF
-    * only). Unknown containers pass
-    * through with NULL format — filter, don't fail, at corpus scale.
-    * Filter the INPUT before calling this (partition/scan pruning
-    * happens there): the parse projection is deliberately opaque to
-    * predicate pushdown — see [[ndZero]] — so predicates written on the
-    * output evaluate row-wise just above the parse.
-    * Truncated-header reads are length-guarded: a prefix shorter than a
-    * format's dimension field yields NULL, never a partial-bytes value.
-    *
-    * `headerBytes` bounds how much of the blob is hexed: a header parse
-    * must never materialize 2x a multi-MB image per row, so only the
-    * first `headerBytes` (default 256 KiB — a JPEG segment length is at
-    * most 64 KiB-1, so this survives several EXIF-sized segments before
-    * SOF; PNG needs 24 bytes) enter the hex string. A walk that runs off
-    * the prefix fails the marker test and yields NULL dims — the same
-    * fail-safe as malformed input; raise the bound for thumbnail-stuffed
-    * corpora rather than trusting unbounded headers. */
-  /** Nondeterministic ZERO (`rand() * 0`): added to every fold-backed
-    * numeric output column so those aliases are nondeterministic, which
-    * stops Catalyst's predicate pushdown AT the parse projection.
-    * Without it, a `.where` on any parsed column substitutes the full
-    * fold expressions into the predicate — once per reference — and a
-    * simple resolution filter took ~40 s of optimizer+codegen time
-    * (measured: 12 s optimize / 9 s physical / 19 s codegen on a 64-row
-    * frame). With it, predicates evaluate just above the parse as cheap
-    * attribute references. EVERY such column carries the marker (not
-    * just the last one) so the barrier survives column pruning when a
-    * caller selects a subset. The trade: input-column predicates written
-    * AFTER the parse no longer reach the scan either — filter the input
-    * BEFORE parsing (the contract both parsers' docstrings state). */
-  private def ndZero: Column = (rand(19L) * lit(0)).cast(LongType)
-
-  /** Every format label [[imageDims]] can emit — its default (and the
-    * validity domain of) `formats`. */
-  val ImageFormats: Set[String] = Set("png", "jpeg", "gif", "webp", "bmp",
-    "tiff", "ico", "avif", "heic", "heif")
-
-  /** Every format label [[avMetadata]] can emit — its default (and the
-    * validity domain of) `formats`. 'webm' and 'mkv' are one EBML family:
-    * requesting either compiles the (one) EBML fold and both labels. */
-  val AvFormats: Set[String] = Set("wav", "mp4", "mp3", "flac", "ogg",
-    "webm", "mkv")
-
-  /** Build a when-chain from the format branches that survived dispatch
-    * filtering; no surviving branch means the column is constant NULL. */
-  private def whenChain(branches: Seq[(Column, Column)]): Column =
-    branches match {
-      case (c, v) +: rest =>
-        rest.foldLeft(when(c, v)) { case (acc, (bc, bv)) => acc.when(bc, bv) }
-      case _ => lit(null).cast(LongType)
-    }
-
-  def imageDims(media: DataFrame, contentCol: String = "content",
-                maxSegments: Int = 16,
-                headerBytes: Int = 256 * 1024,
-                formats: Set[String] = ImageFormats): DataFrame = {
-    require(maxSegments >= 1 && maxSegments <= 256,
-      s"maxSegments must be in [1, 256], got $maxSegments")
-    require(headerBytes >= 32,
-      s"headerBytes must cover at least the PNG IHDR (32), got $headerBytes")
-    // PER-FORMAT DISPATCH (plan-size, the r13 lesson): every format family
-    // added here grows the ONE parse expression every caller compiles, so
-    // the planning tax was O(formats x queries) and produced a measured
-    // 10.7x optimizer regression once. `formats` bounds what this CALL
-    // compiles: the magic SNIFF still labels every known container (it is
-    // a handful of literal prefix tests — plan-free by comparison), but a
-    // family's FOLD/branch expressions enter the plan only when requested,
-    // so a JPEG-only pipeline never compiles the ISO-BMFF box walk. Rows
-    // whose sniffed format is outside `formats` keep NULL width/height/
-    // orientation — the format label stays truthful either way.
-    require(formats.nonEmpty && formats.subsetOf(ImageFormats),
-      s"formats must be a non-empty subset of $ImageFormats, got $formats")
-    def want(fs: String*): Boolean = fs.exists(formats.contains)
-    // the family's reserved-output guard (survivors/selectWithinBudget/...):
-    // a media table that already carries catalog width/height must not have
-    // it silently replaced by parsed (possibly NULL) values. The temp
-    // columns are guarded too — an input already carrying __img_hx would be
-    // silently overwritten and then dropped.
-    Seq("format", "width", "height", "orientation",
-      "__img_hx", "__img_sof", "__img_tif", "__img_isp").foreach(c =>
-        require(!media.columns.contains(c),
-          s"Multimodal.imageDims: media already has a '$c' column — rename " +
-            "it first; imageDims appends its own"))
-    val withHex = media.withColumn("__img_hx",
-      hex(substring(col(contentCol), 1, headerBytes)))
-    // the fold ALSO records the char position of an APP1/Exif segment's
-    // embedded TIFF header ('ex') on its way to the SOF — EXIF
-    // orientation lives there and a second pass would re-walk the chain
-    lazy val jpegFold = expr(s"""
-      aggregate(
-        sequence(1, $maxSegments),
-        named_struct('pos', CAST(5 AS BIGINT),
-                     'h', CAST(NULL AS BIGINT),
-                     'w', CAST(NULL AS BIGINT),
-                     'ex', CAST(NULL AS BIGINT),
-                     'done', false),
-        (st, i) -> CASE
-          WHEN st.done THEN st
-          WHEN substring(__img_hx, CAST(st.pos AS INT), 4)
-               IN ('FFC0', 'FFC1', 'FFC2', 'FFC3', 'FFC5', 'FFC6', 'FFC7',
-                   'FFC9', 'FFCA', 'FFCB', 'FFCD', 'FFCE', 'FFCF')
-            THEN named_struct('pos', st.pos,
-              'h', CAST(conv(substring(__img_hx, CAST(st.pos AS INT) + 10, 4),
-                             16, 10) AS BIGINT),
-              'w', CAST(conv(substring(__img_hx, CAST(st.pos AS INT) + 14, 4),
-                             16, 10) AS BIGINT),
-              'ex', st.ex,
-              'done', true)
-          WHEN substring(__img_hx, CAST(st.pos AS INT), 4) = 'FFFF'
-            THEN named_struct('pos', st.pos + 2, 'h', CAST(NULL AS BIGINT),
-                              'w', CAST(NULL AS BIGINT), 'ex', st.ex,
-                              'done', false)
-          WHEN substring(__img_hx, CAST(st.pos AS INT), 2) <> 'FF'
-               OR substring(__img_hx, CAST(st.pos AS INT), 4) = 'FFD9'
-            THEN named_struct('pos', st.pos, 'h', CAST(NULL AS BIGINT),
-                              'w', CAST(NULL AS BIGINT), 'ex', st.ex,
-                              'done', true)
-          WHEN substring(__img_hx, CAST(st.pos AS INT), 4) = 'FFE1'
-               AND substring(__img_hx, CAST(st.pos AS INT) + 8, 12)
-                 = '457869660000'
-               AND st.ex IS NULL
-            THEN named_struct(
-              'pos', st.pos + 4 + 2 * CAST(conv(
-                substring(__img_hx, CAST(st.pos AS INT) + 4, 4), 16, 10)
-                AS BIGINT),
-              'h', CAST(NULL AS BIGINT), 'w', CAST(NULL AS BIGINT),
-              'ex', st.pos + 20,
-              'done', false)
-          ELSE named_struct(
-            'pos', st.pos + 4 + 2 * CAST(conv(
-              substring(__img_hx, CAST(st.pos AS INT) + 4, 4), 16, 10)
-              AS BIGINT),
-            'h', CAST(NULL AS BIGINT), 'w', CAST(NULL AS BIGINT),
-            'ex', st.ex,
-            'done', false)
-        END,
-        st -> st)""")
-    val hx = col("__img_hx")
-    // little-endian read: nBytes byte pairs starting at 1-based hex char
-    // `at`, reassembled most-significant-first before the base-16 parse.
-    // Callers length-guard: a short hex string would CONCAT PARTIAL byte
-    // pairs into a smaller-but-plausible value, not NULL.
-    def le(at: Int, nBytes: Int): Column =
-      conv(concat((nBytes - 1 to 0 by -1).map(i =>
-        substring(hx, at + 2 * i, 2)): _*), 16, 10).cast(LongType)
-    def hexLen(chars: Int): Column = length(hx) >= chars
-    val fourcc = substring(hx, 25, 8) // first RIFF chunk type after 'WEBP'
-    def webpDim(first: Boolean): Column = {
-      // VP8 bitstream (4.1): 3-byte frame tag, then start code 9D 01 2A,
-      // then 16-bit LE width/height whose top 2 bits are rescale hints
-      val vp8 = when(hexLen(60) && substring(hx, 47, 6) === "9D012A",
-        pmod(le(if (first) 53 else 57, 2), lit(16384)))
-      // VP8L (lossless spec 3): 0x2F signature, then u32 LE packing
-      // width-1 (bits 0-13) and height-1 (bits 14-27)
-      val b = le(43, 4)
-      val vp8l = when(hexLen(50) && substring(hx, 41, 2) === "2F",
-        (if (first) pmod(b, lit(16384))
-         else pmod(shiftright(b, 14), lit(16384))) + 1)
-      // VP8X (extended): flags byte + 3 reserved, then canvas w-1 / h-1
-      // as back-to-back LE u24
-      val vp8x = when(hexLen(60), le(if (first) 49 else 55, 3) + 1)
-      when(fourcc === "56503820", vp8)
-        .when(fourcc === "5650384C", vp8l)
-        .when(fourcc === "56503858", vp8x)
-    }
-    // TIFF first-IFD scan, endian-paired: every multi-byte read follows
-    // the header's byte order. The IFD offset is an UNTRUSTED u32, so it
-    // rides the fold state in BIGINT and every bounds check happens
-    // before any INT cast (the avMetadata overflow lesson). Returns a
-    // struct(w, h, n, o) or NULL.
-    def tiffFold(le: Boolean): Column = {
-      def u16(at: String) =
-        if (le) s"""CAST(conv(concat(
-           |substring(__img_hx, CAST(($at) + 2 AS INT), 2),
-           |substring(__img_hx, CAST(($at) AS INT), 2)), 16, 10) AS BIGINT)"""
-          .stripMargin
-        else s"""CAST(conv(substring(__img_hx, CAST(($at) AS INT), 4),
-           |16, 10) AS BIGINT)""".stripMargin
-      def u32(at: String) =
-        if (le) s"""CAST(conv(concat(
-           |substring(__img_hx, CAST(($at) + 6 AS INT), 2),
-           |substring(__img_hx, CAST(($at) + 4 AS INT), 2),
-           |substring(__img_hx, CAST(($at) + 2 AS INT), 2),
-           |substring(__img_hx, CAST(($at) AS INT), 2)), 16, 10) AS BIGINT)"""
-          .stripMargin
-        else s"""CAST(conv(substring(__img_hx, CAST(($at) AS INT), 8),
-           |16, 10) AS BIGINT)""".stripMargin
-      val off = u32("9") // IFD offset, header bytes 4-7 (literal chars: safe)
-      val eb = "(2 * st.o + 24 * i + 5)" // entry i's 1-based char base
-      def st4(w: String, h: String) =
-        s"named_struct('w', $w, 'h', $h, 'n', st.n, 'o', st.o)"
-      expr(s"""
-        CASE WHEN length(__img_hx) >= 2 * ($off) + 4 THEN
-          aggregate(
-            sequence(0, ${maxSegments - 1}),
-            named_struct('w', CAST(NULL AS BIGINT), 'h', CAST(NULL AS BIGINT),
-                         'n', ${u16(s"2 * ($off) + 1")},
-                         'o', CAST(($off) AS BIGINT)),
-            (st, i) -> CASE
-              WHEN st.w IS NOT NULL AND st.h IS NOT NULL THEN st
-              WHEN st.n IS NULL OR i >= st.n
-                   OR length(__img_hx) < 2 * st.o + 24 * i + 28 THEN st
-              WHEN ${u16(eb)} = 256 THEN ${st4(
-                s"""CASE WHEN ${u16(s"$eb + 4")} = 3 THEN ${u16(s"$eb + 16")}
-                   |WHEN ${u16(s"$eb + 4")} = 4 THEN ${u32(s"$eb + 16")}
-                   |END""".stripMargin, "st.h")}
-              WHEN ${u16(eb)} = 257 THEN ${st4("st.w",
-                s"""CASE WHEN ${u16(s"$eb + 4")} = 3 THEN ${u16(s"$eb + 16")}
-                   |WHEN ${u16(s"$eb + 4")} = 4 THEN ${u32(s"$eb + 16")}
-                   |END""".stripMargin)}
-              ELSE st
-            END,
-            st -> st)
-        END""")
-    }
-    // EXIF orientation: a second bounded scan of the TIFF IFD embedded at
-    // the APP1 position the jpegFold recorded. Same endian-paired BIGINT
-    // discipline as tiffFold; only tag 274 (type 3 SHORT, value 1..8) is
-    // read. Values 5..8 mean the image is stored transposed — the
-    // width/height the SOF carries are the CODED dims and the DISPLAY
-    // dims are swapped.
-    //
-    // STRUCTURE NOTE (plan-size, the hard-won one): this is ONE fold
-    // whose byte order and base position live in the fold STATE, not two
-    // endian-specialized folds reading `__img_sof.ex` at every position.
-    // Catalyst's predicate pushdown substitutes an alias's full
-    // definition into EVERY reference when a caller filters on these
-    // columns, so each `__img_sof` reference multiplies into a whole
-    // jpegFold copy inside the rewritten predicate — the first version
-    // referenced it ~30x across two folds and a simple .where() on the
-    // output took minutes to optimize/codegen. This version references
-    // `__img_sof.ex` exactly 3 times (base + the two endian probes);
-    // iteration 0 initializes the IFD offset/count from state, entries
-    // use i-1.
-    lazy val exifFold: Column = {
-      def u16(at: String) =
-        s"""CASE WHEN st.le THEN CAST(conv(concat(
-           |substring(__img_hx, CAST(($at) + 2 AS INT), 2),
-           |substring(__img_hx, CAST(($at) AS INT), 2)), 16, 10) AS BIGINT)
-           |ELSE CAST(conv(substring(__img_hx, CAST(($at) AS INT), 4),
-           |16, 10) AS BIGINT) END""".stripMargin
-      def u32(at: String) =
-        s"""CASE WHEN st.le THEN CAST(conv(concat(
-           |substring(__img_hx, CAST(($at) + 6 AS INT), 2),
-           |substring(__img_hx, CAST(($at) + 4 AS INT), 2),
-           |substring(__img_hx, CAST(($at) + 2 AS INT), 2),
-           |substring(__img_hx, CAST(($at) AS INT), 2)), 16, 10) AS BIGINT)
-           |ELSE CAST(conv(substring(__img_hx, CAST(($at) AS INT), 8),
-           |16, 10) AS BIGINT) END""".stripMargin
-      val eb = "(st.b + 2 * st.o + 24 * (i - 1) + 4)"
-      expr(s"""
-        aggregate(
-          sequence(0, $maxSegments),
-          named_struct('r', CAST(NULL AS BIGINT),
-                       'n', CAST(NULL AS BIGINT),
-                       'o', CAST(NULL AS BIGINT),
-                       'b', CAST(__img_sof.ex AS BIGINT),
-                       'le', substring(__img_hx, CAST(__img_sof.ex AS INT),
-                         8) = '49492A00',
-                       'be', substring(__img_hx, CAST(__img_sof.ex AS INT),
-                         8) = '4D4D002A'),
-          (st, i) -> CASE
-            WHEN st.r IS NOT NULL THEN st
-            WHEN i = 0 THEN CASE
-              WHEN (st.le OR st.be)
-                   AND length(__img_hx) >= st.b + 2 * (${u32("st.b + 8")}) + 5
-                THEN named_struct('r', st.r,
-                  'n', ${u16(s"st.b + 2 * (${u32("st.b + 8")})")},
-                  'o', ${u32("st.b + 8")},
-                  'b', st.b, 'le', st.le, 'be', st.be)
-              ELSE st
-            END
-            WHEN st.n IS NULL OR st.o IS NULL OR i > st.n
-                 OR length(__img_hx) < st.b + 2 * st.o + 24 * (i - 1) + 27
-              THEN st
-            WHEN ${u16(eb)} = 274 AND ${u16(s"$eb + 4")} = 3
-                 AND ${u16(s"$eb + 16")} BETWEEN 1 AND 8
-              THEN named_struct('r', ${u16(s"$eb + 16")},
-                'n', st.n, 'o', st.o, 'b', st.b, 'le', st.le, 'be', st.be)
-            ELSE st
-          END,
-          st -> st).r""")
-    }
-    // BMP DIB dims: layout selected by the DIB header's own size field
-    val dibSize = when(hexLen(36), le(29, 4))
-    // i32 LE magnitude: a top-down DIB stores height two's-complement
-    def bmpMag(c: Column): Column =
-      when(c >= 2147483648L, lit(4294967296L) - c).otherwise(c)
-    // width is spec-unsigned: a sign-bit-set value is malformed -> NULL
-    // (only HEIGHT legitimately goes negative, meaning top-down)
-    def bmpDim(first: Boolean): Column =
-      when(dibSize === 12, when(hexLen(44), le(if (first) 37 else 41, 2)))
-        .when(dibSize >= 40, when(hexLen(52),
-          if (first) when(le(37, 4) < 2147483648L, le(37, 4))
-          else bmpMag(le(45, 4))))
-    // ICO first-directory-entry dims: a stored 0 means 256
-    def icoDim(first: Boolean): Column = when(hexLen(16), {
-      val b = le(if (first) 13 else 15, 1)
-      when(b === 0, 256L).otherwise(b)
-    })
-    // AVIF/HEIC (ISO-BMFF image): the pixel dimensions live in an `ispe`
-    // (ImageSpatialExtents) full-box nested meta > iprp > ipco — never at
-    // a fixed offset. One bounded fold walks top-level boxes and DESCENDS
-    // into the three container boxes (meta is a full-box: +4 version/
-    // flags bytes past the 8-byte header; iprp/ipco are plain containers)
-    // instead of hopping them; the first ispe wins. Box sizes are
-    // UNTRUSTED u32s so `pos` rides the state in BIGINT and every bounds
-    // check precedes the INT cast (the avMetadata overflow lesson);
-    // size==1 hops via the u64 largesize (high word must be 0 — a >4 GiB
-    // offset is past any hexed prefix anyway); size 0 ("to EOF") or <8
-    // stops the walk as unwalkable. An ispe DECLARING size < 20 is not
-    // read (its "dims" would be the following box's bytes — the WAV fmt
-    // truncation lesson); it falls through to the hop so a later valid
-    // ispe can still win. The descend-don't-track-extent choice
-    // means a fourcc collision in un-descended sibling payloads can't
-    // happen (payload bytes are only reached by descending), but a
-    // container's trailing garbage could be read as sibling boxes — the
-    // done/size guards bound that to a NULL, never a throw.
-    def ibe(at: String, nBytes: Int) =
-      s"""CAST(conv(substring(__img_hx, CAST(($at) AS INT), ${2 * nBytes}),
-         |16, 10) AS BIGINT)""".stripMargin
-    def ispSt(pos: String, w: String, h: String, done: String) =
-      s"named_struct('pos', $pos, 'w', $w, 'h', $h, 'done', $done)"
-    val ispSize = ibe("st.pos", 4)
-    // 2x the segment budget of the flat walks: the path to ispe crosses
-    // ~12-15 boxes in real muxer output (meta's hdlr/pitm/iloc/iinf/iref
-    // children precede iprp; ipco's colr/hvcC precede ispe) and each
-    // DESCENT spends an iteration too — 16 would NULL well-formed phone
-    // photos at the default setting
-    lazy val ispeFold = expr(s"""
-      aggregate(
-        sequence(1, ${2 * maxSegments}),
-        ${ispSt("CAST(1 AS BIGINT)", "CAST(NULL AS BIGINT)",
-          "CAST(NULL AS BIGINT)", "false")},
-        (st, i) -> CASE
-          WHEN st.done THEN st
-          WHEN st.pos IS NULL OR length(__img_hx) < st.pos + 15
-            THEN ${ispSt("st.pos", "st.w", "st.h", "true")}
-          WHEN substring(__img_hx, CAST(st.pos AS INT) + 8, 8) = '6D657461'
-            THEN ${ispSt("st.pos + 24", "st.w", "st.h", "false")}
-          WHEN substring(__img_hx, CAST(st.pos AS INT) + 8, 8) = '69707270'
-               OR substring(__img_hx, CAST(st.pos AS INT) + 8, 8)
-                 = '6970636F'
-            THEN ${ispSt("st.pos + 16", "st.w", "st.h", "false")}
-          WHEN substring(__img_hx, CAST(st.pos AS INT) + 8, 8) = '69737065'
-               AND ($ispSize) >= 20
-            THEN CASE
-              WHEN length(__img_hx) >= st.pos + 39
-                THEN ${ispSt("st.pos", ibe("st.pos + 24", 4),
-                  ibe("st.pos + 32", 4), "true")}
-              ELSE ${ispSt("st.pos", "CAST(NULL AS BIGINT)",
-                "CAST(NULL AS BIGINT)", "true")}
-            END
-          WHEN ($ispSize) = 1
-            THEN CASE
-              WHEN length(__img_hx) >= st.pos + 31
-                   AND ${ibe("st.pos + 16", 4)} = 0
-                   AND ${ibe("st.pos + 24", 4)} >= 16
-                THEN ${ispSt(s"st.pos + 2 * (${ibe("st.pos + 24", 4)})",
-                  "st.w", "st.h", "false")}
-              ELSE ${ispSt("st.pos", "st.w", "st.h", "true")}
-            END
-          WHEN ($ispSize) IS NULL OR ($ispSize) < 8
-            THEN ${ispSt("st.pos", "st.w", "st.h", "true")}
-          ELSE ${ispSt(s"st.pos + 2 * ($ispSize)", "st.w", "st.h", "false")}
-        END,
-        st -> st)""")
-    // ftyp major brand (bytes 8-11) — only IMAGE brands are claimed;
-    // isom/mp42/... stay NULL here (they are avMetadata's 'mp4', not an
-    // image). mif1/msf1 majors are the brand-agnostic HEIF signature real
-    // muxers emit when the codec lives in the compatible-brands list.
-    val ftypBrand = substring(hx, 17, 8)
-    val isoWanted = Seq("avif", "heic", "heif").filter(formats.contains)
-    val sniffed = withHex
-      .withColumn("format",
-        when(hx.startsWith("89504E470D0A1A0A"), "png")
-          .when(hx.startsWith("FFD8"), "jpeg")
-          .when(hx.startsWith("474946383761") ||
-            hx.startsWith("474946383961"), "gif")
-          .when(hx.startsWith("52494646") &&
-            substring(hx, 17, 8) === "57454250", "webp")
-          .when(hx.startsWith("424D"), "bmp")
-          .when(hx.startsWith("49492A00") || hx.startsWith("4D4D002A"),
-            "tiff")
-          // ICO's magic (00 00 01 00) is genuinely ambiguous: it is also
-          // the size field of a 256-byte ISO-BMFF box, so a long-brand-list
-          // ftyp would sniff as ICO. Bytes 4-7 disambiguate — a real ICO
-          // has image count + first-entry dims there, never 'ftyp'.
-          .when(hx.startsWith("00000100") && hexLen(12) && le(9, 2) >= 1 &&
-            substring(hx, 9, 8) =!= "66747970",
-            "ico")
-          .when(substring(hx, 9, 8) === "66747970",
-            when(ftypBrand === "61766966" || ftypBrand === "61766973",
-              "avif") // avif / avis (image sequence)
-              .when(ftypBrand === "68656963" || ftypBrand === "68656978",
-                "heic") // heic / heix
-              .when(ftypBrand === "6D696631" || ftypBrand === "6D736631",
-                "heif"))) // mif1 / msf1 brand-agnostic HEIF
-    // temp fold columns exist only for requested families — an unrequested
-    // family's fold never parses, attaches, or enters any plan
-    val withFolds = Seq(
-      ("__img_sof", want("jpeg"),
-        () => when(col("format") === "jpeg", jpegFold)),
-      ("__img_tif", want("tiff"),
-        () => when(col("format") === "tiff",
-          when(hx.startsWith("49492A00"), tiffFold(le = true))
-            .otherwise(tiffFold(le = false)))),
-      ("__img_isp", isoWanted.nonEmpty,
-        () => when(col("format").isin(isoWanted: _*), ispeFold))
-    ).foldLeft(sniffed) { case (df, (name, wanted, mk)) =>
-      if (wanted) df.withColumn(name, mk()) else df
-    }
-    val iso: Column = col("format").isin(isoWanted: _*)
-    withFolds
-      .withColumn("orientation",
-        (if (want("jpeg"))
-          when(col("format") === "jpeg" && col("__img_sof.ex").isNotNull,
-            exifFold)
-        else lit(null).cast(LongType)) + ndZero)
-      .withColumn("width", whenChain(
-        Seq[(String, (Column, Column))](
-          "png" -> (col("format") === "png",
-            conv(substring(hx, 33, 8), 16, 10).cast(LongType)),
-          "jpeg" -> (col("format") === "jpeg",
-            when(col("orientation") >= 5, col("__img_sof.h"))
-              .otherwise(col("__img_sof.w"))),
-          "gif" -> (col("format") === "gif" && hexLen(20), le(13, 2)),
-          "webp" -> (col("format") === "webp", webpDim(first = true)),
-          "bmp" -> (col("format") === "bmp", bmpDim(first = true)),
-          "tiff" -> (col("format") === "tiff", col("__img_tif.w")),
-          "ico" -> (col("format") === "ico", icoDim(first = true))
-        ).collect { case (f, b) if formats(f) => b } ++
-          (if (isoWanted.isEmpty) Nil
-           else Seq((iso, col("__img_isp.w"))))) + ndZero)
-      .withColumn("height", whenChain(
-        Seq[(String, (Column, Column))](
-          "png" -> (col("format") === "png",
-            conv(substring(hx, 41, 8), 16, 10).cast(LongType)),
-          "jpeg" -> (col("format") === "jpeg",
-            when(col("orientation") >= 5, col("__img_sof.w"))
-              .otherwise(col("__img_sof.h"))),
-          "gif" -> (col("format") === "gif" && hexLen(20), le(17, 2)),
-          "webp" -> (col("format") === "webp", webpDim(first = false)),
-          "bmp" -> (col("format") === "bmp", bmpDim(first = false)),
-          "tiff" -> (col("format") === "tiff", col("__img_tif.h")),
-          "ico" -> (col("format") === "ico", icoDim(first = false))
-        ).collect { case (f, b) if formats(f) => b } ++
-          (if (isoWanted.isEmpty) Nil
-           else Seq((iso, col("__img_isp.h"))))) + ndZero)
-      .drop("__img_hx", "__img_sof", "__img_tif", "__img_isp")
-  }
-
-  /** JVM decode rung for [[imageDims]] — the mapPartitions twin (the
-    * [[AvFast]]/[[imageDhashFast]]/Png/Jpeg/Audio ladder, r20, guide
-    * §4): the header folds (JPEG segment walk, TIFF/EXIF IFD scans,
-    * ISO-BMFF box walk) run interpreted per row in the expression form;
-    * the same walks in plain JVM code cost ~µs/image. Offset-for-offset
-    * translation of every gate and read, INCLUDING the expression's
-    * clamped-substring semantics on truncated headers (a partial
-    * big-endian read yields the value of the available prefix bytes, a
-    * partial little-endian read drops the missing high bytes — exactly
-    * what conv-over-substring produces), so labels, dims and
-    * orientation are bit-identical — ImageDimsFastSpec pins parity
-    * across all five synth families, format subsets, truncations and
-    * malformed headers. The expression form stays the exhibit
-    * (q125/q127/q130-class); the census (q133) reads this rung. */
-  def imageDimsFast(media: DataFrame, contentCol: String = "content",
-                    maxSegments: Int = 16,
-                    headerBytes: Int = 256 * 1024,
-                    formats: Set[String] = ImageFormats): DataFrame = {
-    require(maxSegments >= 1 && maxSegments <= 256,
-      s"maxSegments must be in [1, 256], got $maxSegments")
-    require(headerBytes >= 32,
-      s"headerBytes must cover at least the PNG IHDR (32), got $headerBytes")
-    require(formats.nonEmpty && formats.subsetOf(ImageFormats),
-      s"formats must be a non-empty subset of $ImageFormats, got $formats")
-    Seq("format", "width", "height", "orientation").foreach(c =>
-      require(!media.columns.contains(c),
-        s"Multimodal.imageDimsFast: media already has a '$c' column — " +
-          "rename it first; imageDimsFast appends its own"))
-    val schema = StructType(media.schema.fields ++ Seq(
-      StructField("format", StringType), StructField("orientation", LongType),
-      StructField("width", LongType), StructField("height", LongType)))
-    val idx = media.schema.fieldIndex(contentCol)
-    val ms = maxSegments; val hb = headerBytes; val fm = formats
-    media.mapPartitions { it =>
-      it.map { r =>
-        val content = if (r.isNullAt(idx)) null
-          else r.get(idx).asInstanceOf[Array[Byte]]
-        org.apache.spark.sql.Row.fromSeq(r.toSeq ++ dimsJvm(content, ms, hb, fm))
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
-  }
-
-  /** (format, orientation, width, height) for one blob — the JVM twin
-    * of the imageDims expression pipeline (byte offsets; char 2b+1 <->
-    * byte b). */
-  private[multimodal] def dimsJvm(content: Array[Byte], maxSegments: Int,
-                                  headerBytes: Int,
-                                  formats: Set[String]): Seq[Any] = {
+    * never at a fixed offset. The box walk DESCENDS into those three
+    * containers (meta is a full-box: 4 version/flags bytes past its
+    * header) and hops everything else by its u32 size (u64 largesize
+    * when size == 1, followed only when its high u32 is 0, so a size at
+    * or above 2^32 — 2^63 included — ends the walk); the first ispe's u32
+    * BE width/height win. The dims are the CODED extents of the first
+    * ispe property — a HEIF `irot` transform or a grid-derivation's
+    * reassembled canvas is not applied. Walk budget is 2 x `maxSegments`:
+    * real muxers put hdlr/pitm/iloc/iinf/iref before iprp and colr/hvcC
+    * before ispe, and each descent spends an iteration. */
+  def parseImageDims(content: Array[Byte], maxSegments: Int,
+                     headerBytes: Int): Seq[Any] = {
     if (content == null) return Seq(null, null, null, null)
-    val p = if (content.length <= headerBytes) content
-      else java.util.Arrays.copyOf(content, headerBytes)
-    val L = p.length
+    val p = content // read in place: every access is bounded by L
+    val L = math.min(content.length, headerBytes)
     @inline def u(i: Int): Int = p(i) & 0xFF
     def cc(i: Int, s: String): Boolean = i + s.length <= L &&
       (0 until s.length).forall(k => u(i + k) == s.charAt(k))
-    // CLAMPED reads — the conv-over-substring semantics: BE keeps the
-    // available PREFIX bytes as the whole (smaller) number, LE drops
-    // the missing high bytes; an entirely-absent read is null
+    // CLAMPED reads (see the scaladoc); an entirely-absent read is null
     def beC(at: Long, n: Int): java.lang.Long = {
       if (at >= L || at < 0) return null
       var v = 0L; var i = at.toInt; val end = math.min(at + n, L).toInt
@@ -687,8 +207,7 @@ object Multimodal {
       }
       if (any) v else null
     }
-    def want(fs: String*): Boolean = fs.exists(formats.contains)
-    // ---- sniff (the expression when-chain's order)
+    // ---- sniff
     def hasSig(s: Array[Int]): Boolean = L >= s.length &&
       s.indices.forall(k => u(k) == s(k))
     val isFtyp = cc(4, "ftyp")
@@ -712,11 +231,11 @@ object Multimodal {
     var height: Any = null
     var orientation: Any = null
 
-    if (fmt == "png" && want("png")) {
+    if (fmt == "png") {
       width = beC(16, 4); height = beC(20, 4)
     }
 
-    if (fmt == "jpeg" && want("jpeg")) {
+    if (fmt == "jpeg") {
       // segment walk: SOF dims + the APP1/Exif TIFF-header position
       val sof = Set(0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
         0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF)
@@ -759,8 +278,7 @@ object Multimodal {
         def eu32(at: Long): java.lang.Long = if (le) leC(at, 4) else beC(at, 4)
         if (le || be) {
           val o = eu32(exB + 4)
-          // the expression guard is hexlen >= b + 2o + 5 (char space),
-          // i.e. one byte PAST the u16 entry count — replicate exactly
+          // the gate asks for one byte PAST the u16 entry count
           if (o != null && L >= exB + o + 3) {
             val n = eu16(exB + o)
             if (n != null) {
@@ -785,11 +303,11 @@ object Multimodal {
       height = if (swap) w else h
     }
 
-    if (fmt == "gif" && want("gif") && L >= 10) {
+    if (fmt == "gif" && L >= 10) {
       width = leC(6, 2); height = leC(8, 2)
     }
 
-    if (fmt == "webp" && want("webp")) {
+    if (fmt == "webp") {
       if (cc(12, "VP8 ")) {
         if (L >= 30 && u(23) == 0x9D && u(24) == 0x01 && u(25) == 0x2A) {
           width = leC(26, 2).longValue % 16384
@@ -809,7 +327,7 @@ object Multimodal {
       }
     }
 
-    if (fmt == "bmp" && want("bmp") && L >= 18) {
+    if (fmt == "bmp" && L >= 18) {
       val dib = leC(14, 4).longValue
       if (dib == 12 && L >= 22) { width = leC(18, 2); height = leC(20, 2) }
       else if (dib >= 40 && L >= 26) {
@@ -820,7 +338,7 @@ object Multimodal {
       }
     }
 
-    if (fmt == "tiff" && want("tiff")) {
+    if (fmt == "tiff") {
       val le = u(0) == 0x49
       def tu16(at: Long): java.lang.Long = if (le) leC(at, 2) else beC(at, 2)
       def tu32(at: Long): java.lang.Long = if (le) leC(at, 4) else beC(at, 4)
@@ -846,13 +364,13 @@ object Multimodal {
       }
     }
 
-    if (fmt == "ico" && want("ico") && L >= 8) {
+    if (fmt == "ico" && L >= 8) {
       val wv = u(6).toLong; val hv = u(7).toLong
       width = if (wv == 0) 256L else wv
       height = if (hv == 0) 256L else hv
     }
 
-    if ((fmt == "avif" || fmt == "heic" || fmt == "heif") && want(fmt)) {
+    if (fmt == "avif" || fmt == "heic" || fmt == "heif") {
       // ISO-BMFF box walk to the first ispe (descends meta/iprp/ipco)
       var b = 0L
       var done = false
@@ -1038,171 +556,38 @@ object Multimodal {
     * (recompression, a one-pixel watermark, metadata-stripped copies)
     * hash to small Hamming distance, so near-duplicate IMAGES reduce to
     * the [[graft.dedup.Dedup.simhashBandedDups]] banding plumbing the
-    * text side already runs (q166/q167).
+    * text side already runs (q166/q167). Decodable layouts and the hash
+    * definition are documented on [[parseImageDhash]]; everything else
+    * (PNG/JPEG/... — see [[Png]] and [[Jpeg]] for those) hashes NULL,
+    * never a throw. `maxBytes` bounds the prefix read; an image whose
+    * pixel array ends past it reads as truncated → NULL. */
+  def imageDhash(media: DataFrame, contentCol: String = "content",
+                 maxBytes: Int = 1 << 20): DataFrame =
+    appendParsed(media, "Multimodal.imageDhash", "image_dhash", contentCol,
+      Seq(maxBytes), ImageDhash.schema)
+
+  /** One blob's 64-bit dHash, or null — the decoder behind [[imageDhash]]
+    * and `image_dhash`.
     *
-    * Decodable formats are the ones whose pixels are expression-
-    * reachable without a codec: BMP (BITMAPINFOHEADER-family, 24/32
-    * bpp, BI_RGB, bottom-up or top-down) and single-image ICO whose
-    * embedded DIB is the same shape (height stored DOUBLED for the
-    * AND mask, rows bottom-up). Compressed formats (PNG/JPEG/...)
-    * keep NULL — decoding them is the mapInPandas stub seam, not an
-    * expression.
+    * Decodable layouts are the ones whose pixels need no codec: BMP
+    * (BITMAPINFOHEADER-family, 24/32 bpp, BI_RGB, bottom-up or top-down)
+    * and single-image ICO whose embedded DIB is the same shape (height
+    * stored DOUBLED for the AND mask, rows bottom-up). Directory reads
+    * at data-dependent ICO offsets CLAMP to the prefix (missing bytes
+    * contribute nothing; a read with no byte in range is null).
     *
     * The hash is standard dHash: nearest-neighbor-sample a 9x8
     * luminance grid (srcX = floor(gx·w/9), srcY = floor(gy·h/8) — the
-    * identity when the image IS 9x8, which is what the oracle
-    * exhibits use), then bit gy·8+gx = 1 iff grid(gx+1, gy) brighter
-    * than grid(gx, gy). "Luminance" is the unweighted channel sum —
-    * dHash only COMPARES adjacent values, so any monotone transform
-    * gives the same bits and integer sums replay exactly in SQL.
-    * Malformed/undecodable/truncated bytes → NULL, never a throw (the
-    * parser-family contract). Expression-only: one hex pass, 72
-    * bounded substr reads — codegen'd, no UDF, a narrow map at any
-    * corpus size. `maxBytes` bounds the hexed prefix; an image whose
-    * pixel array ends past it reads as truncated → NULL. */
-  def imageDhash(media: DataFrame, contentCol: String = "content",
-                 maxBytes: Int = 1 << 20): DataFrame = {
-    require(maxBytes >= 128, s"maxBytes too small: $maxBytes")
-    Seq("dhash", "__dh_hx", "__dh_lt", "__dh_st", "__dh_g").foreach(c =>
-      require(!media.columns.contains(c),
-        s"Multimodal.imageDhash: media already has a '$c' column — " +
-          "rename it first; imageDhash appends its own"))
-    val hx = col("__dh_hx")
-    // fixed-offset little-endian reads (0-based BYTE offsets)
-    def leAt(at: Int, n: Int): Column =
-      conv(concat((n - 1 to 0 by -1).map(i =>
-        substring(hx, (at + i) * 2 + 1, 2)): _*), 16, 10).cast(LongType)
-    // data-dependent-offset reads (ICO entry payload)
-    def leAtC(p: Column, n: Int): Column =
-      conv(concat((n - 1 to 0 by -1).map(i =>
-        hx.substr(((p + i) * 2 + 1).cast(IntegerType), lit(2))): _*),
-        16, 10).cast(LongType)
-    def mag(c: Column): Column = // i32 two's-complement magnitude
-      when(c >= 2147483648L, lit(4294967296L) - c).otherwise(c)
-    // --- BMP: pixel offset from the file header, dims from the DIB
-    val bmpBpp = leAt(28, 2)
-    val bmpHRaw = leAt(22, 4)
-    val bmpSt = struct(
-      leAt(10, 4).as("pixoff"), leAt(18, 4).as("w"),
-      mag(bmpHRaw).as("h"), (bmpHRaw >= 2147483648L).as("topdown"),
-      (bmpBpp / 8).cast(LongType).as("bpc"))
-    val bmpOk = hx.startsWith("424D") && length(hx) >= 108 &&
-      leAt(14, 4) >= 40 && (bmpBpp === 24 || bmpBpp === 32) &&
-      leAt(30, 4) === 0 && leAt(18, 4).between(1L, 2147483647L) &&
-      mag(bmpHRaw) >= 1
-    // --- single-image ICO: entry 0's embedded DIB, height doubled
-    val icoOff = leAt(18, 4)
-    val icoBpp = leAtC(icoOff + 14, 2)
-    val icoHD = leAtC(icoOff + 8, 4)
-    val icoSt = struct(
-      (icoOff + 40).as("pixoff"), leAtC(icoOff + 4, 4).as("w"),
-      floor(icoHD / 2).cast(LongType).as("h"), lit(false).as("topdown"),
-      (icoBpp / 8).cast(LongType).as("bpc"))
-    val icoOk = hx.startsWith("00000100") && length(hx) >= 44 &&
-      leAt(4, 2) >= 1 && leAtC(icoOff, 4) === 40 &&
-      (icoBpp === 24 || icoBpp === 32) && leAtC(icoOff + 16, 4) === 0 &&
-      leAtC(icoOff + 4, 4).between(1L, 2147483647L) && icoHD >= 2
-    val st = col("__dh_st")
-    val wC = st.getField("w"); val hC = st.getField("h")
-    val bpcC = st.getField("bpc")
-    val stride =
-      floor((wC * bpcC * 8 + 31) / lit(32)).cast(LongType) * 4
-    val covered = st.isNotNull &&
-      length(hx) >= (st.getField("pixoff") + stride * hC) * 2
-    // 9x8 nearest-neighbor luminance grid, row-major index gy*9+gx.
-    // HIGHER-ORDER transform, not 72 unrolled expressions: the unrolled
-    // form (x3 conv/substr each, duplicated again through any self-join
-    // downstream) was measured to blow the driver heap at plan time in
-    // q167's banded self-join — the q133 plan-size lesson; one lambda
-    // body keeps the plan O(1) in grid size.
-    // pixel bytes read via ascii over ONE ISO-8859-1 decode of the
-    // content (byte k <-> char k for all 256 values) instead of
-    // conv(hex-pair, 16, 10): the grid lambda runs INTERPRETED, and
-    // ascii(substr) is ~40% fewer interpreted nodes per byte with no
-    // radix parse (r19 — the audio-fingerprint finding applied here;
-    // same byte values, so the grays and every dhash bit are identical)
-    val lt = col("__dh_lt")
-    val grays = transform(sequence(lit(0), lit(71)), i => {
-      val gy = floor(i / 9).cast(LongType)
-      val gx = pmod(i, lit(9)).cast(LongType)
-      val srcX = floor(gx * wC / 9).cast(LongType)
-      val srcY = floor(gy * hC / 8).cast(LongType)
-      val row = when(st.getField("topdown"), srcY)
-        .otherwise(hC - 1 - srcY)
-      val base = st.getField("pixoff") + row * stride + srcX * bpcC
-      (0 to 2).map(j =>
-        ascii(lt.substr((base + j + 1).cast(IntegerType), lit(1)))
-          .cast(LongType)).reduce(_ + _)
-    })
-    val g = col("__dh_g")
-    // bit b (0..63): right neighbor brighter; shiftleft needs a COLUMN
-    // shift amount, which only the SQL form exposes
-    val dhashBits = expr(
-      """aggregate(sequence(0, 63), CAST(0 AS BIGINT), (acc, b) ->
-        |  acc + CASE WHEN
-        |    element_at(__dh_g,
-        |      CAST((b div 8) * 9 + pmod(b, 8) + 2 AS INT)) >
-        |    element_at(__dh_g,
-        |      CAST((b div 8) * 9 + pmod(b, 8) + 1 AS INT))
-        |  THEN shiftleft(CAST(1 AS BIGINT), b)
-        |  ELSE CAST(0 AS BIGINT) END)""".stripMargin)
-    media
-      .withColumn("__dh_hx", hex(substring(col(contentCol), 1, maxBytes)))
-      .withColumn("__dh_lt",
-        decode(substring(col(contentCol), 1, maxBytes), "ISO-8859-1"))
-      .withColumn("__dh_st",
-        when(bmpOk, bmpSt).when(icoOk, icoSt))
-      .withColumn("__dh_g", when(covered, grays))
-      // + ndZero (the imageDims family's pushdown barrier): without it,
-      // a downstream filter like `dhash IS NOT NULL` — q167's shape —
-      // substitutes the WHOLE parse tree into the predicate and the
-      // optimizer's alias-trimming walks the multiplied expression for
-      // minutes (measured: q167 never finished; the r13 q137 incident
-      // class). The nondeterministic alias pins predicates above the
-      // parse and stops project collapse from inlining it downstream.
-      .withColumn("dhash", when(g.isNotNull, dhashBits) + ndZero)
-      .drop("__dh_hx", "__dh_lt", "__dh_st", "__dh_g")
-  }
-
-  /** JVM decode rung for [[imageDhash]] — the mapPartitions twin (the
-    * [[AvFast]] / [[Png]] / [[Jpeg]] / Audio-fingerprint ladder, r20,
-    * guide §4): the 9×8 grid's 216 pixel reads run as an interpreted
-    * HOF lambda in the expression form; the same reads in plain JVM
-    * code cost ~µs/image. Offset-for-offset translation — same
-    * BMP/ICO gates (incl. the expression's CLAMPED data-dependent
-    * reads on truncated ICO directories), same stride/row/topdown
-    * arithmetic, same grid sampling and bit layout — so every dhash
-    * bit is identical (ImageDhashSpec's parity test pins it across
-    * all three layouts, plants, garbage and malformed blobs). The
-    * expression form stays the exhibit (q166/q125-class); banding
-    * compositions (q167/q170/q174/q185) read this rung. */
-  def imageDhashFast(media: DataFrame, contentCol: String = "content",
-                     maxBytes: Int = 1 << 20): DataFrame = {
-    require(maxBytes >= 128, s"maxBytes too small: $maxBytes")
-    require(!media.columns.contains("dhash"),
-      "Multimodal.imageDhashFast: media already has a 'dhash' column — " +
-        "rename it first")
-    val schema = StructType(media.schema.fields :+
-      StructField("dhash", LongType))
-    val idx = media.schema.fieldIndex(contentCol)
-    val mb = maxBytes
-    media.mapPartitions { it =>
-      it.map { r =>
-        val content = if (r.isNullAt(idx)) null
-          else r.get(idx).asInstanceOf[Array[Byte]]
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ dhashJvm(content, mb))
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
-  }
-
-  /** One blob's 64-bit dHash, or null — the JVM twin of the expression
-    * pipeline (byte offsets; the expression works in hex chars). */
-  private[multimodal] def dhashJvm(content: Array[Byte],
-                                   maxBytes: Int): java.lang.Long = {
+    * identity when the image IS 9x8, which is what the oracle exhibits
+    * use), then bit gy·8+gx = 1 iff grid(gx+1, gy) brighter than
+    * grid(gx, gy). "Luminance" is the unweighted channel sum — dHash
+    * only COMPARES adjacent values, so any monotone transform gives the
+    * same bits and integer sums replay exactly in SQL. Malformed,
+    * undecodable or truncated bytes → null. */
+  def parseImageDhash(content: Array[Byte], maxBytes: Int): java.lang.Long = {
     if (content == null) return null
-    val p = if (content.length <= maxBytes) content
-      else java.util.Arrays.copyOf(content, maxBytes)
-    val L = p.length
+    val p = content // read in place: every access is bounded by L
+    val L = math.min(content.length, maxBytes)
     @inline def u(i: Int): Int = p(i) & 0xFF
     // fixed-offset LE reads (all gated offsets are inside the length
     // checks below)
@@ -1211,9 +596,7 @@ object Multimodal {
       while (i >= 0) { v = (v << 8) | u(at + i); i -= 1 }
       v
     }
-    // data-dependent reads CLAMP to the prefix like the expression's
-    // concat-of-substrings (missing bytes contribute nothing; an
-    // entirely-missing read is null)
+    // data-dependent reads CLAMP to the prefix (see the scaladoc)
     def leClamped(at: Long, n: Int): java.lang.Long = {
       var v = 0L; var any = false; var i = n - 1
       while (i >= 0) {
@@ -1495,630 +878,26 @@ object Multimodal {
     docs.select(id.as("media_id"), unhex(jpeg).as("content"))
   }
 
-  /** REAL audio/video container-header parsing — sample rate, channel
-    * count, bit depth and duration straight from WAV/RIFF and MP4 (ISO
-    * BMFF) bytes, built-in expressions only (no codec, no UDF, no
-    * mapPartitions): the metadata a 100 TB A/V curation pass filters on
-    * (duration caps, sample-rate buckets) without ever decoding a sample.
-    * Same machinery as [[imageDims]]: the blob's first `headerBytes` are
-    * hexed once and walked with a bounded `aggregate` fold; malformed or
-    * truncated input yields NULL, never a throw; blobs never shuffle.
-    *
-    * WAV: 'RIFF' + size + 'WAVE', then a CHUNK WALK — LIST/INFO (and any
-    * other) chunks may precede `fmt `, so fixed offsets are wrong for
-    * real files. Each hop reads fourcc + LE u32 size and skips
-    * 8 + size + (size odd ? 1 : 0) bytes — RIFF chunks are WORD-aligned,
-    * and a walk that forgets the pad byte desyncs after the first
-    * odd-sized chunk. `fmt ` yields channels (u16 LE), sample_rate
-    * (u32 LE), byte_rate (u32 LE), bits_per_sample (u16 LE) — only when
-    * its DECLARED size is >= 16 (the PCM core): a malformed fmt declaring
-    * fewer bytes would otherwise have fields read past its payload into
-    * the next chunk, producing plausible garbage instead of NULL; `data`
-    * yields its declared size; duration_ms = data_bytes * 1000 /
-    * byte_rate (the declared size is used on purpose — a header parser
-    * must price a streamed/truncated file from its header, not its tail).
-    *
-    * MP4: a BOX WALK from byte 0 — u32 BE size + fourcc per box; `free`/
-    * `skip`/`wide` boxes commonly precede `moov`. `moov` and `trak` are
-    * pure containers, so the walk DESCENDS into them (pos += 8) and keeps
-    * walking — their children are boxes too. `mvhd` carries the movie
-    * timescale and duration: version 0 lays them at payload bytes 12/16
-    * as u32 BE; version 1 widens creation/modification to u64, moving
-    * timescale/duration to 20/24 (u32/u64 BE) — both versions read.
-    * The FIRST `tkhd` carries the track's presentation width/height as
-    * 16.16 fixed point at payload bytes 76/80 (v0) or 88/92 (v1); the
-    * integer part (the leading u16 of each field) is the resolution a
-    * curation filter wants. Phone-shot video stores a ROTATION in the
-    * tkhd transform matrix while width/height keep the coded (landscape)
-    * dims: when the matrix's a and d terms are both zero (the 90deg /
-    * 270deg shapes — b/c carry the +-1.0), the emitted width/height are
-    * SWAPPED so they are the DISPLAY resolution, matching what ffprobe's
-    * rotate-aware consumers filter on. An audio-only track stores 0x0 —
-    * emitted as stored (0), distinct from NULL = no tkhd found. A
-    * size == 1 box carries a u64 BE largesize after its fourcc and is
-    * hopped like any other box when that largesize keeps the walk inside
-    * the hexed prefix (its high u32 must be 0 and the size >= 16);
-    * anything larger extends past the prefix and ends the walk with the
-    * fields found so far — same for size == 0 (to-EOF). This is a bounded
-    * header parser, not a demuxer: a non-faststart file whose moov sits
-    * after a multi-GiB mdat legitimately yields NULL metadata (raising
-    * `headerBytes` cannot reach it); route such files through a demuxer,
-    * don't trust a header. All walk-position bounds compare in BIGINT —
-    * an untrusted u32/u64 size field can push `pos` past Int.MaxValue,
-    * and an INT cast there would throw under ANSI mode instead of
-    * honoring the malformed-yields-NULL contract.
-    *
-    * MP3 (MPEG audio, Layer III): an optional ID3v2 tag is hopped via its
-    * SYNCSAFE 28-bit size (four 7-bit bytes — a byte with the high bit
-    * set is malformed; the size includes any extended header, so one hop
-    * lands on the first frame; ID3v2 FOOTERS are not handled — rare, and
-    * they fail safe to NULL fields via the sync check). The frame header
-    * yields MPEG version (1/2/2.5), bitrate index and sample-rate index
-    * — mapped through the spec's Layer III tables — and the channel
-    * mode. duration_ms is the CBR estimate (audio bytes x 8 / bitrate)
-    * over the WHOLE blob (octet_length, not the hexed prefix); VBR files
-    * without a Xing header misestimate, as every header-only MP3 parser
-    * does. Non-Layer-III frames and reserved version/index values yield
-    * NULL fields ('mp3' format retained).
-    *
-    * FLAC: 'fLaC' then STREAMINFO, which the spec REQUIRES to be the
-    * first metadata block — a fixed-offset read of its bit-packed core:
-    * sample rate (20 bits), channels-1 (3), bits-per-sample-1 (5), total
-    * samples (36) packed MSB-first in 8 bytes; parsed as two u32 reads so
-    * no value ever touches the sign bit. duration_ms = total samples x
-    * 1000 / sample rate — exact, not estimated.
-    *
-    * Ogg (Opus/Vorbis): 'OggS' + version 0; the first page's payload
-    * starts after the VARIABLE-length segment table (27 + the
-    * segment-count byte at offset 26 — a fixed payload offset is wrong
-    * for any page with more than one lacing value). The payload prefix
-    * selects the codec: 'OpusHead' (channel count u8 at payload byte 9,
-    * the STORED input_sample_rate u32 LE at 12 — informational per
-    * RFC 7845, decode is always 48 kHz; emitted as stored) or
-    * '\\x01vorbis' (channels u8 at 11, rate u32 LE at 12). The emitted
-    * `codec` column distinguishes them. duration needs the LAST page's
-    * granule position — end-of-file, unreachable by a header parser —
-    * so it is NULL for ogg.
-    *
-    * WebM/Matroska (EBML, magic 1A45DFA3): element IDs and sizes are
-    * VARINTS — the first byte's leading-bit class encodes each one's
-    * length (IDs 1-4 bytes kept with their marker, sizes 1-8 bytes with
-    * the marker stripped), so nothing sits at a fixed offset and a walk
-    * is mandatory. The fold descends into the EBML head, Segment, Info,
-    * Tracks, TrackEntry and Video/Audio (descending reads only id+size,
-    * so a container's size — including the all-ones UNKNOWN size live
-    * muxers write for Segment — is never trusted), reads DocType
-    * ('webm' -> av_format 'webm', anything else/missing -> generic
-    * 'mkv'), TimestampScale (default 1,000,000 ns when absent), Duration
-    * (an IEEE-754 BE float, f32 or f64, decoded arithmetically — sign
-    * bit, inf/nan or subnormal yields NULL), PixelWidth/PixelHeight,
-    * Channels, SamplingFrequency and the first CodecID, and generically
-    * hops everything else; the first Cluster ends the walk (media data —
-    * past it nothing a header parser may read remains). duration_ms =
-    * Duration ticks x TimestampScale / 1e6, exact for the
-    * integer-valued floats real muxers write. A file whose Info/Tracks
-    * follow the first Cluster (some live remuxes) legitimately yields
-    * NULL for the fields not yet seen — same header-parser contract as
-    * Ogg's NULL duration.
-    *
-    * Output: input columns + av_format
-    * ('wav'/'mp4'/'mp3'/'flac'/'ogg'/'webm'/'mkv'/NULL),
-    * codec ('opus'/'vorbis' for ogg; the CodecID string for webm/mkv,
-    * NULL-ed via try_validate_utf8 if its bytes are not UTF-8 — ANSI
-    * decode() would THROW there; NULL where the container already
-    * implies the codec or it is unknown), channels (WAV/MP3/FLAC/Ogg/
-    * EBML-audio), sample_rate (WAV/MP3/FLAC/Ogg/EBML-audio),
-    * bits_per_sample (WAV/FLAC; the others don't carry one), width,
-    * height (MP4/EBML video; NULL elsewhere),
-    * duration_ms (all but ogg). All reads are length-guarded so a
-    * truncated header NULLs rather than assembling a partial-bytes
-    * value. Filter the INPUT before calling this — the parse projection
-    * is deliberately opaque to predicate pushdown (see [[ndZero]]), so
-    * output predicates evaluate row-wise just above the parse. */
+  /** Append the audio/video container's `av_format`, `codec`, `channels`,
+    * `sample_rate`, `bits_per_sample`, `width`, `height` and
+    * `duration_ms` — the metadata a 100 TB A/V curation pass filters on
+    * (duration caps, sample-rate buckets) without decoding a sample.
+    * Formats and their header layouts are documented on [[AvFast]]:
+    * av_format is 'wav'/'mp4'/'mp3'/'flac'/'ogg'/'webm'/'mkv' or NULL;
+    * codec is 'opus'/'vorbis' for ogg and the CodecID string for
+    * webm/mkv (NULL if its bytes are not UTF-8, and where the container
+    * already implies the codec); channels and sample_rate come from
+    * WAV/MP3/FLAC/Ogg/EBML-audio, bits_per_sample from WAV/FLAC,
+    * width/height from MP4/EBML video, duration_ms from all but ogg.
+    * Malformed or truncated input yields NULL fields, never a throw.
+    * `headerBytes` bounds the prefix read per blob; `maxChunks` bounds
+    * the WAV chunk walk and the MP4 box walk (the EBML walk gets three
+    * times that). */
   def avMetadata(media: DataFrame, contentCol: String = "content",
                  maxChunks: Int = 16,
-                 headerBytes: Int = 64 * 1024,
-                 formats: Set[String] = AvFormats): DataFrame = {
-    require(maxChunks >= 1 && maxChunks <= 256,
-      s"maxChunks must be in [1, 256], got $maxChunks")
-    require(headerBytes >= 64,
-      s"headerBytes must cover the smallest fmt/mvhd layout (64), got $headerBytes")
-    // PER-FORMAT DISPATCH (plan-size, the r13 lesson — see [[imageDims]]):
-    // a family's fold compiles into this call's plan only when requested.
-    // The magic sniff still labels wav/mp4/mp3/flac/ogg unconditionally
-    // (literal prefix tests), but the webm-vs-mkv label itself REQUIRES
-    // the EBML walk (DocType is an element, not a magic), so when neither
-    // 'webm' nor 'mkv' is requested an EBML blob keeps av_format NULL —
-    // the one family whose label costs a fold. Rows outside `formats`
-    // keep NULL metadata fields; labels stay truthful.
-    require(formats.nonEmpty && formats.subsetOf(AvFormats),
-      s"formats must be a non-empty subset of $AvFormats, got $formats")
-    def want(fs: String*): Boolean = fs.exists(formats.contains)
-    Seq("av_format", "codec", "channels", "sample_rate", "bits_per_sample",
-      "width", "height", "duration_ms",
-      "__av_hx", "__av_wav", "__av_mp4", "__av_p", "__av_mp3",
-      "__av_flac", "__av_ogg", "__av_web").foreach(c =>
-      require(!media.columns.contains(c),
-        s"Multimodal.avMetadata: media already has a '$c' column — rename " +
-          "it first; avMetadata appends its own"))
-    // SQL-fragment readers over the hexed prefix (1-based char positions;
-    // byte n lives at chars 2n+1..2n+2)
-    def le16(at: String) =
-      s"""CAST(conv(concat(substring(__av_hx, CAST(($at) AS INT) + 2, 2),
-         |substring(__av_hx, CAST(($at) AS INT), 2)), 16, 10) AS BIGINT)""".stripMargin
-    def le32(at: String) =
-      s"""CAST(conv(concat(substring(__av_hx, CAST(($at) AS INT) + 6, 2),
-         |substring(__av_hx, CAST(($at) AS INT) + 4, 2),
-         |substring(__av_hx, CAST(($at) AS INT) + 2, 2),
-         |substring(__av_hx, CAST(($at) AS INT), 2)), 16, 10) AS BIGINT)""".stripMargin
-    def be(at: String, nBytes: Int) =
-      s"""CAST(conv(substring(__av_hx, CAST(($at) AS INT), ${2 * nBytes}),
-         |16, 10) AS BIGINT)""".stripMargin
-    val wavSize = le32("st.pos + 8")
-    val wavHop = s"st.pos + 16 + 2 * ($wavSize) + (($wavSize) % 2) * 2"
-    def wavSt(pos: String, ch: String, sr: String, br: String, bits: String,
-              db: String, done: String) =
-      s"""named_struct('pos', $pos, 'ch', $ch, 'sr', $sr, 'br', $br,
-         |'bits', $bits, 'db', $db, 'done', $done)""".stripMargin
-    lazy val wavFold = expr(s"""
-      aggregate(
-        sequence(1, $maxChunks),
-        ${wavSt(s"CAST(25 AS BIGINT)", "CAST(NULL AS BIGINT)",
-          "CAST(NULL AS BIGINT)", "CAST(NULL AS BIGINT)",
-          "CAST(NULL AS BIGINT)", "CAST(NULL AS BIGINT)", "false")},
-        (st, i) -> CASE
-          WHEN st.done THEN st
-          WHEN st.pos IS NULL OR length(__av_hx) < st.pos + 15
-            THEN ${wavSt("st.pos", "st.ch", "st.sr", "st.br", "st.bits",
-              "st.db", "true")}
-          WHEN substring(__av_hx, CAST(st.pos AS INT), 8) = '666D7420'
-               AND length(__av_hx) >= st.pos + 47
-               AND ($wavSize) >= 16
-            THEN ${wavSt(wavHop, le16("st.pos + 20"), le32("st.pos + 24"),
-              le32("st.pos + 32"), le16("st.pos + 44"), "st.db",
-              "st.db IS NOT NULL")}
-          WHEN substring(__av_hx, CAST(st.pos AS INT), 8) = '64617461'
-            THEN ${wavSt(wavHop, "st.ch", "st.sr", "st.br", "st.bits",
-              le32("st.pos + 8"), "st.ch IS NOT NULL")}
-          ELSE ${wavSt(wavHop, "st.ch", "st.sr", "st.br", "st.bits",
-            "st.db", "false")}
-        END,
-        st -> st)""")
-    def mp4St(pos: String, ts: String, dur: String, w: String, h: String,
-              done: String) =
-      s"""named_struct('pos', $pos, 'ts', $ts, 'dur', $dur,
-         |'w', $w, 'h', $h, 'done', $done)""".stripMargin
-    val mp4Size = be("st.pos", 4)
-    val mp4Hop = s"st.pos + 2 * ($mp4Size)"
-    lazy val mp4Fold = expr(s"""
-      aggregate(
-        sequence(1, $maxChunks),
-        ${mp4St("CAST(1 AS BIGINT)", "CAST(NULL AS BIGINT)",
-          "CAST(NULL AS BIGINT)", "CAST(NULL AS BIGINT)",
-          "CAST(NULL AS BIGINT)", "false")},
-        (st, i) -> CASE
-          WHEN st.done THEN st
-          WHEN st.pos IS NULL OR length(__av_hx) < st.pos + 15
-            THEN ${mp4St("st.pos", "st.ts", "st.dur", "st.w", "st.h", "true")}
-          WHEN substring(__av_hx, CAST(st.pos AS INT) + 8, 8) = '6D766864'
-            THEN CASE
-              WHEN substring(__av_hx, CAST(st.pos AS INT) + 16, 2) = '00'
-                   AND length(__av_hx) >= st.pos + 55
-                THEN ${mp4St(mp4Hop, be("st.pos + 40", 4),
-                  be("st.pos + 48", 4), "st.w", "st.h",
-                  "st.w IS NOT NULL")}
-              WHEN substring(__av_hx, CAST(st.pos AS INT) + 16, 2) = '01'
-                   AND length(__av_hx) >= st.pos + 79
-                THEN ${mp4St(mp4Hop, be("st.pos + 56", 4),
-                  be("st.pos + 64", 8), "st.w", "st.h",
-                  "st.w IS NOT NULL")}
-              ELSE ${mp4St("st.pos", "CAST(NULL AS BIGINT)",
-                "CAST(NULL AS BIGINT)", "st.w", "st.h", "true")}
-            END
-          WHEN substring(__av_hx, CAST(st.pos AS INT) + 8, 8) = '746B6864'
-            THEN CASE
-              WHEN substring(__av_hx, CAST(st.pos AS INT) + 16, 2) = '00'
-                   AND length(__av_hx) >= st.pos + 179
-                THEN CASE
-                  WHEN substring(__av_hx, CAST(st.pos AS INT) + 96, 8)
-                         = '00000000'
-                       AND substring(__av_hx, CAST(st.pos AS INT) + 128, 8)
-                         = '00000000'
-                    THEN ${mp4St(mp4Hop, "st.ts", "st.dur",
-                      be("st.pos + 176", 2), be("st.pos + 168", 2),
-                      "st.ts IS NOT NULL")}
-                  ELSE ${mp4St(mp4Hop, "st.ts", "st.dur",
-                    be("st.pos + 168", 2), be("st.pos + 176", 2),
-                    "st.ts IS NOT NULL")}
-                END
-              WHEN substring(__av_hx, CAST(st.pos AS INT) + 16, 2) = '01'
-                   AND length(__av_hx) >= st.pos + 203
-                THEN CASE
-                  WHEN substring(__av_hx, CAST(st.pos AS INT) + 120, 8)
-                         = '00000000'
-                       AND substring(__av_hx, CAST(st.pos AS INT) + 152, 8)
-                         = '00000000'
-                    THEN ${mp4St(mp4Hop, "st.ts", "st.dur",
-                      be("st.pos + 200", 2), be("st.pos + 192", 2),
-                      "st.ts IS NOT NULL")}
-                  ELSE ${mp4St(mp4Hop, "st.ts", "st.dur",
-                    be("st.pos + 192", 2), be("st.pos + 200", 2),
-                    "st.ts IS NOT NULL")}
-                END
-              ELSE ${mp4St("st.pos", "st.ts", "st.dur",
-                "CAST(NULL AS BIGINT)", "CAST(NULL AS BIGINT)", "true")}
-            END
-          WHEN substring(__av_hx, CAST(st.pos AS INT) + 8, 8) = '6D6F6F76'
-               OR substring(__av_hx, CAST(st.pos AS INT) + 8, 8) = '7472616B'
-            THEN ${mp4St("st.pos + 16", "st.ts", "st.dur", "st.w", "st.h",
-              "false")}
-          WHEN ($mp4Size) = 1
-            THEN CASE
-              WHEN length(__av_hx) >= st.pos + 31
-                   AND ${be("st.pos + 16", 4)} = 0
-                   AND ${be("st.pos + 24", 4)} >= 16
-                THEN ${mp4St(s"st.pos + 2 * (${be("st.pos + 24", 4)})",
-                  "st.ts", "st.dur", "st.w", "st.h", "false")}
-              ELSE ${mp4St("st.pos", "st.ts", "st.dur", "st.w", "st.h",
-                "true")}
-            END
-          WHEN ($mp4Size) IS NULL OR ($mp4Size) < 8
-            THEN ${mp4St("st.pos", "st.ts", "st.dur", "st.w", "st.h", "true")}
-          ELSE ${mp4St(mp4Hop, "st.ts", "st.dur", "st.w", "st.h", "false")}
-        END,
-        st -> st)""")
-    // unsigned single-byte reader
-    def b(at: String) =
-      s"""CAST(conv(substring(__av_hx, CAST(($at) AS INT), 2), 16, 10)
-         |AS BIGINT)""".stripMargin
-    // MP3: first-frame char position — one hop over an ID3v2 tag via its
-    // syncsafe 28-bit size (bytes 6-9, each 7-bit; a high bit set is
-    // malformed -> NULL), else byte 0
-    lazy val mp3P = expr(s"""
-      CASE WHEN substring(__av_hx, 1, 6) = '494433' THEN
-        CASE WHEN length(__av_hx) >= 20
-                  AND ${b("13")} < 128 AND ${b("15")} < 128
-                  AND ${b("17")} < 128 AND ${b("19")} < 128
-          THEN CAST(21 + 2 * (${b("13")} * 2097152 + ${b("15")} * 16384 +
-                              ${b("17")} * 128 + ${b("19")}) AS BIGINT)
-          ELSE CAST(NULL AS BIGINT) END
-      ELSE CAST(1 AS BIGINT) END""")
-    // MP3 frame header fields: Layer III only; reserved version/index
-    // values NULL the whole struct (the validity gate precedes every
-    // element_at, so ANSI can never see an out-of-range index)
-    val hdr2 = b("__av_p + 2") // version/layer byte
-    val hdr3 = b("__av_p + 4") // bitrate/samplerate byte
-    lazy val mp3Fields = expr(s"""
-      CASE WHEN __av_p IS NOT NULL
-                AND length(__av_hx) >= __av_p + 7
-                AND substring(__av_hx, CAST(__av_p AS INT), 2) = 'FF'
-                AND $hdr2 >= 224
-                AND ($hdr2 div 2) % 4 = 1
-                AND ($hdr2 div 8) % 4 <> 1
-                AND $hdr3 div 16 BETWEEN 1 AND 14
-                AND ($hdr3 div 4) % 4 <> 3
-        THEN named_struct(
-          'kbps', CAST(CASE WHEN ($hdr2 div 8) % 4 = 3
-            THEN element_at(
-              array(32,40,48,56,64,80,96,112,128,160,192,224,256,320),
-              CAST($hdr3 div 16 AS INT))
-            ELSE element_at(
-              array(8,16,24,32,40,48,56,64,80,96,112,128,144,160),
-              CAST($hdr3 div 16 AS INT)) END AS BIGINT),
-          'sr', CAST(element_at(
-              CASE ($hdr2 div 8) % 4
-                WHEN 3 THEN array(44100, 48000, 32000)
-                WHEN 2 THEN array(22050, 24000, 16000)
-                ELSE array(11025, 12000, 8000) END,
-              CAST(($hdr3 div 4) % 4 + 1 AS INT)) AS BIGINT),
-          'ch', CAST(CASE WHEN ${b("__av_p + 6")} div 64 = 3
-            THEN 1 ELSE 2 END AS BIGINT))
-        ELSE CAST(NULL AS STRUCT<kbps: BIGINT, sr: BIGINT, ch: BIGINT>)
-      END""")
-    // FLAC STREAMINFO bit-packed core, read as two u32s (sign-bit safe):
-    // u32a = <sr:20><ch-1:3><bps-1:5><total_hi:4>, u32b = total_lo
-    val u32a = "CAST(conv(substring(__av_hx, 37, 8), 16, 10) AS BIGINT)"
-    val u32b = "CAST(conv(substring(__av_hx, 45, 8), 16, 10) AS BIGINT)"
-    lazy val flacFields = expr(s"""
-      CASE WHEN length(__av_hx) >= 52 AND ${b("9")} % 128 = 0
-        THEN named_struct(
-          'sr', CAST($u32a div 4096 AS BIGINT),
-          'ch', CAST(($u32a div 512) % 8 + 1 AS BIGINT),
-          'bps', CAST(($u32a div 16) % 32 + 1 AS BIGINT),
-          'total', CAST(($u32a % 16) * 4294967296 + $u32b AS BIGINT))
-        ELSE CAST(NULL AS
-          STRUCT<sr: BIGINT, ch: BIGINT, bps: BIGINT, total: BIGINT>)
-      END""")
-    // Ogg first-page payload: after the variable-length segment table.
-    // The payload char offset is bounded by construction (<= 565), so the
-    // INT casts are safe without a BIGINT guard.
-    val oggP = s"(55 + 2 * ${b("53")})"
-    def oggSt(ch: String, sr: String, codec: String) =
-      s"named_struct('ch', $ch, 'sr', $sr, 'codec', $codec)"
-    lazy val oggFields = expr(s"""
-      CASE WHEN length(__av_hx) >= 54 AND ${b("9")} = 0 THEN
-        CASE
-          WHEN length(__av_hx) >= $oggP + 31
-               AND substring(__av_hx, CAST($oggP AS INT), 16)
-                 = '4F70757348656164'
-            THEN ${oggSt(b(s"$oggP + 18"), le32(s"$oggP + 24"), "'opus'")}
-          WHEN length(__av_hx) >= $oggP + 31
-               AND substring(__av_hx, CAST($oggP AS INT), 14)
-                 = '01766F72626973'
-            THEN ${oggSt(b(s"$oggP + 22"), le32(s"$oggP + 24"), "'vorbis'")}
-          ELSE CAST(NULL AS STRUCT<ch: BIGINT, sr: BIGINT, codec: STRING>)
-        END
-      ELSE CAST(NULL AS STRUCT<ch: BIGINT, sr: BIGINT, codec: STRING>)
-      END""")
-    // WebM/Matroska (EBML): every element is <id varint><size varint>
-    // <payload>, where the FIRST BYTE's leading-bit class encodes each
-    // varint's length (>=0x80 -> 1 byte, >=0x40 -> 2, ... id up to 4,
-    // size up to 8) and the size's value strips its marker bit
-    // (raw - 2^(7*len)). Nothing is at a fixed offset; the walk below
-    // DESCENDS into the six container elements (EBML head, Segment, Info,
-    // Tracks, TrackEntry, Video/Audio — descending costs id+size only, so
-    // a container's size, INCLUDING the all-ones "unknown size" real
-    // stream muxers write for Segment, never needs trusting), reads the
-    // leaf fields it knows (DocType, TimestampScale, Duration, Pixel
-    // Width/Height, Channels, SamplingFrequency, CodecID) and generically
-    // hops everything else (Void, SeekHead, CRC-32, TrackNumber, ...) by
-    // id-class + size. Duration and SamplingFrequency are EBML FLOATS
-    // (IEEE 754 BE, 4 or 8 bytes) decoded arithmetically: sign bit set,
-    // inf/nan, or subnormal -> NULL (a negative/non-finite duration is
-    // malformed); the decode is exact for the integer-valued floats real
-    // muxers write. Sizes are UNTRUSTED so pos rides BIGINT and every
-    // bounds check precedes the INT cast; a truncated or malformed
-    // element ends the walk KEEPING the fields found so far (a header
-    // parser prices what it saw, NULL for the rest); the first Cluster
-    // (media data) ends it by contract. Walk budget 3x maxChunks: the
-    // EBML head alone has ~7 children before DocTypeReadVersion and each
-    // descent spends an iteration.
-    //
-    // PLAN-SIZE DISCIPLINE: SQL lambdas have no let-bindings, and a
-    // naive inlining of the per-iteration intermediates (size-varint
-    // length, value, data position — each referencing the others) blew
-    // the fold up to a multi-MiB expression whose OPTIMIZER cost taxed
-    // every avMetadata plan ~+1.1 s and the 9-family census 10x
-    // (measured r13, same mechanism as the pushdown-substitution find).
-    // The fold below fakes lets with nested single-element
-    // transform(array(x), v -> ...) hops: szp (size-varint position),
-    // then s.szl (its length), then v.szv/v.dp (its value / the payload
-    // position) are each computed ONCE and referenced as lambda
-    // variables; the whole fold shrank ~10x and per-iteration work at
-    // execution dropped the same way (the interpreted HOF evaluator
-    // re-evaluated every inlined copy).
-    // IEEE 754 BE decode at a data position (f32/f64): NULL for sign bit
-    // set, inf/nan (max exponent) and subnormals (zero exponent, unless
-    // all-zero bits = exact 0.0). Exact for mantissas real durations use.
-    def f32(dp: String) =
-      s"""CASE WHEN ${b(dp)} >= 128 THEN CAST(NULL AS DOUBLE)
-         |WHEN ${be(dp, 4)} = 0 THEN 0.0D
-         |WHEN ${be(dp, 4)} div 8388608 IN (0, 255) THEN CAST(NULL AS DOUBLE)
-         |ELSE (1.0D + CAST(${be(dp, 4)} % 8388608 AS DOUBLE) / 8388608.0D)
-         |* power(2.0D, CAST(${be(dp, 4)} div 8388608 AS DOUBLE) - 127.0D)
-         |END""".stripMargin
-    def f64(dp: String) =
-      s"""CASE WHEN ${b(dp)} >= 128 THEN CAST(NULL AS DOUBLE)
-         |WHEN ${be(dp, 8)} = 0 THEN 0.0D
-         |WHEN ${be(dp, 8)} div 4503599627370496 IN (0, 2047)
-         |  THEN CAST(NULL AS DOUBLE)
-         |ELSE (1.0D + CAST(${be(dp, 8)} % 4503599627370496 AS DOUBLE)
-         |/ 4503599627370496.0D)
-         |* power(2.0D, CAST(${be(dp, 8)} div 4503599627370496 AS DOUBLE)
-         |- 1023.0D) END""".stripMargin
-    def webSt(pos: String, dt: String, scale: String, dur: String,
-              w: String, h: String, ch: String, sr: String, cid: String,
-              done: String) =
-      s"""named_struct('pos', $pos, 'dt', $dt, 'scale', $scale,
-         |'dur', $dur, 'w', $w, 'h', $h, 'ch', $ch, 'sr', $sr,
-         |'cid', $cid, 'done', $done)""".stripMargin
-    def webKeep(pos: String, done: String,
-                over: (String, String)*): String = {
-      val f = Map("dt" -> "st.dt", "scale" -> "st.scale", "dur" -> "st.dur",
-        "w" -> "st.w", "h" -> "st.h", "ch" -> "st.ch", "sr" -> "st.sr",
-        "cid" -> "st.cid") ++ over
-      webSt(pos, f("dt"), f("scale"), f("dur"), f("w"), f("h"), f("ch"),
-        f("sr"), f("cid"), done)
-    }
-    // a leaf read inside the innermost lambda: guard the declared size
-    // (v.szv) and the hexed prefix, read `value` at v.dp, hop past the
-    // payload; malformed/truncated ends the walk keeping prior fields
-    def webLeaf(field: String, value: String,
-                szCond: String = "v.szv BETWEEN 1 AND 8") =
-      s"""CASE WHEN $szCond
-         |AND length(__av_hx) >= v.dp + 2 * v.szv - 1
-         |THEN ${webKeep("v.dp + 2 * v.szv", "false", field -> value)}
-         |ELSE ${webKeep("st.pos", "true")} END""".stripMargin
-    // uint payload of v.szv bytes at v.dp
-    val webUint =
-      """CAST(conv(substring(__av_hx, CAST(v.dp AS INT),
-        |CAST(2 * v.szv AS INT)), 16, 10) AS BIGINT)""".stripMargin
-    // float payload (EBML floats are f32 or f64)
-    val webFloat = s"CASE WHEN v.szv = 4 THEN ${f32("v.dp")} " +
-      s"ELSE ${f64("v.dp")} END"
-    // string payload (bounded; szCond caps v.szv at 16 bytes)
-    val webStr =
-      """substring(__av_hx, CAST(v.dp AS INT),
-        |CAST(2 * v.szv AS INT))""".stripMargin
-    lazy val webmFold = expr(s"""
-      aggregate(
-        sequence(1, ${3 * maxChunks}),
-        ${webSt("CAST(1 AS BIGINT)", "CAST(NULL AS STRING)",
-          "CAST(NULL AS BIGINT)", "CAST(NULL AS DOUBLE)",
-          "CAST(NULL AS BIGINT)", "CAST(NULL AS BIGINT)",
-          "CAST(NULL AS BIGINT)", "CAST(NULL AS DOUBLE)",
-          "CAST(NULL AS STRING)", "false")},
-        (st, i) -> CASE
-          WHEN st.done THEN st
-          WHEN st.pos IS NULL OR length(__av_hx) < st.pos + 3
-            THEN ${webKeep("st.pos", "true")}
-          ELSE element_at(transform(
-            array(st.pos + 2 * (CASE
-              WHEN ${b("st.pos")} >= 128 THEN 1
-              WHEN ${b("st.pos")} >= 64 THEN 2
-              WHEN ${b("st.pos")} >= 32 THEN 3
-              WHEN ${b("st.pos")} >= 16 THEN 4 END)),
-            szp -> element_at(transform(
-              array(named_struct(
-                'idh', substring(__av_hx, CAST(st.pos AS INT),
-                  CAST(szp - st.pos AS INT)),
-                'szl', CASE
-                  WHEN ${b("szp")} >= 128 THEN 1
-                  WHEN ${b("szp")} >= 64 THEN 2
-                  WHEN ${b("szp")} >= 32 THEN 3
-                  WHEN ${b("szp")} >= 16 THEN 4
-                  WHEN ${b("szp")} >= 8 THEN 5
-                  WHEN ${b("szp")} >= 4 THEN 6
-                  WHEN ${b("szp")} >= 2 THEN 7
-                  WHEN ${b("szp")} >= 1 THEN 8 END)),
-              s -> element_at(transform(
-                array(named_struct(
-                  'idh', s.idh,
-                  'szl', s.szl,
-                  'szv', CAST(conv(substring(__av_hx, CAST(szp AS INT),
-                      2 * s.szl), 16, 10) AS BIGINT)
-                    - shiftleft(CAST(1 AS BIGINT), 7 * s.szl),
-                  'dp', szp + 2 * s.szl)),
-                v -> CASE
-                  WHEN v.idh IN ('1A45DFA3', '18538067', '1549A966',
-                                 '1654AE6B', 'AE', 'E0', 'E1')
-                    THEN ${webKeep("v.dp", "false")}
-                  WHEN v.idh = '1F43B675'
-                    THEN ${webKeep("st.pos", "true")}
-                  WHEN v.idh = '4282'
-                    THEN ${webLeaf("dt", webStr,
-                      "v.szv BETWEEN 1 AND 16")}
-                  WHEN v.idh = '2AD7B1'
-                    THEN ${webLeaf("scale", webUint)}
-                  WHEN v.idh = '4489'
-                    THEN ${webLeaf("dur", webFloat, "v.szv IN (4, 8)")}
-                  WHEN v.idh = 'B0'
-                    THEN ${webLeaf("w", webUint)}
-                  WHEN v.idh = 'BA'
-                    THEN ${webLeaf("h", webUint)}
-                  WHEN v.idh = '9F'
-                    THEN ${webLeaf("ch", webUint)}
-                  WHEN v.idh = 'B5'
-                    THEN ${webLeaf("sr", webFloat, "v.szv IN (4, 8)")}
-                  WHEN v.idh = '86'
-                    THEN ${webLeaf("cid", webStr,
-                      "v.szv BETWEEN 1 AND 16")}
-                  WHEN v.szv IS NULL OR v.szv < 0
-                       OR v.szv = shiftleft(CAST(1 AS BIGINT),
-                                            7 * v.szl) - 1
-                    THEN ${webKeep("st.pos", "true")}
-                  ELSE ${webKeep("v.dp + 2 * v.szv", "false")}
-                END), 1)), 1)), 1)
-        END,
-        st -> st)""")
-    val hx = col("__av_hx")
-    val ebml = want("webm", "mkv")
-    val hexed = media
-      .withColumn("__av_hx", hex(substring(col(contentCol), 1, headerBytes)))
-    // the EBML fold is gated on the magic directly (not av_format):
-    // av_format NEEDS its DocType ('webm' vs generic 'mkv' Matroska)
-    val withWeb = if (ebml)
-      hexed.withColumn("__av_web", when(hx.startsWith("1A45DFA3"), webmFold))
-    else hexed
-    val sniffed = withWeb
-      .withColumn("av_format", {
-        val base = when(hx.startsWith("52494646") &&
-          substring(hx, 17, 8) === "57415645", "wav")
-          .when(substring(hx, 9, 8) === "66747970", "mp4")
-          .when(hx.startsWith("494433") ||
-            (substring(hx, 1, 2) === "FF" &&
-              conv(substring(hx, 3, 2), 16, 10).cast(LongType) >= 224),
-            "mp3")
-          .when(hx.startsWith("664C6143"), "flac")
-          .when(hx.startsWith("4F676753"), "ogg")
-        if (!ebml) base
-        else base.when(hx.startsWith("1A45DFA3"),
-          // 7765626D = 'webm'; any other (or missing) DocType is
-          // generic Matroska — 6D6174726F736B61 = 'matroska'
-          when(col("__av_web.dt") === "7765626D", "webm")
-            .otherwise("mkv"))
-      })
-    val withFolds = Seq(
-      ("__av_wav", want("wav"),
-        () => when(col("av_format") === "wav", wavFold)),
-      ("__av_mp4", want("mp4"),
-        () => when(col("av_format") === "mp4", mp4Fold)),
-      ("__av_p", want("mp3"),
-        () => when(col("av_format") === "mp3", mp3P)),
-      ("__av_mp3", want("mp3"),
-        () => when(col("av_format") === "mp3", mp3Fields)),
-      ("__av_flac", want("flac"),
-        () => when(col("av_format") === "flac", flacFields)),
-      ("__av_ogg", want("ogg"),
-        () => when(col("av_format") === "ogg", oggFields))
-    ).foldLeft(sniffed) { case (df, (name, wanted, mk)) =>
-      if (wanted) df.withColumn(name, mk()) else df
-    }
-    // coalesce over only the requested families' fields; none -> NULL
-    def coal(parts: Seq[(Boolean, Column)], orElse: Column): Column =
-      parts.collect { case (true, c) => c } match {
-        case Seq() => orElse
-        case cs    => coalesce(cs: _*)
-      }
-    val nullL = lit(null).cast(LongType)
-    withFolds
-      .withColumn("codec", coal(Seq(
-        want("ogg") -> col("__av_ogg.codec"),
-        // the track's CodecID string, e.g. V_VP9 / A_OPUS. NOT decode():
-        // under ANSI decode(bin,'UTF-8') THROWS on invalid bytes (fuzz-
-        // caught — one corrupt CodecID would kill a corpus job); the
-        // binary->string cast is non-validating and try_validate_utf8
-        // turns invalid sequences into NULL
-        ebml -> expr(
-          "try_validate_utf8(cast(unhex(__av_web.cid) as string))")),
-        lit(null).cast("string")))
-      .withColumn("channels", coal(Seq(
-        want("wav") -> col("__av_wav.ch"), want("mp3") -> col("__av_mp3.ch"),
-        want("flac") -> col("__av_flac.ch"),
-        want("ogg") -> col("__av_ogg.ch"), ebml -> col("__av_web.ch")),
-        nullL) + ndZero)
-      .withColumn("sample_rate", coal(Seq(
-        want("wav") -> col("__av_wav.sr"), want("mp3") -> col("__av_mp3.sr"),
-        want("flac") -> col("__av_flac.sr"),
-        want("ogg") -> col("__av_ogg.sr"),
-        // SamplingFrequency is an EBML float; integral for real rates
-        ebml -> col("__av_web.sr").cast(LongType)),
-        nullL) + ndZero)
-      .withColumn("bits_per_sample", coal(Seq(
-        want("wav") -> col("__av_wav.bits"),
-        want("flac") -> col("__av_flac.bps")), nullL) + ndZero)
-      .withColumn("width", coal(Seq(
-        want("mp4") -> col("__av_mp4.w"), ebml -> col("__av_web.w")),
-        nullL) + ndZero)
-      .withColumn("height", coal(Seq(
-        want("mp4") -> col("__av_mp4.h"), ebml -> col("__av_web.h")),
-        nullL) + ndZero)
-      .withColumn("duration_ms", whenChain(Seq(
-        want("wav") -> (col("av_format") === "wav" && col("__av_wav.br") > 0,
-          expr("(__av_wav.db * 1000) div __av_wav.br")),
-        want("mp4") -> (col("av_format") === "mp4" && col("__av_mp4.ts") > 0,
-          expr("(__av_mp4.dur * 1000) div __av_mp4.ts")),
-        // CBR estimate: audio bytes (blob minus the ID3 tag) x 8 bits
-        // over kilobits/s lands directly in milliseconds
-        want("mp3") -> (col("av_format") === "mp3" &&
-          col("__av_mp3.kbps") > 0,
-          expr(s"""((octet_length(`$contentCol`) - (__av_p - 1) div 2)
-                  | * 8) div __av_mp3.kbps""".stripMargin)),
-        want("flac") -> (col("av_format") === "flac" &&
-          col("__av_flac.sr") > 0,
-          expr("(__av_flac.total * 1000) div __av_flac.sr")),
-        // Duration is in TICKS of TimestampScale NANOSECONDS (default
-        // 1,000,000 = ms ticks when the Info omits it): ms = ticks x
-        // scale / 1e6 — exact for the integral floats real muxers write
-        ebml -> (col("av_format").isin("webm", "mkv") &&
-          col("__av_web.dur").isNotNull,
-          floor(col("__av_web.dur") *
-            coalesce(col("__av_web.scale"), lit(1000000L))
-              .cast("double") / lit(1000000.0d)).cast(LongType))
-      ).collect { case (true, b) => b }) + ndZero)
-      .drop("__av_hx", "__av_wav", "__av_mp4", "__av_p", "__av_mp3",
-        "__av_flac", "__av_ogg", "__av_web")
-  }
+                 headerBytes: Int = 64 * 1024): DataFrame =
+    appendParsed(media, "Multimodal.avMetadata", "av_metadata", contentCol,
+      Seq(maxChunks, headerBytes), AvMetadata.schema)
 
   /** Deterministic VALID WAV/MP4 container exhibit bytes — the test/demo
     * source for [[avMetadata]] (pmod(id, 2): even ids PCM WAV, odd MP4;
@@ -2414,6 +1193,22 @@ object Multimodal {
         .as("content"))
   }
 
+  /** Nondeterministic ZERO (`rand() * 0`), added to every fold-backed
+    * numeric output of [[archiveMetadata]] (and [[Pdf]]'s twin) so those
+    * aliases are nondeterministic, which stops Catalyst's predicate
+    * pushdown AT the parse projection. Without it, a `.where` on a parsed
+    * column substitutes the full fold expressions into the predicate —
+    * once per reference — and a simple filter took ~40 s of
+    * optimizer+codegen time (measured: 12 s optimize / 9 s physical /
+    * 19 s codegen on a 64-row frame). EVERY such column carries the
+    * marker so the barrier survives column pruning. The trade:
+    * input-column predicates written AFTER the parse no longer reach the
+    * scan — filter the input BEFORE parsing. The parsers with a JVM
+    * decoder ([[graft.functions.MediaParse]]) need no barrier: their
+    * columns come out of a Generate node ([[appendParsed]]) that keeps
+    * such predicates above the one parse. */
+  private def ndZero: Column = (rand(19L) * lit(0)).cast(LongType)
+
   /** Archive-container metadata from BOUNDED head + tail windows — the
     * crawl-dump triage step that runs BEFORE any decompress: which codec,
     * how many member files, how big uncompressed. Unlike the media
@@ -2462,7 +1257,7 @@ object Multimodal {
     * n_entries (ZIP only), uncompressed_size (gzip mod-2^32, zstd when
     * declared), mtime_epoch (gzip). Malformed/truncated yields NULL,
     * never a throw; filter the INPUT before calling (parse outputs are
-    * pushdown-opaque via [[ndZero]], as the other parsers). */
+    * pushdown-opaque via [[ndZero]]). */
   def archiveMetadata(media: DataFrame, contentCol: String = "content",
                       headBytes: Int = 4096,
                       tailBytes: Int = 4096): DataFrame = {
@@ -2691,40 +1486,5 @@ object Multimodal {
       case s => s
     }
     (nBytes - 1 to 0 by -1).map(i => be.substring(2 * i, 2 * i + 2)).mkString
-  }
-
-  /** STUB decoder: a real implementation would parse the codec and emit
-    * pixel/sample features. This fake derives a deterministic 4-dim
-    * "embedding" from the content hash so downstream plumbing (schema,
-    * batching, joins) is fully exercisable and reproducible. */
-  object FakeDecoder {
-    def decode(row: MediaRow): MediaFeatures = {
-      val hex = md5hex(row.content)
-      val feature = Array.tabulate(4) { j =>
-        // same arithmetic as the SQL oracle: (h60(md5(bytes)#j) % 1000)/1000
-        val hj = md5hex((hex + "#f" + j).getBytes("UTF-8"))
-        java.lang.Long.parseLong(hj.substring(0, 15), 16) % 1000 / 1000.0
-      }
-      MediaFeatures(row.media_id, row.kind, row.content.length.toLong, hex, feature)
-    }
-  }
-
-  private def md5hex(bytes: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(bytes).map("%02x".format(_)).mkString
-
-  /** Batch feature extraction: `mapPartitions` so decoder init happens once
-    * per partition (the pandas-UDF batch analogue). Repartitions to
-    * `parallelism` so blob batches are balanced regardless of upstream file
-    * splits. */
-  def extractFeatures(spark: SparkSession, media: DataFrame,
-                      parallelism: Int = 0): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    val src = (if (parallelism > 0) media.repartition(parallelism) else media)
-      .select("media_id", "kind", "content").as[MediaRow]
-    src.mapPartitions { it =>
-      // per-partition init would go here (codec context, model weights)
-      it.map(FakeDecoder.decode)
-    }
   }
 }

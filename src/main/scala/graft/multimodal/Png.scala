@@ -4,11 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** PNG pixel decode for perceptual hashing — the DECODE-seam rung the
-  * expression-only [[Multimodal.imageDhash]] cannot reach.
+/** PNG pixel decode for perceptual hashing — the DECODE-seam rung for a
+  * format [[Multimodal.imageDhash]] does not read.
   *
-  * [[Multimodal.imageDhash]] covers formats whose pixels are
-  * expression-reachable (BMP/ICO); real crawl images are overwhelmingly
+  * [[Multimodal.imageDhash]] covers formats whose pixels need no codec
+  * (BMP/ICO); real crawl images are overwhelmingly
   * compressed. This module closes the PNG half with a pure-JVM decoder
   * (JDK Inflater — the same dependency-free route `multimodal/Pdf.scala`
   * takes for FlateDecode): 8-bit non-interlaced PNG in ALL FIVE color
@@ -20,23 +20,22 @@ import org.apache.spark.sql.types._
   * parser-family contract); the contract is DOCUMENTED honesty, not
   * silent wrong hashes.
   *
-  * The hash is the SAME standard dHash as the expression path: 9×8
+  * The hash is the SAME standard dHash as the BMP/ICO decoder: 9×8
   * nearest-neighbor luminance grid (srcX = floor(gx·w/9), srcY =
   * floor(gy·h/8)), luminance = unweighted first-three-channel sum
   * (dHash only compares adjacent values, so the BGR-vs-RGB channel
   * order difference between BMP and PNG is irrelevant — the sum is
   * permutation-invariant), bit gy·8+gx = right-neighbor brighter.
-  * PngSpec asserts bit-equality against the expression dHash on
+  * PngSpec asserts bit-equality against the BMP/ICO dHash on
   * re-encoded twins of the BMP exhibits, so the two rungs feed ONE
   * banding pipeline ([[graft.dedup.Dedup.simhashBandedDups]]) with
   * mixed-container signatures (q174).
   *
-  * SCALE SHAPE: decode runs in `mapPartitions` (the [[Multimodal
-  * .extractFeatures]] rung — per-partition init amortized, blobs read
-  * once, only (id, 8-byte hash) travels onward); work per blob is
-  * bounded by `maxBytes` (input) and `maxPixels` (decoded buffer =
-  * ≤4·maxPixels bytes), so a decompression-bomb PNG costs a bounded
-  * allocation then NULLs, never an OOM.
+  * SCALE SHAPE: decode runs in `mapPartitions` (per-partition init
+  * amortized, blobs read once, only (id, 8-byte hash) travels onward);
+  * work per blob is bounded by `maxBytes` (input) and `maxPixels`
+  * (decoded buffer = ≤4·maxPixels bytes), so a decompression-bomb PNG
+  * costs a bounded allocation then NULLs, never an OOM.
   */
 object Png {
 
@@ -202,7 +201,7 @@ object Png {
   }
 
   /** 64-bit dHash of a decoded PNG — bit-compatible with
-    * [[Multimodal.imageDhash]]'s expression path (same grid, same
+    * [[Multimodal.imageDhash]] (same grid, same
     * unweighted luminance, same comparison). null when undecodable. */
   private[graft] def dhashOf(bytes: Array[Byte], maxBytes: Int,
                              maxPixels: Int): java.lang.Long =
@@ -213,7 +212,7 @@ object Png {
 
   /** The SHARED 9×8 grid + adjacent-comparison fold — one definition
     * for every decode rung ([[Png]], [[Jpeg]]), so "bit-compatible with
-    * the expression dHash" is a property of one function, not a claim
+    * the BMP/ICO dHash" is a property of one function, not a claim
     * re-proven per format. */
   private[multimodal] def dhashFromRgb(w: Int, h: Int, channels: Int,
                                        px: Array[Byte]): java.lang.Long = {

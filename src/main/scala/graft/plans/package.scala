@@ -7,13 +7,15 @@ package graft
   * `LogicalPlan`+`Rule`+`SparkStrategy`+`SparkPlan`, (d) `mapPartitions`.
   *
   * Every operator in this engine — the reference's full inventory
-  * (SURVEY.md §2) and the training-data extensions — lands on (a), with two
-  * deliberate exceptions one step down the ladder:
+  * (SURVEY.md §2) and the training-data extensions — lands on (a), with
+  * deliberate exceptions further down the ladder:
   *
   *  - `graft.functions.TopKAgg`: a typed `Aggregator` (the sanctioned
   *    custom-aggregation surface) where built-ins cost O(group) memory;
-  *  - `graft.multimodal.Multimodal.extractFeatures`: `mapPartitions` (d),
-  *    because media decoding is per-partition native-library work by nature.
+  *  - the other `graft.functions` classes, custom expressions (b) where a
+  *    JVM routine over one value replaces an expression composition — the
+  *    media parsers (`MediaParse`) among them;
+  *  - the `Png`/`Jpeg` pixel decoders: `mapPartitions` (d).
   *
   * Even the as-of join — the textbook "Spark can't express this" case —
   * composes as union + sort + last(ignoreNulls) window

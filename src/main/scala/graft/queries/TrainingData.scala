@@ -1448,7 +1448,7 @@ object TrainingData {
     // ---- Multimodal columns -------------------------------------------
 
     // Binary media plumbing: opaque blob + typed metadata + deterministic
-    // fake features (decode is a stub; see Multimodal.FakeDecoder).
+    // hash-derived features.
     Q("q41_multimodal_meta",
       (s, dir) => {
         val media = Multimodal.withMetadata(
@@ -1481,15 +1481,13 @@ object TrainingData {
     // construction, PNG substr/conv arithmetic, and the segment walk as a
     // recursive CTE — so conv/substring/hex semantics are pinned
     // cross-engine, not just the end result. The CTE's `iter < 15`
-    // (anchor row included -> 16 walk rows) matches the fold's
-    // sequence(1, 16) exactly: both engines examine the same 16 marker
-    // positions, so a 17th-marker SOF NULLs on both sides instead of
-    // diverging. Expression-only: no UDF, no mapPartitions, blobs never
-    // shuffle.
+    // (anchor row included -> 16 walk rows) matches the decoder's
+    // 16-segment walk budget exactly: both engines examine the same 16
+    // marker positions, so a 17th-marker SOF NULLs on both sides instead
+    // of diverging. Blobs never shuffle.
     Q("q125_image_header_dims",
       (s, dir) => Multimodal.imageDims(
-          Multimodal.synthImageBytes(t(s, dir, "documents"), "doc_id"),
-          formats = Set("png", "jpeg"))
+          Multimodal.synthImageBytes(t(s, dir, "documents"), "doc_id"))
         .select(col("media_id"), col("format"), col("width"), col("height"),
           octet_length(col("content")).cast(LongType).as("n_bytes"))
         .orderBy("media_id"),
@@ -1567,11 +1565,10 @@ object TrainingData {
     // DuckDB, so the byte-swap/packing semantics are pinned cross-engine.
     // Hand-assembled golden headers (independent of the generator) live
     // in TrainingDataSpec — a construct/parse-symmetric endianness bug
-    // cannot cancel out there. Expression-only; blobs never shuffle.
+    // cannot cancel out there. Blobs never shuffle.
     Q("q127_web_image_dims",
       (s, dir) => Multimodal.imageDims(
-          Multimodal.synthWebImageBytes(t(s, dir, "documents"), "doc_id"),
-          formats = Set("gif", "webp"))
+          Multimodal.synthWebImageBytes(t(s, dir, "documents"), "doc_id"))
         .select(col("media_id"), col("format"), col("width"), col("height"),
           octet_length(col("content")).cast(LongType).as("n_bytes"))
         .orderBy("media_id"),
@@ -1661,12 +1658,11 @@ object TrainingData {
     // exercise the wrap in this bulk oracle). Bytes are synthesized valid
     // containers (Multimodal.synthBmpIcoBytes); the oracle recomputes
     // every field as GROUND-TRUTH id arithmetic; golden hand-assembled
-    // headers in TrainingDataSpec pin the byte layout. Expression-only;
-    // blobs never shuffle.
+    // headers in TrainingDataSpec pin the byte layout. Blobs never
+    // shuffle.
     Q("q130_bmp_ico_dims",
       (s, dir) => Multimodal.imageDims(
-          Multimodal.synthBmpIcoBytes(t(s, dir, "documents"), "doc_id"),
-          formats = Set("bmp", "ico"))
+          Multimodal.synthBmpIcoBytes(t(s, dir, "documents"), "doc_id"))
         .select(col("media_id"), col("format"), col("width"), col("height"),
           octet_length(col("content")).cast(LongType).as("n_bytes"))
         .orderBy("media_id"),
@@ -1697,11 +1693,10 @@ object TrainingData {
     // SHORT-vs-LONG value types where a SHORT occupies the FIRST two
     // bytes of the value field in FILE order (a whole-u32 read on 'MM'
     // files yields width x 65536). Oracle is ground-truth id arithmetic;
-    // goldens pin the byte layout. Expression-only; blobs never shuffle.
+    // goldens pin the byte layout. Blobs never shuffle.
     Q("q132_tiff_dims",
       (s, dir) => Multimodal.imageDims(
-          Multimodal.synthTiffBytes(t(s, dir, "documents"), "doc_id"),
-          formats = Set("tiff"))
+          Multimodal.synthTiffBytes(t(s, dir, "documents"), "doc_id"))
         .select(col("media_id"), col("format"), col("width"), col("height"),
           octet_length(col("content")).cast(LongType).as("n_bytes"))
         .orderBy("media_id"),
@@ -1731,12 +1726,10 @@ object TrainingData {
     // spec(id) end-to-end; the byte-layout independence (a symmetric
     // generator+parser endianness bug) is pinned by hand-assembled golden
     // headers in TrainingDataSpec, and cross-engine hex/conv semantics
-    // are already pinned by q125/q127. Expression-only; blobs never
-    // shuffle.
+    // are already pinned by q125/q127. Blobs never shuffle.
     Q("q128_av_header_meta",
       (s, dir) => Multimodal.avMetadata(
-          Multimodal.synthAvBytes(t(s, dir, "documents"), "doc_id"),
-          formats = Set("wav", "mp4"))
+          Multimodal.synthAvBytes(t(s, dir, "documents"), "doc_id"))
         .select(col("media_id"), col("av_format"), col("channels"),
           col("sample_rate"), col("bits_per_sample"),
           col("width"), col("height"), col("duration_ms"),
@@ -1785,11 +1778,10 @@ object TrainingData {
     // every field as GROUND-TRUTH id arithmetic — spec(id), not a parse
     // replay — and hand-assembled golden headers in TrainingDataSpec pin
     // the byte layout (syncsafe-malformed, reserved-index and truncation
-    // NULL paths included). Expression-only; blobs never shuffle.
+    // NULL paths included). Blobs never shuffle.
     Q("q129_audio_header_meta",
       (s, dir) => Multimodal.avMetadata(
-          Multimodal.synthAudioBytes(t(s, dir, "documents"), "doc_id"),
-          formats = Set("mp3", "flac"))
+          Multimodal.synthAudioBytes(t(s, dir, "documents"), "doc_id"))
         .select(col("media_id"), col("av_format"), col("channels"),
           col("sample_rate"), col("bits_per_sample"), col("duration_ms"),
           octet_length(col("content")).cast(LongType).as("n_bytes"))
@@ -1845,11 +1837,10 @@ object TrainingData {
     // contract — it lives in the LAST page's granule position, which a
     // header parser cannot reach. Oracle recomputes all fields as
     // GROUND-TRUTH id arithmetic; golden headers in TrainingDataSpec pin
-    // the byte layout. Expression-only; blobs never shuffle.
+    // the byte layout. Blobs never shuffle.
     Q("q131_ogg_header_meta",
       (s, dir) => Multimodal.avMetadata(
-          Multimodal.synthOggBytes(t(s, dir, "documents"), "doc_id"),
-          formats = Set("ogg"))
+          Multimodal.synthOggBytes(t(s, dir, "documents"), "doc_id"))
         .select(col("media_id"), col("av_format"), col("codec"),
           col("channels"), col("sample_rate"), col("duration_ms"),
           octet_length(col("content")).cast(LongType).as("n_bytes"))
@@ -1881,8 +1872,7 @@ object TrainingData {
     // ground-truth id arithmetic; goldens pin the byte layout.
     Q("q134_exif_orientation",
       (s, dir) => Multimodal.imageDims(
-          Multimodal.synthExifJpegBytes(t(s, dir, "documents"), "doc_id"),
-          formats = Set("jpeg"))
+          Multimodal.synthExifJpegBytes(t(s, dir, "documents"), "doc_id"))
         .select(col("media_id"), col("format"), col("orientation"),
           col("width"), col("height"),
           octet_length(col("content")).cast(LongType).as("n_bytes"))
@@ -1914,12 +1904,10 @@ object TrainingData {
     // oracle recomputes every field as GROUND-TRUTH id arithmetic —
     // spec(id), not a parse replay — and hand-assembled golden headers in
     // TrainingDataSpec pin the byte layout (mif1 brand, largesize hop,
-    // truncation and non-image-brand NULL paths). Expression-only; blobs
-    // never shuffle.
+    // truncation and non-image-brand NULL paths). Blobs never shuffle.
     Q("q135_isobmff_image_dims",
       (s, dir) => Multimodal.imageDims(
-          Multimodal.synthIsobmffBytes(t(s, dir, "documents"), "doc_id"),
-          formats = Set("avif", "heic", "heif"))
+          Multimodal.synthIsobmffBytes(t(s, dir, "documents"), "doc_id"))
         .select(col("media_id"), col("format"), col("width"), col("height"),
           octet_length(col("content")).cast(LongType).as("n_bytes"))
         .orderBy("media_id"),
@@ -1955,11 +1943,10 @@ object TrainingData {
     // the oracle recomputes every field and the byte length as
     // GROUND-TRUTH id arithmetic — spec(id), not a parse replay — and
     // hand-assembled golden headers in TrainingDataSpec pin the layout.
-    // Expression-only; blobs never shuffle.
+    // Blobs never shuffle.
     Q("q136_webm_metadata",
       (s, dir) => Multimodal.avMetadata(
-          Multimodal.synthWebmBytes(t(s, dir, "documents"), "doc_id"),
-          formats = Set("webm", "mkv"))
+          Multimodal.synthWebmBytes(t(s, dir, "documents"), "doc_id"))
         .select(col("media_id"), col("av_format"), col("codec"),
           col("channels"), col("sample_rate"), col("width"), col("height"),
           col("duration_ms"),
@@ -2174,18 +2161,9 @@ object TrainingData {
         val d = t(s, dir, "documents")
         // union the BYTE tables first, then parse ONCE per parser: the
         // parsers are row-wise, so union-then-parse equals
-        // parse-then-union — but it puts 2 parser expressions in the
-        // plan instead of 9, and optimizer cost scales with plan size
-        // (measured r13: per-family parsing made the census 2.6x
-        // slower, pure planning). It is also the honest corpus shape:
-        // one media table through one parser, whatever the mix.
-        // both census halves read their JVM mapPartitions rungs
-        // (imageDimsFast / avMetadataFast — each parity-pinned against
-        // its expression twin by ImageDimsFastSpec / AvFastSpec): the
-        // interpreted header folds were the census's wall (r20, guide
-        // §4). The per-family exhibit queries keep the expression
-        // parsers — both stay oracle-checked.
-        val img = Multimodal.imageDimsFast(Seq(
+        // parse-then-union, and it is the honest corpus shape: one
+        // media table through one parser, whatever the mix.
+        val img = Multimodal.imageDims(Seq(
             Multimodal.synthImageBytes(d, "doc_id"),
             Multimodal.synthWebImageBytes(d, "doc_id"),
             Multimodal.synthBmpIcoBytes(d, "doc_id"),
@@ -2194,14 +2172,7 @@ object TrainingData {
             .reduce(_ unionByName _))
           .select(col("format"), col("width"),
             lit(null).cast(LongType).as("duration_ms"))
-        // the A/V side goes through the JVM mapPartitions rung
-        // (avMetadataFast — AvFastSpec pins it bit-compatible with the
-        // expression parser): the interpreted chunk-walk folds were
-        // ~0.1 ms/row and the census wall's dominant term (r20, guide
-        // §4; CensusProbe A/B: av synth+meta noop 2.1-2.4 s -> 0.7 s).
-        // The per-family exhibit queries (q128/q153/q158/q169) keep the
-        // expression parser — both stay oracle-checked.
-        val av = graft.multimodal.AvFast.avMetadataFast(Seq(
+        val av = Multimodal.avMetadata(Seq(
             Multimodal.synthAvBytes(d, "doc_id"),
             Multimodal.synthAudioBytes(d, "doc_id"),
             Multimodal.synthOggBytes(d, "doc_id"),
@@ -4584,7 +4555,7 @@ object TrainingData {
         .stripMargin)),
 
     // Perceptual image hash (Multimodal.imageDhash): 64-bit dHash over
-    // the expression-decodable pixel formats — 9x8 nearest-neighbor
+    // the codec-free pixel formats — 9x8 nearest-neighbor
     // luminance grid, bit gy*8+gx = right-neighbor-brighter. The synth
     // corpus stores the SAME 9x8 pixel formula in three layouts the
     // parser must normalize identically (24bpp bottom-up BMP, 32bpp
@@ -4651,10 +4622,7 @@ object TrainingData {
     // feasible; the Spark side is the banded join at any scale.
     Q("q167_image_neardup",
       (s, dir) => {
-        // imageDhashFast: the banding composition reads the JVM decode
-        // rung (ImageDhashSpec pins it bit-identical to the expression
-        // dHash); q166/q125-class exhibits keep the expression form
-        val sigs = graft.multimodal.Multimodal.imageDhashFast(
+        val sigs = graft.multimodal.Multimodal.imageDhash(
             graft.multimodal.Multimodal.synthDhashImageBytes(
               t(s, dir, "documents").select("doc_id")
                 .where(col("doc_id") < 2000), "doc_id"))
@@ -4812,7 +4780,7 @@ object TrainingData {
     // a recursive CTE (the q91 pattern).
     Q("q170_image_dup_groups",
       (s, dir) => {
-        val sigs = graft.multimodal.Multimodal.imageDhashFast(
+        val sigs = graft.multimodal.Multimodal.imageDhash(
             graft.multimodal.Multimodal.synthDhashImageBytes(
               t(s, dir, "documents").select("doc_id")
                 .where(col("doc_id") < 600), "doc_id"))
@@ -5118,7 +5086,7 @@ object TrainingData {
     Q("q174_image_neardup_mixed",
       (s, dir) => {
         val docs = t(s, dir, "documents").select("doc_id")
-        val bmp = graft.multimodal.Multimodal.imageDhashFast(
+        val bmp = graft.multimodal.Multimodal.imageDhash(
             graft.multimodal.Multimodal.synthDhashImageBytes(
               docs.where(col("doc_id") < 300), "doc_id"))
           .where(col("dhash").isNotNull)
@@ -5179,11 +5147,10 @@ object TrainingData {
     // the dHash treatment for audio — 65 frames over the 16-bit sample
     // stream, energy = sum(|s|), bit f = energy(f+1) > energy(f), so
     // amplitude scaling (volume normalization, the common audio
-    // near-dup) is signature-invariant. Expression-only: one hex pass,
-    // the avMetadata chunk walk (LIST chunks skipped), two nested HOFs
-    // (plan O(1) in frames AND samples). Plants: pmod 11 = 6 garbage,
-    // pmod 13 = 5 declared-size truncation (both NULL), pmod 10 = 1
-    // the x2-scaled near-dup of id-1. The oracle recomputes every
+    // near-dup) is signature-invariant; the decoder walks the RIFF
+    // chunks (LIST chunks skipped) to fmt and data. Plants: pmod 11 = 6
+    // garbage, pmod 13 = 5 declared-size truncation (both NULL),
+    // pmod 10 = 1 the x2-scaled near-dup of id-1. The oracle recomputes every
     // sample, frame energy, and bit as id arithmetic (HUGEINT combine
     // for bit 63; afp rides as STRING — the q166 float64 lesson).
     // r19: the synth cycles all FOUR containers on pmod(eid,9) —
@@ -5255,13 +5222,7 @@ object TrainingData {
     // Hamming join (Σ bucket² on the Spark side, never |audio|²).
     Q("q176_audio_neardup",
       (s, dir) => {
-        // the banding composition reads the JVM fingerprint rung
-        // (audioEnergyFingerprintFast — AudioSpec pins it bit-identical
-        // to the expression pipeline): the interpreted per-sample
-        // decode was the whole q176 wall (r19 AudioProbe: 2.8-3.1 s
-        // for 2000 clips; the rung decodes them in ~0.1 s). q175 stays
-        // the expression exhibit — both oracle-checked (r20, guide §4).
-        val sigs = graft.multimodal.Audio.audioEnergyFingerprintFast(
+        val sigs = graft.multimodal.Audio.audioEnergyFingerprint(
             graft.multimodal.Audio.synthWavPcmBytes(
               t(s, dir, "documents").select("doc_id")
                 .where(col("doc_id") < 2000), "doc_id"))
@@ -5866,7 +5827,7 @@ object TrainingData {
     Q("q185_image_neardup_trimodal",
       (s, dir) => {
         val docs = t(s, dir, "documents").select("doc_id")
-        val bmp = graft.multimodal.Multimodal.imageDhashFast(
+        val bmp = graft.multimodal.Multimodal.imageDhash(
             graft.multimodal.Multimodal.synthDhashImageBytes(
               docs.where(col("doc_id") < 300), "doc_id"))
           .where(col("dhash").isNotNull)

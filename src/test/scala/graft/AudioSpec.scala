@@ -8,8 +8,8 @@ class AudioSpec extends SparkSpec {
   import spark.implicits._
 
   /** Driver-side reference: the synth formula pushed through the
-    * documented fingerprint definition, independently of the SQL
-    * expressions under test. */
+    * documented fingerprint definition, independently of the decoder
+    * under test. */
   private def refAfp(id: Long): Option[Long] = {
     def pm(a: Long, m: Long): Long = ((a % m) + m) % m
     if (pm(id, 11) == 6 || pm(id, 13) == 5) return None
@@ -122,54 +122,19 @@ class AudioSpec extends SparkSpec {
     assert(fp(tiny).isEmpty)
   }
 
-  test("audioEnergyFingerprintFast (JVM rung) is bit-identical to the " +
-      "expression fingerprint across all layouts, plants, truncation, " +
-      "garbage and malformed blobs") {
-    import spark.implicits._
+  test("fingerprint matches the recorded goldens across all layouts, " +
+      "plants, truncation, garbage and malformed blobs") {
     // the synth cycles all four sample layouts (16/8/24-bit int, f32),
     // the NULL plants (garbage, declared-but-truncated data), the
-    // amplitude-scaled near-dups and the LIST-chunk interleave; a wide
-    // id range incl. negatives covers every pmod class
-    val ids = ((-300L to 300L) ++ (99990L to 100050L)).toDF("doc_id")
-    val media = Audio.synthWavPcmBytes(ids, "doc_id")
-    val exp = Audio.audioEnergyFingerprint(media)
-      .select("media_id", "afp").collect()
-      .map(r => r.get(0) -> r.get(1)).toMap
-    val got = Audio.audioEnergyFingerprintFast(media)
-      .select("media_id", "afp").collect()
-      .map(r => r.get(0) -> r.get(1)).toMap
-    assert(exp.keySet === got.keySet)
-    val bad = exp.keys.filter(k => exp(k) != got(k))
-    assert(bad.isEmpty,
-      bad.take(5).map(k => s"$k exp=${exp(k)} got=${got(k)}").toSeq)
-    assert(exp.values.count(_ != null) > 300, "fixture must mostly decode")
-    // hand-built malformed blobs: fmt declaring size < 16, non-PCM
-    // afmt, bits = 0, a float clip whose samples include Inf (e = 255
-    // poisons the frame -> NULL on both paths), empty/garbage
-    def hx(str: String): Array[Byte] = str.grouped(2)
-      .map(x => Integer.parseInt(x, 16).toByte).toArray
-    def wavHdr(afmt: Int, bits: Int, nData: Int): String = {
-      def le2(v: Int) = f"${v & 0xFF}%02X${(v >> 8) & 0xFF}%02X"
-      def le4(v: Int) = le2(v & 0xFFFF) + le2(v >>> 16)
-      "52494646" + le4(200) + "57415645" + "666D7420" + le4(16) +
-        le2(afmt) + le2(2) + le4(8000) + le4(32000) + le2(4) + le2(bits) +
-        "64617461" + le4(nData)
-    }
-    val inf32 = "0000803F" * 70 + "0000807F" + "0000803F" * 69 // one +Inf
-    val mal = Seq[(Long, Array[Byte])](
-      1L -> null, 2L -> Array.empty[Byte], 3L -> hx("52494646"),
-      4L -> hx(wavHdr(1, 16, 280) + "AA" * 280),
-      5L -> hx(wavHdr(2, 16, 280) + "AA" * 280), // afmt 2: not decodable
-      6L -> hx(wavHdr(1, 0, 280) + "AA" * 280),  // bits 0
-      7L -> hx(wavHdr(3, 32, 560) + inf32),      // float with +Inf
-      8L -> hx(wavHdr(1, 16, 600) + "AA" * 100)  // declared > payload
-    ).toDF("media_id", "content")
-    val expM = Audio.audioEnergyFingerprint(mal)
-      .select("media_id", "afp").collect().map(r => r.get(0) -> r.get(1)).toMap
-    val gotM = Audio.audioEnergyFingerprintFast(mal)
-      .select("media_id", "afp").collect().map(r => r.get(0) -> r.get(1)).toMap
-    assert(expM === gotM)
-    assert(expM(4L) != null && expM(7L) == null && expM(5L) == null)
+    // amplitude-scaled near-dups and the LIST-chunk interleave; the
+    // malformed blobs add a non-PCM fmt, bits = 0, a float +Inf sample
+    // and a data chunk declared longer than its payload
+    val bad = MediaGoldens.mismatches(MediaGoldens.audio(spark))
+    assert(bad.isEmpty, bad.mkString("\n"))
+    val fps = Audio.audioEnergyFingerprint(Audio.synthWavPcmBytes(
+        MediaGoldens.wideIds.toDF("doc_id"), "doc_id"))
+      .select($"afp").as[Option[Long]].collect()
+    assert(fps.count(_.isDefined) > 300, "fixture must mostly decode")
   }
 
   test("the fingerprint is a narrow map: no shuffle exchange in the plan") {

@@ -1,115 +1,75 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.multimodal.{AvFast, Multimodal}
+import graft.multimodal.Multimodal
 
-/** avMetadataFast (the JVM mapPartitions rung) must be bit-compatible
-  * with avMetadata (the expression exhibit) — same 8 appended columns
-  * on every synth family, adversarial ids, malformed blobs and format
-  * subsets. The census (q133) runs the rung; the per-family exhibit
-  * queries keep the expression parser; this spec is what lets both
-  * claim the same semantics. */
+/** avMetadata (decoded by `AvFast.parse`) must be bit-compatible
+  * with the expression parser it replaced, whose output on these
+  * fixtures is recorded in the golden table ([[MediaGoldens]]): the same
+  * 8 appended columns on every synth family, adversarial ids and
+  * malformed blobs, and the same q133 census. */
 class AvFastSpec extends SparkSpec {
+  import MediaGoldens._
 
-  private val cols = Seq("av_format", "codec", "channels", "sample_rate",
-    "bits_per_sample", "width", "height", "duration_ms")
-
-  private def assertParity(media: org.apache.spark.sql.DataFrame,
-                           formats: Set[String] = Multimodal.AvFormats,
-                           label: String): Unit = {
-    val key = media.columns.head
-    val exp = Multimodal.avMetadata(media, formats = formats)
-      .select(col(key) +: cols.map(col): _*).collect()
-      .map(r => r.get(0) -> r.toSeq.tail).toMap
-    val got = AvFast.avMetadataFast(media, formats = formats)
-      .select(col(key) +: cols.map(col): _*).collect()
-      .map(r => r.get(0) -> r.toSeq.tail).toMap
-    assert(exp.keySet === got.keySet, label)
-    val bad = exp.keys.filter(k => exp(k) != got(k))
-    assert(bad.isEmpty,
-      s"$label: ${bad.take(5).map(k => s"$k exp=${exp(k)} got=${got(k)}")}")
+  private def check(groups: Groups): Unit = {
+    val bad = mismatches(groups)
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("parity on all four synth families across a wide id range " +
       "(negatives = adversarial per repo convention)") {
-    import spark.implicits._
-    val ids = ((-300L to 300L) ++ (100000L to 100050L)).toDF("doc_id")
-    assertParity(Multimodal.synthAvBytes(ids, "doc_id"), label = "wav/mp4")
-    assertParity(Multimodal.synthAudioBytes(ids, "doc_id"), label = "mp3/flac")
-    assertParity(Multimodal.synthOggBytes(ids, "doc_id"), label = "ogg")
-    assertParity(Multimodal.synthWebmBytes(ids, "doc_id"), label = "webm/mkv")
+    check(avSynth(spark))
   }
 
   test("parity on malformed/truncated/garbage blobs and prefix edges") {
-    import spark.implicits._
-    def hx(s: String): Array[Byte] = s.grouped(2)
-      .map(b => Integer.parseInt(b, 16).toByte).toArray
-    val blobs: Seq[(Long, Array[Byte])] = Seq(
-      1L -> null,
-      2L -> Array.empty[Byte],
-      3L -> hx("52"), // 'R'
-      4L -> hx("52494646"), // RIFF, truncated before WAVE
-      5L -> hx("5249464600000000" + "57415645"), // RIFF/WAVE, no chunks
-      // RIFF/WAVE with an odd-sized junk chunk then truncated fmt
-      6L -> hx("524946461C00000057415645" + "6A756E6B03000000AABBCC00" +
-        "666D7420100000000100"),
-      // fmt declaring size 8 (< 16): fields must NOT be read
-      7L -> hx("524946462400000057415645" + "666D742008000000" +
-        "01000200401F0000" + "6461746104000000AABBCCDD"),
-      8L -> hx("000000086674797069736F6D"), // bare ftyp, nothing else
-      // mvhd version 7 (unknown): ts/dur nulled, walk done
-      9L -> hx("0000006C6674797069736F6D" + "000000146D766864" +
-        "07000000" + "00" * 12),
-      10L -> hx("494433040000000000"), // ID3 truncated before size end
-      11L -> hx("4944330400000000000010"), // ID3 + tag, no frame
-      12L -> hx("FFFB9000" + "00" * 8), // bare MPEG1 L3 frame header
-      13L -> hx("FFE21000" + "00" * 8), // reserved version bits
-      14L -> hx("664C6143" + "00" * 10), // fLaC truncated STREAMINFO
-      15L -> hx("664C614380000022" + "12345678" + "0AC44218" + "00" * 20),
-      16L -> hx("4F67675300" + "00" * 40), // OggS v0, zero segments, junk
-      17L -> hx("4F67675301" + "00" * 40), // OggS bad version
-      18L -> hx("1A45DFA3"), // EBML magic alone
-      19L -> hx("1A45DFA3934282847765626D"), // head + DocType webm
-      20L -> hx("1A45DFA39342828477656262"), // DocType 'webb' -> mkv
-      // EBML: unknown-size element then Cluster
-      21L -> hx("1A45DFA3FF1F43B67580"),
-      // EBML: Duration f32 with sign bit (-> null duration)
-      22L -> hx("1A45DFA39A18538067941549A9668E4489" + "84C2480000"),
-      23L -> hx("00112233445566778899"), // garbage
-      24L -> ("RIFF....WAVE".getBytes("ISO-8859-1") ++
-        Array.fill(200)(0x41.toByte)))
-    val media = blobs.toDF("doc_id", "content")
-    assertParity(media, label = "malformed")
+    check(avMalformedRows(spark))
   }
 
-  test("parity under format-subset dispatch") {
-    import spark.implicits._
-    val ids = (-50L to 80L).toDF("doc_id")
-    for ((fam, df) <- Seq(
-        "av" -> Multimodal.synthAvBytes(ids, "doc_id"),
-        "audio" -> Multimodal.synthAudioBytes(ids, "doc_id"),
-        "ogg" -> Multimodal.synthOggBytes(ids, "doc_id"),
-        "webm" -> Multimodal.synthWebmBytes(ids, "doc_id"));
-        fs <- Seq(Set("wav"), Set("webm", "mkv"), Set("mp3", "ogg")))
-      assertParity(df, formats = fs, label = s"$fam under $fs")
+  test("q133 census A/V half aggregates as recorded over the real corpus " +
+      "bytes") {
+    check(avCensus(spark, sf))
   }
 
-  test("q133 census twin: rung and expression parser aggregate identically " +
-      "over the real corpus bytes") {
-    val d = graft.sources.Sources.table(spark, sf, "documents")
-      .select("doc_id")
-    val av = Seq(
-      Multimodal.synthAvBytes(d, "doc_id"),
-      Multimodal.synthAudioBytes(d, "doc_id"),
-      Multimodal.synthOggBytes(d, "doc_id"),
-      Multimodal.synthWebmBytes(d, "doc_id")).reduce(_ unionByName _)
-    def census(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy("av_format")
-      .agg(count(lit(1)).as("n"),
-        sum(coalesce(col("width"), lit(0L))).as("sum_w"),
-        sum(coalesce(col("duration_ms"), lit(0L))).as("sum_dur"))
-      .orderBy("av_format").collect().toSeq
-    assert(census(AvFast.avMetadataFast(av)) ===
-      census(Multimodal.avMetadata(av)))
+  test("u64 values at or above 2^63 read as NULL, never wrap or throw: " +
+      "mvhd v1 duration, ISO-BMFF largesize, EBML integer leaf") {
+    import spark.implicits._
+    def mvhd1(dur: String) = // ftyp, then mvhd v1 with timescale 1000
+      "000000106674797069736F6D00000000" + "000000786D766864" +
+        "01000000" + "00" * 16 + "000003E8" + dur + "00" * 80
+    // EBML head (DocType webm), then Segment > Tracks > TrackEntry >
+    // Video, each with an unknown size, then a PixelWidth leaf
+    val ebml = "1A45DFA3" + "8B" + "4282" + "84" + "7765626D" +
+      "18538067" + "FF" + "1654AE6B" + "FF" + "AE" + "FF" + "E0" + "FF"
+    val avif = "00000014" + "66747970" + "61766966" + "00000000" + "6D696631"
+    val ispe = "00000014" + "69737065" + "00000000" + "00000280" + "000001E0"
+    val largeFree = "00000001" + "66726565" + "8000000000000000"
+    val media = Seq(
+      1L -> mvhd1("8000000000000000"), // 2^63
+      2L -> mvhd1("FFFFFFFFFFFFFFFF"), // 2^64 - 1
+      3L -> mvhd1("0020C49BA5E353F8"), // < 2^63, but x 1000 overflows
+      4L -> mvhd1("0000000000002710"), // control: 10 s
+      5L -> ("000000106674797069736F6D00000000" + largeFree + "00" * 8),
+      6L -> (ebml + "B0" + "88" + "8000000000000000"), // width 2^63
+      7L -> (ebml + "B0" + "88" + "0000000000000280"), // control: 640
+      8L -> (avif + largeFree + ispe), // the walk ends before the ispe
+      9L -> (avif + ispe)               // control: 640 x 480
+    ).map { case (k, h) => k -> hx(h) }.toDF("media_id", "content")
+    val av = Multimodal.avMetadata(media.where($"media_id" <= 7L))
+      .select($"media_id", $"av_format", $"width", $"duration_ms")
+      .as[(Long, Option[String], Option[Long], Option[Long])]
+      .collect().sortBy(_._1).toSeq
+    assert(av === Seq(
+      (1L, Some("mp4"), None, None),
+      (2L, Some("mp4"), None, None),
+      (3L, Some("mp4"), None, None),
+      (4L, Some("mp4"), None, Some(10000L)),
+      (5L, Some("mp4"), None, None),
+      (6L, Some("webm"), None, None),
+      (7L, Some("webm"), Some(640L), None)))
+    val dims = Multimodal.imageDims(media.where($"media_id" >= 8L))
+      .select($"media_id", $"format", $"width", $"height")
+      .as[(Long, Option[String], Option[Long], Option[Long])]
+      .collect().sortBy(_._1).toSeq
+    assert(dims === Seq((8L, Some("avif"), None, None),
+      (9L, Some("avif"), Some(640L), Some(480L))))
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.dims.Dims
 import graft.fact.FlightFact
@@ -25,6 +26,7 @@ class FlightFactSpec extends SparkSpec {
       // NULL: it must key the delay dim and the fact's FK join the same way
       val nanDelay = i % 11 == 3
       val nanCrs = i % 13 == 4
+      val nanArr = i % 17 == 6
       Row(
         date, 19000L + (i % 5), s"N$i", 100L + i,
         1L, 1L, 1L, origin, 2L, 2L, 2L, dest,
@@ -32,7 +34,8 @@ class FlightFactSpec extends SparkSpec {
         if (nullify) null else 905L + (i % 60): Any,      // DEP_TIME
         if (nullify) null else 5.0: Any, 5.0,             // DEP_DELAY(_NEW)
         if (nullify) null else 1130L: Any,                // ARR_TIME
-        if (nullify) null else (i % 90) - 30.0: Any, 0.0, // ARR_DELAY(_NEW)
+        if (nullify) null else if (nanArr) Double.NaN     // ARR_DELAY
+        else (i % 90) - 30.0: Any, 0.0,                   // ARR_DELAY_NEW
         0.0, null,                                        // CANCELLED, CODE
         if (nanCrs) Double.NaN else 150.0,                // CRS_ELAPSED
         if (nullify) null else 155.0: Any,                // ACTUAL_ELAPSED
@@ -86,6 +89,19 @@ class FlightFactSpec extends SparkSpec {
       fact("delay_id_fk") === delayDim("delay_id_pk"))
     assert(joined.count() === 200)
     assert(joined.where(col("nas_delay") === 1.0).count() === 200)
+  }
+
+  test("a NaN ARR_DELAY encodes like a missing one instead of failing " +
+      "the load") {
+    import spark.implicits._
+    val nanRows = flightsRaw.where(isnan(col("ARR_DELAY")))
+    assert(nanRows.count() === 11)
+    def finals(raw: DataFrame): Seq[Long] =
+      FlightFact.build(raw, airportDim, dateDim, delayDim)
+        .select("arrivel_final_time_fk").as[Long].collect().sorted.toSeq
+    assert(finals(nanRows) ===
+      finals(nanRows.withColumn("ARR_DELAY", lit(null).cast(DoubleType))))
+    assert(fact.collect().length === 200)
   }
 
   test("quality presets pass on the built dimensions") {

@@ -64,51 +64,16 @@ class ImageDhashSpec extends SparkSpec {
       .count() === 0)
   }
 
-  test("imageDhashFast (JVM rung) is bit-identical to the expression " +
-      "dHash across all three layouts, plants, garbage, truncation and " +
-      "malformed headers") {
-    // wide id range covers every pmod class: 24bpp bottom-up BMP,
+  test("dHash matches the recorded goldens across all three layouts, " +
+      "plants, garbage, truncation and malformed headers") {
+    // the wide id range covers every pmod class: 24bpp bottom-up BMP,
     // 32bpp top-down BMP, single-image ICO, near-dup plants, garbage
-    val ids = ((-300L to 300L) ++ (99990L to 100050L)).toDF("doc_id")
-    val media = Multimodal.synthDhashImageBytes(ids, "doc_id")
-    val exp = Multimodal.imageDhash(media)
-      .select($"media_id", $"dhash").collect()
-      .map(r => r.get(0) -> r.get(1)).toMap
-    val got = Multimodal.imageDhashFast(media)
-      .select($"media_id", $"dhash").collect()
-      .map(r => r.get(0) -> r.get(1)).toMap
-    assert(exp.keySet === got.keySet)
-    val bad = exp.keys.filter(k => exp(k) != got(k))
-    assert(bad.isEmpty,
-      bad.take(5).map(k => s"$k exp=${exp(k)} got=${got(k)}").toSeq)
-    assert(exp.values.count(_ != null) > 400, "fixture must mostly decode")
-    // malformed blobs through BOTH paths: garbage, truncated pixels,
-    // truncated ICO directory (the clamped data-dependent reads),
-    // 8-bpp palette, empty, null
-    def hx(str: String): Array[Byte] = str.grouped(2)
-      .map(x => Integer.parseInt(x, 16).toByte).toArray
-    val valid3 = Multimodal.synthDhashImageBytes(
-      Seq(3L).toDF("doc_id"), "doc_id")
-      .select($"content").as[Array[Byte]].collect().head
-    val mal = Seq[(Long, Array[Byte])](
-      1L -> null,
-      2L -> Array.empty[Byte],
-      3L -> valid3.take(100),            // truncated mid-pixel-array
-      4L -> Array.fill[Byte](200)(0x42), // 8-bpp-ish garbage
-      5L -> hx("00000100" + "0100" + "00" * 10 + "16000000"), // ICO dir only
-      6L -> hx("00000100" + "0100" + "00" * 10 + "16000000" + "28000000"
-        + "09000000"),                   // ICO DIB truncated mid-header
-      7L -> hx("424D" + "00" * 60),      // BM magic, zeroed DIB
-      8L -> valid3                       // control: must decode
-    ).toDF("media_id", "content")
-    val expM = Multimodal.imageDhash(mal)
-      .select($"media_id", $"dhash").collect()
-      .map(r => r.get(0) -> r.get(1)).toMap
-    val gotM = Multimodal.imageDhashFast(mal)
-      .select($"media_id", $"dhash").collect()
-      .map(r => r.get(0) -> r.get(1)).toMap
-    assert(expM === gotM)
-    assert(expM(8L) != null && expM(3L) == null)
+    val bad = MediaGoldens.mismatches(MediaGoldens.dhash(spark))
+    assert(bad.isEmpty, bad.mkString("\n"))
+    val hashes = Multimodal.imageDhash(Multimodal.synthDhashImageBytes(
+        MediaGoldens.wideIds.toDF("doc_id"), "doc_id"))
+      .select($"dhash").as[Option[Long]].collect()
+    assert(hashes.count(_.isDefined) > 400, "fixture must mostly decode")
   }
 
   test("64-bit banding chunks use UNSIGNED shifts: a signature with the " +

@@ -1,109 +1,31 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.multimodal.Multimodal
-
-/** imageDimsFast (the JVM mapPartitions rung) must be bit-compatible
-  * with imageDims (the expression exhibit) — same format label, dims
-  * and orientation on every synth family, truncation, malformed header
-  * and format subset. The census (q133) reads the rung; the per-family
-  * exhibit queries keep the expression parser. */
+/** imageDims (decoded by `Multimodal.parseImageDims`) must be
+  * bit-compatible with the expression parser it replaced, whose output
+  * on these fixtures is recorded in the golden table ([[MediaGoldens]]):
+  * the same format label, dims and orientation on every synth family,
+  * truncation and malformed header, and the same q133 census. */
 class ImageDimsFastSpec extends SparkSpec {
-  import spark.implicits._
+  import MediaGoldens._
 
-  private val cols = Seq("format", "width", "height", "orientation")
-
-  private def assertParity(media: org.apache.spark.sql.DataFrame,
-                           formats: Set[String] = Multimodal.ImageFormats,
-                           label: String): Unit = {
-    val exp = Multimodal.imageDims(media, formats = formats)
-      .select(col("media_id") +: cols.map(col): _*).collect()
-      .map(r => r.get(0) -> r.toSeq.tail).toMap
-    val got = Multimodal.imageDimsFast(media, formats = formats)
-      .select(col("media_id") +: cols.map(col): _*).collect()
-      .map(r => r.get(0) -> r.toSeq.tail).toMap
-    assert(exp.keySet === got.keySet, label)
-    val bad = exp.keys.filter(k => exp(k) != got(k))
-    assert(bad.isEmpty,
-      s"$label: ${bad.take(5).map(k => s"$k exp=${exp(k)} got=${got(k)}")}")
+  private def check(groups: Groups): Unit = {
+    val bad = mismatches(groups)
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("parity on all five synth families across a wide id range") {
-    val ids = ((-300L to 300L) ++ (99990L to 100050L)).toDF("doc_id")
-    assertParity(Multimodal.synthImageBytes(ids, "doc_id"), label = "png/jpeg")
-    assertParity(Multimodal.synthWebImageBytes(ids, "doc_id"), label = "gif/webp")
-    assertParity(Multimodal.synthBmpIcoBytes(ids, "doc_id"), label = "bmp/ico")
-    assertParity(Multimodal.synthTiffBytes(ids, "doc_id"), label = "tiff")
-    assertParity(Multimodal.synthIsobmffBytes(ids, "doc_id"), label = "isobmff")
-    assertParity(Multimodal.synthExifJpegBytes(ids, "doc_id"),
-      label = "jpeg+exif")
+    check(dimsSynth(spark)) // the five plus the EXIF-tagged JPEGs
   }
 
   test("parity on truncations of every family (the clamped-read paths)") {
-    val ids = (0L to 40L).toDF("doc_id")
-    val families = Seq(
-      Multimodal.synthImageBytes(ids, "doc_id"),
-      Multimodal.synthWebImageBytes(ids, "doc_id"),
-      Multimodal.synthBmpIcoBytes(ids, "doc_id"),
-      Multimodal.synthTiffBytes(ids, "doc_id"),
-      Multimodal.synthIsobmffBytes(ids, "doc_id"),
-      Multimodal.synthExifJpegBytes(ids, "doc_id"))
-    for ((df, fi) <- families.zipWithIndex; cut <- Seq(3, 7, 11, 15, 21, 33)) {
-      val truncated = df.select(
-        concat(lit(s"f$fi/c$cut/"), col("media_id").cast("string"))
-          .as("media_id"),
-        expr(s"substring(content, 1, $cut)").as("content"))
-      assertParity(truncated, label = s"family $fi cut at $cut")
-    }
+    check(dimsTrunc(spark))
   }
 
-  test("parity on malformed headers and format subsets") {
-    def hx(str: String): Array[Byte] = str.grouped(2)
-      .map(x => Integer.parseInt(x, 16).toByte).toArray
-    val mal = Seq[(Long, Array[Byte])](
-      1L -> null,
-      2L -> Array.empty[Byte],
-      3L -> hx("FFD8FFD9"), // jpeg: immediate EOI, no SOF
-      4L -> hx("FFD8FFFFFFFF"), // jpeg: fill bytes then truncation
-      5L -> hx("FFD8FFE1000A457869660000AABB"), // Exif APP1, garbage TIFF
-      6L -> hx("FFD8FFE1001045786966000049492A00080000"), // Exif, cut IFD
-      7L -> hx("89504E470D0A1A0A0000000D49484452000001"), // png cut in IHDR
-      8L -> hx("474946383961FF"), // gif cut before dims
-      9L -> hx("52494646080000005745425056503858"), // webp VP8X, no payload
-      10L -> hx("424D000000000000000000000000" + "0C000000" + "11002200"),
-      11L -> hx("49492A00FFFFFFFF"), // tiff IFD offset far past prefix
-      12L -> hx("4D4D002A00000008000100FF"), // tiff BE, entry cut mid-tag
-      13L -> hx("0000010001000000"), // ico dir, no entry dims
-      14L -> hx("0000001C667479706176696600000000" +
-        "0000000C69737065"), // avif: ispe DECLARING size 12 (< 20)
-      15L -> hx("00000010667479706D69663100000000" + "FFFFFFFF6D657461"),
-      16L -> hx("000000106674797069736F6D00000000") // isom: NOT an image
-    ).toDF("media_id", "content")
-    assertParity(mal, label = "malformed")
-    val ids = (-40L to 60L).toDF("doc_id")
-    for (fs <- Seq(Set("jpeg"), Set("png", "gif"), Set("tiff"),
-        Set("avif", "heic", "heif"), Set("bmp", "ico", "webp"))) {
-      assertParity(Multimodal.synthImageBytes(ids, "doc_id"), fs, s"img $fs")
-      assertParity(Multimodal.synthTiffBytes(ids, "doc_id"), fs, s"tiff $fs")
-      assertParity(Multimodal.synthIsobmffBytes(ids, "doc_id"), fs, s"iso $fs")
-    }
+  test("parity on malformed headers") {
+    check(dimsMalformed(spark))
   }
 
-  test("q133 census image half: rung and expression aggregate identically") {
-    val d = graft.sources.Sources.table(spark, sf, "documents")
-      .select("doc_id")
-    val img = Seq(
-      Multimodal.synthImageBytes(d, "doc_id"),
-      Multimodal.synthWebImageBytes(d, "doc_id"),
-      Multimodal.synthBmpIcoBytes(d, "doc_id"),
-      Multimodal.synthTiffBytes(d, "doc_id"),
-      Multimodal.synthIsobmffBytes(d, "doc_id")).reduce(_ unionByName _)
-    def census(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy("format")
-      .agg(count(lit(1)).as("n"),
-        sum(coalesce(col("width"), lit(0L))).as("sum_w"))
-      .orderBy("format").collect().toSeq
-    assert(census(Multimodal.imageDimsFast(img)) ===
-      census(Multimodal.imageDims(img)))
+  test("q133 census image half aggregates as recorded") {
+    check(dimsCensus(spark, sf))
   }
 }

@@ -182,23 +182,6 @@ class TrainingDataSpec extends SparkSpec {
     assert(dup(0) === dup(1))
   }
 
-  test("multimodal: mapPartitions decoder matches the expression path") {
-    val media = Multimodal.asBinaryMedia(docs.limit(50), "doc_id", "text")
-    val viaExpr = Multimodal.withMetadata(media)
-      .select($"media_id", $"n_bytes", $"content_md5")
-    val viaDecoder = Multimodal.extractFeatures(spark, media, 4)
-      .select($"media_id", $"n_bytes", $"content_md5")
-    assert(viaExpr.exceptAll(viaDecoder).isEmpty)
-    assert(viaDecoder.exceptAll(viaExpr).isEmpty)
-    // feature values match the q41 expression formula
-    val f0expr = Multimodal.withMetadata(media).select($"media_id",
-      ((TextOps.hash64(concat($"content_md5", lit("#f0"))) % 1000)
-        / lit(1000.0)).as("f0"))
-    val f0dec = Multimodal.extractFeatures(spark, media, 4)
-      .select($"media_id", element_at($"feature", 1).as("f0"))
-    assert(f0expr.exceptAll(f0dec).isEmpty)
-  }
-
   test("imageDims: golden PNG/JPEG headers, segment walk, malformed -> NULL") {
     // GOLDEN bytes assembled against the container specs (not the synth
     // generator, so a construct/parse-symmetric bug can't cancel out):
@@ -238,77 +221,6 @@ class TrainingDataSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Multimodal.imageDims(media.withColumn("width", lit(1)))
     }
-  }
-
-  test("imageDims format dispatch: subset parses only requested families, " +
-      "labels stay truthful, unrequested folds stay out of the plan") {
-    val png = "89504E470D0A1A0A" + "0000000D" + "49484452" +
-      "00000001" + "00000002" + "0806000000" + "1F15C489" // w=1 h=2
-    val jpeg = "FFD8" +
-      "FFE000104A46494600010100000100010000" +
-      "FFC2001108" + "0140" + "00F0" + // SOF2 h=320 w=240
-      "03012200021101031101" + "FFD9"
-    val media = Seq((1L, png), (2L, jpeg)).toDF("media_id", "hx")
-      .select($"media_id", unhex($"hx").as("content"))
-    val pngOnly = Multimodal.imageDims(media, formats = Set("png"))
-    val got = pngOnly
-      .select($"media_id", $"format", $"width", $"height", $"orientation")
-      .as[(Long, Option[String], Option[Long], Option[Long], Option[Long])]
-      .collect().sortBy(_._1).toSeq
-    assert(got === Seq(
-      // requested family: parsed exactly as the full call would
-      (1L, Some("png"), Some(1L), Some(2L), None),
-      // unrequested family: label truthful, metadata NULL, fold not run
-      (2L, Some("jpeg"), None, None, None)))
-    // the unrequested families' folds are ABSENT from the compiled plan —
-    // the whole point of the dispatch: 'FFC2' only occurs in the JPEG
-    // SOF-marker list, '69737065' is the ispe fourcc, '49484452'/PNG
-    // magic chars appear in the sniff (always compiled)
-    val plan = pngOnly.queryExecution.analyzed.toString
-    assert(!plan.contains("FFC2"), "jpeg fold leaked into a png-only plan")
-    assert(!plan.contains("69737065"), "ispe fold leaked into a png-only plan")
-    // out-of-domain / empty format sets are refused
-    intercept[IllegalArgumentException] {
-      Multimodal.imageDims(media, formats = Set("exr"))
-    }
-    intercept[IllegalArgumentException] {
-      Multimodal.imageDims(media, formats = Set.empty)
-    }
-  }
-
-  test("avMetadata format dispatch: subset parses only requested families; " +
-      "the EBML label itself needs its fold") {
-    // minimal WAV: RIFF + WAVE + fmt(16: ch=2 sr=8000 br=32000 bits=16)
-    // + data(4)
-    val wav = "52494646" + "28000000" + "57415645" +
-      "666D7420" + "10000000" + "0100" + "0200" + "401F0000" +
-      "007D0000" + "0400" + "1000" +
-      "64617461" + "04000000" + "00000000"
-    // minimal EBML head (webm DocType): magic + size, DocType 4282 'webm'
-    val webm = "1A45DFA3" + "8B" + "4282" + "84" + "7765626D" + "EC82AAAA"
-    val media = Seq((1L, wav), (2L, webm)).toDF("media_id", "hx")
-      .select($"media_id", unhex($"hx").as("content"))
-    val wavOnly = Multimodal.avMetadata(media, formats = Set("wav"))
-    val got = wavOnly
-      .select($"media_id", $"av_format", $"channels", $"sample_rate",
-        $"duration_ms")
-      .as[(Long, Option[String], Option[Long], Option[Long], Option[Long])]
-      .collect().sortBy(_._1).toSeq
-    assert(got === Seq(
-      (1L, Some("wav"), Some(2L), Some(8000L), Some(0L)),
-      // EBML family not requested: its LABEL requires the DocType walk,
-      // so the format stays NULL (documented family-specific contract)
-      (2L, None, None, None, None)))
-    val plan = wavOnly.queryExecution.analyzed.toString
-    assert(!plan.contains("1549A966"), "EBML fold leaked into wav-only plan")
-    assert(!plan.contains("6D766864") && !plan.contains("6D6F6F76") &&
-      !plan.contains("74726B68") && !plan.contains("OpusHead") &&
-      !plan.contains("4F707573"), "mp4/ogg folds leaked into wav-only plan")
-    // requesting the family flips the label back on
-    val withEbml = Multimodal.avMetadata(media, formats = Set("webm"))
-      .select($"media_id", $"av_format")
-      .as[(Long, Option[String])].collect().sortBy(_._1).toSeq
-    assert(withEbml === Seq((1L, Some("wav")), (2L, Some("webm"))))
   }
 
   test("imageDims: golden GIF/WebP headers, LE byte order, malformed -> NULL") {
@@ -838,7 +750,7 @@ class TrainingDataSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Multimodal.avMetadata(media.withColumn("duration_ms", lit(1)))
     }
-    // expression-only contract: no Exchange — blobs never shuffle
+    // the parse is scan-side: no Exchange — blobs never shuffle
     val plan = Multimodal.avMetadata(media)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(2000))
@@ -1539,8 +1451,8 @@ class TrainingDataSpec extends SparkSpec {
     assert(truncated.forall { case (id, fmt, w) =>
       if (fmt == "png") w.isDefined else w.isEmpty })
     assert(truncated.exists(_._2 == "jpeg")) // the fail-safe side exercised
-    // expression-only contract: the whole parse is scan-side — no
-    // Exchange anywhere in the plan (blobs must never shuffle)
+    // the whole parse is scan-side — no Exchange anywhere in the plan
+    // (blobs must never shuffle)
     val plan = Multimodal.imageDims(media)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(2000))
@@ -1563,11 +1475,5 @@ class TrainingDataSpec extends SparkSpec {
       $"format" =!= when($"media_id" % 2 === 0, "png").otherwise("jpeg") ||
       $"width".isNull || $"height".isNull)
     assert(bad.isEmpty, bad.limit(5).collect().mkString("; "))
-  }
-
-  test("fake decoder keeps blob bytes out of the feature output schema") {
-    val media = Multimodal.asBinaryMedia(docs.limit(5), "doc_id", "text")
-    val out = Multimodal.extractFeatures(spark, media, 2)
-    assert(!out.schema.fieldNames.contains("content"))
   }
 }
