@@ -82,11 +82,8 @@ object IdnEncodeHost {
 
   /** Make `idn_encode_host(url)` resolvable in this session. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "idn_encode_host",
-      (es: Seq[Expression]) => {
-        require(es.length == 1, "idn_encode_host expects exactly 1 argument")
-        IdnEncodeHost(Cast(es.head, StringType))
-      },
-      "built-in")
+    registerOnce(spark, "idn_encode_host") { es =>
+      require(es.length == 1, "idn_encode_host expects exactly 1 argument")
+      IdnEncodeHost(Cast(es.head, StringType))
+    }
 }

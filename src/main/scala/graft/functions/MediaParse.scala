@@ -1,15 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.multimodal.{Audio, AvFast, Multimodal}
+import graft.multimodal.{Audio, AvFast, Multimodal, Pdf}
 
-/** The four media parsers as native Catalyst expressions: `content:
+/** The blob parsers as native Catalyst expressions: `content:
   * binary` in, one struct out, evaluated by the format's JVM decoder.
   * Same pattern as [[NfcNormalize]]: `doGenCode` is one `defineCodeGen`
   * call into a static method, so a parse stays inside whole-stage
@@ -126,6 +126,86 @@ object AudioFingerprint {
     InternalRow(Audio.parseFingerprint(content, maxBytes, maxChunks))
 }
 
+/** `archive_metadata(content[, headBytes, tailBytes])` -> struct(format,
+  * detail, n_entries, uncompressed_size, mtime_epoch); see
+  * [[Multimodal.archiveMetadata]]. */
+case class ArchiveMetadata(child: Expression, headBytes: Int, tailBytes: Int)
+    extends MediaParse {
+  require(headBytes >= 16, s"headBytes must be >= 16, got $headBytes")
+  require(tailBytes >= 26,
+    s"tailBytes must cover EOCD + gzip trailer (26), got $tailBytes")
+  protected def bounds: Seq[Int] = Seq(headBytes, tailBytes)
+  protected def decoder = "graft.functions.ArchiveMetadata.row"
+  protected def decode(c: Array[Byte]) = ArchiveMetadata.row(c, headBytes, tailBytes)
+  override def dataType: DataType = ArchiveMetadata.schema
+  override def prettyName: String = "archive_metadata"
+  override protected def withNewChildInternal(e: Expression): ArchiveMetadata =
+    copy(child = e)
+}
+
+object ArchiveMetadata {
+  val schema: StructType = StructType(
+    Seq("format", "detail").map(StructField(_, StringType)) ++
+      Seq("n_entries", "uncompressed_size", "mtime_epoch")
+        .map(StructField(_, LongType)))
+  def row(content: Array[Byte], headBytes: Int, tailBytes: Int): InternalRow =
+    MediaParse.row(Multimodal.parseArchiveMetadata(content, headBytes, tailBytes))
+}
+
+/** `pdf_triage(content[, headBytes, tailBytes])` -> struct(pdf_version,
+  * linearized, n_pages_approx, startxref, has_eof, encrypted); see
+  * [[Pdf.pdfTriage]]. */
+case class PdfTriage(child: Expression, headBytes: Int, tailBytes: Int)
+    extends MediaParse {
+  require(headBytes >= 16, s"headBytes must be >= 16, got $headBytes")
+  require(tailBytes >= 32,
+    s"tailBytes must cover startxref + %%EOF (32), got $tailBytes")
+  protected def bounds: Seq[Int] = Seq(headBytes, tailBytes)
+  protected def decoder = "graft.functions.PdfTriage.row"
+  protected def decode(c: Array[Byte]) = PdfTriage.row(c, headBytes, tailBytes)
+  override def dataType: DataType = PdfTriage.schema
+  override def prettyName: String = "pdf_triage"
+  override protected def withNewChildInternal(e: Expression): PdfTriage =
+    copy(child = e)
+}
+
+object PdfTriage {
+  val schema: StructType = StructType(Seq(
+    StructField("pdf_version", StringType),
+    StructField("linearized", BooleanType),
+    StructField("n_pages_approx", LongType),
+    StructField("startxref", LongType),
+    StructField("has_eof", BooleanType),
+    StructField("encrypted", BooleanType)))
+  def row(content: Array[Byte], headBytes: Int, tailBytes: Int): InternalRow =
+    MediaParse.row(Pdf.parseTriage(content, headBytes, tailBytes))
+}
+
+/** `pdf_text(content[, maxStreamBytes, maxTextChars])` -> struct(pdf_text,
+  * n_show_ops, pdf_text_truncated, pdf_composite_font); see
+  * [[Pdf.extractPdfText]]. */
+case class PdfText(child: Expression, maxStreamBytes: Int, maxTextChars: Int)
+    extends MediaParse {
+  require(maxStreamBytes > 0 && maxTextChars > 0, "caps must be positive")
+  protected def bounds: Seq[Int] = Seq(maxStreamBytes, maxTextChars)
+  protected def decoder = "graft.functions.PdfText.row"
+  protected def decode(c: Array[Byte]) = PdfText.row(c, maxStreamBytes, maxTextChars)
+  override def dataType: DataType = PdfText.schema
+  override def prettyName: String = "pdf_text"
+  override protected def withNewChildInternal(e: Expression): PdfText =
+    copy(child = e)
+}
+
+object PdfText {
+  val schema: StructType = StructType(Seq(
+    StructField("pdf_text", StringType),
+    StructField("n_show_ops", LongType),
+    StructField("pdf_text_truncated", BooleanType),
+    StructField("pdf_composite_font", BooleanType)))
+  def row(content: Array[Byte], maxStreamBytes: Int, maxTextChars: Int): InternalRow =
+    MediaParse.row(Pdf.extractOne(content, maxStreamBytes, maxTextChars))
+}
+
 object MediaParse {
   /** A decoder's field values as a Catalyst row (strings as UTF8String). */
   def row(values: Seq[Any]): InternalRow = InternalRow.fromSeq(values.map {
@@ -140,31 +220,30 @@ object MediaParse {
       ("image_dhash", Seq(1 << 20), (c, b) => ImageDhash(c, b(0))),
       ("av_metadata", Seq(16, 64 * 1024), (c, b) => AvMetadata(c, b(0), b(1))),
       ("audio_fingerprint", Seq(1 << 20, 16),
-        (c, b) => AudioFingerprint(c, b(0), b(1))))
+        (c, b) => AudioFingerprint(c, b(0), b(1))),
+      ("archive_metadata", Seq(4096, 4096),
+        (c, b) => ArchiveMetadata(c, b(0), b(1))),
+      ("pdf_triage", Seq(64 * 1024, 4096), (c, b) => PdfTriage(c, b(0), b(1))),
+      ("pdf_text", Seq(1 << 20, 1 << 20), (c, b) => PdfText(c, b(0), b(1))))
 
-  /** Make `image_dims`, `image_dhash`, `av_metadata` and
-    * `audio_fingerprint` resolvable in this session's expr()/SQL: the
-    * first argument is the blob, optional trailing integer literals set
-    * the parser's bounds. Idempotent (a name already registered is left
-    * as it is); call before building any plan that uses them. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    for ((name, defaults, mk) <- parsers
-         if !registry.functionExists(FunctionIdentifier(name)))
-      registry.createOrReplaceTempFunction(
-        name,
-        (es: Seq[Expression]) => {
-          require(es.nonEmpty && es.length <= 1 + defaults.length,
-            s"$name expects the content and at most ${defaults.length} " +
-              "integer bounds")
-          val bounds = es.tail.map {
-            case e if e.foldable && e.dataType == IntegerType =>
-              e.eval().asInstanceOf[Int]
-            case e => throw new IllegalArgumentException(
-              s"$name: bounds must be integer literals, got ${e.sql}")
-          }
-          mk(Cast(es.head, BinaryType), bounds ++ defaults.drop(bounds.length))
-        },
-        "built-in")
-  }
+  /** Make `image_dims`, `image_dhash`, `av_metadata`,
+    * `audio_fingerprint`, `archive_metadata`, `pdf_triage` and `pdf_text`
+    * resolvable in this session's expr()/SQL: the first argument is the
+    * blob, optional trailing integer literals set the parser's bounds.
+    * Idempotent ([[registerOnce]]); call before building any plan that
+    * uses them. */
+  def register(spark: SparkSession): Unit =
+    for ((name, defaults, mk) <- parsers)
+      registerOnce(spark, name) { es =>
+        require(es.nonEmpty && es.length <= 1 + defaults.length,
+          s"$name expects the content and at most ${defaults.length} " +
+            "integer bounds")
+        val bounds = es.tail.map {
+          case e if e.foldable && e.dataType == IntegerType =>
+            e.eval().asInstanceOf[Int]
+          case e => throw new IllegalArgumentException(
+            s"$name: bounds must be integer literals, got ${e.sql}")
+        }
+        mk(Cast(es.head, BinaryType), bounds ++ defaults.drop(bounds.length))
+      }
 }

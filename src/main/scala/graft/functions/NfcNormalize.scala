@@ -51,11 +51,8 @@ object NfcNormalize {
   /** Make `nfc_normalize(str)` resolvable in this session's expr()/SQL.
     * Idempotent; call before building any plan that uses it. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      (es: Seq[Expression]) => {
-        require(es.length == 1, "nfc_normalize expects exactly 1 argument")
-        NfcNormalize(Cast(es.head, StringType))
-      },
-      "built-in")
+    registerOnce(spark, "nfc_normalize") { es =>
+      require(es.length == 1, "nfc_normalize expects exactly 1 argument")
+      NfcNormalize(Cast(es.head, StringType))
+    }
 }

@@ -75,12 +75,8 @@ object RobotsPathMatch {
   /** Make `robots_path_match(path, pattern)` resolvable in this
     * session. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "robots_path_match",
-      (es: Seq[Expression]) => {
-        require(es.length == 2,
-          "robots_path_match expects exactly 2 arguments")
-        RobotsPathMatch(Cast(es.head, StringType), Cast(es(1), StringType))
-      },
-      "built-in")
+    registerOnce(spark, "robots_path_match") { es =>
+      require(es.length == 2, "robots_path_match expects exactly 2 arguments")
+      RobotsPathMatch(Cast(es.head, StringType), Cast(es(1), StringType))
+    }
 }

@@ -4,11 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Baseline JPEG pixel decode for perceptual hashing — the decode-seam
-  * rung ([[Png]]'s pattern) for the DOMINANT crawl-image codec: real
-  * web corpora are majority JPEG, and until this module those images
-  * fingerprinted NULL ([[Multimodal.imageDims]] parses JPEG headers and
-  * EXIF only).
+/** Baseline JPEG pixel decode for perceptual hashing:
+  * [[Multimodal.parseImageDhash]] (`image_dhash`) sends every blob that
+  * starts with `FF D8` here. JPEG is the DOMINANT crawl-image codec;
+  * real web corpora are majority JPEG ([[Multimodal.imageDims]] parses
+  * its headers and EXIF).
   *
   * Pure-JVM baseline-sequential decoder, from the ITU-T T.81 spec:
   * SOI/APPn/COM/DQT (8- and 16-bit precision)/DHT (canonical
@@ -29,16 +29,13 @@ import org.apache.spark.sql.types._
   * hash.
   *
   * The hash is [[Png.dhashFromRgb]] — the SAME 9×8 grid and unweighted
-  * first-three-channel luminance the BMP/ICO decoder and the
-  * PNG rung use, so all THREE image rungs feed ONE
-  * [[graft.dedup.Dedup.simhashBandedDups]] banding with mixed-container
-  * signatures (q185): a BMP, a PNG and a JPEG of the same content
-  * surface as one duplicate group.
+  * first-three-channel luminance the BMP/ICO and PNG decodes use, so
+  * one `image_dhash` call over a mixed BMP/PNG/JPEG corpus feeds ONE
+  * [[graft.dedup.Dedup.simhashBandedDups]] banding (q185): a BMP, a PNG
+  * and a JPEG of the same content surface as one duplicate group.
   *
-  * SCALE SHAPE: decode runs in `mapPartitions` (documented ladder rung
-  * d — per-partition init amortized, blobs read once, only (id, 8-byte
-  * hash) travels onward); work per blob is bounded by `maxBytes`
-  * (input) and `maxPixels` (w·h gate BEFORE any plane allocation, so a
+  * Work per blob is bounded by `maxBytes` (input) and `maxPixels` (w·h
+  * gate BEFORE any plane allocation, so a
   * decompression-bomb header costs a header parse then NULLs, never an
   * OOM — planes are ≤ 4·maxPixels ints across all components at the
   * 2×2 sampling cap).
@@ -464,37 +461,6 @@ object Jpeg {
       }
       x += 1
     }
-  }
-
-  /** 64-bit dHash via the JPEG decode rung — [[Png.dhashFromRgb]], the
-    * one shared grid. null when undecodable. */
-  private[graft] def dhashOf(bytes: Array[Byte], maxBytes: Int,
-                             maxPixels: Int): java.lang.Long =
-    decodeRgb(bytes, maxBytes, maxPixels) match {
-      case None => null
-      case Some((w, h, ch, px)) => Png.dhashFromRgb(w, h, ch, px)
-    }
-
-  /** dHash via the JPEG decode rung: (idCol, dhash) — one row per
-    * input, dhash NULL outside the documented subset. Third rung of the
-    * mixed-container banding (q185) next to [[Multimodal.imageDhash]]
-    * (BMP/ICO) and [[Png.imageDhashPng]]. */
-  def imageDhashJpeg(media: DataFrame, idCol: String = "media_id",
-                     contentCol: String = "content",
-                     maxBytes: Int = 1 << 20,
-                     maxPixels: Int = 1 << 22): DataFrame = {
-    require(maxBytes >= 64, s"maxBytes too small: $maxBytes")
-    require(maxPixels >= 72, s"maxPixels too small: $maxPixels")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast(LongType), col(contentCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, c) =>
-          (id, Option(dhashOf(c, maxBytes, maxPixels)).map(_.longValue))
-        }
-      }
-      .toDF(idCol, "dhash")
   }
 
   // --------------------------------------------------------------------

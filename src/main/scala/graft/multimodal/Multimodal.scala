@@ -4,26 +4,31 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{AvMetadata, ImageDhash, ImageDims, MediaParse}
+import graft.functions.{ArchiveMetadata, AvMetadata, ImageDhash, ImageDims,
+  MediaParse}
 
-/** Multimodal column plumbing: image/audio/video as opaque `binary`
-  * columns with typed metadata parsed straight from the container bytes.
+/** Multimodal column plumbing: image/audio/video/archive/PDF as opaque
+  * `binary` columns with typed metadata parsed straight from the
+  * container bytes.
   *
-  * Each media parser has ONE implementation, a JVM decoder over the
-  * blob's bytes: [[parseImageDims]], [[parseImageDhash]],
-  * [[AvFast.parse]] and [[Audio.parseFingerprint]]. Each is exposed as a
-  * native Catalyst expression ([[graft.functions.MediaParse]]; `image_dims`,
-  * `image_dhash`, `av_metadata` and `audio_fingerprint` in SQL), and the
-  * DataFrame entry points [[imageDims]], [[imageDhash]], [[avMetadata]]
-  * and [[Audio.audioEnergyFingerprint]] project that expression's struct
-  * once and expand its fields into columns. Real pixel decode for the
-  * perceptual-hash family also exists as the [[Png]] and [[Jpeg]]
-  * `mapPartitions` decode rungs.
+  * Every blob parser has ONE implementation, a JVM decoder over the
+  * blob's bytes: [[parseImageDims]], [[parseImageDhash]] (BMP/ICO
+  * pixels in place, PNG through [[Png.decodeRgb]], JPEG through
+  * [[Jpeg.decodeRgb]]), [[AvFast.parse]], [[Audio.parseFingerprint]],
+  * [[parseArchiveMetadata]], [[Pdf.parseTriage]] and [[Pdf.extractOne]].
+  * Each is exposed as a native Catalyst expression
+  * ([[graft.functions.MediaParse]]; `image_dims`, `image_dhash`,
+  * `av_metadata`, `audio_fingerprint`, `archive_metadata`, `pdf_triage`
+  * and `pdf_text` in SQL), and the DataFrame entry points ([[imageDims]],
+  * [[imageDhash]], [[avMetadata]], [[Audio.audioEnergyFingerprint]],
+  * [[archiveMetadata]], [[Pdf.pdfTriage]], [[Pdf.extractPdfText]])
+  * evaluate that expression once per row through [[appendParsed]] and
+  * expand its fields into columns.
   *
   * SCALE DESIGN: media blobs dominate bytes, so (1) every parser reads a
-  * bounded prefix of the blob where it already is, inside whole-stage
+  * bounded window of the blob where it already is, inside whole-stage
   * codegen, (2) blobs never shuffle, and (3) outputs carry metadata, not
-  * bytes. [[archiveMetadata]] is still an expression-only hex parser.
+  * bytes.
   */
 object Multimodal {
 
@@ -34,7 +39,7 @@ object Multimodal {
       col(idCol).as("media_id"),
       // deterministic pseudo-kind so the pipeline exercises per-kind paths
       element_at(typedlit(Seq("image", "audio", "video")),
-        (col(idCol) % 3 + 1).cast(IntegerType)).as("kind"),
+        (pmod(col(idCol), lit(3)) + 1).cast(IntegerType)).as("kind"),
       col(textCol).cast(BinaryType).as("content"))
 
   /** Expression-only metadata: computed at scan, no decode, no shuffle. */
@@ -550,42 +555,66 @@ object Multimodal {
         .otherwise(ico)).as("content"))
   }
 
-  /** Append `dhash: bigint` — a 64-bit PERCEPTUAL difference hash over
-    * uncompressed-pixel images, the content-level cousin of the exact
-    * byte dedup q30 runs: two images whose pixels differ slightly
-    * (recompression, a one-pixel watermark, metadata-stripped copies)
-    * hash to small Hamming distance, so near-duplicate IMAGES reduce to
-    * the [[graft.dedup.Dedup.simhashBandedDups]] banding plumbing the
-    * text side already runs (q166/q167). Decodable layouts and the hash
-    * definition are documented on [[parseImageDhash]]; everything else
-    * (PNG/JPEG/... — see [[Png]] and [[Jpeg]] for those) hashes NULL,
-    * never a throw. `maxBytes` bounds the prefix read; an image whose
-    * pixel array ends past it reads as truncated → NULL. */
+  /** Append `dhash: bigint` — a 64-bit PERCEPTUAL difference hash of
+    * the image's pixels, the content-level cousin of the exact byte
+    * dedup q30 runs: two images whose pixels differ slightly
+    * (recompression, a one-pixel watermark, metadata-stripped copies, a
+    * re-encode into another container) hash to small Hamming distance,
+    * so near-duplicate IMAGES reduce to the
+    * [[graft.dedup.Dedup.simhashBandedDups]] banding plumbing the text
+    * side already runs (q166/q167, and q174/q185 over mixed BMP, PNG and
+    * JPEG corpora). Decodable containers and the hash definition are
+    * documented on [[parseImageDhash]]; everything else hashes NULL,
+    * never a throw. `maxBytes` bounds the bytes read per blob (see
+    * [[parseImageDhash]] for what it means per container). */
   def imageDhash(media: DataFrame, contentCol: String = "content",
                  maxBytes: Int = 1 << 20): DataFrame =
     appendParsed(media, "Multimodal.imageDhash", "image_dhash", contentCol,
       Seq(maxBytes), ImageDhash.schema)
 
+  /** Pixel bound of the PNG and JPEG decodes: an image whose w·h exceeds
+    * it hashes NULL before any pixel buffer is allocated. */
+  private val MaxDecodedPixels = 1 << 22
+
   /** One blob's 64-bit dHash, or null — the decoder behind [[imageDhash]]
-    * and `image_dhash`.
+    * and `image_dhash`. It dispatches on the magic bytes:
     *
-    * Decodable layouts are the ones whose pixels need no codec: BMP
-    * (BITMAPINFOHEADER-family, 24/32 bpp, BI_RGB, bottom-up or top-down)
-    * and single-image ICO whose embedded DIB is the same shape (height
-    * stored DOUBLED for the AND mask, rows bottom-up). Directory reads
-    * at data-dependent ICO offsets CLAMP to the prefix (missing bytes
+    * PNG (the 8-byte signature) and JPEG (`FF D8`) decode to RGB through
+    * [[Png.decodeRgb]] and [[Jpeg.decodeRgb]]; their supported subsets
+    * are documented there. For these two `maxBytes` bounds the WHOLE
+    * blob: a longer one is NULL, since a compressed image cannot be
+    * decoded from a prefix. A decode is also bounded by 2^22 pixels.
+    *
+    * BMP (BITMAPINFOHEADER-family, 24/32 bpp, BI_RGB, bottom-up or
+    * top-down) and single-image ICO whose embedded DIB is the same shape
+    * (height stored DOUBLED for the AND mask, rows bottom-up) are read in
+    * place, so `maxBytes` bounds the PREFIX read: an image whose pixel
+    * array ends past it reads as truncated → NULL. Directory reads at
+    * data-dependent ICO offsets CLAMP to the prefix (missing bytes
     * contribute nothing; a read with no byte in range is null).
     *
     * The hash is standard dHash: nearest-neighbor-sample a 9x8
     * luminance grid (srcX = floor(gx·w/9), srcY = floor(gy·h/8) — the
     * identity when the image IS 9x8, which is what the oracle exhibits
     * use), then bit gy·8+gx = 1 iff grid(gx+1, gy) brighter than
-    * grid(gx, gy). "Luminance" is the unweighted channel sum — dHash
-    * only COMPARES adjacent values, so any monotone transform gives the
-    * same bits and integer sums replay exactly in SQL. Malformed,
-    * undecodable or truncated bytes → null. */
+    * grid(gx, gy). "Luminance" is the unweighted sum of the first three
+    * channels — dHash only COMPARES adjacent values, so any monotone
+    * transform and any channel order (BGR in BMP, RGB in PNG/JPEG) give
+    * the same bits, and integer sums replay exactly in SQL. So the same
+    * pixels hash identically in every container. Malformed, undecodable
+    * or truncated bytes → null. */
   def parseImageDhash(content: Array[Byte], maxBytes: Int): java.lang.Long = {
     if (content == null) return null
+    val magic =
+      if (content.length < 2) -1
+      else ((content(0) & 0xFF) << 8) | (content(1) & 0xFF)
+    if (magic == 0x8950 || magic == 0xFFD8) {
+      val rgb =
+        if (magic == 0x8950) Png.decodeRgb(content, maxBytes, MaxDecodedPixels)
+        else Jpeg.decodeRgb(content, maxBytes, MaxDecodedPixels)
+      return rgb.map { case (w, h, ch, px) => Png.dhashFromRgb(w, h, ch, px) }
+        .orNull
+    }
     val p = content // read in place: every access is bounded by L
     val L = math.min(content.length, maxBytes)
     @inline def u(i: Int): Int = p(i) & 0xFF
@@ -1193,31 +1222,15 @@ object Multimodal {
         .as("content"))
   }
 
-  /** Nondeterministic ZERO (`rand() * 0`), added to every fold-backed
-    * numeric output of [[archiveMetadata]] (and [[Pdf]]'s twin) so those
-    * aliases are nondeterministic, which stops Catalyst's predicate
-    * pushdown AT the parse projection. Without it, a `.where` on a parsed
-    * column substitutes the full fold expressions into the predicate —
-    * once per reference — and a simple filter took ~40 s of
-    * optimizer+codegen time (measured: 12 s optimize / 9 s physical /
-    * 19 s codegen on a 64-row frame). EVERY such column carries the
-    * marker so the barrier survives column pruning. The trade:
-    * input-column predicates written AFTER the parse no longer reach the
-    * scan — filter the input BEFORE parsing. The parsers with a JVM
-    * decoder ([[graft.functions.MediaParse]]) need no barrier: their
-    * columns come out of a Generate node ([[appendParsed]]) that keeps
-    * such predicates above the one parse. */
-  private def ndZero: Column = (rand(19L) * lit(0)).cast(LongType)
-
   /** Archive-container metadata from BOUNDED head + tail windows — the
     * crawl-dump triage step that runs BEFORE any decompress: which codec,
     * how many member files, how big uncompressed. Unlike the media
     * parsers, the load-bearing fields of archive formats live at the
     * END of the file (gzip's ISIZE trailer, ZIP's end-of-central-
-    * directory record), so this parser hexes BOTH a bounded head prefix
-    * and a bounded TAIL suffix — never the whole blob; a 10 GiB archive
-    * costs the same two windows as a 10 KiB one, and blobs never
-    * shuffle.
+    * directory record), so the decoder ([[parseArchiveMetadata]],
+    * `archive_metadata` in SQL) reads BOTH a bounded head prefix and a
+    * bounded TAIL suffix — never the whole blob; a 10 GiB archive costs
+    * the same two windows as a 10 KiB one, and blobs never shuffle.
     *
     * gzip (RFC 1952): CM byte 2 (8 = deflate -> detail), MTIME u32 LE at
     * bytes 4-7, and ISIZE — the uncompressed size MOD 2^32 by spec — in
@@ -1225,18 +1238,18 @@ object Multimodal {
     *
     * ZIP (APPNOTE): the EOCD record sits at EOF behind a VARIABLE-length
     * archive comment, so it is found by a reverse search over the tail
-    * window (reverse(hex) + locate of the char-reversed magic finds the
-    * LAST occurrence), then VALIDATED: the found record's byte alignment
-    * must be even and its comment-length field must equal exactly the
-    * bytes remaining after the record — a false magic inside comment
-    * bytes or a mid-byte coincidence fails validation and yields NULL,
-    * never garbage counts. n_entries = the total-entries u16 — EXCEPT
-    * 0xFFFF, which is ZIP64's "see the ZIP64 EOCD" sentinel, not a
-    * count: it yields NULL (the real count lives in a separate record
-    * this bounded probe does not chase). A comment
-    * longer than the tail window (or one embedding the magic bytes)
-    * legitimately NULLs — the documented single-probe contract; NULL is
-    * the fail-safe triage answer ("open this one the slow way").
+    * window's hex digits for the LAST occurrence of the magic, then
+    * VALIDATED: the occurrence must be byte-aligned and its
+    * comment-length field must equal exactly the bytes remaining after
+    * the record — a false magic inside comment bytes or a mid-byte
+    * coincidence fails validation and yields NULL, never garbage counts.
+    * n_entries = the total-entries u16 — EXCEPT 0xFFFF, which is ZIP64's
+    * "see the ZIP64 EOCD" sentinel, not a count: it yields NULL (the real
+    * count lives in a separate record this bounded probe does not
+    * chase). A comment longer than the tail window (or one embedding the
+    * magic bytes) legitimately NULLs — the documented single-probe
+    * contract; NULL is the fail-safe triage answer ("open this one the
+    * slow way").
     *
     * zstd (RFC 8878): the frame-header descriptor byte gates everything
     * — FCS field size flag (bits 7-6), single-segment (bit 5, decides
@@ -1244,7 +1257,10 @@ object Multimodal {
     * 1-0) — so the frame-content-size offset is computed, not fixed;
     * flag 1's u16 stores value-256 per spec. A no-FCS frame (flag 0,
     * multi-segment) yields NULL size: the format genuinely does not
-    * declare it.
+    * declare it. One leading SKIPPABLE frame (magic 0x184D2A50..5F LE +
+    * u32 LE size + opaque data, a metadata sidecar some archivers emit)
+    * is hopped when its declared size is at most `headBytes`; a second
+    * one, or a hop past the head window, leaves the blob NULL-format.
     *
     * xz: stream-flags check type (byte 7: none/crc32/crc64/sha256 ->
     * detail); the uncompressed size lives in the INDEX (variable-length,
@@ -1256,133 +1272,99 @@ object Multimodal {
     * NULL), detail (gzip compression method, xz check, bz2 level),
     * n_entries (ZIP only), uncompressed_size (gzip mod-2^32, zstd when
     * declared), mtime_epoch (gzip). Malformed/truncated yields NULL,
-    * never a throw; filter the INPUT before calling (parse outputs are
-    * pushdown-opaque via [[ndZero]]). */
+    * never a throw. */
   def archiveMetadata(media: DataFrame, contentCol: String = "content",
                       headBytes: Int = 4096,
-                      tailBytes: Int = 4096): DataFrame = {
-    require(headBytes >= 16, s"headBytes must be >= 16, got $headBytes")
-    require(tailBytes >= 26,
-      s"tailBytes must cover EOCD + gzip trailer (26), got $tailBytes")
-    Seq("format", "detail", "n_entries", "uncompressed_size", "mtime_epoch",
-      "__ar_hd", "__ar_tl", "__ar_zo", "__ar_zp").foreach(c =>
-      require(!media.columns.contains(c),
-        s"Multimodal.archiveMetadata: media already has a '$c' column — " +
-          "rename it first; archiveMetadata appends its own"))
-    def hb(at: String) = // head byte
-      s"""CAST(conv(substring(__ar_hd, CAST(($at) AS INT), 2), 16, 10)
-         |AS BIGINT)""".stripMargin
-    def hle(at: String, nBytes: Int) = { // head little-endian uint
-      val parts = (nBytes - 1 to 0 by -1).map(i =>
-        s"substring(__ar_hd, CAST(($at) AS INT) + ${2 * i}, 2)")
-      s"CAST(conv(concat(${parts.mkString(", ")}), 16, 10) AS BIGINT)"
+                      tailBytes: Int = 4096): DataFrame =
+    appendParsed(media, "Multimodal.archiveMetadata", "archive_metadata",
+      contentCol, Seq(headBytes, tailBytes), ArchiveMetadata.schema)
+
+  /** The ZIP end-of-central-directory magic `50 4B 05 06` as hex digits. */
+  private val EocdNibbles = Array(5, 0, 4, 0xB, 0, 5, 0, 6)
+
+  /** (format, detail, n_entries, uncompressed_size, mtime_epoch) of one
+    * blob, the decoder behind [[archiveMetadata]] and `archive_metadata`.
+    * It reads the first `headBytes` and the last `tailBytes` bytes at
+    * most; every field read is inside the window it belongs to, else the
+    * field is NULL. */
+  def parseArchiveMetadata(content: Array[Byte], headBytes: Int,
+                           tailBytes: Int): Seq[Any] = {
+    if (content == null) return Seq(null, null, null, null, null)
+    val n = content.length
+    val hl = math.min(n, headBytes) // head window: bytes [0, hl)
+    val t0 = math.max(n - tailBytes, 0) // tail window: bytes [t0, n)
+    @inline def u(i: Int): Int = content(i) & 0xFF
+    def le(at: Int, k: Int): Long = {
+      var v = 0L; var i = k - 1
+      while (i >= 0) { v = (v << 8) | u(at + i); i -= 1 }
+      v
     }
-    def tle(at: String, nBytes: Int) = { // tail little-endian uint
-      val parts = (nBytes - 1 to 0 by -1).map(i =>
-        s"substring(__ar_tl, CAST(($at) AS INT) + ${2 * i}, 2)")
-      s"CAST(conv(concat(${parts.mkString(", ")}), 16, 10) AS BIGINT)"
+    def headIs(at: Int, magic: Int*): Boolean =
+      at + magic.length <= hl && magic.indices.forall(i => u(at + i) == magic(i))
+    // offset of the zstd frame: past one leading skippable frame
+    val zo =
+      if (hl >= 8 && (u(0) >> 4) == 5 && headIs(1, 0x2A, 0x4D, 0x18) &&
+          le(4, 4) <= headBytes) 8 + le(4, 4).toInt
+      else 0
+    val format =
+      if (headIs(0, 0x1F, 0x8B)) "gzip"
+      else if (headIs(0, 0x50, 0x4B, 0x03, 0x04) ||
+               headIs(0, 0x50, 0x4B, 0x05, 0x06)) "zip"
+      else if (headIs(zo, 0x28, 0xB5, 0x2F, 0xFD)) "zstd"
+      else if (headIs(0, 0xFD, 0x37, 0x7A, 0x58, 0x5A, 0x00)) "xz"
+      else if (headIs(0, 0x42, 0x5A, 0x68) && hl >= 4 &&
+               u(3) >= '1' && u(3) <= '9') "bz2"
+      else null
+    val detail = format match {
+      case "gzip" if hl >= 3 && u(2) == 8 => "deflate"
+      case "xz" if hl >= 8 => u(7) match {
+        case 0x00 => "none"; case 0x01 => "crc32"
+        case 0x04 => "crc64"; case 0x0A => "sha256"; case _ => null
+      }
+      case "bz2" => s"level-${u(3) - '0'}"
+      case _ => null
     }
-    val hd = col("__ar_hd")
-    // ZIP EOCD: reverse-search the tail for the LAST occurrence of the
-    // magic, derive its char position s, then validate alignment and the
-    // comment-runs-to-EOF invariant before trusting any field.
-    // '6050B405' is '504B0506' char-reversed.
-    val zipFields = expr(s"""
-      CASE WHEN locate('6050B405', reverse(__ar_tl)) > 0 THEN
-        CASE WHEN (length(__ar_tl) - locate('6050B405', reverse(__ar_tl))
-                   - 6) % 2 = 1
-                  AND (${tle(s"(length(__ar_tl) - " +
-                    s"locate('6050B405', reverse(__ar_tl)) - 6) + 40", 2)})
-                    = (length(__ar_tl)
-                       - (length(__ar_tl)
-                          - locate('6050B405', reverse(__ar_tl)) - 6)
-                       + 1) div 2 - 22
-          THEN named_struct('n',
-            nullif(${tle(s"(length(__ar_tl) - " +
-              s"locate('6050B405', reverse(__ar_tl)) - 6) + 20", 2)},
-              CAST(65535 AS BIGINT)))
-          ELSE CAST(NULL AS STRUCT<n: BIGINT>)
-        END
-      ELSE CAST(NULL AS STRUCT<n: BIGINT>) END""")
-    // zstd frames may be PRECEDED by a skippable frame (RFC 8878 §3.1.2:
-    // magic 0x184D2A50..5F LE + u32 LE size + opaque data — metadata
-    // sidecars some archivers emit). Sniffing only offset 0 mis-read
-    // such files as non-zstd (r13 adversarial-sweep finding). One
-    // leading skippable frame is hopped; its UNTRUSTED u32 size is
-    // bounded to the head window BEFORE any INT cast (the r13 overflow
-    // lesson), so a huge declared size — or a second skippable frame,
-    // or a hop past the window — just fails the magic probe and the
-    // blob stays NULL-format: fail-safe, never garbage.
-    // bound ONCE as the nondeterministic-aliased __ar_zo column (the
-    // ndZero let-binding pattern): the CASE below would otherwise inline
-    // into every `format` reference and multiply through the plan — the
-    // exact blow-up this file's r13 incident documented (first measured
-    // here as q137 going 2.5x on the skippable-frame landing).
-    val zoffSql =
-      s"""(CASE WHEN substring(__ar_hd, 1, 1) = '5'
-         |AND substring(__ar_hd, 3, 6) = '2A4D18'
-         |AND length(__ar_hd) >= 16
-         |AND ${hle("9", 4)} <= $headBytes
-         |THEN 17 + 2 * (${hle("9", 4)}) ELSE 1 END)""".stripMargin
-    val zoff = "CAST(__ar_zo AS BIGINT)"
-    // zstd frame-header descriptor: computed FCS offset + per-flag width
-    val fhd = hb(s"$zoff + 8")
-    val zstdSize = {
-      val fcsFlag = s"($fhd) div 64"
-      val ss = s"(($fhd) div 32) % 2"
-      val dlen = s"element_at(array(0, 1, 2, 4), CAST(($fhd) % 4 + 1 AS INT))"
-      val fcsAt = s"($zoff + 10 + 2 * ((1 - ($ss)) + ($dlen)))"
-      s"""CASE
-         |WHEN ($fcsFlag) = 0 AND ($ss) = 1
-         |     AND length(__ar_hd) >= ($fcsAt) + 1
-         |  THEN ${hb(fcsAt)}
-         |WHEN ($fcsFlag) = 1 AND length(__ar_hd) >= ($fcsAt) + 3
-         |  THEN ${hle(fcsAt, 2)} + 256
-         |WHEN ($fcsFlag) = 2 AND length(__ar_hd) >= ($fcsAt) + 7
-         |  THEN ${hle(fcsAt, 4)}
-         |WHEN ($fcsFlag) = 3 AND length(__ar_hd) >= ($fcsAt) + 15
-         |     AND ${hle(s"($fcsAt) + 8", 4)} < 2147483648
-         |  THEN ${hle(fcsAt, 4)} + shiftleft(${hle(s"($fcsAt) + 8", 4)}, 32)
-         |ELSE CAST(NULL AS BIGINT) END""".stripMargin
+    val nEntries: java.lang.Long = if (format != "zip") null else {
+      // the LAST occurrence of the magic among the tail's hex digits,
+      // byte-aligned or not; a misaligned one fails validation
+      def nib(j: Int): Int = {
+        val b = u(t0 + j / 2)
+        if (j % 2 == 0) b >> 4 else b & 0xF
+      }
+      var s = 2 * (n - t0) - EocdNibbles.length
+      var found = false
+      while (s >= 0 && !found) {
+        var k = 0
+        while (k < EocdNibbles.length && nib(s + k) == EocdNibbles(k)) k += 1
+        if (k == EocdNibbles.length) found = true else s -= 1
+      }
+      val b = t0 + s / 2
+      if (!found || s % 2 == 1 || n - b < 22 || le(b + 20, 2) != n - b - 22)
+        null
+      else {
+        val entries = le(b + 10, 2)
+        if (entries == 0xFFFF) null else entries
+      }
     }
-    media
-      .withColumn("__ar_hd", hex(substring(col(contentCol), 1, headBytes)))
-      .withColumn("__ar_tl",
-        hex(substring(col(contentCol), -tailBytes, tailBytes)))
-      .withColumn("__ar_zo", expr(zoffSql) + ndZero)
-      .withColumn("format",
-        when(hd.startsWith("1F8B"), "gzip")
-          .when(hd.startsWith("504B0304") || hd.startsWith("504B0506"),
-            "zip")
-          .when(expr(
-            s"substring(__ar_hd, CAST($zoff AS INT), 8)") === "28B52FFD",
-            "zstd")
-          .when(hd.startsWith("FD377A585A00"), "xz")
-          .when(hd.startsWith("425A68") &&
-            substring(hd, 7, 2).between("31", "39"), "bz2"))
-      .withColumn("__ar_zp", when(col("format") === "zip", zipFields))
-      .withColumn("detail",
-        when(col("format") === "gzip" && expr(hb("5")) === 8, "deflate")
-          .when(col("format") === "xz",
-            when(substring(hd, 15, 2) === "00", "none")
-              .when(substring(hd, 15, 2) === "01", "crc32")
-              .when(substring(hd, 15, 2) === "04", "crc64")
-              .when(substring(hd, 15, 2) === "0A", "sha256"))
-          .when(col("format") === "bz2",
-            concat(lit("level-"),
-              (expr(hb("7")) - 48).cast(StringType))))
-      .withColumn("n_entries", col("__ar_zp.n") + ndZero)
-      .withColumn("uncompressed_size",
-        when(col("format") === "gzip" &&
-          octet_length(col(contentCol)) >= 18,
-          expr(tle("length(__ar_tl) - 7", 4)))
-          .when(col("format") === "zstd" &&
-            expr(s"length(__ar_hd) >= $zoff + 9"),
-            expr(zstdSize)) + ndZero)
-      .withColumn("mtime_epoch",
-        when(col("format") === "gzip" && expr("length(__ar_hd) >= 16"),
-          expr(hle("9", 4))) + ndZero)
-      .drop("__ar_hd", "__ar_tl", "__ar_zo", "__ar_zp")
+    val size: java.lang.Long = format match {
+      case "gzip" if n >= 18 => le(n - 4, 4)
+      case "zstd" if hl >= zo + 5 =>
+        val fhd = u(zo + 4)
+        val singleSegment = (fhd >> 5) & 1
+        val fcsAt = zo + 5 + (1 - singleSegment) + Array(0, 1, 2, 4)(fhd & 3)
+        (fhd >> 6) match {
+          case 0 if singleSegment == 1 && hl >= fcsAt + 1 => u(fcsAt).toLong
+          case 1 if hl >= fcsAt + 2 => le(fcsAt, 2) + 256
+          case 2 if hl >= fcsAt + 4 => le(fcsAt, 4)
+          case 3 if hl >= fcsAt + 8 && le(fcsAt + 4, 4) < (1L << 31) =>
+            le(fcsAt, 4) + (le(fcsAt + 4, 4) << 32)
+          case _ => null
+        }
+      case _ => null
+    }
+    val mtime: java.lang.Long =
+      if (format == "gzip" && hl >= 8) le(4, 4) else null
+    Seq(format, detail, nEntries, size, mtime)
   }
 
   /** Deterministic VALID archive exhibit bytes — the test/demo source for

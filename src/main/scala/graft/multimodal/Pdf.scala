@@ -1,22 +1,33 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import java.util.regex.Pattern
 
-/** PDF triage — version, linearization, approximate page count,
-  * startxref/EOF integrity, encryption flag — from bounded HEAD and TAIL
-  * windows, expression-only. PDF is the most common non-HTML document
-  * format in a crawl; triage decides demux-vs-drop without a PDF library.
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{PdfText, PdfTriage}
+
+/** PDF triage and text extraction — the two steps that decide
+  * demux-vs-drop for the most common non-HTML document format in a
+  * crawl and turn the keep-pile into a TEXT SOURCE, without a PDF
+  * library. Both are JVM decoders exposed as native Catalyst
+  * expressions (`pdf_triage` over [[parseTriage]], `pdf_text` over
+  * [[extractOne]]; see [[graft.functions.MediaParse]]), and
+  * [[pdfTriage]] / [[extractPdfText]] append their fields through
+  * [[Multimodal.appendParsed]]: one parse per row, and a filter on a
+  * parsed column stays above it.
   *
-  * PDF's structural tokens are ASCII text, so the windows are cast to
-  * STRING and searched with regex instead of hexed: bytes inside binary
-  * streams decode to replacement chars, which cannot affect ASCII token
-  * matches (no ASCII byte participates in a multi-byte UTF-8 sequence),
-  * and the cast is non-validating so nothing throws. This is a TRIAGE
-  * heuristic, not a parser: a token occurring inside a content stream can
-  * inflate the fallback page count — documented, bounded, and the reason
-  * the count column is named `n_pages_approx`.
+  * Triage reads version, linearization, approximate page count,
+  * startxref/EOF integrity and the encryption flag from bounded HEAD and
+  * TAIL windows. PDF's structural tokens are ASCII text, so each window
+  * is decoded as UTF-8 (what Spark's `CAST(binary AS STRING)` does:
+  * bytes inside binary streams become replacement chars, which cannot
+  * affect ASCII token matches, since no ASCII byte participates in a
+  * multi-byte UTF-8 sequence) and searched with `java.util.regex`. This
+  * is a TRIAGE heuristic, not a parser: a token occurring inside a
+  * content stream can inflate the fallback page count — documented,
+  * bounded, and the reason the count column is named `n_pages_approx`.
   *
   * Field derivations:
   *  - `pdf_version` from the `%PDF-M.N` header (garbage after the dash →
@@ -30,80 +41,77 @@ import org.apache.spark.sql.types.LongType
   *    `/Type /Page` objects in the head window (`(?![a-zA-Z])` so
   *    `/Pages` never counts). NULL when no source matches;
   *  - `startxref` = the LAST `startxref <offset>` in the tail
-  *    (incremental updates append new ones; the last is operative) via
-  *    try_element_at — never an ANSI index throw;
+  *    (incremental updates append new ones; the last is operative);
   *  - `has_eof` = `%%EOF` present in the tail (a truncated download
   *    fails this before anything else);
   *  - `encrypted` = `/Encrypt` in the tail trailer.
   *
   * Non-PDF input keeps every column NULL; malformed/truncated PDF input
-  * degrades field-by-field, never throws. Numeric outputs carry the
-  * family's pushdown barrier (see Multimodal.ndZero rationale): filter
-  * the INPUT before triaging. */
+  * degrades field-by-field, never throws. */
 object Pdf {
 
-  private def ndZero: Column = (rand(19L) * lit(0)).cast(LongType)
-
+  /** Append `pdf_version`, `linearized`, `n_pages_approx`, `startxref`,
+    * `has_eof` and `encrypted` ([[parseTriage]], `pdf_triage` in SQL);
+    * the windows are the first `headBytes` and last `tailBytes` bytes. */
   def pdfTriage(media: DataFrame, contentCol: String = "content",
                 headBytes: Int = 64 * 1024,
-                tailBytes: Int = 4096): DataFrame = {
-    require(headBytes >= 16, s"headBytes must be >= 16, got $headBytes")
-    require(tailBytes >= 32,
-      s"tailBytes must cover startxref + %%EOF (32), got $tailBytes")
-    Seq("pdf_version", "linearized", "n_pages_approx", "startxref",
-      "has_eof", "encrypted", "__pdf_hd", "__pdf_tl").foreach(c =>
-      require(!media.columns.contains(c),
-        s"Multimodal.Pdf.pdfTriage: media already has a '$c' column — " +
-          "rename it first; pdfTriage appends its own"))
-    val c = s"`$contentCol`"
-    val withWin = media
-      .withColumn("__pdf_hd",
-        expr(s"CAST(substring($c, 1, $headBytes) AS STRING)"))
-      .withColumn("__pdf_tl",
-        expr(s"""CAST(substring($c,
-                |  greatest(octet_length($c) - $tailBytes + 1, 1),
-                |  $tailBytes) AS STRING)""".stripMargin))
-    val hd = col("__pdf_hd")
-    val tl = col("__pdf_tl")
-    val isPdf = hd.startsWith("%PDF-")
-    val linearized = hd.rlike("/Linearized\\b")
-    val nLin = expr(
-      """nullif(regexp_extract(__pdf_hd,
-        |  '(?s)/Linearized.{0,256}?/N\\s+([0-9]{1,9})', 1), '')
-        |""".stripMargin).cast(LongType)
-    val nCount = expr(
-      """nullif(regexp_extract(__pdf_tl,
-        |  '/Count\\s+([0-9]{1,9})', 1), '')""".stripMargin).cast(LongType)
-    val nObjs = expr(
-      """nullif(regexp_count(__pdf_hd,
-        |  '/Type\\s*/Page(?![a-zA-Z])'), 0)""".stripMargin).cast(LongType)
-    val sxref = expr(
-      """try_element_at(regexp_extract_all(__pdf_tl,
-        |  'startxref\\s+([0-9]{1,18})', 1), -1)""".stripMargin)
-      .cast(LongType)
-    withWin
-      .withColumn("pdf_version",
-        when(isPdf, nullif(
-          regexp_extract(hd, "^%PDF-([0-9]+\\.[0-9]+)", 1), lit(""))))
-      .withColumn("linearized", when(isPdf, linearized))
-      .withColumn("n_pages_approx",
-        when(isPdf,
-          when(linearized, coalesce(nLin, nCount, nObjs))
-            .otherwise(coalesce(nCount, nObjs))) + ndZero)
-      .withColumn("startxref", when(isPdf, sxref) + ndZero)
-      .withColumn("has_eof", when(isPdf, instr(tl, "%%EOF") > 0))
-      .withColumn("encrypted", when(isPdf, tl.rlike("/Encrypt\\b")))
-      .drop("__pdf_hd", "__pdf_tl")
+                tailBytes: Int = 4096): DataFrame =
+    Multimodal.appendParsed(media, "Pdf.pdfTriage", "pdf_triage", contentCol,
+      Seq(headBytes, tailBytes), PdfTriage.schema)
+
+  private val VersionRe = Pattern.compile("^%PDF-([0-9]+\\.[0-9]+)")
+  private val LinearizedRe = Pattern.compile("/Linearized\\b")
+  private val LinearizedNRe =
+    Pattern.compile("(?s)/Linearized.{0,256}?/N\\s+([0-9]{1,9})")
+  private val CountRe = Pattern.compile("/Count\\s+([0-9]{1,9})")
+  private val PageRe = Pattern.compile("/Type\\s*/Page(?![a-zA-Z])")
+  private val StartxrefRe = Pattern.compile("startxref\\s+([0-9]{1,18})")
+  private val EncryptRe = Pattern.compile("/Encrypt\\b")
+
+  /** (pdf_version, linearized, n_pages_approx, startxref, has_eof,
+    * encrypted) of one blob, the decoder behind [[pdfTriage]] and
+    * `pdf_triage`; all NULL unless the blob starts with `%PDF-`. */
+  def parseTriage(content: Array[Byte], headBytes: Int,
+                  tailBytes: Int): Seq[Any] = {
+    val n = if (content == null) 0 else content.length
+    if (n < 5 || content(0) != '%' || content(1) != 'P' ||
+        content(2) != 'D' || content(3) != 'F' || content(4) != '-')
+      return Seq(null, null, null, null, null, null)
+    val t0 = math.max(n - tailBytes, 0)
+    val hd = UTF8String.fromBytes(content, 0, math.min(n, headBytes)).toString
+    val tl = UTF8String.fromBytes(content, t0, n - t0).toString
+    // group 1 of the first (or, with `last`, the last) match, else null
+    def number(re: Pattern, s: String, last: Boolean): java.lang.Long = {
+      val m = re.matcher(s)
+      var v: java.lang.Long = null
+      var more = m.find()
+      while (more) {
+        v = m.group(1).toLong
+        more = last && m.find()
+      }
+      v
+    }
+    val version = {
+      val m = VersionRe.matcher(hd)
+      if (m.find()) m.group(1) else null
+    }
+    val linearized = LinearizedRe.matcher(hd).find()
+    val pages = {
+      val m = PageRe.matcher(hd)
+      var k = 0L
+      while (m.find()) k += 1
+      if (k == 0) null else java.lang.Long.valueOf(k)
+    }
+    val nPages = Seq(
+      if (linearized) number(LinearizedNRe, hd, last = false) else null,
+      number(CountRe, tl, last = false), pages).find(_ != null).orNull
+    Seq(version, linearized, nPages, number(StartxrefRe, tl, last = true),
+      tl.contains("%%EOF"), EncryptRe.matcher(tl).find())
   }
 
   // ---------------------------------------------------------------------
   // Text extraction — the step past triage that makes PDFs a TEXT SOURCE
   // ---------------------------------------------------------------------
-
-  /** One extracted document: NULLs when the blob is not a PDF. */
-  private final case class PdfText(
-      text: String, nShowOps: Option[Long], truncated: Option[Boolean],
-      composite: Option[Boolean])
 
   private def isDelim(c: Char): Boolean =
     c <= ' ' || c == '(' || c == ')' || c == '<' || c == '>' ||
@@ -294,13 +302,15 @@ object Pdf {
     * order — `/FlateDecode` streams inflate via the JDK Inflater (the
     * dominant filter for text content), unfiltered streams read raw,
     * image/other filters are skipped — and collect BT..ET show-operator
-    * strings, space-joined. Returns NULLs for non-PDF bytes. */
-  private def extractOne(bytes: Array[Byte], maxStreamBytes: Int,
-                         maxTextChars: Int): PdfText = {
+    * strings, space-joined: (pdf_text, n_show_ops, pdf_text_truncated,
+    * pdf_composite_font), the decoder behind [[extractPdfText]] and
+    * `pdf_text`. All NULL for non-PDF bytes. */
+  def extractOne(bytes: Array[Byte], maxStreamBytes: Int,
+                 maxTextChars: Int): Seq[Any] = {
     if (bytes == null || bytes.length < 8 ||
       bytes(0) != '%' || bytes(1) != 'P' || bytes(2) != 'D' ||
       bytes(3) != 'F' || bytes(4) != '-')
-      return PdfText(null, None, None, None)
+      return Seq(null, null, null, null)
     val out = new java.lang.StringBuilder
     var shows = 0L
     var truncated = false
@@ -398,9 +408,8 @@ object Pdf {
     // would poison every downstream text stage with mojibake. The doc
     // is flagged and its text NULLed (show accounting survives), the
     // same malformed→NULL discipline as the HTTP br/zstd seam.
-    PdfText(
-      if (shows > 0 && !composite) out.toString else null,
-      Some(shows), Some(truncated), Some(composite))
+    Seq(if (shows > 0 && !composite) out.toString else null,
+      shows, truncated, composite)
   }
 
   /** Does the RAW pdf carry a composite-font declaration? Checks
@@ -463,11 +472,10 @@ object Pdf {
   }
 
   /** Append `pdf_text` (space-joined show strings), `n_show_ops`,
-    * `pdf_text_truncated`, and `pdf_composite_font` for each PDF blob —
-    * the step that turns [[pdfTriage]]'s keep-pile into a TEXT SOURCE
-    * feeding the same funnel as HTML. JVM per-row parser (record-IO
-    * over binary, the Warc/Http category); passthrough columns survive
-    * via the Encoders.row shape. Fidelity contract (documented,
+    * `pdf_text_truncated`, and `pdf_composite_font` for each PDF blob
+    * ([[extractOne]], `pdf_text` in SQL) — the step that turns
+    * [[pdfTriage]]'s keep-pile into a TEXT SOURCE feeding the same
+    * funnel as HTML. Fidelity contract (documented,
     * honest): bytes decode as Latin-1 — custom font encodings /
     * ToUnicode CMaps are NOT resolved (that needs font tables; the
     * dominant WinAnsi/Standard-encoded Latin text extracts correctly,
@@ -483,33 +491,9 @@ object Pdf {
     * caps bound task memory per blob. */
   def extractPdfText(df: DataFrame, contentCol: String = "content",
                      maxStreamBytes: Int = 1 << 20,
-                     maxTextChars: Int = 1 << 20): DataFrame = {
-    require(maxStreamBytes > 0 && maxTextChars > 0, "caps must be positive")
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    Seq("pdf_text", "n_show_ops", "pdf_text_truncated",
-      "pdf_composite_font").foreach(c =>
-      require(!df.columns.contains(c),
-        s"Pdf.extractPdfText: df already has a '$c' column — rename it " +
-          "first; extractPdfText appends its own"))
-    val ci = df.schema.fieldIndex(contentCol)
-    require(df.schema(ci).dataType ==
-      org.apache.spark.sql.types.BinaryType,
-      s"$contentCol must be BINARY, got ${df.schema(ci).dataType}")
-    val outSchema = StructType(df.schema.fields.toSeq ++ Seq(
-      StructField("pdf_text", StringType),
-      StructField("n_show_ops", LongType),
-      StructField("pdf_text_truncated", BooleanType),
-      StructField("pdf_composite_font", BooleanType)))
-    df.map({ r =>
-      val p = extractOne(r.getAs[Array[Byte]](ci), maxStreamBytes,
-        maxTextChars)
-      Row.fromSeq(r.toSeq ++ Seq(p.text,
-        p.nShowOps.map(Long.box).orNull,
-        p.truncated.map(Boolean.box).orNull,
-        p.composite.map(Boolean.box).orNull))
-    })(Encoders.row(outSchema))
-  }
+                     maxTextChars: Int = 1 << 20): DataFrame =
+    Multimodal.appendParsed(df, "Pdf.extractPdfText", "pdf_text", contentCol,
+      Seq(maxStreamBytes, maxTextChars), PdfText.schema)
 
   /** Deterministic TEXT-bearing PDF exhibit bytes from an id column —
     * the test/demo source for [[extractPdfText]] (compressed variants

@@ -4,14 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** PNG pixel decode for perceptual hashing — the DECODE-seam rung for a
-  * format [[Multimodal.imageDhash]] does not read.
+/** PNG pixel decode for perceptual hashing: [[Multimodal.parseImageDhash]]
+  * (`image_dhash`) sends every blob with the PNG signature here.
   *
-  * [[Multimodal.imageDhash]] covers formats whose pixels need no codec
-  * (BMP/ICO); real crawl images are overwhelmingly
-  * compressed. This module closes the PNG half with a pure-JVM decoder
-  * (JDK Inflater — the same dependency-free route `multimodal/Pdf.scala`
-  * takes for FlateDecode): 8-bit non-interlaced PNG in ALL FIVE color
+  * Real crawl images are overwhelmingly compressed. This module decodes
+  * PNG with a pure-JVM decoder (JDK Inflater — the same dependency-free
+  * route `multimodal/Pdf.scala` takes for FlateDecode): 8-bit
+  * non-interlaced PNG in ALL FIVE color
   * types — 2 RGB, 6 RGBA, 0 grayscale, 4 gray+alpha, 3 palette
   * (PLTE-expanded) — full per-row defilter (all five §4.5.2 filters
   * incl. Paeth), multi-IDAT reassembly, CRC-validated critical chunks.
@@ -20,20 +19,18 @@ import org.apache.spark.sql.types._
   * parser-family contract); the contract is DOCUMENTED honesty, not
   * silent wrong hashes.
   *
-  * The hash is the SAME standard dHash as the BMP/ICO decoder: 9×8
-  * nearest-neighbor luminance grid (srcX = floor(gx·w/9), srcY =
-  * floor(gy·h/8)), luminance = unweighted first-three-channel sum
-  * (dHash only compares adjacent values, so the BGR-vs-RGB channel
+  * The hash is [[dhashFromRgb]], the SAME standard dHash as the BMP/ICO
+  * decoder: 9×8 nearest-neighbor luminance grid (srcX = floor(gx·w/9),
+  * srcY = floor(gy·h/8)), luminance = unweighted first-three-channel
+  * sum (dHash only compares adjacent values, so the BGR-vs-RGB channel
   * order difference between BMP and PNG is irrelevant — the sum is
   * permutation-invariant), bit gy·8+gx = right-neighbor brighter.
   * PngSpec asserts bit-equality against the BMP/ICO dHash on
-  * re-encoded twins of the BMP exhibits, so the two rungs feed ONE
-  * banding pipeline ([[graft.dedup.Dedup.simhashBandedDups]]) with
-  * mixed-container signatures (q174).
+  * re-encoded twins of the BMP exhibits, so one `image_dhash` call over
+  * a mixed BMP/PNG corpus feeds ONE banding pipeline
+  * ([[graft.dedup.Dedup.simhashBandedDups]], q174).
   *
-  * SCALE SHAPE: decode runs in `mapPartitions` (per-partition init
-  * amortized, blobs read once, only (id, 8-byte hash) travels onward);
-  * work per blob is bounded by `maxBytes` (input) and `maxPixels`
+  * Work per blob is bounded by `maxBytes` (input) and `maxPixels`
   * (decoded buffer = ≤4·maxPixels bytes), so a decompression-bomb PNG
   * costs a bounded allocation then NULLs, never an OOM.
   */
@@ -200,19 +197,9 @@ object Png {
     }
   }
 
-  /** 64-bit dHash of a decoded PNG — bit-compatible with
-    * [[Multimodal.imageDhash]] (same grid, same
-    * unweighted luminance, same comparison). null when undecodable. */
-  private[graft] def dhashOf(bytes: Array[Byte], maxBytes: Int,
-                             maxPixels: Int): java.lang.Long =
-    decodeRgb(bytes, maxBytes, maxPixels) match {
-      case None => null
-      case Some((w, h, channels, px)) => dhashFromRgb(w, h, channels, px)
-    }
-
   /** The SHARED 9×8 grid + adjacent-comparison fold — one definition
-    * for every decode rung ([[Png]], [[Jpeg]]), so "bit-compatible with
-    * the BMP/ICO dHash" is a property of one function, not a claim
+    * for every decoded container ([[Png]], [[Jpeg]]), so "bit-compatible
+    * with the BMP/ICO dHash" is a property of one function, not a claim
     * re-proven per format. */
   private[multimodal] def dhashFromRgb(w: Int, h: Int, channels: Int,
                                        px: Array[Byte]): java.lang.Long = {
@@ -238,30 +225,6 @@ object Png {
       b += 1
     }
     java.lang.Long.valueOf(acc)
-  }
-
-  /** dHash via the decode rung: (idCol, dhash) — one row per input,
-    * dhash NULL outside the documented subset. Pairs with
-    * [[Multimodal.imageDhash]] to feed mixed BMP/PNG signatures into
-    * one [[graft.dedup.Dedup.simhashBandedDups]] banding (q174). */
-  def imageDhashPng(media: DataFrame, idCol: String = "media_id",
-                    contentCol: String = "content",
-                    maxBytes: Int = 1 << 20,
-                    maxPixels: Int = 1 << 22): DataFrame = {
-    require(maxBytes >= 64, s"maxBytes too small: $maxBytes")
-    require(maxPixels >= 72, s"maxPixels too small: $maxPixels")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast(LongType), col(contentCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition init would amortize here (codec contexts); the
-        // JDK Inflater is allocated per blob — cheap and leak-free
-        it.map { case (id, c) =>
-          (id, Option(dhashOf(c, maxBytes, maxPixels)).map(_.longValue))
-        }
-      }
-      .toDF(idCol, "dhash")
   }
 
   /** Deterministic PNG twins of [[Multimodal.synthDhashImageBytes]] —

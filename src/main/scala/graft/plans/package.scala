@@ -14,8 +14,8 @@ package graft
   *    custom-aggregation surface) where built-ins cost O(group) memory;
   *  - the other `graft.functions` classes, custom expressions (b) where a
   *    JVM routine over one value replaces an expression composition — the
-  *    media parsers (`MediaParse`) among them;
-  *  - the `Png`/`Jpeg` pixel decoders: `mapPartitions` (d).
+  *    blob parsers (`MediaParse`, the `Png`/`Jpeg` pixel decoders
+  *    included) among them.
   *
   * Even the as-of join — the textbook "Spark can't express this" case —
   * composes as union + sort + last(ignoreNulls) window

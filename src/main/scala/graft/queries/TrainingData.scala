@@ -1994,8 +1994,8 @@ object TrainingData {
     // four zstd FCS widths, 1-4 ZIP members + id-derived comment); the
     // oracle recomputes every field and byte length as GROUND-TRUTH id
     // arithmetic, and hand-assembled golden bytes in TrainingDataSpec pin
-    // the layouts incl. the fake-EOCD-in-comment NULL path.
-    // Expression-only; blobs never shuffle.
+    // the layouts incl. the fake-EOCD-in-comment NULL path. One
+    // `archive_metadata` decode per blob; blobs never shuffle.
     Q("q137_archive_metadata",
       (s, dir) => Multimodal.archiveMetadata(
           Multimodal.synthArchiveBytes(t(s, dir, "documents"), "doc_id"))
@@ -2985,7 +2985,8 @@ object TrainingData {
     // page count (precedence: linearization /N -> trailer /Count ->
     // /Type /Page object count, with the /Type /Pages decoy excluded) /
     // last-startxref / %%EOF integrity / encryption — bounded head+tail
-    // windows, expression-only. Traps: /Count omitted (fallback path),
+    // windows, one `pdf_triage` decode per blob. Traps: /Count omitted
+    // (fallback path),
     // truncation right after 'startxref' (field-by-field degradation),
     // non-PDF garbage (all NULL). Oracle is ground-truth id arithmetic.
     Q("q143_pdf_triage",
@@ -5018,12 +5019,12 @@ object TrainingData {
              |) t(media_id, http_status, content_encoding, body_str)
              |ORDER BY media_id""".stripMargin)),
 
-    // PNG dHash via the DECODE rung (Png.imageDhashPng): real crawl
+    // PNG dHash (Multimodal.imageDhash → Png.decodeRgb): real crawl
     // images are overwhelmingly compressed — the pure-JVM PNG decoder
     // (JDK Inflater, all five defilters, multi-IDAT, CRC-checked
-    // critical chunks) feeds the SAME 9x8 dHash as the expression
-    // path, in a mapPartitions narrow map. The synth corpus encodes
-    // the q166 pixel formula across ALL FIVE 8-bit color types
+    // critical chunks) feeds the SAME 9x8 dHash as the BMP/ICO
+    // decode, inside the one `image_dhash` expression. The synth corpus
+    // encodes the q166 pixel formula across ALL FIVE 8-bit color types
     // (pmod 5: RGB / RGBA / grayscale / identity-PLTE palette /
     // gray+alpha — same pixels whatever the type; filters cycle y%5
     // inside every image; pmod 4 = 2 splits IDAT, = 3 inserts an
@@ -5033,7 +5034,7 @@ object TrainingData {
     // construction. dhash rides as STRING (the q166 nullable-int64 ->
     // float64 lesson).
     Q("q173_image_dhash_png",
-      (s, dir) => graft.multimodal.Png.imageDhashPng(
+      (s, dir) => graft.multimodal.Multimodal.imageDhash(
           graft.multimodal.Png.synthPngImageBytes(
             t(s, dir, "documents").select("doc_id"), "doc_id"))
         .select(col("media_id"), col("dhash").cast(StringType).as("dhash"))
@@ -5075,9 +5076,9 @@ object TrainingData {
              |  END AS dhash
              |FROM h ORDER BY media_id""".stripMargin)),
 
-    // Mixed-container perceptual dedup — ONE banding run consumes
-    // signatures from BOTH rungs (expression dHash over BMP/ICO ids
-    // < 300, decode-rung dHash over PNG ids 300..599): ids congruent
+    // Mixed-container perceptual dedup — ONE `image_dhash` call over a
+    // corpus of BMP/ICO (ids < 300) and PNG (ids 300..599) blobs feeds
+    // ONE banding run: ids congruent
     // mod 256 render identical pixels whatever the container OR codec,
     // so cross-format content dups (e.g. BMP 44 vs PNG 556) surface
     // next to the within-format near-dup plants. The oracle is q167's
@@ -5086,18 +5087,14 @@ object TrainingData {
     Q("q174_image_neardup_mixed",
       (s, dir) => {
         val docs = t(s, dir, "documents").select("doc_id")
-        val bmp = graft.multimodal.Multimodal.imageDhash(
-            graft.multimodal.Multimodal.synthDhashImageBytes(
-              docs.where(col("doc_id") < 300), "doc_id"))
+        val media = graft.multimodal.Multimodal.synthDhashImageBytes(
+            docs.where(col("doc_id") < 300), "doc_id")
+          .unionByName(graft.multimodal.Png.synthPngImageBytes(
+            docs.where(col("doc_id").between(300, 599)), "doc_id"))
+        val sigs = graft.multimodal.Multimodal.imageDhash(media)
           .where(col("dhash").isNotNull)
           .select(col("media_id").as("id"), col("dhash").as("simhash"))
-        val png = graft.multimodal.Png.imageDhashPng(
-            graft.multimodal.Png.synthPngImageBytes(
-              docs.where(col("doc_id").between(300, 599)), "doc_id"))
-          .where(col("dhash").isNotNull)
-          .select(col("media_id").as("id"), col("dhash").as("simhash"))
-        Dedup.simhashBandedDups(
-          graft.Graft.snap(bmp.unionByName(png)), "id", 64, 2)
+        Dedup.simhashBandedDups(graft.Graft.snap(sigs), "id", 64, 2)
           .orderBy("id_a", "id_b")
       },
       Some("""WITH ids AS (SELECT doc_id FROM documents
@@ -5761,9 +5758,9 @@ object TrainingData {
              |WHERE t.n_overlap >= 5
              |ORDER BY train_id, eval_id""".stripMargin)),
 
-    // JPEG dHash via the from-scratch baseline DECODE rung
-    // (Jpeg.imageDhashJpeg): the dominant crawl-image codec joins the
-    // perceptual-dedup family. The synth corpus is 72x64 FLAT-8x8-block
+    // JPEG dHash via the from-scratch baseline decoder
+    // (Multimodal.imageDhash → Jpeg.decodeRgb): the dominant crawl-image
+    // codec joins the perceptual-dedup family. The synth corpus is 72x64 FLAT-8x8-block
     // baseline JPEG (DC quant 8 -> coded DC = v-128 exactly, flat-block
     // IDCT shortcut -> decode EXACT despite the lossy codec), cycling
     // all five codec shapes on pmod 5 (gray / 4:4:4 / 4:2:0 / gray+DRI
@@ -5773,7 +5770,7 @@ object TrainingData {
     // block (gx, gy), so the oracle is q173's id arithmetic with one
     // extra NULL class — container-agnostic by construction.
     Q("q184_image_dhash_jpeg",
-      (s, dir) => graft.multimodal.Jpeg.imageDhashJpeg(
+      (s, dir) => graft.multimodal.Multimodal.imageDhash(
           graft.multimodal.Jpeg.synthJpegImageBytes(
             t(s, dir, "documents").select("doc_id"), "doc_id"))
         .select(col("media_id"), col("dhash").cast(StringType).as("dhash"))
@@ -5816,39 +5813,31 @@ object TrainingData {
              |  END AS dhash
              |FROM h ORDER BY media_id""".stripMargin)),
 
-    // TRIMODAL perceptual dedup — ONE banding run over signatures from
-    // all THREE image rungs: expression dHash (BMP ids < 300), PNG
-    // decode rung (300..599), JPEG decode rung (600..899). Ids
+    // TRIMODAL perceptual dedup — ONE `image_dhash` call over a corpus
+    // of all THREE containers: BMP/ICO (ids < 300), PNG (300..599),
+    // JPEG (600..899), then ONE banding run. Ids
     // congruent mod 256 render identical pixels whatever the container
     // OR codec — lossless or lossy — so cross-format content dups
     // (BMP 44 / PNG 556 / JPEG 812) surface in one pass. Oracle is the
-    // q167/q174 id arithmetic over the union range with each rung's
+    // q167/q174 id arithmetic over the union range with each container's
     // NULL classes excluded.
     Q("q185_image_neardup_trimodal",
       (s, dir) => {
         val docs = t(s, dir, "documents").select("doc_id")
-        val bmp = graft.multimodal.Multimodal.imageDhash(
-            graft.multimodal.Multimodal.synthDhashImageBytes(
-              docs.where(col("doc_id") < 300), "doc_id"))
+        val media = graft.multimodal.Multimodal.synthDhashImageBytes(
+            docs.where(col("doc_id") < 300), "doc_id")
+          .unionByName(graft.multimodal.Png.synthPngImageBytes(
+            docs.where(col("doc_id").between(300, 599)), "doc_id"))
+          .unionByName(graft.multimodal.Jpeg.synthJpegImageBytes(
+            docs.where(col("doc_id").between(600, 899)), "doc_id"))
+        val sigs = graft.multimodal.Multimodal.imageDhash(media)
           .where(col("dhash").isNotNull)
           .select(col("media_id").as("id"), col("dhash").as("simhash"))
-        val png = graft.multimodal.Png.imageDhashPng(
-            graft.multimodal.Png.synthPngImageBytes(
-              docs.where(col("doc_id").between(300, 599)), "doc_id"))
-          .where(col("dhash").isNotNull)
-          .select(col("media_id").as("id"), col("dhash").as("simhash"))
-        val jpg = graft.multimodal.Jpeg.imageDhashJpeg(
-            graft.multimodal.Jpeg.synthJpegImageBytes(
-              docs.where(col("doc_id").between(600, 899)), "doc_id"))
-          .where(col("dhash").isNotNull)
-          .select(col("media_id").as("id"), col("dhash").as("simhash"))
-        // snap: all THREE decode pipelines run once into the snapshot;
-        // the banded self-join reads it from both sides (r20 — without
-        // truncation the final plan re-derived each family per side:
-        // 12 parquet scans, plans/r20/q185_*_before.txt)
-        Dedup.simhashBandedDups(
-          graft.Graft.snap(bmp.unionByName(png).unionByName(jpg)),
-          "id", 64, 2)
+        // snap: the decode runs once into the snapshot; the banded
+        // self-join reads it from both sides (r20 — without truncation
+        // the final plan re-derived each family per side: 12 parquet
+        // scans, plans/r20/q185_*_before.txt)
+        Dedup.simhashBandedDups(graft.Graft.snap(sigs), "id", 64, 2)
           .orderBy("id_a", "id_b")
       },
       Some("""WITH ids AS (SELECT doc_id FROM documents

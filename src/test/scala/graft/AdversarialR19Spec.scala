@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
-import graft.multimodal.{Audio, Png}
+import graft.multimodal.{Audio, Multimodal, Png}
 import graft.sources.Http
 
 /** The standing adversarial tradition (r15→r18): this round's sweep
@@ -104,7 +104,7 @@ class AdversarialR19Spec extends SparkSpec {
         chunk("IEND", Array.emptyByteArray)
     }
     def dh(b: Array[Byte]): Option[Long] =
-      Png.imageDhashPng(Seq((1L, b)).toDF("media_id", "content"))
+      Multimodal.imageDhash(Seq((1L, b)).toDF("media_id", "content"))
         .select($"dhash").as[Option[Long]].collect().head
     assert(dh(palettePng(maxIdx = 5, paletteEntries = 6)).isDefined)
     assert(dh(palettePng(maxIdx = 5, paletteEntries = 2)).isEmpty,
@@ -116,7 +116,7 @@ class AdversarialR19Spec extends SparkSpec {
       "boundary (including mid-filter-byte) hashes identically") {
     val whole = Png.synthPngBytes(7L) // single-IDAT id (7 % 4 != 2)
     def dh(b: Array[Byte]): Option[Long] =
-      Png.imageDhashPng(Seq((1L, b)).toDF("media_id", "content"))
+      Multimodal.imageDhash(Seq((1L, b)).toDF("media_id", "content"))
         .select($"dhash").as[Option[Long]].collect().head
     val base = dh(whole)
     assert(base.isDefined)

@@ -76,6 +76,12 @@ class ImageDhashSpec extends SparkSpec {
     assert(hashes.count(_.isDefined) > 400, "fixture must mostly decode")
   }
 
+  test("PNG and JPEG dHash match the goldens recorded from the former " +
+      "per-format decode rungs: synth families and malformed sets") {
+    val bad = MediaGoldens.mismatches(MediaGoldens.dhashDecoded(spark))
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("64-bit banding chunks use UNSIGNED shifts: a signature with the " +
       "sign bit set pairs with its 1-bit neighbor and never throws") {
     // MinValue vs 0 differ ONLY in the sign bit (hamming 1): with a

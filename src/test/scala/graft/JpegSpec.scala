@@ -24,7 +24,7 @@ class JpegSpec extends SparkSpec {
   }
 
   private def hashes(ids: Long*): Map[Long, Option[Long]] =
-    Jpeg.imageDhashJpeg(Jpeg.synthJpegImageBytes(
+    Multimodal.imageDhash(Jpeg.synthJpegImageBytes(
       ids.toDF("doc_id"), "doc_id"))
       .select($"media_id", $"dhash")
       .as[(Long, Option[Long])].collect().toMap
@@ -60,7 +60,7 @@ class JpegSpec extends SparkSpec {
       ids.toDF("doc_id"), "doc_id"))
       .select($"media_id", $"dhash")
       .as[(Long, Option[Long])].collect().toMap
-    val png = Png.imageDhashPng(Png.synthPngImageBytes(
+    val png = Multimodal.imageDhash(Png.synthPngImageBytes(
       ids.toDF("doc_id"), "doc_id"))
       .select($"media_id", $"dhash")
       .as[(Long, Option[Long])].collect().toMap
@@ -134,41 +134,30 @@ class JpegSpec extends SparkSpec {
   test("malformed inputs NULL, never throw: truncation at every 25-byte " +
       "step, entropy-byte corruption, oversized input, pixel-bomb " +
       "header, missing tables, stray markers") {
-    def dh(b: Array[Byte], maxBytes: Int = 1 << 20,
-           maxPixels: Int = 1 << 22): Option[Long] =
-      Jpeg.imageDhashJpeg(Seq((1L, b)).toDF("media_id", "content"),
-        maxBytes = maxBytes, maxPixels = maxPixels)
-        .select($"dhash").as[Option[Long]].collect().head
+    // MediaGoldens.jpegMalformed: key = prefix length (every 25 bytes),
+    // 10000 + i the image with byte i XOR 0x5A (bit noise may still
+    // decode; it must never throw), 20001 a 65535x65535 SOF (the pixel
+    // gate NULLs it before any allocation), 20002 the DHT marker blanked
+    // into an APP marker (a missing table, not an NPE)
     val good = Jpeg.synthJpegBytes(0L)
-    assert(dh(good).isDefined)
+    val got = Multimodal.imageDhash(
+        MediaGoldens.jpegMalformed.toDF("media_id", "content"))
+      .select($"media_id", $"dhash").as[(Long, Option[Long])].collect().toMap
+    assert(got.size === MediaGoldens.jpegMalformed.size)
     for (cut <- 0 until good.length by 25)
-      assert(dh(good.take(cut)).isEmpty, s"truncated at $cut")
-    // flip a byte mid-entropy-data: either still decodes (bit noise in
-    // coefficients) or NULLs — must never throw. Flip EVERY byte.
-    for (i <- good.indices) {
-      val c = good.clone(); c(i) = (c(i) ^ 0x5A).toByte
-      dh(c) // no exception is the assertion
-    }
-    // maxBytes gate
-    assert(dh(good, maxBytes = good.length - 1).isEmpty)
-    // pixel bomb: dims over maxPixels NULL before any allocation
-    val bomb = good.clone()
-    val sofAt = (0 until bomb.length - 1).find(i =>
-      (bomb(i) & 0xFF) == 0xFF && (bomb(i + 1) & 0xFF) == 0xC0).get
-    bomb(sofAt + 5) = 0xFF.toByte; bomb(sofAt + 6) = 0xFF.toByte // h
-    bomb(sofAt + 7) = 0xFF.toByte; bomb(sofAt + 8) = 0xFF.toByte // w
-    assert(dh(bomb).isEmpty)
-    // SOS before any DHT: missing-table fail, not NPE
-    val noTables = Jpeg.synthJpegBytes(0L)
-    val dhtAt = (0 until noTables.length - 1).find(i =>
-      (noTables(i) & 0xFF) == 0xFF && (noTables(i + 1) & 0xFF) == 0xC4).get
-    // blank the DHT marker into an APP marker: tables never load
-    noTables(dhtAt + 1) = 0xE5.toByte
-    assert(dh(noTables).isEmpty)
+      assert(got(cut.toLong).isEmpty, s"truncated at $cut")
+    assert(got(20001L).isEmpty && got(20002L).isEmpty)
+    // the whole image decodes; one byte over maxBytes is NULL
+    def dh(maxBytes: Int): Option[Long] =
+      Multimodal.imageDhash(Seq((1L, good)).toDF("media_id", "content"),
+        maxBytes = maxBytes)
+        .select($"dhash").as[Option[Long]].collect().head
+    assert(dh(1 << 20).isDefined)
+    assert(dh(good.length - 1).isEmpty)
   }
 
   test("the decode rung is a narrow map: no shuffle exchange in the plan") {
-    val df = Jpeg.imageDhashJpeg(Jpeg.synthJpegImageBytes(
+    val df = Multimodal.imageDhash(Jpeg.synthJpegImageBytes(
       (0L until 20L).toDF("doc_id"), "doc_id"))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)

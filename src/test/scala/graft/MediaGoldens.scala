@@ -6,18 +6,22 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.multimodal.{Audio, Multimodal}
+import graft.multimodal.{Audio, Jpeg, Multimodal, Pdf, Png}
 
-/** Golden tables for the four media parsers (`imageDims`, `imageDhash`,
-  * `avMetadata`, `audioEnergyFingerprint`), kept in
+/** Golden tables for the media parsers, kept in
   * `src/test/resources/media_parser_goldens.tsv`.
   *
-  * The table was recorded from the hex/`aggregate`-fold expression
-  * parsers that preceded the one JVM decoder per format, over the
-  * fixtures below: every synth family over a wide id range (negative
-  * ids included), six truncations of every image family, hand-built
-  * malformed and garbage blobs, and the q133 census aggregates over the
-  * sf0.001 documents. Each line is `group <TAB> payload`. Small groups
+  * The `dims`, `av`, `dhash` and `afp` groups were recorded from the
+  * hex/`aggregate`-fold expression parsers that preceded the one JVM
+  * decoder per format, over the fixtures below: every synth family over
+  * a wide id range (negative ids included), six truncations of every
+  * image family, hand-built malformed and garbage blobs, and the q133
+  * census aggregates over the sf0.001 documents. The `dhash/png`,
+  * `dhash/jpeg`, `archive` and `pdf` groups were recorded from the code
+  * paths that preceded `image_dhash`'s PNG/JPEG dispatch and the
+  * `archive_metadata`, `pdf_triage` and `pdf_text` expressions: the
+  * `mapPartitions` PNG/JPEG rungs, the hex/regex SQL builds and the
+  * `Row`-encoder text extractor. Each line is `group <TAB> payload`. Small groups
   * store their rendered rows verbatim; a large group stores one line,
   * `sha256=<hex> rows=<n>`, the digest of its sorted rendered rows.
   * A rendered row is the key and the parser's output columns joined by
@@ -240,6 +244,251 @@ object MediaGoldens {
       "afp/malformed" -> rows(Audio.audioEnergyFingerprint(
         audioMalformed.toDF("media_id", "content")),
         "media_id", Seq("afp")))
+  }
+
+  // ---- PNG/JPEG dHash, archive metadata, PDF triage and PDF text ----
+
+  val archiveCols = Seq("format", "detail", "n_entries", "uncompressed_size",
+    "mtime_epoch")
+  val triageCols = Seq("pdf_version", "linearized", "n_pages_approx",
+    "startxref", "has_eof", "encrypted")
+  val textCols = Seq("pdf_text", "n_show_ops", "pdf_text_truncated",
+    "pdf_composite_font")
+
+  /** Every synth container family the header-parser fuzz feeds. */
+  def fuzzFamilies(ids: DataFrame): Seq[(String, DataFrame)] =
+    imageFamilies(ids) ++ avFamilies(ids) ++ Seq(
+      "archive" -> Multimodal.synthArchiveBytes(ids, "doc_id"),
+      "pdf" -> Pdf.synthPdfBytes(ids, "doc_id"),
+      "png" -> Png.synthPngImageBytes(ids, "doc_id"),
+      "jpeg" -> Jpeg.synthJpegImageBytes(ids, "doc_id"))
+
+  /** (key, content): every `step`-th prefix of each blob (`t:<id>:<k>`)
+    * and, per byte of `bytes`, the blob with that byte written at an
+    * id-derived position (`c<byte>:<id>`). */
+  def mutations(fam: DataFrame, bytes: Seq[String] = Seq("00", "80", "FF"),
+                step: Int = 1): DataFrame = {
+    val id = col("media_id")
+    val truncated = fam.select(id,
+        explode(sequence(lit(0), octet_length(col("content")), lit(step)))
+          .as("k"))
+      .join(fam, Seq("media_id"))
+      .select(concat_ws(":", lit("t"), id, col("k")).as("key"),
+        expr("substring(content, 1, k)").as("content"))
+    val corrupted = bytes.map { b =>
+      fam.select(concat_ws(":", lit("c" + b), id).as("key"),
+        concat(
+          expr("substring(content, 1, " +
+            "pmod(media_id * 31, octet_length(content)))"),
+          unhex(lit(b)),
+          expr("substring(content, " +
+            "pmod(media_id * 31, octet_length(content)) + 2, " +
+            "2147483647)")).as("content"))
+    }
+    (truncated +: corrupted).reduce(_ unionAll _)
+  }
+
+  /** The ids of the header-parser fuzz. */
+  val fuzzIds: Seq[Long] = 0L until 48L
+
+  /** PNG: every prefix of a valid image, a corrupted IDAT byte, IHDR
+    * patched to interlaced / 16-bit / palette-without-PLTE (CRC fixed),
+    * and trailing garbage after IEND (tolerated). */
+  def pngMalformed: Seq[(Long, Array[Byte])] = {
+    val good = Png.synthPngBytes(7L)
+    val idatAt = {
+      var p = 8; var found = -1
+      while (found < 0) {
+        val len = java.nio.ByteBuffer.wrap(good, p, 4).getInt
+        if (new String(good, p + 4, 4, "US-ASCII") == "IDAT") found = p + 8
+        else p = p + 12 + len
+      }
+      found
+    }
+    val corrupt = good.clone()
+    corrupt(idatAt) = (corrupt(idatAt) ^ 0x55).toByte
+    def patched(at: Int, v: Int): Array[Byte] = {
+      val b = good.clone(); b(at) = v.toByte
+      val crc = new java.util.zip.CRC32()
+      crc.update(b, 12, 4 + 13)
+      java.nio.ByteBuffer.wrap(b, 12 + 17, 4).putInt(crc.getValue.toInt)
+      b
+    }
+    (0 to good.length).map(cut => cut.toLong -> good.take(cut)) ++ Seq(
+      1001L -> corrupt,
+      1002L -> patched(8 + 4 + 4 + 12, 1), // interlaced
+      1003L -> patched(8 + 4 + 4 + 8, 16), // 16-bit depth
+      1004L -> patched(8 + 4 + 4 + 9, 3), // palette, no PLTE
+      1005L -> (good ++ Array[Byte](1, 2, 3)))
+  }
+
+  /** JPEG: every 25-byte prefix of a valid image, every byte XOR 0x5A,
+    * a pixel-bomb SOF (65535 x 65535) and a DHT blanked into an APP
+    * marker. */
+  def jpegMalformed: Seq[(Long, Array[Byte])] = {
+    val good = Jpeg.synthJpegBytes(0L)
+    def at(marker: Int): Int = (0 until good.length - 1).find(i =>
+      (good(i) & 0xFF) == 0xFF && (good(i + 1) & 0xFF) == marker).get
+    val bomb = good.clone()
+    (5 to 8).foreach(k => bomb(at(0xC0) + k) = 0xFF.toByte)
+    val noTables = good.clone()
+    noTables(at(0xC4) + 1) = 0xE5.toByte
+    (0 to good.length by 25).map(cut => cut.toLong -> good.take(cut)) ++
+      good.indices.map { i =>
+        val c = good.clone(); c(i) = (c(i) ^ 0x5A).toByte
+        (10000L + i) -> c
+      } ++ Seq(20001L -> bomb, 20002L -> noTables)
+  }
+
+  def dhashDecoded(spark: SparkSession): Groups = {
+    import spark.implicits._
+    val ids = wideIds.toDF("doc_id")
+    Seq(
+      "dhash/png/synth" -> Multimodal.imageDhash(
+        Png.synthPngImageBytes(ids, "doc_id")),
+      "dhash/png/malformed" -> Multimodal.imageDhash(
+        pngMalformed.toDF("media_id", "content")),
+      "dhash/jpeg/synth" -> Multimodal.imageDhash(
+        Jpeg.synthJpegImageBytes(ids, "doc_id")),
+      "dhash/jpeg/malformed" -> Multimodal.imageDhash(
+        jpegMalformed.toDF("media_id", "content"))
+    ).map { case (g, df) =>
+      g -> Seq(digestLine(rows(df, "media_id", Seq("dhash"))))
+    }
+  }
+
+  /** Synth families over the wide ids, and every fuzz family's mutations
+    * at the default and the minimum bounds. */
+  def archiveAndTriage(spark: SparkSession): Groups = {
+    import spark.implicits._
+    val ids = wideIds.toDF("doc_id")
+    val synth = Seq(
+      "archive/synth" -> rows(Multimodal.archiveMetadata(
+        Multimodal.synthArchiveBytes(ids, "doc_id")), "media_id", archiveCols),
+      "pdf/triage/synth" -> rows(Pdf.pdfTriage(
+        Pdf.synthPdfBytes(ids, "doc_id")), "media_id", triageCols))
+    val fuzz = fuzzFamilies(fuzzIds.toDF("doc_id")).flatMap { case (fam, df) =>
+      val m = mutations(df)
+      Seq(
+        s"archive/fuzz/$fam/default" ->
+          rows(Multimodal.archiveMetadata(m), "key", archiveCols),
+        s"archive/fuzz/$fam/min" -> rows(Multimodal.archiveMetadata(m,
+          headBytes = 16, tailBytes = 26), "key", archiveCols),
+        s"pdf/triage/fuzz/$fam/default" ->
+          rows(Pdf.pdfTriage(m), "key", triageCols),
+        s"pdf/triage/fuzz/$fam/min" -> rows(Pdf.pdfTriage(m,
+          headBytes = 16, tailBytes = 32), "key", triageCols))
+    }
+    (synth ++ fuzz).map { case (g, r) => g -> Seq(digestLine(r)) }
+  }
+
+  // ---- crafted PDF documents ----
+
+  def zlib(s: String): Array[Byte] = zlib(s.getBytes("ISO-8859-1"))
+
+  def zlib(bytes: Array[Byte]): Array[Byte] = {
+    val d = new java.util.zip.Deflater()
+    d.setInput(bytes); d.finish()
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](4096)
+    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+    d.end()
+    out.toByteArray
+  }
+
+  private def latin1(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
+
+  /** A PDF of one stream object per (dict extras, data), then a trailer. */
+  def pdfWith(streams: (String, Array[Byte])*): Array[Byte] = {
+    val bo = new java.io.ByteArrayOutputStream()
+    bo.write(latin1("%PDF-1.7\n"))
+    streams.zipWithIndex.foreach { case ((dict, data), i) =>
+      bo.write(latin1(s"${i + 4} 0 obj\n<< $dict /Length ${data.length} >>" +
+        "\nstream\n"))
+      bo.write(data)
+      bo.write(latin1("\nendstream\nendobj\n"))
+    }
+    bo.write(latin1("trailer << /Size 9 >>\nstartxref\n1\n%%EOF\n"))
+    bo.toByteArray
+  }
+
+  /** The text extractor's crafted documents by id; PdfSpec states what
+    * each one must extract. */
+  lazy val pdfCrafted: Map[Long, Array[Byte]] = {
+    val garbage = {
+      // pseudo-random bytes with unbalanced '(' and a lone '<'
+      val rnd = new scala.util.Random(42)
+      val g = Array.fill(4096)(rnd.nextInt(256).toByte)
+      g(10) = '('; g(500) = '<'; g(3000) = '('
+      g
+    }
+    Map(
+      // 1-4: Flate inflates, raw and Flate streams concatenate, an image
+      // filter is skipped, non-PDF bytes
+      1L -> pdfWith("/Filter /FlateDecode" ->
+        zlib("BT /F1 12 Tf (Compressed hello) Tj ET")),
+      2L -> pdfWith("/Filter /FlateDecode" -> zlib("BT (part one) Tj ET"),
+        "" -> latin1("BT [(part ) -200 (two)] TJ ET")),
+      3L -> pdfWith("/Filter /DCTDecode" -> latin1("(fake jpeg) Tj BT ET"),
+        "" -> latin1("BT (after image) Tj ET")),
+      4L -> latin1("plain text, no header"),
+      // 5-6: a /Length far past the data; an honest /Length whose data
+      // holds the literal 'endstream'
+      5L -> latin1("%PDF-1.7\n4 0 obj\n<< /Length 99999 >>\nstream\n" +
+        "BT (survived the lie) Tj ET\nendstream\nendobj\n%%EOF\n"),
+      6L -> pdfWith("" -> latin1("BT (real) Tj ET % endstream inside a " +
+        "comment\nBT (tail) Tj ET")),
+      // 7-9: cut mid-stream, a 5000-char show, a garbage Flate stream
+      7L -> latin1("%PDF-1.7\n4 0 obj\n<< /Length 999 >>\nstream\n" +
+        "BT (kept before the cut) Tj ET"),
+      8L -> pdfWith("" -> latin1("BT (" + "x" * 5000 + ") Tj ET")),
+      9L -> pdfWith("/Filter /FlateDecode" -> latin1("THIS IS NOT ZLIB"),
+        "" -> latin1("BT (good) Tj ET")),
+      // 10: escapes, octal, nesting, odd hex, shows outside BT..ET
+      10L -> pdfWith("" -> latin1("(decoy before text object) Tj\n" +
+        "BT (nest(ed) parens) Tj (oct \\101\\102\\7) Tj " +
+        "(esc \\( \\) \\\\ \\n fin) Tj <48692> Tj ET\n" +
+        "(decoy after) Tj")),
+      // 11-17: composite-font detection and its decoys
+      11L -> pdfWith("" -> latin1("BT (plain text) Tj ET")),
+      12L -> latin1("%PDF-1.6\n6 0 obj\n<< /Type /Font /Subtype /Type0 " +
+        "/Encoding /Identity-H >>\nendobj\n4 0 obj\n<< /Length 21 >>\n" +
+        "stream\nBT (looks fine) Tj ET\nendstream\nendobj\n%%EOF\n"),
+      13L -> pdfWith("/Filter /FlateDecode" ->
+        zlib("<< /Subtype /Type0 /Encoding /Identity-H >>"),
+        "" -> latin1("BT (also fine) Tj ET")),
+      14L -> pdfWith("" -> latin1("BT <00480069006D006F006A0069> Tj ET")),
+      15L -> pdfWith("" -> latin1("BT /Type01 (legit) Tj ET")),
+      16L -> pdfWith("" ->
+        latin1("BT (Use /Type0 with /Identity-H encoding) Tj ET")),
+      17L -> pdfWith("" ->
+        latin1("BT (fonts \\(see /Type0 spec\\) are fun) Tj ET")),
+      // 18-19: a Flate stream inflating to binary garbage, alone and
+      // after a clean Type0 declaration
+      18L -> pdfWith("/Filter /FlateDecode" -> zlib(garbage),
+        "" -> latin1("BT (still fine) Tj ET")),
+      19L -> pdfWith("/Filter /FlateDecode" ->
+        zlib(latin1(" << /Type /Font /Subtype /Type0 >> ") ++ garbage),
+        "" -> latin1("BT (gone now) Tj ET")))
+  }
+
+  def pdfText(spark: SparkSession): Groups = {
+    import spark.implicits._
+    val ids = wideIds.toDF("doc_id")
+    val text = Pdf.synthTextPdfBytes(fuzzIds.toDF("doc_id"), "doc_id")
+    Seq(
+      "pdf/text/synth/text" -> Seq(digestLine(rows(Pdf.extractPdfText(
+        Pdf.synthTextPdfBytes(ids, "doc_id")), "media_id", textCols))),
+      "pdf/text/synth/composite" -> Seq(digestLine(rows(Pdf.extractPdfText(
+        Pdf.synthCompositePdfBytes(ids, "doc_id")), "media_id", textCols))),
+      "pdf/text/crafted" -> rows(Pdf.extractPdfText(
+        pdfCrafted.toSeq.toDF("media_id", "content")), "media_id", textCols),
+      "pdf/text/crafted/caps" -> rows(Pdf.extractPdfText(
+        pdfCrafted.toSeq.toDF("media_id", "content"),
+        maxStreamBytes = 24, maxTextChars = 100), "media_id", textCols),
+      "pdf/text/fuzz" -> Seq(digestLine(rows(Pdf.extractPdfText(
+        mutations(text, Seq("00", "28", "5C"), 7), maxTextChars = 64),
+        "key", textCols))))
   }
 
   private def cell(v: Any): String = v match {

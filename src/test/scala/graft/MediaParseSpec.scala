@@ -1,13 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Rand
 
-import graft.functions.MediaParse
-import graft.multimodal.{Audio, Multimodal}
+import graft.functions.{IdnEncodeHost, MediaParse, NfcNormalize, RobotsPathMatch}
+import graft.multimodal.{Audio, Multimodal, Pdf}
 
-/** The four media parsers as native SQL functions, and the plans that
-  * predicates on their parsed columns produce. */
+/** The blob parsers as native SQL functions, the plans that predicates
+  * on their parsed columns produce, and function registration. */
 class MediaParseSpec extends SparkSpec {
   import spark.implicits._
 
@@ -83,5 +84,73 @@ class MediaParseSpec extends SparkSpec {
     val parses = wide.queryExecution.optimizedPlan
       .flatMap(_.expressions.flatMap(_.collect { case e: MediaParse => e }))
     assert(parses.size === 1, wide.queryExecution.optimizedPlan)
+  }
+
+  test("archive_metadata, pdf_triage and pdf_text resolve from spark.sql " +
+      "after register and agree with the DataFrame API") {
+    MediaParse.register(spark)
+    val media = Seq(
+      Multimodal.synthArchiveBytes(ids(0L, 1L, 2L), "doc_id"),
+      Pdf.synthPdfBytes(ids(10L), "doc_id"),
+      Pdf.synthTextPdfBytes(ids(20L), "doc_id")).reduce(_ unionByName _)
+    media.createOrReplaceTempView("media_parse_spec_docs")
+    val fields = Seq("format", "n_entries", "uncompressed_size",
+      "n_pages_approx", "startxref", "pdf_text", "n_show_ops")
+    val viaSql = spark.sql(
+      """SELECT media_id, archive_metadata(content, 4096, 4096) AS a,
+        |       pdf_triage(content) AS t, pdf_text(content, 65536) AS x
+        |FROM media_parse_spec_docs""".stripMargin)
+      .selectExpr("media_id", "a.format", "a.n_entries",
+        "a.uncompressed_size", "t.n_pages_approx", "t.startxref",
+        "x.pdf_text", "x.n_show_ops")
+    val viaApi = Pdf.extractPdfText(Pdf.pdfTriage(
+        Multimodal.archiveMetadata(media)), maxStreamBytes = 65536)
+      .select("media_id", fields: _*)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(rows(viaSql) === rows(viaApi))
+    // every parser produced its fields on its own blob
+    val got = rows(viaSql).map(r => r.head -> r.tail.map(_ != null)).toMap
+    assert(got(0L) === Seq(true, false, true, false, false, false, false))
+    assert(got(1L) === Seq(true, true, false, false, false, false, false))
+    assert(got(10L) === Seq(false, false, false, true, true, false, true))
+    assert(got(20L) === Seq(false, false, false, false, true, true, true))
+  }
+
+  test("filters on archiveMetadata and pdfTriage columns plan with no " +
+      "rand barrier and exactly one parse") {
+    // a Range, not a local Seq: the optimizer cannot fold the plan away
+    val docs = spark.range(0, 64).toDF("doc_id")
+    for (df <- Seq(
+        Multimodal.archiveMetadata(
+          Multimodal.synthArchiveBytes(docs, "doc_id"))
+          .where($"format" === "zip"),
+        Pdf.pdfTriage(Pdf.synthPdfBytes(docs, "doc_id"))
+          .where($"n_pages_approx" > 1))) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[Rand]))),
+        s"rand in the optimized plan\n$plan")
+      val parses = plan.flatMap(_.expressions.flatMap(
+        _.collect { case e: MediaParse => e }))
+      assert(parses.size === 1, plan)
+      assert(df.count() > 0, plan)
+    }
+  }
+
+  test("registering a function twice keeps the first registration") {
+    // each registration stores a new ExpressionInfo (the builder itself
+    // may be one cached lambda instance), so identity tells them apart
+    val registry = spark.sessionState.functionRegistry
+    for ((name, register) <- Seq[(String, () => Unit)](
+        "nfc_normalize" -> (() => NfcNormalize.register(spark)),
+        "idn_encode_host" -> (() => IdnEncodeHost.register(spark)),
+        "robots_path_match" -> (() => RobotsPathMatch.register(spark)),
+        "pdf_text" -> (() => MediaParse.register(spark)))) {
+      register()
+      val first = registry.lookupFunction(FunctionIdentifier(name))
+      assert(first.isDefined, name)
+      register()
+      assert(registry.lookupFunction(FunctionIdentifier(name))
+        .exists(_ eq first.get), s"$name was registered again")
+    }
   }
 }

@@ -6,6 +6,7 @@ import graft.multimodal.Pdf
 
 class PdfSpec extends SparkSpec {
   import spark.implicits._
+  import MediaGoldens.{mismatches, mutations, pdfCrafted}
 
   private def triage(rows: (Long, String)*) =
     Pdf.pdfTriage(rows.toDF("media_id", "txt")
@@ -65,39 +66,10 @@ class PdfSpec extends SparkSpec {
   }
 
   // ---- text extraction -------------------------------------------------
+  // The documents are MediaGoldens.pdfCrafted, by id.
 
-  private def zlib(s: String): Array[Byte] = zlib(s.getBytes("ISO-8859-1"))
-
-  private def zlib(bytes: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(bytes); d.finish()
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](4096)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
-  private def pdfWith(streams: (String, Option[Array[Byte]])*)
-      : Array[Byte] = {
-    // streams: (dictExtras, data) — data None means raw from dictExtras'
-    // second element... build: header + each stream object + trailer
-    val bo = new java.io.ByteArrayOutputStream()
-    bo.write("%PDF-1.7\n".getBytes("ISO-8859-1"))
-    streams.zipWithIndex.foreach { case ((dict, data), i) =>
-      val bytes = data.get
-      bo.write((s"${i + 4} 0 obj\n<< $dict /Length ${bytes.length} >>" +
-        "\nstream\n").getBytes("ISO-8859-1"))
-      bo.write(bytes)
-      bo.write("\nendstream\nendobj\n".getBytes("ISO-8859-1"))
-    }
-    bo.write("trailer << /Size 9 >>\nstartxref\n1\n%%EOF\n"
-      .getBytes("ISO-8859-1"))
-    bo.toByteArray
-  }
-
-  private def extract(rows: (Long, Array[Byte])*) =
-    Pdf.extractPdfText(rows.toDF("media_id", "content"))
+  private def extract(ids: Long*) =
+    Pdf.extractPdfText(ids.map(i => (i, pdfCrafted(i))).toDF("media_id", "content"))
       .select($"media_id", $"pdf_text", $"n_show_ops",
         $"pdf_text_truncated")
       .as[(Long, Option[String], Option[Long], Option[Boolean])]
@@ -105,20 +77,7 @@ class PdfSpec extends SparkSpec {
 
   test("extractPdfText: REAL FlateDecode streams inflate and extract; " +
       "raw streams extract; image filters and non-PDF skip") {
-    val flate = pdfWith(
-      ("/Filter /FlateDecode",
-        Some(zlib("BT /F1 12 Tf (Compressed hello) Tj ET"))))
-    val two = pdfWith(
-      ("/Filter /FlateDecode", Some(zlib("BT (part one) Tj ET"))),
-      ("", Some("BT [(part ) -200 (two)] TJ ET".getBytes("ISO-8859-1"))))
-    // DCTDecode (a JPEG) must be skipped even if its bytes contain
-    // paren-like noise
-    val img = pdfWith(
-      ("/Filter /DCTDecode", Some("(fake jpeg) Tj BT ET".getBytes)),
-      ("", Some("BT (after image) Tj ET".getBytes("ISO-8859-1"))))
-    val notPdf = "plain text, no header".getBytes("ISO-8859-1")
-    val got = extract((1L, flate), (2L, two), (3L, img), (4L, notPdf))
-    assert(got === Seq(
+    assert(extract(1L, 2L, 3L, 4L) === Seq(
       (1L, Some("Compressed hello"), Some(1L), Some(false)),
       (2L, Some("part one part two"), Some(2L), Some(false)),
       (3L, Some("after image"), Some(1L), Some(false)),
@@ -128,51 +87,29 @@ class PdfSpec extends SparkSpec {
   test("extractPdfText: a LYING /Length falls back to the endstream " +
       "search; compressed bytes containing 'endstream' do not cut " +
       "the stream short") {
-    // /Length far larger than reality: search fallback still finds it
-    val lying = ("%PDF-1.7\n4 0 obj\n<< /Length 99999 >>\nstream\n" +
-      "BT (survived the lie) Tj ET\nendstream\nendobj\n%%EOF\n")
-      .getBytes("ISO-8859-1")
-    // honest /Length where the DATA contains the literal 'endstream'
-    val tricky = "BT (real) Tj ET % endstream inside a comment\nBT (tail) Tj ET"
-    val honest = pdfWith(("", Some(tricky.getBytes("ISO-8859-1"))))
-    val got = extract((1L, lying), (2L, honest))
-    assert(got === Seq(
-      (1L, Some("survived the lie"), Some(1L), Some(false)),
-      (2L, Some("real tail"), Some(2L), Some(false))))
+    assert(extract(5L, 6L) === Seq(
+      (5L, Some("survived the lie"), Some(1L), Some(false)),
+      (6L, Some("real tail"), Some(2L), Some(false))))
   }
 
   test("extractPdfText: truncation marks, caps bound output, garbage " +
       "flate contributes nothing") {
     // cut mid-stream (no endstream): prefix still walks, truncated set
-    val cut = ("%PDF-1.7\n4 0 obj\n<< /Length 999 >>\nstream\n" +
-      "BT (kept before the cut) Tj ET").getBytes("ISO-8859-1")
+    assert(extract(7L) ===
+      Seq((7L, Some("kept before the cut"), Some(1L), Some(true))))
     // text cap: output bounded, flag set
-    val big = pdfWith(("", Some(
-      ("BT (" + "x" * 5000 + ") Tj ET").getBytes("ISO-8859-1"))))
-    val gotCut = extract((1L, cut))
-    assert(gotCut === Seq(
-      (1L, Some("kept before the cut"), Some(1L), Some(true))))
     val gotBig = Pdf.extractPdfText(
-      Seq((1L, big)).toDF("media_id", "content"), maxTextChars = 100)
+      Seq((8L, pdfCrafted(8L))).toDF("media_id", "content"),
+      maxTextChars = 100)
       .select(length($"pdf_text"), $"pdf_text_truncated")
       .as[(Int, Boolean)].head()
     assert(gotBig === ((100, true)))
-    val badFlate = pdfWith(
-      ("/Filter /FlateDecode", Some("THIS IS NOT ZLIB".getBytes)),
-      ("", Some("BT (good) Tj ET".getBytes("ISO-8859-1"))))
-    assert(extract((1L, badFlate)) ===
-      Seq((1L, Some("good"), Some(1L), Some(false))))
+    assert(extract(9L) === Seq((9L, Some("good"), Some(1L), Some(false))))
   }
 
   test("extractPdfText: escape decoding, octal, nesting, hex odd-pad, " +
       "shows outside BT..ET ignored") {
-    val content =
-      "(decoy before text object) Tj\n" +
-        "BT (nest(ed) parens) Tj (oct \\101\\102\\7) Tj " +
-        "(esc \\( \\) \\\\ \\n fin) Tj <48692> Tj ET\n" +
-        "(decoy after) Tj"
-    val pdf = pdfWith(("", Some(content.getBytes("ISO-8859-1"))))
-    val got = extract((1L, pdf))
+    val got = extract(10L)
     // octal: \101\102 = AB, \7 = BEL(0x07); hex <48692> has an odd
     // trailing digit, padded to 0x20 -> "Hi "
     val expected = "nest(ed) parens" + " " + "oct AB\u0007" + " " +
@@ -182,96 +119,48 @@ class PdfSpec extends SparkSpec {
     assert(got.head._4.get === false)
   }
 
+  private def extractComposite(ids: Long*) =
+    Pdf.extractPdfText(ids.map(i => (i, pdfCrafted(i))).toDF("media_id", "content"))
+      .select($"media_id", $"pdf_text", $"n_show_ops", $"pdf_composite_font")
+      .as[(Long, Option[String], Option[Long], Option[Boolean])]
+      .collect().sortBy(_._1).toSeq
+
   test("composite fonts (Type0/Identity-H) NULL the text and set the " +
       "flag — declared dicts, Flate-hidden dicts, and NUL glyph shows") {
-    def extractC(rows: (Long, Array[Byte])*) =
-      Pdf.extractPdfText(rows.toDF("media_id", "content"))
-        .select($"media_id", $"pdf_text", $"n_show_ops",
-          $"pdf_composite_font")
-        .as[(Long, Option[String], Option[Long], Option[Boolean])]
-        .collect().sortBy(_._1).toSeq
-    val simple = pdfWith(
-      ("", Some("BT (plain text) Tj ET".getBytes("ISO-8859-1"))))
-    // declared Identity-H font dict in the raw bytes: whole doc flagged
-    val declared = {
-      val bo = new java.io.ByteArrayOutputStream()
-      bo.write("%PDF-1.6\n6 0 obj\n<< /Type /Font /Subtype /Type0 /Encoding /Identity-H >>\nendobj\n"
-        .getBytes("ISO-8859-1"))
-      val c = "BT (looks fine) Tj ET"
-      bo.write((s"4 0 obj\n<< /Length ${c.length} >>\nstream\n" + c +
-        "\nendstream\nendobj\n%%EOF\n").getBytes("ISO-8859-1"))
-      bo.toByteArray
-    }
-    // the font dict hides inside a FlateDecode'd stream (the object-
-    // stream case): the marker scan over INFLATED content must catch it
-    val hidden = pdfWith(
-      ("/Filter /FlateDecode",
-        Some(zlib("<< /Subtype /Type0 /Encoding /Identity-H >>"))),
-      ("", Some("BT (also fine) Tj ET".getBytes("ISO-8859-1"))))
-    // no declaration anywhere, but a hex show carries 2-byte glyph ids
-    // (NUL high bytes): the per-show signal must flag it
-    val glyphs = pdfWith(
-      ("", Some("BT <00480069006D006F006A0069> Tj ET"
-        .getBytes("ISO-8859-1"))))
-    // /Type01 is a CUSTOM NAME, not the Type0 subtype: must NOT flag
-    val decoy = pdfWith(
-      ("", Some("BT /Type01 (legit) Tj ET".getBytes("ISO-8859-1"))))
-    // a simple-font doc whose visible TEXT documents PDF fonts: the
-    // markers sit INSIDE show strings and must not flag the doc —
-    // declarations are dict names, never string content
-    val docDoc = pdfWith(
-      ("", Some(("BT (Use /Type0 with /Identity-H encoding) Tj ET"
-        ).getBytes("ISO-8859-1"))))
-    // same markers in a HEX-adjacent literal plus a real parenthesized
-    // aside — still string content, still not a declaration
-    val docDoc2 = pdfWith(
-      ("", Some(("BT (fonts \\(see /Type0 spec\\) are fun) Tj ET"
-        ).getBytes("ISO-8859-1"))))
-    val got = extractC((1L, simple), (2L, declared), (3L, hidden),
-      (4L, glyphs), (5L, decoy), (6L, docDoc), (7L, docDoc2))
-    assert(got === Seq(
-      (1L, Some("plain text"), Some(1L), Some(false)),
-      (2L, None, Some(1L), Some(true)),
-      (3L, None, Some(1L), Some(true)),
-      (4L, None, Some(1L), Some(true)),
-      (5L, Some("legit"), Some(1L), Some(false)),
-      (6L, Some("Use /Type0 with /Identity-H encoding"), Some(1L),
+    // 11 simple; 12 a declared Identity-H font dict; 13 the dict hidden
+    // in a FlateDecode'd stream; 14 no declaration but a glyph-id hex
+    // show (NUL high bytes); 15 the custom name /Type01; 16-17 the
+    // markers inside show strings, which are text, not declarations
+    assert(extractComposite(11L to 17L: _*) === Seq(
+      (11L, Some("plain text"), Some(1L), Some(false)),
+      (12L, None, Some(1L), Some(true)),
+      (13L, None, Some(1L), Some(true)),
+      (14L, None, Some(1L), Some(true)),
+      (15L, Some("legit"), Some(1L), Some(false)),
+      (16L, Some("Use /Type0 with /Identity-H encoding"), Some(1L),
         Some(false)),
-      (7L, Some("fonts (see /Type0 spec) are fun"), Some(1L),
+      (17L, Some("fonts (see /Type0 spec) are fun"), Some(1L),
         Some(false))))
   }
 
   test("a Flate stream inflating to BINARY GARBAGE neither flags the " +
       "doc composite nor poisons its real text — the marker scan over " +
       "inflated bytes survives unbalanced parens and stray '<'") {
-    // deterministic pseudo-random bytes with unbalanced '(' and lone
-    // '<' sprinkled in — the literal/hex skip logic's worst case
-    val rnd = new scala.util.Random(42)
-    val garbage = Array.fill(4096)(rnd.nextInt(256).toByte)
-    garbage(10) = '('; garbage(500) = '<'; garbage(3000) = '('
-    val doc = pdfWith(
-      ("/Filter /FlateDecode", Some(zlib(garbage))),
-      ("", Some("BT (still fine) Tj ET".getBytes("ISO-8859-1"))))
-    val got = Pdf.extractPdfText(
-      Seq((1L, doc)).toDF("media_id", "content"))
-      .select($"pdf_text", $"pdf_composite_font")
-      .as[(Option[String], Option[Boolean])].collect().head
-    assert(got === ((Some("still fine"), Some(false))))
-    // a clean declaration FOLLOWED by binary junk in the same inflated
-    // stream still flags — trailing garbage cannot suppress it. (A
-    // declaration buried BETWEEN stray parens inside pure garbage may
-    // be literal-skipped — detection there is the NUL-show signal's
-    // job, the documented two-signal split.)
-    val decl = " << /Type /Font /Subtype /Type0 >> ".getBytes("ISO-8859-1")
-    val withDecl = decl ++ garbage
-    val doc2 = pdfWith(
-      ("/Filter /FlateDecode", Some(zlib(withDecl))),
-      ("", Some("BT (gone now) Tj ET".getBytes("ISO-8859-1"))))
-    val got2 = Pdf.extractPdfText(
-      Seq((1L, doc2)).toDF("media_id", "content"))
-      .select($"pdf_text", $"pdf_composite_font")
-      .as[(Option[String], Option[Boolean])].collect().head
-    assert(got2 === ((None, Some(true))))
+    // 18: pseudo-random bytes with unbalanced '(' and lone '<' — the
+    // literal/hex skip logic's worst case. 19: a clean declaration
+    // FOLLOWED by the same junk still flags — trailing garbage cannot
+    // suppress it. (A declaration buried BETWEEN stray parens inside
+    // pure garbage may be literal-skipped — detection there is the
+    // NUL-show signal's job, the documented two-signal split.)
+    assert(extractComposite(18L, 19L) === Seq(
+      (18L, Some("still fine"), Some(1L), Some(false)),
+      (19L, None, Some(1L), Some(true))))
+  }
+
+  test("extractPdfText matches the recorded goldens: synth families, the " +
+      "crafted documents at default and tiny caps, and the fuzz") {
+    val bad = mismatches(MediaGoldens.pdfText(spark))
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("synthCompositePdfBytes round-trips across the corpus, negative " +
@@ -330,26 +219,12 @@ class PdfSpec extends SparkSpec {
       "fuzz; caps hold") {
     val docs = graft.sources.Sources.table(spark, sf, "documents")
       .where($"doc_id" < 48).select($"doc_id")
-    val fam = Pdf.synthTextPdfBytes(docs, "doc_id")
-    val truncated = fam.select($"media_id",
-      explode(sequence(lit(0), octet_length($"content"), lit(7))).as("k"))
-      .join(fam, Seq("media_id"))
-      .select($"media_id", expr("substring(content, 1, k)").as("content"))
-    val corrupted = Seq("00", "28", "5C").map { b => // NUL, '(', '\'
-      fam.select($"media_id",
-        concat(
-          expr("substring(content, 1, " +
-            "pmod(media_id * 31, octet_length(content)))"),
-          unhex(lit(b)),
-          expr("substring(content, " +
-            "pmod(media_id * 31, octet_length(content)) + 2, " +
-            "2147483647)")).as("content"))
-    }.reduce(_ unionAll _)
-    for (mutated <- Seq(truncated, corrupted)) {
-      val n = Pdf.extractPdfText(mutated, maxTextChars = 64)
-        .where(length($"pdf_text") > 64).count()
-      assert(n === 0)
-    }
+    // every 7th prefix; NUL, '(' and '\' written mid-document
+    val mutated = mutations(Pdf.synthTextPdfBytes(docs, "doc_id"),
+      Seq("00", "28", "5C"), step = 7)
+    val n = Pdf.extractPdfText(mutated, maxTextChars = 64)
+      .where(length($"pdf_text") > 64).count()
+    assert(n === 0)
   }
 
   test("synthPdfBytes round-trips across the corpus, negative ids too") {

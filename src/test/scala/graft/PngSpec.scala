@@ -12,7 +12,8 @@ class PngSpec extends SparkSpec {
       "covering all five row filters, RGB and RGBA, multi-IDAT splits, " +
       "ancillary-chunk skips, the near-dup plant, and aligned NULLs") {
     val ids = (0L until 200L).toDF("doc_id")
-    val png = Png.imageDhashPng(Png.synthPngImageBytes(ids, "doc_id"))
+    val png = Multimodal.imageDhash(Png.synthPngImageBytes(ids, "doc_id"))
+      .select($"media_id", $"dhash")
       .as[(Long, Option[Long])].collect().toMap
     val bmp = Multimodal.imageDhash(
       Multimodal.synthDhashImageBytes(ids, "doc_id"))
@@ -50,7 +51,7 @@ class PngSpec extends SparkSpec {
         s"pixel ($x,$y) channel $j")
     // and the dHash of the ImageIO bytes equals the dHash computed
     // from the raw formula through the 9x8 sampling
-    val got = Png.imageDhashPng(Seq((1L, bytes)).toDF("media_id", "content"))
+    val got = Multimodal.imageDhash(Seq((1L, bytes)).toDF("media_id", "content"))
       .select($"dhash").as[Option[Long]].collect().head.get
     val grid = Array.tabulate(8, 9)((gy, gx) =>
       3L * g(gx * w / 9, gy * h / 8))
@@ -102,54 +103,29 @@ class PngSpec extends SparkSpec {
   test("malformed/out-of-subset bytes NULL, never throw: truncation at " +
       "every prefix, corrupted IDAT CRC, interlaced, 16-bit, palette " +
       "missing its PLTE, oversized dims, trailing-garbage tolerance") {
+    // MediaGoldens.pngMalformed: key = prefix length (the full image at
+    // its own length), 1001 a corrupted IDAT byte (CRC mismatch), 1002-
+    // 1004 IHDR patched to interlaced / 16-bit / palette without PLTE
+    // (CRC fixed, so the REJECTION is the documented subset check),
+    // 1005 trailing garbage after IEND (tolerated, as libpng does)
     val good = Png.synthPngBytes(7L)
-    assert(Png.dhashOf(good, 1 << 20, 1 << 22) !== null)
-    // truncation at every byte boundary: None, no throw
+    val got = MediaGoldens.pngMalformed.map { case (k, b) =>
+      k -> Multimodal.parseImageDhash(b, 1 << 20)
+    }.toMap
+    assert(got(good.length.toLong) !== null)
     for (cut <- 0 until good.length)
-      assert(Png.dhashOf(good.take(cut), 1 << 20, 1 << 22) === null,
-        s"truncated at $cut must be NULL")
-    // corrupt one IDAT payload byte -> CRC mismatch -> NULL
-    val idatAt = {
-      var p = 8; var found = -1
-      while (found < 0) {
-        val len = java.nio.ByteBuffer.wrap(good, p, 4).getInt
-        val typ = new String(good, p + 4, 4, "US-ASCII")
-        if (typ == "IDAT") found = p + 8 else p = p + 12 + len
-      }
-      found
-    }
-    val corrupt = good.clone()
-    corrupt(idatAt) = (corrupt(idatAt) ^ 0x55).toByte
-    assert(Png.dhashOf(corrupt, 1 << 20, 1 << 22) === null)
-    // header-field rejections: patch IHDR fields (then fix its CRC so
-    // the REJECTION is the documented subset check, not the CRC)
-    def patched(f: Array[Byte] => Unit): Array[Byte] = {
-      val b = good.clone(); f(b)
-      val crc = new java.util.zip.CRC32()
-      crc.update(b, 12, 4 + 13)
-      val bb = java.nio.ByteBuffer.wrap(b, 12 + 17, 4)
-      bb.putInt(crc.getValue.toInt)
-      b
-    }
-    assert(Png.dhashOf(patched(_(8 + 4 + 4 + 12) = 1), // interlaced
-      1 << 20, 1 << 22) === null)
-    assert(Png.dhashOf(patched(_(8 + 4 + 4 + 8) = 16), // 16-bit depth
-      1 << 20, 1 << 22) === null)
-    assert(Png.dhashOf(patched(_(8 + 4 + 4 + 9) = 3), // palette, no PLTE
-      1 << 20, 1 << 22) === null)
+      assert(got(cut.toLong) === null, s"truncated at $cut must be NULL")
+    for (k <- 1001L to 1004L) assert(got(k) === null, s"variant $k")
+    assert(got(1005L) !== null)
     // dim bound: w*h > maxPixels -> NULL (the bomb guard)
-    assert(Png.dhashOf(good, 1 << 20, maxPixels = 71) === null)
+    assert(Png.decodeRgb(good, 1 << 20, maxPixels = 71).isEmpty)
     // input bound: bytes.length > maxBytes -> NULL
-    assert(Png.dhashOf(good, maxBytes = good.length - 1,
-      maxPixels = 1 << 22) === null)
-    // trailing garbage AFTER IEND is tolerated (libpng behavior)
-    assert(Png.dhashOf(good ++ Array[Byte](1, 2, 3),
-      1 << 20, 1 << 22) !== null)
+    assert(Multimodal.parseImageDhash(good, good.length - 1) === null)
   }
 
-  test("the decode rung is a narrow map: no shuffle exchange in the " +
-      "imageDhashPng plan") {
-    val df = Png.imageDhashPng(Png.synthPngImageBytes(
+  test("the PNG decode is a narrow map: no shuffle exchange in the " +
+      "imageDhash plan") {
+    val df = Multimodal.imageDhash(Png.synthPngImageBytes(
       (0L until 50L).toDF("doc_id"), "doc_id"))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
@@ -164,7 +140,7 @@ class PngSpec extends SparkSpec {
       .select($"media_id".as("id"), $"dhash".as("simhash"))
     // 296 ≡ 40 (mod 256): same pixels, different container+codec;
     // 41 is the one-pixel plant of 40 encoded as PNG
-    val png = Png.imageDhashPng(Png.synthPngImageBytes(
+    val png = Multimodal.imageDhash(Png.synthPngImageBytes(
         Seq(296L, 41L).toDF("doc_id"), "doc_id"))
       .where($"dhash".isNotNull)
       .select($"media_id".as("id"), $"dhash".as("simhash"))

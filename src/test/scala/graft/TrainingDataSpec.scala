@@ -1332,7 +1332,7 @@ class TrainingDataSpec extends SparkSpec {
   test("header parsers never throw under exhaustive truncation + " +
       "corruption fuzz") {
     // EVERY prefix length of every synth container family, plus byte
-    // corruptions at id-derived positions, through BOTH parsers (cross-
+    // corruptions at id-derived positions, through EVERY parser (cross-
     // format: WAV bytes through imageDims find its weak sniffs too).
     // Under ANSI mode any unguarded CAST / element_at / partial-field
     // read is a job-killing throw — this fuzz is the standing regression
@@ -1342,19 +1342,6 @@ class TrainingDataSpec extends SparkSpec {
     // row and no expression throws; field correctness is the golden and
     // round-trip tests' job.
     val base = docs.where($"doc_id" < 48).select($"doc_id")
-    val families = Seq(
-      Multimodal.synthImageBytes(base, "doc_id"),
-      Multimodal.synthWebImageBytes(base, "doc_id"),
-      Multimodal.synthBmpIcoBytes(base, "doc_id"),
-      Multimodal.synthAvBytes(base, "doc_id"),
-      Multimodal.synthAudioBytes(base, "doc_id"),
-      Multimodal.synthOggBytes(base, "doc_id"),
-      Multimodal.synthTiffBytes(base, "doc_id"),
-      Multimodal.synthExifJpegBytes(base, "doc_id"),
-      Multimodal.synthIsobmffBytes(base, "doc_id"),
-      Multimodal.synthWebmBytes(base, "doc_id"),
-      Multimodal.synthArchiveBytes(base, "doc_id"),
-      graft.multimodal.Pdf.synthPdfBytes(base, "doc_id"))
     // force full evaluation of every parsed column (a bare count would
     // let column pruning skip the parse expressions entirely)
     def force(df: org.apache.spark.sql.DataFrame): Long = {
@@ -1362,38 +1349,42 @@ class TrainingDataSpec extends SparkSpec {
         sum(hash(df.columns.map(col): _*)).cast("long")).head()
       r.getLong(0)
     }
-    families.foreach { fam =>
-      val truncated = fam.select($"media_id",
-        explode(sequence(lit(0), octet_length($"content")))
-          .as("k"))
-        .join(fam, Seq("media_id"))
-        .select($"media_id", expr("substring(content, 1, k)").as("content"))
-      val corrupted = Seq("00", "80", "FF").map { b =>
-        fam.select($"media_id",
-          concat(
-            expr("substring(content, 1, " +
-              "pmod(media_id * 31, octet_length(content)))"),
-            unhex(lit(b)),
-            expr("substring(content, " +
-              "pmod(media_id * 31, octet_length(content)) + 2, " +
-              "2147483647)")).as("content"))
-      }.reduce(_ unionAll _)
-      for (mutated <- Seq(truncated, corrupted)) {
-        val nIn = mutated.count()
-        // default bounds AND tiny bounds that force every walk off the
-        // hexed prefix mid-structure
-        assert(force(Multimodal.imageDims(mutated)) === nIn)
-        assert(force(Multimodal.imageDims(mutated, headerBytes = 32)) === nIn)
-        assert(force(Multimodal.avMetadata(mutated)) === nIn)
-        assert(force(Multimodal.avMetadata(mutated, headerBytes = 64)) === nIn)
-        assert(force(Multimodal.archiveMetadata(mutated)) === nIn)
-        assert(force(Multimodal.archiveMetadata(mutated,
-          headBytes = 16, tailBytes = 26)) === nIn)
-        assert(force(graft.multimodal.Pdf.pdfTriage(mutated)) === nIn)
-        assert(force(graft.multimodal.Pdf.pdfTriage(mutated,
-          headBytes = 16, tailBytes = 32)) === nIn)
-      }
+    // every prefix, plus 00/80/FF written at an id-derived position
+    for ((_, fam) <- MediaGoldens.fuzzFamilies(base)) {
+      val mutated = MediaGoldens.mutations(fam)
+      val nIn = mutated.count()
+      // default bounds AND tiny bounds that force every walk off the
+      // read prefix mid-structure
+      assert(force(Multimodal.imageDims(mutated)) === nIn)
+      assert(force(Multimodal.imageDims(mutated, headerBytes = 32)) === nIn)
+      assert(force(Multimodal.imageDhash(mutated)) === nIn)
+      assert(force(Multimodal.imageDhash(mutated, maxBytes = 128)) === nIn)
+      assert(force(Multimodal.avMetadata(mutated)) === nIn)
+      assert(force(Multimodal.avMetadata(mutated, headerBytes = 64)) === nIn)
+      assert(force(Multimodal.archiveMetadata(mutated)) === nIn)
+      assert(force(Multimodal.archiveMetadata(mutated,
+        headBytes = 16, tailBytes = 26)) === nIn)
+      assert(force(graft.multimodal.Pdf.pdfTriage(mutated)) === nIn)
+      assert(force(graft.multimodal.Pdf.pdfTriage(mutated,
+        headBytes = 16, tailBytes = 32)) === nIn)
     }
+  }
+
+  test("archiveMetadata and pdfTriage match the recorded goldens: synth " +
+      "families, and every fuzz mutation at default and minimum bounds") {
+    val bad = MediaGoldens.mismatches(MediaGoldens.archiveAndTriage(spark))
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("asBinaryMedia assigns a kind to negative ids: pmod, not %") {
+    val media = Multimodal.asBinaryMedia(
+      (-6L to 5L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    val kinds = media.select($"media_id", $"kind").as[(Long, String)]
+      .collect().toMap
+    val cycle = Seq("image", "audio", "video")
+    assert(kinds === (-6L to 5L).map(i =>
+      i -> cycle((((i % 3) + 3) % 3).toInt)).toMap)
   }
 
   test("synth generators produce parseable containers at NEGATIVE ids") {
