@@ -20,6 +20,11 @@ import graft.dims.Dims
   * 6 delay values, which the reference replaced with a dangling positional
   * index (bug #10). At 100 TB the fact table never moves except for that one
   * value join; everything else is map-side.
+  *
+  * Each dimension joins under names no other input carries, and one final
+  * `select` names the 11 output columns in `Schemas.flightFact` order, so
+  * the driver analyses the plan once per join, and a missing input column
+  * fails analysis.
   */
 object FlightFact {
 
@@ -28,70 +33,52 @@ object FlightFact {
             dateDim: DataFrame,
             delayDim: DataFrame): DataFrame = {
 
-    val airportKey = broadcast(
-      airportDim.select(col("airport_code"), col("airport_id_pk")))
-    val dateKey = broadcast(
-      dateDim.select(col("full_date"), col("date_id_pk")))
+    // the airport whose code is `code`, its surrogate key named `fk`
+    def joinAirport(df: DataFrame, code: String, fk: String): DataFrame =
+      df.join(broadcast(airportDim.select(
+          col("airport_code").as(s"${fk}_code"), col("airport_id_pk").as(fk))),
+        col(code) === col(s"${fk}_code"), "left")
 
     // J1: arrival airport FK (intended key ORIGIN)
-    val withArr = flightsRaw
-      .join(airportKey, flightsRaw("ORIGIN") === airportKey("airport_code"), "left")
-      .drop("airport_code")
-      .withColumnRenamed("airport_id_pk", "arrival_airport_id_fk")
-
+    val withArr = joinAirport(flightsRaw, "ORIGIN", "arrival_airport_id_fk")
     // J2: destination airport FK (intended key DEST; reference bug used ORIGIN)
-    val airportKey2 = broadcast(
-      airportDim.select(col("airport_code"), col("airport_id_pk")))
-    val withDest = withArr
-      .join(airportKey2, withArr("DEST") === airportKey2("airport_code"), "left")
-      .drop("airport_code")
-      .withColumnRenamed("airport_id_pk", "destination_airport_id_fk")
+    val withDest = joinAirport(withArr, "DEST", "destination_airport_id_fk")
 
     // J3: date FK (intended key FL_DATE; reference bug used ORIGIN)
+    val dateKey = broadcast(
+      dateDim.select(col("full_date"), col("date_id_pk").as("date_id_fk")))
     val withDate = withDest
-      .join(dateKey, to_date(withDest("FL_DATE")) === dateKey("full_date"), "left")
-      .drop("full_date")
-      .withColumnRenamed("date_id_pk", "date_id_fk")
-
-    // J5: carrier FK is a rename — natural key reused as surrogate (ET:306)
-    val withCarrier = withDate
-      .withColumnRenamed("OP_CARRIER_AIRLINE_ID", "air_carrier_id_fk")
+      .join(dateKey, to_date(col("FL_DATE")) === col("full_date"), "left")
 
     // J6: delay FK by VALUE join on the 6 delay columns (the distributed
     // replacement for the reference's positional df.index, bug #10): the
     // same Dims.delayValues rule the delay dim keyed on, then equi-join.
-    val withDelayVals = withCarrier.withColumns(Dims.delayValues.toMap)
     // Deduped delay dim is ~70k rows for 700k flights — broadcastable at
     // reference scale; at 100 TB AQE picks SMJ/shuffle-hash automatically.
-    val withDelayFk = withDelayVals
+    val withDelayFk = withDate.withColumns(Dims.delayValues.toMap)
       .join(delayDim.withColumnRenamed("delay_id_pk", "delay_id_fk"),
         Dims.delayValueCols, "left")
-      .drop(Dims.delayValueCols: _*)
 
     // Time encodings (P14 faithful, P15) on the four time columns.
     val arrTime  = coalesce(col("ARR_TIME"), lit(0L)).cast(LongType)
     // NaN is missing like NULL: an ANSI cast of NaN to BIGINT throws
     val arrDelay = coalesce(Dims.nanAsNull("ARR_DELAY"), lit(0.0)).cast(LongType)
     val crsArr   = minutesDeltaToHhmm(arrTime, arrDelay)
-    val encoded = withDelayFk
-      .withColumn("departure_time_fk",
-        hhmmToMinutesFaithful(coalesce(col("CRS_DEP_TIME"), lit(0L)).cast(LongType)))
-      .withColumn("departure_final_time_fk",
-        hhmmToMinutesFaithful(coalesce(col("DEP_TIME"), lit(0L)).cast(LongType)))
-      .withColumn("arrival_time_fk", hhmmToMinutesFaithful(arrTime))
-      .withColumn("arrivel_final_time_fk", hhmmToMinutesFaithful(crsArr))
 
-    encoded
-      .withColumnRenamed("DEP_DELAY_NEW", "departure_delay")
-      .withColumnRenamed("ARR_DELAY_NEW", "arrival_delay")
-      .drop(
-        "FL_DATE", "TAIL_NUM", "OP_CARRIER_FL_NUM", "ORIGIN_AIRPORT_ID",
-        "ORIGIN_AIRPORT_SEQ_ID", "ORIGIN_CITY_MARKET_ID", "ORIGIN",
-        "DEST_AIRPORT_ID", "DEST_AIRPORT_SEQ_ID", "DEST_CITY_MARKET_ID",
-        "DEST", "DEP_DELAY", "ARR_DELAY", "CANCELLED", "CANCELLATION_CODE",
-        "CRS_ELAPSED_TIME", "ACTUAL_ELAPSED_TIME", "CARRIER_DELAY",
-        "WEATHER_DELAY", "NAS_DELAY", "SECURITY_DELAY",
-        "LATE_AIRCRAFT_DELAY", "Unnamed: 28",
-        "CRS_DEP_TIME", "DEP_TIME", "ARR_TIME", "CRS_ARR_TIME")
+    withDelayFk.select(
+      // J5: carrier FK is a rename — natural key reused as surrogate (ET:306)
+      col("OP_CARRIER_AIRLINE_ID").as("air_carrier_id_fk"),
+      col("DEP_DELAY_NEW").as("departure_delay"),
+      col("ARR_DELAY_NEW").as("arrival_delay"),
+      col("arrival_airport_id_fk"),
+      col("destination_airport_id_fk"),
+      col("date_id_fk"),
+      col("delay_id_fk"),
+      hhmmToMinutesFaithful(coalesce(col("CRS_DEP_TIME"), lit(0L)).cast(LongType))
+        .as("departure_time_fk"),
+      hhmmToMinutesFaithful(coalesce(col("DEP_TIME"), lit(0L)).cast(LongType))
+        .as("departure_final_time_fk"),
+      hhmmToMinutesFaithful(arrTime).as("arrival_time_fk"),
+      hhmmToMinutesFaithful(crsArr).as("arrivel_final_time_fk"))
   }
 }

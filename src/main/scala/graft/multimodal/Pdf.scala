@@ -426,7 +426,10 @@ object Pdf {
     * not get its whole pdf_text NULLed as a false-positive composite.
     * Skips are capped (4096 chars) so a stray '(' / '<' inside
     * compressed binary cannot swallow a genuine declaration further
-    * on; '<<' opens a dict, not a hex string, and is scanned through.
+    * on, but a literal still open at the end of the input within the
+    * cap is string content to the end (a stream cut mid-show must not
+    * expose its text as dict names); '<<' opens a dict, not a hex
+    * string, and is scanned through.
     * The per-show NUL-byte signal in walkContent stays the behavioral
     * detector for docs whose dicts hide in unpacked object streams. */
   private def containsCompositeFontMarker(s: String): Boolean = {
@@ -448,7 +451,10 @@ object Pdf {
             j += 1
           }
         }
-        i = if (depth == 0) j else i + 1
+        // unbalanced: a literal cut by the end of the input (a capped
+        // stream, a truncated download) is string content to the end;
+        // one that only hit the cap is a stray '(' and is scanned through
+        i = if (depth == 0 || j >= n) j else i + 1
       } else if (c == '<') {
         if (i + 1 < n && s.charAt(i + 1) == '<') i += 2 // dict open
         else {

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -18,12 +20,17 @@ import graft.quality.Quality
   * The reference re-reads the raw month in every task and serializes every
   * task boundary through XCom/Postgres. [[build]] wires the tables as lazy
   * DataFrames over shared inputs, and [[run]] shares the frames that more
-  * than one step reads: it persists the raw flights batch and the
-  * airports, dates and delays dimensions (each read by the quality gate,
-  * its own publish and the fact's broadcast FK joins), so one load parses
-  * the flights CSV once and builds each dimension once. Those caches live
-  * for one run: `run` unpersists them when it returns or fails, and only
-  * the frames it cached itself — an input the caller cached stays cached.
+  * than one step reads: it persists the [[flightColumns]] of the raw
+  * flights batch and the airports, dates and delays dimensions (each read
+  * by the quality gate, its own publish and the fact's broadcast FK
+  * joins), so one load parses the flights CSV once and builds each
+  * dimension once. Once the quality gate passes, `run` publishes the 7
+  * tables concurrently: each publish is a small write whose cost is mostly
+  * fixed (planning, one short job, the commit), so overlapping them is
+  * what shortens a load. The caches live for one run: `run` waits for
+  * every publish and then unpersists them, whether it returns or fails,
+  * and only the frames it cached itself — an input the caller cached
+  * stays cached.
   */
 object Pipeline {
 
@@ -40,7 +47,21 @@ object Pipeline {
       "flights" -> flights)
   }
 
-  /** Build every curated table from the raw inputs (no I/O triggered). */
+  /** The raw flight columns [[build]] reads, in `Schemas.flightsRaw`
+    * order: the fact reads all but `CANCELLED` and `CANCELLATION_CODE`,
+    * which only the cancellation dimension reads; the date and delay
+    * dimensions read a subset. The other 10 raw columns (tail and flight
+    * numbers, the six airport/city-market ids, `DEP_DELAY`, the trailing
+    * unnamed column) feed no table, so [[run]] caches only these. */
+  val flightColumns: Seq[String] = Seq(
+    "FL_DATE", "OP_CARRIER_AIRLINE_ID", "ORIGIN", "DEST", "CRS_DEP_TIME",
+    "DEP_TIME", "DEP_DELAY_NEW", "ARR_TIME", "ARR_DELAY", "ARR_DELAY_NEW",
+    "CANCELLED", "CANCELLATION_CODE", "CRS_ELAPSED_TIME",
+    "ACTUAL_ELAPSED_TIME", "CARRIER_DELAY", "WEATHER_DELAY", "NAS_DELAY",
+    "SECURITY_DELAY", "LATE_AIRCRAFT_DELAY")
+
+  /** Build every curated table from the raw inputs (no I/O triggered).
+    * `flightsRaw` needs the [[flightColumns]]; any others are ignored. */
   def build(spark: SparkSession, flightsRaw: DataFrame,
             airportsRaw: DataFrame, carriersRaw: DataFrame): Warehouse = {
     val airports = Dims.airports(airportsRaw)
@@ -78,7 +99,11 @@ object Pipeline {
     * The append always runs, so a table's directory exists after its first
     * publish even when the table is empty. An empty delta leaves no rows on
     * disk and at most one schema-only part file (the write's first task
-    * writes one when no task has rows). */
+    * writes one when no task has rows).
+    *
+    * Safe to call concurrently for different paths: [[run]] publishes its
+    * 7 tables this way. Jobs run under the calling thread's Spark local
+    * properties (job group, description, scheduler pool). */
   def publishIncremental(spark: SparkSession, table: DataFrame,
                          path: String): Long = {
     val delta = readAccumulated(spark, path) match {
@@ -108,7 +133,25 @@ object Pipeline {
   }
 
   /** Full run: build, assert quality, publish all tables incrementally under
-    * `outDir`, register SQL views. Returns per-table appended row counts. */
+    * `outDir`, register SQL views. Returns per-table appended row counts.
+    *
+    * The quality gate runs before any publish. The 7 publishes then run
+    * concurrently, flights first, each on its own thread of a pool that
+    * lives for this call. The pool's threads are started from the calling
+    * thread, so they inherit its Spark local properties (job group,
+    * scheduler pool); each sets its job description to `publish <table>`.
+    * `run` waits for every publish, also when one fails, and only then
+    * unpersists what it cached: a publish never loses a cache it still
+    * reads. The views are registered only when all 7 succeed.
+    *
+    * Failure semantics: the first failure is rethrown with the others
+    * attached as suppressed exceptions, and the tables that did not fail
+    * stay published. Re-running the load appends only what is missing,
+    * because each publish appends an anti-join delta.
+    *
+    * Unless the caller cached `flightsRaw` (then it is used as it is),
+    * only its [[flightColumns]] are cached: the CSV reader converts and
+    * the cache compresses 19 of the 29 raw columns. */
   def run(spark: SparkSession, flightsRaw: DataFrame, airportsRaw: DataFrame,
           carriersRaw: DataFrame, outDir: String): Map[String, Long] = {
     val cachedHere = mutable.ArrayBuffer.empty[DataFrame]
@@ -121,19 +164,55 @@ object Pipeline {
     }
     try {
       // flights first, so the dimension caches are built from its cache
-      val w = build(spark, shared(flightsRaw), airportsRaw, carriersRaw)
+      val flights =
+        if (flightsRaw.storageLevel != StorageLevel.NONE) flightsRaw
+        else shared(flightsRaw.select(flightColumns.map(col): _*))
+      val w = build(spark, flights, airportsRaw, carriersRaw)
       Seq(w.airports, w.dates, w.delays).foreach(shared)
       val failed = qualityReport(w).where(col("violations") > 0).collect()
       require(failed.isEmpty, s"quality gate failed:\n${failed.mkString("\n")}")
-      val counts = w.byName.map { case (name, df) =>
-        name -> publishIncremental(spark, df, s"$outDir/$name")
-      }.toMap
+      val counts = publishAll(spark, w, outDir)
       graft.warehouse.Warehouse.registerStar(spark, outDir)
       counts
     } finally {
       // dependents first: uncaching flights while a dimension cache built
       // from it is still registered would make Spark re-plan that cache
       cachedHere.reverseIterator.foreach(_.unpersist())
+    }
+  }
+
+  /** [[publishIncremental]] of every table of `w` under `outDir`, all at
+    * once, the largest (flights) first. Returns after every publish has
+    * ended; throws the first failure, with the rest suppressed on it. */
+  private def publishAll(spark: SparkSession, w: Warehouse,
+                         outDir: String): Map[String, Long] = {
+    val tables = w.byName.sortBy(_._1 != "flights")
+    val pool = Executors.newFixedThreadPool(tables.size)
+    try {
+      val pending = tables.map { case (name, df) =>
+        name -> pool.submit(new Callable[Long] {
+          def call(): Long = {
+            spark.sparkContext.setJobDescription(s"publish $name")
+            publishIncremental(spark, df, s"$outDir/$name")
+          }
+        })
+      }
+      val outcomes = pending.map { case (name, f) =>
+        name -> (try Right(f.get()) catch {
+          case e: ExecutionException => Left(e.getCause)
+        })
+      }
+      outcomes.collect { case (_, Left(e)) => e } match {
+        case first +: rest =>
+          rest.foreach(first.addSuppressed)
+          throw first
+        case _ => outcomes.collect { case (name, Right(n)) => name -> n }.toMap
+      }
+    } finally {
+      // also when this thread was interrupted mid-wait: no publish may
+      // outlive the call, or `run` would unpersist a cache it still reads
+      pool.shutdown()
+      while (!pool.awaitTermination(1, TimeUnit.MINUTES)) {}
     }
   }
 }

@@ -21,7 +21,10 @@ import graft.multimodal.{Audio, Jpeg, Multimodal, Pdf, Png}
   * paths that preceded `image_dhash`'s PNG/JPEG dispatch and the
   * `archive_metadata`, `pdf_triage` and `pdf_text` expressions: the
   * `mapPartitions` PNG/JPEG rungs, the hex/regex SQL builds and the
-  * `Row`-encoder text extractor. Each line is `group <TAB> payload`. Small groups
+  * `Row`-encoder text extractor; documents 16 and 17 of
+  * `pdf/text/crafted/caps` were re-recorded once the composite-font scan
+  * read a string literal cut by the stream cap as string content, not
+  * as dict names. Each line is `group <TAB> payload`. Small groups
   * store their rendered rows verbatim; a large group stores one line,
   * `sha256=<hex> rows=<n>`, the digest of its sorted rendered rows.
   * A rendered row is the key and the parser's output columns joined by

@@ -143,6 +143,26 @@ class PdfSpec extends SparkSpec {
         Some(false))))
   }
 
+  test("a stream cut inside a show string reads the cut string as " +
+      "text: a /Type0 in it neither flags the doc composite nor NULLs " +
+      "its text") {
+    // maxStreamBytes = 24 cuts the second show right after "/Type0"
+    val cut = MediaGoldens.pdfWith("" ->
+      "BT (kept) Tj (see /Type0 fonts) Tj ET".getBytes("ISO-8859-1"))
+    val got = Pdf.extractPdfText(
+      (Seq(1L -> cut) ++ Seq(16L, 17L).map(i => i -> pdfCrafted(i)))
+        .toDF("media_id", "content"), maxStreamBytes = 24)
+      .select($"media_id", $"pdf_text", $"n_show_ops",
+        $"pdf_text_truncated", $"pdf_composite_font")
+      .as[(Long, Option[String], Option[Long], Option[Boolean],
+        Option[Boolean])]
+      .collect().sortBy(_._1).toSeq
+    assert(got === Seq(
+      (1L, Some("kept"), Some(1L), Some(true), Some(false)),
+      (16L, None, Some(0L), Some(true), Some(false)),
+      (17L, None, Some(0L), Some(true), Some(false))))
+  }
+
   test("a Flate stream inflating to BINARY GARBAGE neither flags the " +
       "doc composite nor poisons its real text — the marker scan over " +
       "inflated bytes survives unbalanced parens and stray '<'") {

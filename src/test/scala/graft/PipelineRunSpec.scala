@@ -1,9 +1,14 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
@@ -13,7 +18,8 @@ import graft.sources.Sources
 
 /** `Pipeline.run` end to end on inline inputs in the reference formats:
   * first load, re-run, a batch with new flights, an empty batch, cache
-  * lifetimes, and the declared star schemas. */
+  * lifetimes, the concurrent publishes (a failing one, job groups), the
+  * pruned flight columns, and the declared star schemas. */
 class PipelineRunSpec extends SparkSpec {
 
   private val codes = Seq("JFK", "LAX", "ORD", "ATL")
@@ -60,6 +66,12 @@ class PipelineRunSpec extends SparkSpec {
 
   private def cached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
 
+  private def pruned(df: DataFrame): DataFrame =
+    df.select(Pipeline.flightColumns.map(col): _*)
+
+  private def storedRows(out: String, t: String): Seq[String] =
+    spark.read.parquet(s"$out/$t").collect().map(_.toString).sorted.toSeq
+
   test("first load, re-run and a batch with new flights append exactly the new rows") {
     val out = freshDir()
     val first = Pipeline.run(spark, flights(0, 120), airportsRaw, carriersRaw, out)
@@ -83,18 +95,114 @@ class PipelineRunSpec extends SparkSpec {
   test("run unpersists the frames it cached and keeps the caller's cache") {
     val out = freshDir()
     val f = flights(0, 60)
-    def built: Seq[DataFrame] = Pipeline.build(spark, f, airportsRaw, carriersRaw).byName.map(_._2)
+    def built: Seq[DataFrame] = Seq(f, pruned(f)).flatMap(src =>
+      Pipeline.build(spark, src, airportsRaw, carriersRaw).byName.map(_._2))
 
     Pipeline.run(spark, f, airportsRaw, carriersRaw, out)
     assert(!cached(f))
+    assert(!cached(pruned(f)))
     assert(!built.exists(cached))
 
     f.persist()
     try {
       Pipeline.run(spark, f, airportsRaw, carriersRaw, freshDir())
       assert(cached(f))
+      // the caller's cache is used as it is: no second, pruned cache
+      assert(!cached(pruned(f)))
       assert(!built.exists(cached))
     } finally f.unpersist()
+  }
+
+  test("a failing publish: run throws it after every other publish ends, " +
+      "the other 6 tables are published and no cache is left behind") {
+    val out = freshDir()
+    // a plain file where the flights table should be: its publish fails
+    Files.write(Paths.get(out, "flights"),
+      "not a parquet table".getBytes(StandardCharsets.UTF_8))
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val f = flights(0, 120)
+    val e = intercept[Exception](
+      Pipeline.run(spark, f, airportsRaw, carriersRaw, out))
+    assert(!e.isInstanceOf[IllegalArgumentException], e) // not the gate
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains(s"$out/flights")), e)
+    // read at once: run returned only after the other publishes ended
+    assert(Schemas.star.keys.filter(_ != "flights")
+      .map(t => t -> spark.read.parquet(s"$out/$t").count()).toMap ===
+      Map("airports" -> 5L, "air_carriers" -> 3L, "time" -> 1440L,
+        "date" -> 6L, "cancelations" -> 3L, "delays" -> 6L))
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- persistedBefore
+      === Set.empty[Int])
+    assert(!cached(pruned(f)))
+    // a re-run after removing the obstacle appends only the missing fact
+    Files.delete(Paths.get(out, "flights"))
+    val again = Pipeline.run(spark, f, airportsRaw, carriersRaw, out)
+    assert(again === Schemas.star.keys.map(t =>
+      t -> (if (t == "flights") 120L else 0L)).toMap)
+  }
+
+  test("every job of a load runs in the caller's job group, and each " +
+      "publish's jobs carry the description `publish <table>`") {
+    val sc = spark.sparkContext
+    // (job group, job description) of every job started
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        def prop(k: String) = p.map(_.getProperty(k)).orNull
+        seen.add((prop("spark.jobGroup.id"), prop("spark.job.description")))
+      }
+    }
+    // listener events arrive in order: once a job started after the load
+    // is seen, every job of the load has been seen
+    def loadJobs(): Seq[(String, String)] = {
+      sc.setJobGroup("graft-drain", "drain")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(_._1 == "graft-drain") &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+      seen.asScala.toSeq.filter(_._1 != "graft-drain")
+    }
+    sc.addSparkListener(listener)
+    try {
+      // two loads: the second must not run on threads, or under
+      // properties, left over from the first
+      for (k <- 1 to 2) {
+        val group = s"graft-load-$k"
+        seen.clear()
+        sc.setJobGroup(group, s"load $k")
+        try Pipeline.run(spark, flights(0, 60), airportsRaw, carriersRaw, freshDir())
+        finally sc.clearJobGroup()
+        val jobs = loadJobs()
+        assert(jobs.size >= 8, jobs) // the quality gate and 7 publishes
+        assert(jobs.forall(_._1 == group), jobs)
+        assert(jobs.map(_._2).filter(d => d != null && d.startsWith("publish "))
+          .toSet === Schemas.star.keySet.map(t => s"publish $t"))
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a load of the 19 flight columns it reads publishes what a load of " +
+      "all 29 does, and each of the 19 is needed") {
+    assert(Schemas.flightsRaw.fieldNames.filter(Pipeline.flightColumns.toSet)
+      .toSeq === Pipeline.flightColumns)
+    assert(Pipeline.flightColumns.size === 19)
+    val f = flights(0, 120)
+    val (full, part) = (freshDir(), freshDir())
+    assert(Pipeline.run(spark, f, airportsRaw, carriersRaw, full) ===
+      Pipeline.run(spark, pruned(f), airportsRaw, carriersRaw, part))
+    Schemas.star.keys.foreach { t =>
+      assert(storedRows(full, t) === storedRows(part, t), t)
+    }
+    Pipeline.flightColumns.foreach { c =>
+      val without = f.select(Pipeline.flightColumns.filter(_ != c).map(col): _*)
+      val breaks = try {
+        Pipeline.build(spark, without, airportsRaw, carriersRaw).byName.exists {
+          case (t, df) => nullable(df.schema) != nullable(Schemas.star(t))
+        }
+      } catch { case _: AnalysisException => true }
+      assert(breaks, s"a load without $c still builds the star schema")
+    }
   }
 
   test("a batch with no flights publishes every table and registers all 7 views") {
