@@ -676,7 +676,7 @@ object Dedup {
     * skewed or adversarial graph shows up as a long flat tail — a CURVE
     * the operator surfaces long before the maxIter timeout would. Free:
     * the exact count is observed during the round's checkpoint job either
-    * way (ScaleRehearsal turns the callback on).
+    * way (CorpusOpsSpec pins the curve of a chain graph).
     *
     * TWO-TIER STRATEGY (r20). Graphs whose pair count is at most
     * `graft.cc.unionFindMaxEdges` (session conf, default 4,000,000; 0
@@ -1189,8 +1189,7 @@ object Dedup {
       s"bitsPerShingle: $bitsPerShingle")
     require(numHashes >= 1 && numHashes <= 16, s"numHashes: $numHashes")
     require(maxBitmapBytes >= 8, s"maxBitmapBytes: $maxBitmapBytes")
-    Seq("bloom_contaminated", "__cb_hit", "__cb_toks", "__cb_sh",
-      "__cb_h1", "__cb_h2").foreach(c =>
+    Seq("bloom_contaminated", "__cb_hit", "__cb_toks", "__cb_sh").foreach(c =>
       require(!train.columns.contains(c),
         s"Dedup.contaminationBloom: train already has a '$c' column — " +
           "rename it first"))
@@ -1239,38 +1238,46 @@ object Dedup {
       (bm, w)
     } finally evalSh.unpersist()
     val mBits = words * 64L
-    // THE HASHES ARE CODEGEN-SHAPED ON PURPOSE: a first cut evaluated the
+    // THE HASH IS CODEGEN-SHAPED ON PURPOSE: a first cut evaluated the
     // whole test as nested higher-order lambdas over the token array —
     // zero shuffles, but lambda bodies run INTERPRETED outside
     // whole-stage codegen and the scan measured ~5× slower than the
     // exact broadcast join at 50k docs. Exploding the shingles keeps
-    // the per-shingle md5+conv inside codegen, and the early `where`
-    // means the only rows that ever reach an exchange are the FLAGGED
-    // ones — the corpus itself still never shuffles.
+    // the per-shingle md5 inside codegen, and the early `where` means
+    // the only rows that ever reach an exchange are the FLAGGED ones —
+    // the corpus itself still never shuffles.
     //
     // The BITMAP ships once per executor as a BROADCAST VARIABLE
     // (torrent blocks), and the k-position test is one JVM function
-    // over (h1, h2) reading it. The previous shape embedded the bitmap
-    // as a typedLit array INSIDE the plan — i.e. inside every task
-    // binary of every stage of the query ("Broadcasting large task
+    // over the shingle's md5 hex reading it. The previous shape embedded
+    // the bitmap as a typedLit array INSIDE the plan — i.e. inside every
+    // task binary of every stage of the query ("Broadcasting large task
     // binary with size 1.5–2.3 MiB" across the bloom family), serialized
     // and deserialized per task rather than per executor, and capped by
-    // what the scheduler tolerates as a literal (r20, guide §5). The
-    // arithmetic is bit-identical: p_i = pmod(h1 + i·h2, mBits) and the
-    // word/bit indexing match the previous element_at/shiftleft
-    // expressions exactly (h1 + 15·h2 < 2^60, so no overflow), which
-    // CorpusOpsSpec pins against the exact path. The broadcast itself
-    // is freed by the ContextCleaner when the UDF's closure is GC'd.
+    // what the scheduler tolerates as a literal (r20, guide §5).
+    //
+    // The probe takes the md5 ONCE as its single argument and parses
+    // both 56-bit halves itself (hex chars 1-14 and 17-30), so the md5
+    // runs once per shingle with no optimizer barrier: two column
+    // arguments would each inline their own md5 under project collapse
+    // (measured 9 s at k=1 vs 43 s at k=8 on 2.35M shingles when the md5
+    // was repeated per position). 14 hex digits fit a long, so the parse
+    // is bit-identical to the bitmap build's conv(substring(md5, ..),
+    // 16, 10), and p_i = pmod(h1 + i·h2, mBits) with h1 + 15·h2 < 2^60
+    // (no overflow) — CorpusOpsSpec pins the screen against the exact
+    // path. The broadcast itself is freed by the ContextCleaner when the
+    // UDF's closure is GC'd.
     val bmB = train.sparkSession.sparkContext.broadcast(bitmap)
     val kH = numHashes
     val mB = mBits
-    val probe = udf((h1: Long, h2: Long) => {
+    val probe = udf((md5Hex: String) => {
+      val h1 = java.lang.Long.parseLong(md5Hex.substring(0, 14), 16)
+      val h2 = java.lang.Long.parseLong(md5Hex.substring(16, 30), 16)
       val bm = bmB.value
       var i = 0
       var all = true
       while (all && i < kH) {
-        val raw = (h1 + i.toLong * h2) % mB
-        val p = if (raw < 0) raw + mB else raw
+        val p = (h1 + i.toLong * h2) % mB
         all = (bm((p >>> 6).toInt) & (1L << (p & 63L))) != 0L
         i += 1
       }
@@ -1280,25 +1287,11 @@ object Dedup {
     val grams = transform(
       sequence(lit(1), size(col("__cb_toks")) - (n - 1)),
       j => concat_ws(" ", slice(col("__cb_toks"), j, lit(n))))
-    val h1 = conv(substring(md5(col("__cb_sh")), 1, 14), 16, 10)
-      .cast(LongType)
-    val h2 = conv(substring(md5(col("__cb_sh")), 17, 14), 16, 10)
-      .cast(LongType)
-    // LET-BIND h1/h2 behind the nondeterministic-zero barrier (the
-    // repo's standard let-binding idiom): without it, project collapse
-    // inlines the md5+conv tree into both probe arguments and codegen
-    // does NOT de-duplicate them — measured 9 s (k=1) vs 43 s (k=8) on
-    // 2.35M shingles when the k positions were columns, i.e. the md5
-    // ran k× per shingle. The barrier also stops the probe filter from
-    // being pushed below this projection.
-    val ndZero = (rand(19L) * lit(0)).cast(LongType)
     train
       .select(col(idCol), toks.as("__cb_toks"))
       .where(size(col("__cb_toks")) >= n)
       .select(col(idCol), explode(grams).as("__cb_sh"))
-      .select(col(idCol),
-        (h1 + ndZero).as("__cb_h1"), (h2 + ndZero).as("__cb_h2"))
-      .where(probe(col("__cb_h1"), col("__cb_h2")))
+      .where(probe(md5(col("__cb_sh"))))
       .select(col(idCol))
       .distinct()
   }

@@ -25,8 +25,8 @@ object CrawlIngest {
     * (any key columns + target_uri + payload) and yields per-record
     * text — shared by the blob path ([[crawlText]]) and the FILE path
     * ([[graft.sources.Warc.warcRecords]] output, the shape a real
-    * multi-segment dump ingests through; ScaleRehearsal measures its
-    * MB/s on generated segments). */
+    * multi-segment dump ingests through; SCALING.md records its MB/s
+    * on generated segments). */
   def crawlTextFromRecords(records: DataFrame,
                            keyCols: Seq[String]): DataFrame = {
     val base = records.select(

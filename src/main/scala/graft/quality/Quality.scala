@@ -85,9 +85,12 @@ object Quality {
       InRange("quarter", 0, 5),
       NotNull("full_date"))
 
-    /** Q3 airports (ET:593-619). */
+    /** Q3 airports (ET:593-619). The code must be unique too: the fact
+      * joins airports on it, so a code with two descriptions (two rows,
+      * two ids) would publish every flight from or to it twice. */
     def airportDim: Seq[Rule] = Seq(
-      Unique("airport_id_pk"), NonNegative("airport_id_pk"),
+      Unique("airport_id_pk"), Unique("airport_code"),
+      NonNegative("airport_id_pk"),
       Satisfies("airport_code_len3", length(c("airport_code")) === 3),
       Satisfies("airport_code_upper_or_numeric",
         c("airport_code") === upper(c("airport_code"))))

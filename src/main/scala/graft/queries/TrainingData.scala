@@ -2665,10 +2665,9 @@ object TrainingData {
     // threshold -> exact dedup (keep lowest id per content hash) -> per-
     // domain cap -> deterministic split -> per-(lang, split) accounting.
     // Stage 0 of the real-crawl version is UnicodeOps.normalizeText
-    // (NFC + mojibake repair BEFORE any hashing — wired and timed in
-    // CurationBench; omitted here because this corpus is clean ASCII and
-    // q142 pins the clean-input no-op, so the oracle can stay a pure
-    // DuckDB replay).
+    // (NFC + mojibake repair BEFORE any hashing); omitted here because
+    // this corpus is clean ASCII and q142 pins the clean-input no-op, so
+    // the oracle can stay a pure DuckDB replay.
     // Catalyst pipelines the whole funnel; only the dedup/cap window
     // group-limits and the final agg shuffle. This is the shape of a
     // production 100 TB
@@ -4397,7 +4396,7 @@ object TrainingData {
 
     // Exact squared-L2 top-k (Similarity.bruteForceTopKL2): the
     // ground-truth referee for PQ recall — ADC approximates L2, not
-    // cosine, so PqRecall measures against this. dist folds
+    // cosine, so PqSpec's recall checks measure against this. dist folds
     // per-element squared differences sequentially; DuckDB replays as
     // list_inner_product(d, d) over the same difference list (the
     // verified-bit-identical sequential sum).

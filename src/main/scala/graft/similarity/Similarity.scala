@@ -298,11 +298,12 @@ object Similarity {
     * (collision probability per bit is angle/pi — a cosine-0.95 pair
     * flips a given bit with p ~= 0.1), so a small `maxMismatch` captures
     * genuine near-dups while the banding prunes the random mass; recall
-    * vs the unbounded set is data-dependent and should be measured on a
-    * sample — [[graft.NearDupRecall]] is that measurement, and SCALING.md
-    * "Embedding near-dup pairs: measured recall" records its output on the
-    * test corpus (recall 1.000 at maxMismatch=1 on planted near-dups;
-    * near-zero at broad similarity bands, which are ANN territory).
+    * vs the unbounded set is data-dependent: measure it on a sample by
+    * counting these pairs against [[cosineNearDups]] at the same
+    * threshold. On planted near-dups recall is 1.000 at maxMismatch=1
+    * (CorpusOpsSpec pins it exactly); at broad similarity bands it is
+    * near zero, which is ANN territory (SCALING.md "Embedding near-dup
+    * pairs: measured recall").
     *
     * Scale shape: the shuffle for candidate generation carries
     * (chunk_idx, chunk_value, id, sig) — ~28 bytes/doc/chunk, never a
@@ -545,7 +546,8 @@ object Similarity {
     * residual cloud is centered near zero and ONE codebook quantizes
     * it far more precisely than the same codebook spread over the raw
     * corpus — the standard faiss layout, and the measured-recall win
-    * ([[graft.PqRecall]] / SCALING.md "PQ recall"). Cost: the same
+    * on clustered corpora (PqSpec pins residual over raw recall@10;
+    * SCALING.md "PQ recall" records the sweep). Cost: the same
     * broadcast-assign pass [[ivfAssign]] runs, plus one broadcast
     * centroid join and a narrow zip_with — no extra shuffle beyond
     * the assignment's rank-window. Feed the output straight to

@@ -44,10 +44,8 @@ object NgramLm {
 
   /** (doc_id, bigram, tf): per-document distinct-bigram counts — the
     * table every downstream exchange in [[bigramNll]] is bounded by
-    * (map-side partial agg collapses repeats before the shuffle).
-    * Public for scale telemetry (ScaleRehearsal prints its size and
-    * distinct-bigram count across scale factors). */
-  def docBigramTf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    * (map-side partial agg collapses repeats before the shuffle). */
+  private def docBigramTf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("doc_id"),
       TextOps.tokens(col(textCol)).as("toks"))
       .where(size(col("toks")) >= 2)

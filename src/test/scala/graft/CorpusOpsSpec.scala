@@ -383,6 +383,28 @@ class CorpusOpsSpec extends SparkSpec {
     assert(exch == -1 || (filt >= 0 && filt < exch), plan.take(2000))
   }
 
+  test("bloom screen plans carry no Rand barrier: the probe reads the " +
+      "shingle md5 once as its one argument") {
+    import spark.implicits._
+    val docs = graft.sources.Sources.table(spark, sf, "documents")
+      .select($"doc_id", $"text")
+    val train = docs.where($"doc_id" < 100)
+    val eval_ = docs.where($"doc_id" >= 400 && $"doc_id" < 420)
+    for (df <- Seq(
+        graft.dedup.Dedup.contaminationBloom(train, eval_, "doc_id", "text"),
+        graft.dedup.Dedup.decontaminateBloom(train, eval_, "doc_id", "text"))) {
+      val plan = df.queryExecution.optimizedPlan
+      val rands = plan.collect { case node => node.expressions }.flatten
+        .flatMap(_.collect {
+          case r: org.apache.spark.sql.catalyst.expressions.Rand => r })
+      assert(rands.isEmpty, plan.treeString.take(2000))
+      val md5s = plan.collect { case node => node.expressions }.flatten
+        .flatMap(_.collect {
+          case m: org.apache.spark.sql.catalyst.expressions.Md5 => m })
+      assert(md5s.size == 1, plan.treeString.take(2000))
+    }
+  }
+
   test("decontaminateBloom survivors are IDENTICAL to the exact " +
       "decontaminate at minOverlap 1 and 5 — the no-false-negative " +
       "screen can never change the outcome, only the cost") {

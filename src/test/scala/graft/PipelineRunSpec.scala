@@ -19,7 +19,8 @@ import graft.sources.Sources
 /** `Pipeline.run` end to end on inline inputs in the reference formats:
   * first load, re-run, a batch with new flights, an empty batch, cache
   * lifetimes, the concurrent publishes (a failing one, job groups), the
-  * pruned flight columns, and the declared star schemas. */
+  * pruned flight columns, the airport-code gate, a target left by an
+  * interrupted first write, and the declared star schemas. */
 class PipelineRunSpec extends SparkSpec {
 
   private val codes = Seq("JFK", "LAX", "ORD", "ATL")
@@ -214,6 +215,43 @@ class PipelineRunSpec extends SparkSpec {
       airportsRaw, carriersRaw, out)
     assert(counts === Map("airports" -> 5L, "air_carriers" -> 3L, "time" -> 1440L,
       "date" -> 0L, "cancelations" -> 0L, "delays" -> 0L, "flights" -> 0L))
+    Schemas.star.keys.foreach { t =>
+      assert(spark.table(t).count() === counts(t), t)
+    }
+  }
+
+  test("an airports CSV that repeats a code fails the gate on " +
+      "airport_code_unique and publishes nothing") {
+    val csv: Path = Files.createTempFile("graft_airports", ".csv")
+    Files.write(csv, ("Code,Description\n" +
+      "ATL,\"Atlanta, GA: Hartsfield-Jackson Atlanta International\"\n" +
+      "JFK,\"New York, NY: John F. Kennedy International\"\n" +
+      "JFK,\"New York, NY: Kennedy International\"\n" +
+      "LAX,\"Los Angeles, CA: Los Angeles International\"\n" +
+      "ORD,\"Chicago, IL: Chicago O'Hare International\"\n")
+      .getBytes(StandardCharsets.UTF_8))
+    val out = freshDir()
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark,
+      flights(0, 60), Sources.csv(spark, csv.toString, Schemas.airportsRaw),
+      carriersRaw, out))
+    assert(e.getMessage.contains("airport_code_unique"), e.getMessage)
+    assert(!e.getMessage.contains("airport_id_pk_unique"), e.getMessage)
+    assert(Files.list(Paths.get(out)).count() === 0L)
+  }
+
+  test("a target holding only _temporary/ (an interrupted first write) " +
+      "loads as a first load: every table appends its whole batch") {
+    val out = freshDir()
+    Schemas.star.keys.foreach { t =>
+      val attempt = Files.createDirectories(
+        Paths.get(out, t, "_temporary", "0", "_temporary", "attempt_0"))
+      Files.write(attempt.resolve("part-00000.snappy.parquet"),
+        "cut short".getBytes(StandardCharsets.UTF_8))
+    }
+    val counts = Pipeline.run(spark, flights(0, 120), airportsRaw, carriersRaw, out)
+    assert(counts === Map("airports" -> 5L, "air_carriers" -> 3L, "time" -> 1440L,
+      "date" -> 6L, "cancelations" -> 3L, "delays" -> 6L, "flights" -> 120L))
+    assert(storedCounts(out) === counts)
     Schemas.star.keys.foreach { t =>
       assert(spark.table(t).count() === counts(t), t)
     }

@@ -301,4 +301,56 @@ class PqSpec extends SparkSpec {
       .as[(Int, Long, Seq[Double])].collect().sortBy(r => (r._1, r._2)).toSeq
     assert(a === b)
   }
+
+  test("on a clustered corpus residual ADC recall@10 beats raw ADC at the " +
+      "same m, and pqRefine at C = 10k lifts recall above residual ADC") {
+    // sf0.01 is the smallest fixture on which both orderings show: at m=8
+    // the recorded sweep read raw 0.392, residual 0.523 (all lists) and
+    // refine C=100 1.000 (nprobe 4). The spec asserts the orderings only.
+    val (k, m, nCodes, nLists) = (10, 8, 16, 16)
+    val raw = graft.sources.Sources.table(spark,
+        new java.io.File(sf).getParent + "/sf0.01", "embeddings")
+      .select($"vec_id".as("id"), $"embedding".as("vec"))
+    // 16 centers drawn from the corpus, within-cluster spread 0.25 of the
+    // original vector: the clustered regime real embeddings live in
+    val centers = broadcast(raw.where($"id" < 16)
+      .select($"id".as("g"), $"vec".as("cvec")))
+    val vecs = raw.select($"id", pmod($"id", lit(16)).as("g"), $"vec")
+      .join(centers, Seq("g"))
+      .select($"id", zip_with($"cvec", $"vec", (c, x) =>
+        (c.cast("double") + lit(0.25) * x.cast("double")).cast("float"))
+        .as("vec"))
+      .cache()
+    val queries = vecs.where(pmod($"id", lit(41)) === 0)
+    def neighbours(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+      df.select($"query_id", $"neighbor_id").as[(Long, Long)].collect()
+        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val truth = neighbours(Similarity.bruteForceTopKL2(queries, vecs, k))
+    def recall(approx: org.apache.spark.sql.DataFrame): Double = {
+      val got = neighbours(approx)
+      truth.map { case (q, t) =>
+        got.getOrElse(q, Set.empty).count(t.contains).toDouble / t.size
+      }.sum / truth.size
+    }
+    try {
+      val centroids = Similarity.kmeansLite(vecs, nLists, iters = 3).cache()
+      val cbRaw = Similarity.pqTrain(vecs, m, nCodes, iters = 3)
+      val codesRaw = Similarity.pqEncode(vecs, cbRaw, m)
+      val rawAdc = recall(Similarity.pqAdcTopK(queries, codesRaw, cbRaw, k, m))
+      val resid = Similarity.ivfResidualize(vecs, centroids).cache()
+      val cbRes = Similarity.pqTrain(resid.select($"id", $"vec"), m, nCodes,
+        iters = 3)
+      val codesRes = Similarity.pqEncode(resid, cbRes, m)
+        .select($"id", $"cid", $"pq_codes").cache()
+      def residualAdc(c: Int, nprobe: Int) = Similarity.pqAdcTopKResidual(
+        queries, codesRes, cbRes, centroids, c, m, nprobe)
+      val resAdc = recall(residualAdc(k, nLists))
+      assert(resAdc > rawAdc, s"residual $resAdc vs raw $rawAdc")
+      val probed = recall(residualAdc(k, 4))
+      val refined = recall(Similarity.pqRefine(queries, vecs,
+        residualAdc(10 * k, 4), k))
+      assert(refined > probed, s"refine C=${10 * k} $refined vs ADC $probed")
+      codesRes.unpersist(); resid.unpersist(); centroids.unpersist()
+    } finally vecs.unpersist()
+  }
 }
