@@ -6,6 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.delta.Incremental
@@ -96,17 +97,29 @@ object Pipeline {
     * Returns the rows appended, counted by an observation on the write
     * itself: one job, no persist, and exact under task retries.
     *
+    * The accumulated table is read with `table`'s schema, the schema it
+    * was written with, so reading it starts no footer-inference job.
+    *
     * The append always runs, so a table's directory exists after its first
     * publish even when the table is empty. An empty delta leaves no rows on
     * disk and at most one schema-only part file (the write's first task
     * writes one when no task has rows).
+    *
+    * Before it reads, the publish deletes a `_temporary/` left under `path`
+    * by a writer that crashed: the job commit of the append would otherwise
+    * merge that writer's committed task files into the table, next to the
+    * same rows appended again. This assumes one writer per path at a time:
+    * [[run]] is the warehouse's only writer, and a
+    * [[graft.streaming.EventStreams.deltaAppendSink]] query its sink's.
     *
     * Safe to call concurrently for different paths: [[run]] publishes its
     * 7 tables this way. Jobs run under the calling thread's Spark local
     * properties (job group, description, scheduler pool). */
   def publishIncremental(spark: SparkSession, table: DataFrame,
                          path: String): Long = {
-    val delta = readAccumulated(spark, path) match {
+    val p = new org.apache.hadoop.fs.Path(path, "_temporary")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val delta = readAccumulated(spark, path, Some(table.schema)) match {
       case Some(acc) => Incremental.delta(table, acc)
       case None => table
     }
@@ -117,19 +130,25 @@ object Pipeline {
   }
 
   /** The accumulated table, or None when there is genuinely no data yet:
-    * path absent, or present but with no readable parquet layout (an
-    * interrupted first write leaving only _temporary raises
-    * AnalysisException at schema inference). Anything else — transient FS
+    * path absent, or, when the schema is inferred, present but with no
+    * readable parquet layout (an interrupted first write leaving only
+    * _temporary raises AnalysisException at schema inference). With a
+    * declared `schema` ([[publishIncremental]] passes its table's) such a
+    * target reads as an empty table, and no Spark job starts; the
+    * streaming index and label reads infer. Anything else — transient FS
     * errors, corrupt footers at execution — PROPAGATES: treating those as
     * "first run" would append the whole table as duplicates. */
-  private[graft] def readAccumulated(spark: SparkSession,
-                                     path: String): Option[DataFrame] = {
+  private[graft] def readAccumulated(spark: SparkSession, path: String,
+                                     schema: Option[StructType] = None): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val exists = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     if (!exists) None
-    else
-      try Some(spark.read.parquet(path))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    else schema match {
+      case Some(s) => Some(spark.read.schema(s).parquet(path))
+      case None =>
+        try Some(spark.read.parquet(path))
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
+    }
   }
 
   /** Full run: build, assert quality, publish all tables incrementally under
@@ -148,6 +167,10 @@ object Pipeline {
     * attached as suppressed exceptions, and the tables that did not fail
     * stay published. Re-running the load appends only what is missing,
     * because each publish appends an anti-join delta.
+    *
+    * `run` is the only writer of `outDir`: no two loads may run into it at
+    * once, because each publish first deletes the `_temporary/` a crashed
+    * writer left under its table (see [[publishIncremental]]).
     *
     * Unless the caller cached `flightsRaw` (then it is used as it is),
     * only its [[flightColumns]] are cached: the CSV reader converts and

@@ -1,10 +1,12 @@
 package graft.schemas
 
 import scala.collection.immutable.ListMap
+import scala.reflect.runtime.universe.TypeTag
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types._
 
-/** Explicit StructTypes for every source and curated table.
+/** Explicit StructTypes for every source, testdata and curated table.
   *
   * The reference infers all schemas via `pd.read_csv`
   * (dags/extract_and_tranform.py:45,51,58); a Spark engine declares them so
@@ -117,4 +119,33 @@ object Schemas {
     "flights" -> flightFact, "date" -> dateDim, "time" -> timeDim,
     "airports" -> airportDim, "air_carriers" -> carrierDim,
     "cancelations" -> cancellationDim, "delays" -> delayDim)
+
+  /** The testdata tables (TESTDATA.md), each stored as
+    * `<sfDir>/<name>.parquet`: the schemas of their [[Tables]] case
+    * classes, nullable as a file read makes them. The dates are
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false) in the files, so the case
+    * classes hold them as `LocalDateTime` (TIMESTAMP_NTZ). `events` is
+    * absent on purpose: its `ts` physical type has varied between
+    * generations (see `Sources.events`). Lazy: the encoders derive the
+    * schemas by reflection, which only the query path needs. */
+  lazy val testdata: ListMap[String, StructType] = ListMap(
+    "region" -> productSchema[Tables.Region],
+    "nation" -> productSchema[Tables.Nation],
+    "customer" -> productSchema[Tables.Customer],
+    "supplier" -> productSchema[Tables.Supplier],
+    "part" -> productSchema[Tables.Part],
+    "orders" -> productSchema[Tables.Order],
+    "lineitem" -> productSchema[Tables.Lineitem],
+    "documents" -> productSchema[Tables.Document],
+    "embeddings" -> productSchema[Tables.Embedding])
+
+  private def productSchema[T <: Product : TypeTag]: StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case other => other
+    }
+    nullable(Encoders.product[T].schema).asInstanceOf[StructType]
+  }
 }

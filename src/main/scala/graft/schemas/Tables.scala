@@ -1,6 +1,7 @@
 package graft.schemas
 
 import java.sql.Timestamp
+import java.time.LocalDateTime
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -10,7 +11,8 @@ import graft.sources.Sources
   * Encoders where compile-time field checks help (pipeline code touching
   * many columns), while the query suite stays `DataFrame` for dynamic
   * schemas. Both share one plan representation — `.as[T]` costs nothing at
-  * runtime until a typed lambda actually runs.
+  * runtime until a typed lambda actually runs. The nine fixed-type case
+  * classes are also the declared read schemas (`Schemas.testdata`).
   */
 object Tables {
 
@@ -24,12 +26,12 @@ object Tables {
                         p_type: String, p_size: Int, p_retailprice: Double)
   final case class Order(o_orderkey: Long, o_custkey: Long,
                          o_orderstatus: String, o_totalprice: Double,
-                         o_orderdate: Timestamp, o_orderpriority: String)
+                         o_orderdate: LocalDateTime, o_orderpriority: String)
   final case class Lineitem(l_orderkey: Long, l_partkey: Long, l_suppkey: Long,
                             l_linenumber: Int, l_quantity: Double,
                             l_extendedprice: Double, l_discount: Double,
                             l_tax: Double, l_returnflag: String,
-                            l_linestatus: String, l_shipdate: Timestamp)
+                            l_linestatus: String, l_shipdate: LocalDateTime)
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                          event_type: String, value: Double, props: String)
   final case class Document(doc_id: Long, text: String, lang: String,

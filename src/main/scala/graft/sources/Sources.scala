@@ -1,7 +1,11 @@
 package graft.sources
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{functions, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
+
+import graft.schemas.Schemas
 
 /** Sources and sinks (SURVEY.md §2.1, S1-S8).
   *
@@ -30,9 +34,20 @@ object Sources {
   def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Testdata table loader: `<sfDir>/<name>.parquet` (TESTDATA.md). */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Testdata table loader: `<sfDir>/<name>.parquet` (TESTDATA.md), read
+    * with its declared schema ([[Schemas.testdata]]), so resolving a table
+    * reads no footer and starts no Spark job. `events` is not one of them:
+    * read it through [[events]]. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val schema = Schemas.testdata.getOrElse(name,
+      throw new IllegalArgumentException(s"$name is not a testdata table"))
+    spark.read.schema(schema).parquet(s"$sfDir/$name.parquet")
+  }
+
+  // events' stored schema per (live session, path), inferred once: weak
+  // keys, so a stopped session's entry is collectable
+  private val eventsSchemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, StructType]]())
 
   /** The `events` table's `ts` physical type has varied across testdata
     * generations: TIMESTAMP(NANOS) (readable only as LongType via
@@ -45,7 +60,11 @@ object Sources {
     * above 2^53 ns and drift vs DuckDB's own ns->us truncation). NTZ path:
     * cast, which stamps the wall-clock with the session timezone — UTC in
     * every graft session (Graft.scala) — matching DuckDB's naive reading
-    * of the same file. */
+    * of the same file.
+    *
+    * The stored schema is inferred from the footer once per (session,
+    * path), one Spark job; later calls read with it and start none. A file
+    * rewritten at the same path keeps the type first read in that session. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     // runtime-settable SQL conf: makes a nanos-generation events file
     // readable even from a session built without this flag (e.g. the
@@ -54,7 +73,10 @@ object Sources {
     // unset key, so "set only if absent" can never fire — a nanos file is
     // unreadable without the flag, so setting it is strictly enabling.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(spark, sfDir, "events")
+    val path = s"$sfDir/events.parquet"
+    val stored = eventsSchemas.computeIfAbsent(spark, _ => TrieMap.empty)
+      .getOrElseUpdate(path, spark.read.parquet(path).schema)
+    val raw = spark.read.schema(stored).parquet(path)
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts",

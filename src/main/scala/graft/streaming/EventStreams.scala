@@ -169,22 +169,19 @@ object EventStreams {
   }
 
   /** Incremental delta-append per micro-batch: the streaming form of the
-    * reference's add_changes_to_* tasks (J4 + U1) — each batch anti-joins
-    * against the accumulated sink before appending. */
+    * reference's add_changes_to_* tasks (J4 + U1) — each batch is
+    * published like a warehouse table
+    * ([[graft.pipeline.Pipeline.publishIncremental]]): it anti-joins the
+    * accumulated sink, and a redelivered batch first drops the failed
+    * attempt's `_temporary/`. The query must be the sink's only writer. */
   def deltaAppendSink(events: DataFrame, sinkPath: String): StreamingQuery =
     events.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // empty/absent sink == first batch; transient errors propagate
-        // (a catch-all would alias them to "first batch" -> duplicates)
-        val delta =
-          graft.pipeline.Pipeline.readAccumulated(spark, sinkPath) match {
-            case Some(acc) => graft.delta.Incremental.delta(batch, acc)
-            case None => batch
-          }
-        delta.write.mode("append").parquet(sinkPath)
+        graft.pipeline.Pipeline.publishIncremental(
+          batch.sparkSession, batch, sinkPath)
+        ()
       }
       .start()
 

@@ -22,17 +22,18 @@ object Warehouse {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
 
-  /** Register every testdata table under its bare name. Memoized per
-    * (session, dir): repeated calls from the same session skip the ~10
-    * parquet footer reads (they dominated q20's measured time, which is
-    * otherwise a pure fact-fact join). A different dir always re-registers.
+  /** Register every testdata table under its bare name. The tables resolve
+    * with their declared schemas ([[Sources.table]]) and `events` with its
+    * memoized one ([[Sources.events]]), so no call after a session's first
+    * reads a parquet footer. Memoized per (session, dir): repeated calls
+    * from the same session skip re-resolving the 10 views. A different dir
+    * always re-registers.
     * Callers that shadowed or dropped one of these views must pass
     * `force = true` to restore them — the memo cannot see catalog edits. */
   def registerTestdata(spark: SparkSession, sfDir: String,
                        force: Boolean = false): Unit = {
     if (force || testdataDirs.get(spark) != sfDir) {
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "documents", "embeddings").foreach { t =>
+      Schemas.testdata.keys.foreach { t =>
         Sources.table(spark, sfDir, t).createOrReplaceTempView(t)
       }
       // events needs its nanos->timestamp normalization (see Sources.events)

@@ -257,6 +257,35 @@ class PipelineRunSpec extends SparkSpec {
     }
   }
 
+  test("readAccumulated on a populated star, given each built table's " +
+      "schema as publishIncremental gives it, starts no Spark job") {
+    val out = freshDir()
+    val counts = Pipeline.run(spark, flights(0, 60), airportsRaw, carriersRaw, out)
+    val built = Pipeline.build(spark, flights(0, 60), airportsRaw, carriersRaw)
+      .byName.toMap
+    def stored(t: String): DataFrame =
+      Pipeline.readAccumulated(spark, s"$out/$t", Some(built(t).schema)).get
+    assert(jobsStartedBy(Schemas.star.keys.foreach(t => stored(t).schema)) === 0)
+    assert(Schemas.star.keys.map(t => t -> stored(t).count()).toMap === counts)
+    // the inferring read, for contrast: one footer job
+    assert(jobsStartedBy(Pipeline.readAccumulated(spark, s"$out/flights")) >= 1)
+  }
+
+  test("a publish into a target holding a crashed writer's committed task " +
+      "file appends its rows once") {
+    val dim = graft.dims.Dims.airports(airportsRaw.limit(2))
+    val crashed = freshDir()
+    dim.coalesce(1).write.mode("overwrite").parquet(crashed)
+    val part = Files.list(Paths.get(crashed)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    val path = s"${freshDir()}/airports"
+    val task = Files.createDirectories(
+      Paths.get(path, "_temporary", "0", "task_202610190000_0001_m_000000"))
+    Files.copy(part, task.resolve(part.getFileName))
+    assert(Pipeline.publishIncremental(spark, dim, path) === 2L)
+    assert(spark.read.parquet(path).count() === 2L)
+  }
+
   test("every built table matches its declared star schema") {
     val w = Pipeline.build(spark, flights(0, 60), airportsRaw, carriersRaw)
     assert(w.byName.map(_._1).toSet === Schemas.star.keySet)

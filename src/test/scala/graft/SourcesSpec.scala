@@ -1,10 +1,92 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.spark.sql.functions.{col, timestamp_micros, unix_micros}
+import org.apache.spark.sql.types._
+
+import graft.schemas.Schemas
 import graft.sources.Sources
 import graft.warehouse.Warehouse
 
-/** Source/sink surface (S6/S7): JDBC writer builder and catalog metadata. */
+/** Source/sink surface (S6/S7): JDBC writer builder and catalog metadata;
+  * the declared testdata schemas and the `events` timestamp normalization. */
 class SourcesSpec extends SparkSpec {
+
+  private def nullable(s: StructType): StructType =
+    StructType(s.fields.map(_.copy(nullable = true)))
+
+  test("Schemas.testdata equals the schema Spark infers for every testdata " +
+      "table at every scale factor and in the benchmark's copy") {
+    val root = new File(sf).getParent
+    val dirs = Seq("sf0.001", "sf0.01", "sf0.1").map(d => s"$root/$d") :+
+      "perfbench/tables/sf0.01"
+    dirs.foreach { dir =>
+      val tables = new File(dir).list().toSeq
+        .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
+      assert(tables.toSet - "events" === Schemas.testdata.keySet, dir)
+      Schemas.testdata.foreach { case (t, declared) =>
+        assert(declared === nullable(spark.read.parquet(s"$dir/$t.parquet").schema),
+          s"$dir/$t")
+      }
+    }
+  }
+
+  test("Sources.table resolves every testdata table without a Spark job, " +
+      "and refuses a name outside Schemas.testdata") {
+    val jobs = jobsStartedBy {
+      Schemas.testdata.keys.foreach(t => Sources.table(spark, sf, t).schema)
+    }
+    assert(jobs === 0)
+    assert(Sources.table(spark, sf, "lineitem").count() > 0)
+    intercept[IllegalArgumentException](Sources.table(spark, sf, "events"))
+  }
+
+  test("Sources.events reads ts as TimestampType with the same instants in " +
+      "each generation: TIMESTAMP_NTZ, UTC-adjusted micros and INT64 nanos") {
+    // instants in micros: the epoch, a DST-change hour in US zones, past
+    // 2^31 seconds, and one second before the epoch
+    val micros = Seq(0L, 1710035999123456L, 2147483648000000L, -1000000L)
+    import spark.implicits._
+    val utc = micros.zipWithIndex.map { case (m, i) => (i + 1L, m) }
+      .toDF("event_id", "m").select(col("event_id"), timestamp_micros(col("m")).as("ts"))
+    val ntzDir = Files.createTempDirectory("graft_events_ntz").toString
+    utc.withColumn("ts", col("ts").cast(TimestampNTZType))
+      .write.parquet(s"$ntzDir/events.parquet")
+    val microsDir = Files.createTempDirectory("graft_events_micros").toString
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    try utc.write.parquet(s"$microsDir/events.parquet")
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // Written with pyarrow 16.1 (event_id 1-4, the instants above in ns,
+    // the positive ones plus 789 ns, which the reader truncates away):
+    //   us = [0, 1710035999123456, 2147483648000000, -1000000]
+    //   pq.write_table(pa.table({
+    //     "event_id": pa.array([1, 2, 3, 4], pa.int64()),
+    //     "ts": pa.array([u * 1000 + (789 if u > 0 else 0) for u in us],
+    //                    pa.timestamp("ns")),
+    //     "user_id": pa.array([7, 7, 8, 8], pa.int64()),
+    //     "event_type": pa.array(["view", "click", "view", "buy"]),
+    //     "value": pa.array([1.0, 2.5, 0.0, 9.75]),
+    //     "props": pa.array(["{}", "{}", "{}", "{}"])}),
+    //     "events.parquet", version="2.6")
+    val nanosDir = new File(
+      getClass.getResource("/events_nanos/events.parquet").toURI).getParent
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Seq(ntzDir -> TimestampNTZType, microsDir -> TimestampType,
+        nanosDir -> LongType).foreach { case (dir, stored) =>
+      assert(spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+        === stored, dir)
+      val ev = Sources.events(spark, dir)
+      assert(ev.schema("ts").dataType === TimestampType, dir)
+      assert(ev.orderBy("event_id").select(unix_micros(col("ts")))
+        .as[Long].collect().toSeq === micros, dir)
+      // the stored type is read once per (session, path)
+      assert(jobsStartedBy(Sources.events(spark, dir).schema) === 0, dir)
+    }
+  }
 
   test("S6: jdbc writer builds with url/table/batch options (no driver offline)") {
     val df = Sources.table(spark, sf, "region")

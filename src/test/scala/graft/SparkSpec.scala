@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,4 +24,30 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs that `body` starts, counted by a listener: `body` runs
+    * under a job group of its own, and a marker job started after it
+    * drains the listener bus (events arrive in order). */
+  def jobsStartedBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-count-${java.util.UUID.randomUUID}"
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties)
+          .map(_.getProperty("spark.jobGroup.id")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-drain", "drain")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(s"$group-drain") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(s"$group-drain"), "listener bus not drained")
+      groups.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
 }

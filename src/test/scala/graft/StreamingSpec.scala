@@ -197,6 +197,20 @@ class StreamingSpec extends SparkSpec {
     assert(n2 === n1, s"replay appended ${n2 - n1} duplicate rows")
   }
 
+  test("foreachBatch delta-append sink appends a batch once into a sink " +
+      "holding a crashed attempt's committed task file") {
+    val dir = stagedEventsDir()
+    val part = new java.io.File(dir).listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath
+    val sink = Files.createTempDirectory("graft_sink").toString + "/acc"
+    val task = Files.createDirectories(java.nio.file.Paths.get(
+      sink, "_temporary", "0", "task_202610190000_0001_m_000000"))
+    Files.copy(part, task.resolve(part.getFileName))
+    val q = EventStreams.deltaAppendSink(EventStreams.readEvents(spark, dir), sink)
+    q.processAllAvailable(); q.stop()
+    assert(spark.read.parquet(sink).count() === Sources.events(spark, sf).count())
+  }
+
   test("streaming dedup admission == batch operator over the same delta " +
       "sequence, at-least-once redelivery included") {
     import spark.implicits._
