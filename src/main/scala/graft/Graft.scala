@@ -47,11 +47,15 @@ object Graft {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
 
-  /** Eager plan-truncating snapshot for SHARED frames inside query
-    * bodies (codebooks, PQ codes, candidate lists, fingerprint tables):
-    * a frame referenced from several places in one final plan gets its
-    * whole upstream subtree re-inlined per reference unless truncated
-    * (the r19 q178 lesson: 302 Exchanges / 280 scans in one plan).
+  /** Eager plan-truncating snapshot — the engine's ONE lineage-truncation
+    * call and its one checkpoint policy. It serves SHARED frames inside
+    * query bodies (codebooks, PQ codes, candidate lists, fingerprint
+    * tables: a frame referenced from several places in one final plan
+    * gets its whole upstream subtree re-inlined per reference unless
+    * truncated — the r19 q178 lesson: 302 Exchanges / 280 scans in one
+    * plan) and every iterative operator's per-round state
+    * (Dedup.connectedComponents and its incremental form,
+    * RedirectResolve, Bpe.learnMerges).
     *
     * Mode is session-wide via `graft.checkpoint.reliable` (default
     * false): executor-local checkpoint blocks are fast but have NO
@@ -59,8 +63,7 @@ object Graft {
     * mid-pipeline kills the truncated lineage irrecoverably — so
     * production sets the conf and a `spark.sparkContext.setCheckpointDir`
     * (HDFS/object store), and every snap goes through a RELIABLE
-    * checkpoint instead (guarded loudly here, mirroring
-    * Dedup.connectedComponents' reliableCheckpoints contract; reliable
+    * checkpoint instead (refused loudly here without a dir; reliable
     * checkpoint FILES need spark.cleaner.referenceTracking.cleanCheckpoints
     * =true or an external sweep — see the incremental-CC note). */
   def snap(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Graft
 import graft.text.TextOps
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -290,32 +291,13 @@ object Dedup {
     * to avoid (see simhashBandedDups' measured 2.5x join-key-pin
     * counterfactual). If a corpus pushes the band table past the broadcast
     * threshold, do NOT force the broadcast (an over-threshold broadcast
-    * OOMs the executors): pass `saltBuckets > 1` to take the salted
-    * shuffle-join shape instead, which is skew-safe WITHOUT relying on the
-    * broadcast plan at all.
-    *
-    * SALTED SHAPE (`saltBuckets = S`): the probe side carries one salt per
-    * doc (`hash(id) mod S`), the build side is replicated across all S
-    * salts, and the join key becomes (band, sig, salt) — a saturated
-    * bucket's quadratic fan-out now lands on S distinct shuffle keys
-    * instead of one. Output is identical (each unordered pair matches
-    * exactly once, at the larger-id side's salt); cost is an S-fold
-    * replication of one side of the kilobytes-per-thousand-docs band
-    * table. The id pin is skipped in this mode — the join-key exchange
-    * itself is the intended distribution once the key is salted.
+    * OOMs the executors): the sort-merge plan's hot buckets are split by
+    * AQE's skew join (SCALING.md, "Key skew"; `SkewJoinSpec`), with no
+    * second join shape here.
     *
     * `probeParts`: see [[resolvePin]] — exhibit-size callers pass 0. */
   def lshCandidates(bandsDf: DataFrame, idCol: String,
-                    probeParts: Int = -1, saltBuckets: Int = 0): DataFrame = {
-    if (saltBuckets > 1) {
-      val b = bandsDf.select(col("band"), col("sig"), col(idCol).as("id_b"),
-        pmod(xxhash64(col(idCol)), lit(saltBuckets.toLong)).cast("int").as("salt"))
-      val a = bandsDf.select(col("band"), col("sig"), col(idCol).as("id_a"),
-        explode(array((0 until saltBuckets).map(lit(_)): _*)).as("salt"))
-      return a.join(b, Seq("band", "sig", "salt"))
-        .where(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-    }
+                    probeParts: Int = -1): DataFrame = {
     // (id, band) — unique per band row; id alone matches the upstream
     // minhash aggregate's partitioning and the repartition would be
     // elided as redundant (see simhashBandedDups)
@@ -343,13 +325,13 @@ object Dedup {
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
                  persistIntermediate: Boolean = false,
-                 probeParts: Int = -1, saltBuckets: Int = 0): DataFrame = {
+                 probeParts: Int = -1): DataFrame = {
     val sh = shingles(docs, idCol, textCol, shingleN)
     val bandsDf0 = lshBands(minhashWide(sh, idCol, numHashes), idCol, numHashes, bands)
     val bandsDf = if (persistIntermediate)
       bandsDf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else bandsDf0
-    lshCandidates(bandsDf, idCol, probeParts, saltBuckets)
+    lshCandidates(bandsDf, idCol, probeParts)
   }
 
   /** Incremental (delta) dedup: keep/drop DECISIONS for a new batch of
@@ -392,8 +374,8 @@ object Dedup {
     * is ~100 bytes/doc, so the default 8 GB frame holds ~10M-doc deltas
     * after which you'd split the batch) sets `broadcastDelta = false` for
     * a shuffle join on (band, sig); the within-batch self-join reuses
-    * [[lshCandidates]] with its pin/salt machinery (`probeParts`,
-    * `saltBuckets`).
+    * [[lshCandidates]] with its id pin (`probeParts`), and AQE's skew
+    * join splits a hot bucket (SCALING.md, "Key skew").
     *
     * PRECONDITIONS (both inherited from [[shingles]], enforced there under
     * `graft.dedup.checkIds`): `incoming`'s idCol is unique — the output is
@@ -404,13 +386,12 @@ object Dedup {
                           idCol: String, textCol: String, shingleN: Int = 3,
                           numHashes: Int = 16, bands: Int = 4,
                           broadcastDelta: Boolean = true,
-                          probeParts: Int = -1, saltBuckets: Int = 0): DataFrame = {
+                          probeParts: Int = -1): DataFrame = {
     val newBands = lshBands(
       minhashWide(shingles(incoming, idCol, textCol, shingleN), idCol, numHashes),
       idCol, numHashes, bands)
     incrementalLshDedupFromBands(indexBands, newBands,
-      incoming.select(col(idCol)), idCol, broadcastDelta, probeParts,
-      saltBuckets)
+      incoming.select(col(idCol)), idCol, broadcastDelta, probeParts)
   }
 
   /** [[incrementalLshDedup]] with the delta's band table precomputed —
@@ -429,15 +410,14 @@ object Dedup {
   def incrementalLshDedupFromBands(indexBands: DataFrame, newBands: DataFrame,
                                    incomingIds: DataFrame, idCol: String,
                                    broadcastDelta: Boolean = true,
-                                   probeParts: Int = -1,
-                                   saltBuckets: Int = 0): DataFrame = {
+                                   probeParts: Int = -1): DataFrame = {
     val delta0 = newBands.select(col("band"), col("sig"), col(idCol).as("__new_id"))
     val delta = if (broadcastDelta) broadcast(delta0) else delta0
     val vsIndex = indexBands
       .select(col("band"), col("sig"), col(idCol).as("__idx_id"))
       .join(delta, Seq("band", "sig"))
       .groupBy(col("__new_id")).agg(min(col("__idx_id")).as("dup_of_index"))
-    val within = lshCandidates(newBands, idCol, probeParts, saltBuckets)
+    val within = lshCandidates(newBands, idCol, probeParts)
       .groupBy(col("id_b").as("__new_id"))
       .agg(min(col("id_a")).as("dup_of_batch"))
     incomingIds
@@ -518,20 +498,14 @@ object Dedup {
     *
     * `probeParts`: see [[resolvePin]] — exhibit-size callers pass 0.
     *
-    * `saltBuckets`: the same broadcast-threshold fallback as
-    * [[lshCandidates]]. The id pin below assumes the self-join broadcasts
-    * one chunk side; a chunk table too big to broadcast falls back to a
-    * sort-merge join that re-exchanges BOTH sides by (ci, cv) — only
-    * chunks·2^width distinct keys, and the saturated buckets are exactly
-    * the hot ones (the measured 2.5x join-key-pin counterfactual above).
-    * `saltBuckets = S > 1` switches to the salted shuffle-join shape
-    * instead: probe side salted by hash(id) mod S, build side replicated
-    * across all S salts, join key (ci, cv, salt) — identical pairs, hot
-    * buckets split S ways, no broadcast dependency, pin skipped (the
-    * salted join-key exchange IS the intended distribution). */
+    * The id pin below assumes the self-join broadcasts one chunk side; a
+    * chunk table too big to broadcast falls back to a sort-merge join
+    * that re-exchanges BOTH sides by (ci, cv) — only chunks·2^width
+    * distinct keys, and the saturated buckets are exactly the hot ones.
+    * That fallback leaves hot buckets to AQE's skew join, as
+    * [[lshCandidates]] does (SCALING.md, "Key skew"). */
   def simhashBandedDups(sigs: DataFrame, idCol: String, bits: Int,
-                        maxHamming: Int, probeParts: Int = -1,
-                        saltBuckets: Int = 0): DataFrame = {
+                        maxHamming: Int, probeParts: Int = -1): DataFrame = {
     val chunks = maxHamming + 1
     require(bits > 0 && bits <= 64 && chunks <= bits,
       "need at least one signature bit per chunk")
@@ -574,34 +548,20 @@ object Dedup {
     // recognized as redundant and ELIDED — and the pin silently vanishes
     // (measured: right back to the coalesced 147 s). The composite key is
     // still unique per row, so the distribution stays uniform.
-    val pinnedSigs =
-      if (saltBuckets > 1) sigs // salted join key distributes on its own
-      else resolvePin(sigs, probeParts) match {
-        case Some(n) => sigs.repartition(n, col(idCol), col("simhash"))
-        case None => sigs
-      }
+    val pinnedSigs = resolvePin(sigs, probeParts) match {
+      case Some(n) => sigs.repartition(n, col(idCol), col("simhash"))
+      case None => sigs
+    }
     val chunked = pinnedSigs
       .select(col(idCol), col("simhash"),
         explode(array(chunkCols: _*)).as("c"))
       .select(col(idCol), col("simhash"),
         col("c.ci").as("ci"), col("c.cv").as("cv"))
-    val (a, b, joinKey) =
-      if (saltBuckets > 1) (
-        chunked.select(col("ci"), col("cv"), col(idCol).as("id_a"),
-          col("simhash").as("sig_a"),
-          explode(array((0 until saltBuckets).map(lit(_)): _*)).as("salt")),
-        chunked.select(col("ci"), col("cv"), col(idCol).as("id_b"),
-          col("simhash").as("sig_b"),
-          pmod(xxhash64(col(idCol)), lit(saltBuckets.toLong)).cast("int")
-            .as("salt")),
-        Seq("ci", "cv", "salt"))
-      else (
-        chunked.select(col("ci"), col("cv"), col(idCol).as("id_a"),
-          col("simhash").as("sig_a")),
-        chunked.select(col("ci"), col("cv"), col(idCol).as("id_b"),
-          col("simhash").as("sig_b")),
-        Seq("ci", "cv"))
-    a.join(b, joinKey)
+    val a = chunked.select(col("ci"), col("cv"), col(idCol).as("id_a"),
+      col("simhash").as("sig_a"))
+    val b = chunked.select(col("ci"), col("cv"), col(idCol).as("id_b"),
+      col("simhash").as("sig_b"))
+    a.join(b, Seq("ci", "cv"))
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b", "sig_a", "sig_b").distinct()
       .withColumn("hamming", bit_count(expr("sig_a ^ sig_b")))
@@ -648,7 +608,7 @@ object Dedup {
     * friendly), then POINTER-JUMPS: label <- label(label), a self-join
     * that halves the remaining propagation distance — so convergence is
     * O(log diameter) rounds, not O(diameter) (a 1M-link chain resolves in
-    * ~20 rounds). Each round ends in `localCheckpoint`: iterative lineage
+    * ~20 rounds). Each round ends in a [[graft.Graft.snap]]: iterative lineage
     * otherwise grows with every round and Catalyst re-plans the whole
     * history — measured on a 256-node graph, rounds slowed 1.3s -> 4s+ by
     * round 4 without truncation, and stayed flat with it. The driver-side
@@ -658,17 +618,17 @@ object Dedup {
     * separate convergence-probe scan — the kmeansLite pattern of bounded
     * driver work, at one pass over the labels per round.
     *
-    * `reliableCheckpoints = true` is the 1000-executor production mode:
-    * each round's label table goes through a RELIABLE `checkpoint()` to
+    * Reliable mode is the session conf `graft.checkpoint.reliable=true`
+    * that every [[graft.Graft.snap]] reads — the 1000-executor production
+    * mode: each round's label table goes through a RELIABLE checkpoint to
     * `spark.sparkContext.checkpointDir` (HDFS/object store on a cluster)
-    * instead of executor-local `localCheckpoint` blocks, so losing an
-    * executor mid-iteration cannot kill the lineage — localCheckpoint
-    * blocks have no replicas and a truncated-lineage frame cannot be
-    * recomputed. The round structure is identical; checkpoint FILES are
-    * cleaned by the ContextCleaner when
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (the
-    * explicit per-round freeing below only manages in-memory blocks, which
-    * reliable checkpoints don't create).
+    * instead of executor-local blocks, so losing an executor
+    * mid-iteration cannot kill the lineage — local checkpoint blocks have
+    * no replicas and a truncated-lineage frame cannot be recomputed. The
+    * round structure is identical; checkpoint FILES are cleaned by the
+    * ContextCleaner when `spark.cleaner.referenceTracking.cleanCheckpoints
+    * =true` (the explicit per-round freeing below only manages in-memory
+    * blocks, which reliable checkpoints don't create).
     *
     * `onRound`: opt-in convergence telemetry — called once per completed
     * round with (round number starting at 1, labels changed this round).
@@ -705,22 +665,14 @@ object Dedup {
     * and onRound apply to the loop only: the fast path is exact in one
     * pass (no rounds happen, so there is no curve to report). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-                          reliableCheckpoints: Boolean = false,
                           onRound: Option[(Int, Long) => Unit] = None): DataFrame = {
-    if (reliableCheckpoints) require(
-      pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliableCheckpoints=true requires spark.sparkContext.setCheckpointDir " +
-        "(an HDFS/object-store path on a cluster)")
-    def snapshot(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint(true) else df.localCheckpoint(true)
     val ufMaxEdges = pairs.sparkSession.conf
       .get("graft.cc.unionFindMaxEdges", "4000000").toLong
     val longIds = pairs.schema("id_a").dataType == LongType &&
       pairs.schema("id_b").dataType == LongType
     val srcDst = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     if (ufMaxEdges <= 0 || !longIds)
-      return ccPointerJump(srcDst, maxIter, reliableCheckpoints, onRound,
-        snapshot, () => ())
+      return ccPointerJump(srcDst, maxIter, onRound, () => ())
     // one materialization of the (possibly expensive) upstream pair
     // pipeline serves both the size probe and whichever tier runs; the
     // pointer-jump tier builds its symmetrized edge set from this cache
@@ -733,14 +685,14 @@ object Dedup {
     if (nPairs <= ufMaxEdges) {
       try {
         import pairs.sparkSession.implicits._
-        snapshot(raw.as[(Long, Long)]
+        Graft.snap(raw.as[(Long, Long)]
           .mapPartitions(CcUnionFind.collapse _)
           .repartition(1)
           .mapPartitions(CcUnionFind.collapse _)
           .toDF("id", "component"))
       } finally raw.unpersist(false)
     } else
-      ccPointerJump(raw, maxIter, reliableCheckpoints, onRound, snapshot,
+      ccPointerJump(raw, maxIter, onRound,
         () => { raw.unpersist(false); () })
   }
 
@@ -752,9 +704,7 @@ object Dedup {
     * once the edge cache is materialized — the caller uses it to free
     * its upstream pair cache, which nothing below reads again. */
   private def ccPointerJump(srcDst: DataFrame, maxIter: Int,
-                            reliableCheckpoints: Boolean,
                             onRound: Option[(Int, Long) => Unit],
-                            snapshot: DataFrame => DataFrame,
                             onEdgesMaterialized: () => Unit): DataFrame = {
     val edges = srcDst
       .unionByName(srcDst.select(col("dst").as("src"), col("src").as("dst")))
@@ -788,11 +738,11 @@ object Dedup {
     // min after the seed, saving one full join+checkpoint round. The
     // pointer-jumping invariant holds: the seed label is a node id in the
     // same component with label(seed) <= seed.
-    var labels = snapshot(edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("nmin"))
-      .select(col("src").as("id"), least(col("src"), col("nmin")).as("label")))
-    var prevIds = persistedIds -- before0
     try {
+      var labels = Graft.snap(edges.groupBy(col("src"))
+        .agg(min(col("dst")).as("nmin"))
+        .select(col("src").as("id"), least(col("src"), col("nmin")).as("label")))
+      var prevIds = persistedIds -- before0
       var iter = 0
       var converged = false
       while (iter < maxIter && !converged) {
@@ -817,7 +767,7 @@ object Dedup {
         // and `prev` gets pruned above the metrics node so the checkpointed
         // table is (id, label) only, ~1/3 fewer bytes per round at scale
         val obs = Observation(s"cc_round_${iter + 1}")
-        val next = snapshot(stepped
+        val next = Graft.snap(stepped
           .join(stepped.select(col("id").as("jid"), col("label").as("jlabel")),
             stepped("label") === col("jid"), "left")
           .select(stepped("id"), stepped("prev"),
@@ -885,15 +835,10 @@ object Dedup {
   def connectedComponentsIncremental(prevLabels: DataFrame,
                                      deltaPairs: DataFrame,
                                      maxIter: Int = 25,
-                                     reliableCheckpoints: Boolean = false,
                                      onRound: Option[(Int, Long) => Unit] = None): DataFrame = {
-    if (reliableCheckpoints) require(
-      prevLabels.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliableCheckpoints=true requires spark.sparkContext.setCheckpointDir " +
-        "(an HDFS/object-store path on a cluster)")
     val lbl = prevLabels.select(col("id"), col("component"))
     // the three delta-sized frames below are each EAGERLY MATERIALIZED
-    // (checkpoint — reliable in production, executor-local otherwise):
+    // (Graft.snap — reliable in production, executor-local otherwise):
     // every one of them is referenced from several places in the final
     // plan (the emptiness probe, connectedComponents' edges union, the
     // fresh/self-only splits, the returned union), and without
@@ -904,15 +849,13 @@ object Dedup {
     // the delta subtree runs once, the corpus is scanned once for the
     // lookup slice (plus once for the relabel output — irreducible),
     // and everything downstream is joins of delta-sized checkpoints.
-    // NOTE (reliableCheckpoints=true): each batch writes three reliable
+    // NOTE (graft.checkpoint.reliable=true): each batch writes three reliable
     // checkpoints whose FILES outlive the job unless
     // spark.cleaner.referenceTracking.cleanCheckpoints=true — a
     // long-running maintenance loop MUST set it (or sweep the
     // checkpoint dir itself) or the dir grows without bound, exactly
     // as the per-round CC checkpoints already imply (r20 advisor).
-    def snap(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint(true) else df.localCheckpoint(true)
-    val delta = snap(deltaPairs.select(col("id_a"), col("id_b")))
+    val delta = Graft.snap(deltaPairs.select(col("id_a"), col("id_b")))
     // label lookup WITHOUT a corpus shuffle: semi-join the corpus-sized
     // label table down to the delta's endpoint ids first — the id set
     // is delta-sized so AQE broadcasts it and the corpus side is
@@ -924,8 +867,8 @@ object Dedup {
     val deltaIds = delta.select(col("id_a").as("id"))
       .unionByName(delta.select(col("id_b").as("id")))
       .distinct()
-    val touched = snap(lbl.join(deltaIds, Seq("id"), "left_semi"))
-    val mapped = snap(delta
+    val touched = Graft.snap(lbl.join(deltaIds, Seq("id"), "left_semi"))
+    val mapped = Graft.snap(delta
       .join(touched.select(col("id").as("id_a"), col("component").as("__la")),
         Seq("id_a"), "left")
       .join(touched.select(col("id").as("id_b"), col("component").as("__lb")),
@@ -957,8 +900,7 @@ object Dedup {
     if (reduced.isEmpty)
       return lbl.unionByName(
         newIds.select(col("id"), col("id").as("component")))
-    val merged = connectedComponents(reduced, maxIter,
-      reliableCheckpoints, onRound)
+    val merged = connectedComponents(reduced, maxIter, onRound)
     // (touched representative -> merged min); representatives are node
     // ids present in prevLabels, new ids are the semi-join complement
     val remap = merged
@@ -1357,35 +1299,19 @@ object Dedup {
     * bucket) bounds the quadratic stage exactly like LSH bounds MinHash
     * candidate generation. Cost is Σ block², never n².
     *
-    * `saltBuckets`: blocking keys are low-cardinality BY DESIGN (a
-    * first-letter block is 26 values; phonetic codes a few thousand), so
-    * under a shuffle join a hot block hash-lands its whole quadratic
-    * fan-out — plus the levenshtein work, quadratic in string length per
-    * pair — on one task. `saltBuckets = S > 1` joins on (block, salt)
-    * with the probe side salted by hash(id) mod S and the build side
-    * replicated S ways: identical pairs, hot blocks split S ways (same
-    * contract as [[lshCandidates]]). */
+    * Blocking keys are low-cardinality BY DESIGN (a first-letter block is
+    * 26 values; phonetic codes a few thousand), so under a shuffle join a
+    * hot block lands its quadratic fan-out on one task; AQE's skew join
+    * splits it (SCALING.md, "Key skew"). */
   def fuzzyPairs(df: DataFrame, idCol: String, nameCol: String,
-                 block: Column, maxDist: Int, saltBuckets: Int = 0): DataFrame = {
+                 block: Column, maxDist: Int): DataFrame = {
     val withBlock = df.select(col(idCol).as("id"), col(nameCol).as("name"),
       block.as("block"))
-    val (a, b, joinKey) =
-      if (saltBuckets > 1) (
-        withBlock.select(col("id").as("id_a"), col("name").as("name_a"),
-          col("block"),
-          explode(array((0 until saltBuckets).map(lit(_)): _*)).as("salt")),
-        withBlock.select(col("id").as("id_b"), col("name").as("name_b"),
-          col("block"),
-          pmod(xxhash64(col("id")), lit(saltBuckets.toLong)).cast("int")
-            .as("salt")),
-        Seq("block", "salt"))
-      else (
-        withBlock.select(col("id").as("id_a"), col("name").as("name_a"),
-          col("block")),
-        withBlock.select(col("id").as("id_b"), col("name").as("name_b"),
-          col("block")),
-        Seq("block"))
-    a.join(b, joinKey)
+    val a = withBlock.select(col("id").as("id_a"), col("name").as("name_a"),
+      col("block"))
+    val b = withBlock.select(col("id").as("id_b"), col("name").as("name_b"),
+      col("block"))
+    a.join(b, Seq("block"))
       .where(col("id_a") < col("id_b"))
       .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
       .where(col("dist") <= maxDist)

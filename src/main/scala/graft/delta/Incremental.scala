@@ -24,7 +24,9 @@ object Incremental {
     incoming.columns.map(c => incoming(c) <=> accumulated(c)).reduce(_ && _)
 
   /** J4 — rows of `incoming` not already present in `accumulated`
-    * (whole-row, null-safe). */
+    * (whole-row, null-safe). U1, the reference's
+    * `source.append(new_data)` (whose result it discards — bug #4), is
+    * `accumulated.unionByName(delta(incoming, accumulated))`. */
   def delta(incoming: DataFrame, accumulated: DataFrame): DataFrame = {
     val acc = accumulated.select(incoming.columns.toIndexedSeq.map(col): _*)
     incoming.join(acc, nullSafeCond(incoming, acc), "left_anti")
@@ -39,18 +41,6 @@ object Incremental {
     val keys = incoming.select(keyCol).distinct()
     val pruned = accumulated.join(broadcast(keys), Seq(keyCol), "left_semi")
     delta(incoming, pruned)
-  }
-
-  /** U1 — append the delta to the accumulated table (the reference's
-    * `source.append(new_data)`, whose result it discards — bug #4; intended
-    * accumulate semantics implemented). */
-  def append(accumulated: DataFrame, deltaRows: DataFrame): DataFrame =
-    accumulated.unionByName(deltaRows)
-
-  /** Full incremental step: compute delta, return (delta, newAccumulated). */
-  def step(incoming: DataFrame, accumulated: DataFrame): (DataFrame, DataFrame) = {
-    val d = delta(incoming, accumulated)
-    (d, append(accumulated, d))
   }
 
   /** SCD1 upsert (MERGE semantics, latest-wins): rows of `acc` whose key

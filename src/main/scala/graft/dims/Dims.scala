@@ -57,17 +57,16 @@ object Dims {
   /** DateDim (G2, ET:127-191): distinct flight dates -> components + flags +
     * surrogate key. `cap` mirrors the reference's `[:10]` dev-time truncation
     * (ET:184, documented bug #9); pass None for the intended "all dates".
-    * Faithful quarter bug (ET:157) is exposed via `faithfulQuarter`. */
+    * The quarter is the calendar one; the reference's faithful quarter bug
+    * (ET:157) is `ColumnOps.quarterFaithful`. */
   def dates(src: DataFrame, dateCol: String,
-            cap: Option[Int] = None,
-            faithfulQuarter: Boolean = false): DataFrame = {
+            cap: Option[Int] = None): DataFrame = {
     val d = col("full_date")
     val distinctDates = src
       .select(to_date(col(dateCol)).as("full_date"))
       .where(d.isNotNull).distinct()
     val capped = cap.fold(distinctDates)(n =>
       distinctDates.orderBy(d).limit(n))
-    val q = if (faithfulQuarter) quarterFaithful(d) else quarterIntended(d)
     withSurrogateKey(capped, "date_id_pk", d)
       .select(
         col("date_id_pk"),
@@ -77,7 +76,7 @@ object Dims {
         isWorkDay(d).as("is_work_day"),
         // faithful naming: the reference calls the weekend flag "is_weekday"
         isWeekend(d).as("is_weekday"),
-        q.as("quarter"),
+        quarterIntended(d).as("quarter"),
         d)
   }
 

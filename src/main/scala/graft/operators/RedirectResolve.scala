@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Graft
+
 /** Redirect-chain resolution — the crawl-graph step downstream of
   * [[graft.sources.Http.parseHttpResponses]]'s `location` column: a
   * fetched corpus carries (url → redirect target) edges, and every
@@ -21,8 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the state is (url, cur, hops, done) — URLs only, no
   * page bytes; each round is one shuffle keyed by `cur`;
-  * `localCheckpoint` per round cuts the doubling lineage exactly as
-  * the CC loop does. Round count is log-bounded by construction
+  * a [[graft.Graft.snap]] per round cuts the doubling lineage exactly
+  * as the CC loop does. Round count is log-bounded by construction
   * (maxHops 32 → 5 rounds at any corpus size); real redirect chains
   * are ≤ 5 hops (browsers cap at ~20), so the default resolves
   * everything a crawler stores.
@@ -67,23 +69,21 @@ object RedirectResolve {
     // termination one doubling round late and flag exactly-maxHops
     // chains unresolved (caught by RedirectResolveSpec).
     val dstHasEdge = e.select(col("src").as("d2"))
-    var m = nodes.join(e, nodes("url") === e("src"), "left")
+    var m = Graft.snap(nodes.join(e, nodes("url") === e("src"), "left")
       .join(dstHasEdge, col("dst") === col("d2"), "left")
       .select(nodes("url"),
         coalesce(col("dst"), nodes("url")).as("cur"),
         when(col("dst").isNull, 0L).otherwise(1L).as("h"),
-        (col("dst").isNull || col("d2").isNull).as("done"))
-      .localCheckpoint()
+        (col("dst").isNull || col("d2").isNull).as("done")))
     var span = 1L
     while (span < maxHops) {
       val m2 = m.select(col("url").as("u2"), col("cur").as("cur2"),
         col("h").as("h2"), col("done").as("done2"))
-      m = m.join(m2, m("cur") === m2("u2"), "left")
+      m = Graft.snap(m.join(m2, m("cur") === m2("u2"), "left")
         .select(m("url"),
           when(m("done"), m("cur")).otherwise(col("cur2")).as("cur"),
           when(m("done"), m("h")).otherwise(m("h") + col("h2")).as("h"),
-          (m("done") || coalesce(col("done2"), lit(false))).as("done"))
-        .localCheckpoint()
+          (m("done") || coalesce(col("done2"), lit(false))).as("done")))
       span *= 2
     }
     m.select(col("url"),

@@ -325,8 +325,8 @@ object Relational {
       (s, dir) => {
         val orders = t(s, dir, "orders")
         val accumulated = orders.where(col("o_orderkey") % 4 =!= 1)
-        val (_, appended) = Incremental.step(orders, accumulated)
-        appended.groupBy("o_orderstatus")
+        accumulated.unionByName(Incremental.delta(orders, accumulated))
+          .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n"),
             decStr(sum(col("o_totalprice").cast(dec))).as("sum_total"))
           .orderBy("o_orderstatus")

@@ -310,11 +310,10 @@ object Similarity {
     * vector; vectors move only for the final per-candidate cosine check,
     * twice a |candidates|-bounded hash join. */
   def lshNearDupPairs(vecs: DataFrame, threshold: Double, bits: Int,
-                      maxMismatch: Int, probeParts: Int = -1,
-                      saltBuckets: Int = 0): DataFrame = {
+                      maxMismatch: Int, probeParts: Int = -1): DataFrame = {
     val sigs = vecs.select(col("id"), signBucket(col("vec"), bits).as("simhash"))
     val cand = graft.dedup.Dedup
-      .simhashBandedDups(sigs, "id", bits, maxMismatch, probeParts, saltBuckets)
+      .simhashBandedDups(sigs, "id", bits, maxMismatch, probeParts)
       .select("id_a", "id_b")
     val va = vecs.select(col("id").as("id_a"), col("vec").as("va"),
       norm(col("vec")).as("na"))

@@ -218,10 +218,9 @@ object EventStreams {
     * broadcast with the `broadcastDelta = false` fallback for oversized
     * batches. The index grows by ~bands rows per admitted doc per batch;
     * [[compactAdmissionIndex]] is the matching maintenance op when file
-    * counts matter. `probeParts`/`saltBuckets` forward to the within-batch
-    * [[graft.dedup.Dedup.lshCandidates]] self-join (same hot-bucket
-    * salting fallback the batch family has; defaults leave AQE in
-    * charge). */
+    * counts matter. `probeParts` forwards to the within-batch
+    * [[graft.dedup.Dedup.lshCandidates]] self-join; a hot bucket there is
+    * split by AQE's skew join (SCALING.md, "Key skew"). */
   def processDedupAdmissionBatch(batch: DataFrame, batchId: Long,
                                  indexPath: String, decisionsPath: String,
                                  idCol: String = "doc_id",
@@ -230,7 +229,6 @@ object EventStreams {
                                  bands: Int = 4,
                                  broadcastDelta: Boolean = true,
                                  probeParts: Int = -1,
-                                 saltBuckets: Int = 0,
                                  labelsPath: Option[String] = None): Unit = {
     val spark = batch.sparkSession
     import graft.dedup.Dedup
@@ -257,7 +255,7 @@ object EventStreams {
     try {
       val decisions = Dedup.incrementalLshDedupFromBands(
         idx, newBands, batch.select(col(idCol)), idCol, broadcastDelta,
-        probeParts, saltBuckets)
+        probeParts)
       decisions.withColumn("batch_id", lit(batchId))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -318,7 +316,7 @@ object EventStreams {
             Seq("band", "sig"))
           .select("id_a", "id_b").distinct()
         val edges = vsIdx.unionByName(
-          Dedup.lshCandidates(newBands, idCol, probeParts, saltBuckets))
+          Dedup.lshCandidates(newBands, idCol, probeParts))
         Dedup.connectedComponentsIncremental(prevLabels, edges)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
@@ -346,7 +344,6 @@ object EventStreams {
                          numHashes: Int = 16, bands: Int = 4,
                          broadcastDelta: Boolean = true,
                          probeParts: Int = -1,
-                         saltBuckets: Int = 0,
                          labelsPath: Option[String] = None): StreamingQuery =
     docs.writeStream
       .outputMode("append")
@@ -354,7 +351,7 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processDedupAdmissionBatch(batch, batchId, indexPath, decisionsPath,
           idCol, textCol, shingleN, numHashes, bands, broadcastDelta,
-          probeParts, saltBuckets, labelsPath)
+          probeParts, labelsPath)
       }
       .start()
 
@@ -431,21 +428,6 @@ object EventStreams {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id").parquet(keptPath)
   }
-
-  /** [[processCurationBatch]] wired into foreachBatch + AvailableNow —
-    * the streaming twin of the batch curation funnel. */
-  def curationSink(docs: DataFrame, indexPath: String, decisionsPath: String,
-                   keptPath: String, idCol: String = "doc_id",
-                   textCol: String = "text",
-                   minQuality: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processCurationBatch(batch, batchId, indexPath, decisionsPath,
-          keptPath, idCol, textCol, minQuality)
-      }
-      .start()
 
   /** Admission-index maintenance: compact every `batch_id=N` partition of
     * the accreting band-signature index into ~`targetFileBytes` files.

@@ -347,7 +347,7 @@ object Bpe {
             best.head.getLong(2))
         learned += ((rank, l, r, c))
         seen += (l + r)
-        // per-round EAGER localCheckpoint, the CC-loop discipline: it
+        // per-round EAGER Graft.snap, the CC-loop discipline: it
         // cuts the logical plan (LogicalRDD over materialized blocks),
         // so every round plans against a depth-1 input. The previous
         // persist-per-round + checkpoint-every-16 variant was measured
@@ -357,9 +357,9 @@ object Bpe {
         // in each window re-derived ever-deeper typed-map chains.
         // Checkpointed RDD blocks are released by the ContextCleaner
         // when the previous round's frame goes unreferenced.
-        cur = cur.as[(Long, Array[String])]
+        cur = graft.Graft.snap(cur.as[(Long, Array[String])]
           .map { case (cn, toks) => (cn, applyPair(toks, l, r)) }
-          .toDF("cnt", "toks").localCheckpoint()
+          .toDF("cnt", "toks"))
       }
     }
     learned.toSeq

@@ -101,34 +101,65 @@ class CorpusOpsSpec extends SparkSpec {
     assert(got.count() === 0)
   }
 
-  test("connectedComponents reliableCheckpoints mode labels identically") {
+  test("reliable checkpoint conf reaches CC, redirect and BPE truncation sites") {
     import spark.implicits._
-    // the 1000-executor production mode (reliable checkpoint files instead
-    // of executor-local blocks) was require-guarded but never EXECUTED —
-    // run one real rehearsal: same chain+star graph through both modes,
-    // label tables must be identical and the guard must fire without a dir
+    import graft.dedup.Dedup
+    // `graft.checkpoint.reliable=true` is the one checkpoint policy: every
+    // lineage-truncating operator must honour it through Graft.snap — same
+    // results as the executor-local default, real checkpoint files under
+    // the dir, and a loud refusal without one
     val pairs = ((1L to 40L).sliding(2).map(s => (s.head, s.last)).toSeq ++
       (50L to 60L).map(i => (100L, i))).toDF("id_a", "id_b")
-    val noDir = intercept[IllegalArgumentException] {
-      graft.dedup.Dedup.connectedComponents(pairs, reliableCheckpoints = true)
+    val e0 = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("id_a", "id_b")
+    val e1 = Seq((2L, 3L), (6L, 7L), (8L, 9L)).toDF("id_a", "id_b")
+    val redirects = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"),
+      ("y", "x")).toDF("src", "dst")
+    val corpus = Seq("aaab", "aaab", "ab").toDF("txt")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().toSet
+    def loopTier[T](f: => T): T = {
+      spark.conf.set("graft.cc.unionFindMaxEdges", "0")
+      try f finally spark.conf.unset("graft.cc.unionFindMaxEdges")
     }
-    assert(noDir.getMessage.contains("setCheckpointDir"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt.toString)
-    try {
-      val reliable = graft.dedup.Dedup
-        .connectedComponents(pairs, reliableCheckpoints = true)
-        .as[(Long, Long)].collect().toSet
-      val local = graft.dedup.Dedup.connectedComponents(pairs)
-        .as[(Long, Long)].collect().toSet
-      assert(reliable === local)
-      assert(reliable.nonEmpty)
-      // checkpoint FILES actually materialized under the reliable dir
-      val fs = new org.apache.hadoop.fs.Path(ckpt.toString)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(fs.listStatus(new org.apache.hadoop.fs.Path(ckpt.toString))
-        .nonEmpty, "no reliable checkpoint files were written")
-    } finally spark.sparkContext.setCheckpointDir(null)
+    val sites: Seq[(String, () => Any)] = Seq(
+      "connectedComponents union-find tier" ->
+        (() => labels(Dedup.connectedComponents(pairs))),
+      "connectedComponents round loop" ->
+        (() => loopTier(labels(Dedup.connectedComponents(pairs)))),
+      "connectedComponentsIncremental" -> (() => labels(Dedup
+        .connectedComponentsIncremental(Dedup.connectedComponents(e0), e1))),
+      "resolveRedirects" -> (() => graft.operators.RedirectResolve
+        .resolveRedirects(redirects, "src", "dst").collect().toSet),
+      // maxDriverTypes = 0: the distributed merge loop, which snaps per round
+      "learnMerges" -> (() => graft.text.Bpe
+        .learnMerges(corpus, "txt", 6, maxDriverTypes = 0).collect().toSeq))
+    val local = sites.map { case (name, run) => name -> run() }.toMap
+    def remove(dir: java.nio.file.Path): Unit = {
+      val s = java.nio.file.Files.walk(dir)
+      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally s.close()
+    }
+    spark.conf.set("graft.checkpoint.reliable", "true")
+    try sites.foreach { case (name, run) =>
+      val noDir = intercept[IllegalArgumentException](run())
+      assert(noDir.getMessage.contains("setCheckpointDir"), name)
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_reliable")
+      spark.sparkContext.setCheckpointDir(ckpt.toString)
+      try {
+        assert(run() === local(name), name)
+        assert(regularFilesUnder(ckpt) > 0,
+          s"$name wrote no reliable checkpoint files")
+      } finally {
+        spark.sparkContext.setCheckpointDir(null)
+        remove(ckpt)
+      }
+    } finally {
+      // unset both: a leaked conf or dir makes every later local-mode
+      // test, and every no-dir refusal, pass or fail for the wrong reason
+      spark.conf.unset("graft.checkpoint.reliable")
+      spark.sparkContext.setCheckpointDir(null)
+    }
   }
 
   test("connectedComponentsIncremental: 3-batch sequence stays bit-equal " +
@@ -757,27 +788,6 @@ class CorpusOpsSpec extends SparkSpec {
     assert(rounds.toSeq === Seq((1, 4L), (2, 1L), (3, 0L)))
   }
 
-  test("connectedComponents reliable-checkpoint mode matches local mode") {
-    import spark.implicits._
-    val pairs = Seq((12L, 11L), (11L, 10L), (10L, 9L), (9L, 8L), (8L, 7L),
-      (101L, 100L)).toDF("id_a", "id_b")
-    // without a checkpoint dir the production mode must refuse loudly
-    intercept[IllegalArgumentException] {
-      graft.dedup.Dedup.connectedComponents(pairs, reliableCheckpoints = true)
-    }
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val got = graft.dedup.Dedup
-        .connectedComponents(pairs, reliableCheckpoints = true)
-        .as[(Long, Long)].collect().toMap
-      assert((7L to 12L).forall(got(_) == 7L))
-      assert(got(100L) == 100L && got(101L) == 100L)
-    // clear the session-wide dir: leaking it made every later
-    // no-checkpoint-dir guard assertion in the JVM vacuously pass (r20)
-    } finally spark.sparkContext.setCheckpointDir(null)
-  }
-
   test("connectedComponents refuses to return unconverged labels at maxIter") {
     import spark.implicits._
     // diameter-5 chain needs >1 pointer-jumping round; maxIter=1 must fail
@@ -1255,95 +1265,6 @@ class CorpusOpsSpec extends SparkSpec {
     assert(!skipped.queryExecution.executedPlan.toString
       .contains("REPARTITION_BY_NUM"),
       "probeParts=0 must not inject a repartition")
-  }
-
-  test("salted lshCandidates is result-invariant and holds past the broadcast threshold") {
-    // the scaladoc'd fallback for a band table too big to broadcast: the
-    // salted shape must (a) produce the identical pair set and (b) stay
-    // skew-safe with broadcast joins OFF — the plan must join on the
-    // salted key through a shuffle join, never a broadcast, so a corpus
-    // crossing the threshold degrades to this shape instead of
-    // serializing a hot bucket's quadratic fan-out into one task
-    val docs = graft.sources.Sources.table(spark, sf, "documents")
-      .where(col("doc_id") < 128)
-    val bands = graft.dedup.Dedup.lshBands(
-      graft.dedup.Dedup.minhashWide(
-        graft.dedup.Dedup.shingles(docs, "doc_id", "text", 3), "doc_id", 16),
-      "doc_id", 16, 4)
-    val base = graft.dedup.Dedup.lshCandidates(bands, "doc_id", probeParts = 0)
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val salted = graft.dedup.Dedup.lshCandidates(
-        bands, "doc_id", probeParts = 0, saltBuckets = 4)
-      assert(salted.exceptAll(base).isEmpty && base.exceptAll(salted).isEmpty,
-        "salted pair set must equal the unsalted one")
-      salted.collect() // finalize the AQE plan before inspecting it
-      val plan = salted.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"salted shape must not depend on a broadcast plan:\n$plan")
-      assert(plan.contains("salt"),
-        s"salt column missing from the join key:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-    }
-  }
-
-  test("salted fuzzyPairs is result-invariant past the broadcast threshold") {
-    // blocking keys are low-cardinality by design, so the skew story is
-    // sharper than LSH buckets: one hot block = one task doing quadratic
-    // levenshtein work. Same contract: identical pairs, salted join key,
-    // no broadcast dependency
-    val cust = graft.sources.Sources.table(spark, sf, "customer")
-      .where(col("c_custkey") < 3000)
-    val blockKey = expr("substring(c_name, 1, length(c_name) - 2)")
-    val base = graft.dedup.Dedup.fuzzyPairs(
-      cust, "c_custkey", "c_name", blockKey, maxDist = 1)
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val salted = graft.dedup.Dedup.fuzzyPairs(
-        cust, "c_custkey", "c_name", blockKey, maxDist = 1, saltBuckets = 4)
-      assert(salted.exceptAll(base).isEmpty && base.exceptAll(salted).isEmpty,
-        "salted pair set must equal the unsalted one")
-      salted.collect()
-      val plan = salted.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"salted shape must not depend on a broadcast plan:\n$plan")
-      assert(plan.contains("salt"),
-        s"salt column missing from the join key:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-    }
-  }
-
-  test("salted simhashBandedDups is result-invariant past the broadcast threshold") {
-    // same contract as the lshCandidates test above, for the pigeonhole
-    // chunk join: its (ci, cv) key has only chunks*2^width distinct values
-    // so the SMJ fallback serializes hot chunks — the salted shape must
-    // keep the exact pair set (banded simhash is recall-lossless) while
-    // joining on the salted key through a shuffle join
-    val docs = graft.sources.Sources.table(spark, sf, "documents")
-      .where(col("doc_id") < 128)
-    val sigs = graft.dedup.Dedup.simhash(docs, "doc_id", "text", 16)
-    val base = graft.dedup.Dedup.simhashBandedDups(
-      sigs, "doc_id", 16, 3, probeParts = 0)
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val salted = graft.dedup.Dedup.simhashBandedDups(
-        sigs, "doc_id", 16, 3, saltBuckets = 4)
-      assert(salted.exceptAll(base).isEmpty && base.exceptAll(salted).isEmpty,
-        "salted pair set must equal the unsalted one")
-      salted.collect()
-      val plan = salted.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"salted shape must not depend on a broadcast plan:\n$plan")
-      assert(plan.contains("salt"),
-        s"salt column missing from the join key:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-    }
   }
 
   test("lshNearDupPairs recovers planted near-dups exactly (q100 shape)") {

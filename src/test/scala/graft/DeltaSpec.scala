@@ -32,7 +32,8 @@ class DeltaSpec extends SparkSpec {
   test("old + delta == incoming total (accumulation invariant)") {
     val orders = Sources.table(spark, sf, "orders")
     val acc = orders.where("o_orderkey % 4 <> 1")
-    val (delta, appended) = Incremental.step(orders, acc)
+    val delta = Incremental.delta(orders, acc)
+    val appended = acc.unionByName(delta)
     assert(acc.count() + delta.count() === orders.count())
     assert(appended.count() === orders.count())
     assert(appended.exceptAll(orders).isEmpty)

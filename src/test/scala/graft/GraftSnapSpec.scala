@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 /** Graft.snap — the shared plan-truncation helper for shared frames in
   * query bodies (ANN-PQ codebooks/codes/candidates, q185's fingerprint
   * subtrees). Both modes must produce identical frames; reliable mode
-  * must write real checkpoint files and fail loudly without a dir —
-  * the same contract Dedup.connectedComponents' reliableCheckpoints
-  * already carries (r20: the bare localCheckpoints in the ANN-PQ query
-  * bodies hardcoded the unrecoverable-at-scale mode). */
+  * must write real checkpoint files and fail loudly without a dir
+  * (r20: the bare localCheckpoints in the ANN-PQ query bodies hardcoded
+  * the unrecoverable-at-scale mode). CorpusOpsSpec checks that the
+  * iterative operators (CC, redirects, BPE) honour the same conf. */
 class GraftSnapSpec extends SparkSpec {
 
   private def sample() = {
@@ -40,10 +40,8 @@ class GraftSnapSpec extends SparkSpec {
       try {
         val snapped = Graft.snap(sample())
         assert(snapped.collect().toSet === sample().collect().toSet)
-        val fs = new org.apache.hadoop.fs.Path(ckpt.toString)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        assert(fs.listStatus(new org.apache.hadoop.fs.Path(ckpt.toString))
-          .nonEmpty, "no reliable checkpoint files were written")
+        assert(regularFilesUnder(ckpt) > 0,
+          "no reliable checkpoint files were written")
       } finally spark.sparkContext.setCheckpointDir(null)
     } finally spark.conf.unset("graft.checkpoint.reliable")
   }

@@ -67,6 +67,9 @@ class OpsSpec extends SparkSpec {
     val july = to_date(lit("2026-07-15"))
     assert(one(quarterFaithful(july)) === 2)  // int(7/4)+1 = 2, calendar says 3
     assert(one(quarterIntended(july)) === 3)
+    val november = to_date(lit("2018-11-01"))
+    assert(one(quarterFaithful(november)) === 3) // int(11/4)+1 = 3, calendar says 4
+    assert(one(quarterIntended(november)) === 4)
   }
 
   test("P19 time-of-day boundaries") {

@@ -25,6 +25,16 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Regular files anywhere under `dir`. A checkpoint-file check counts
+    * these: `setCheckpointDir` makes its own subdirectory at once, so a
+    * non-empty listing of `dir` does not show that anything was
+    * checkpointed. */
+  def regularFilesUnder(dir: java.nio.file.Path): Long = {
+    val s = java.nio.file.Files.walk(dir)
+    try s.filter(java.nio.file.Files.isRegularFile(_)).count()
+    finally s.close()
+  }
+
   /** Spark jobs that `body` starts, counted by a listener: `body` runs
     * under a job group of its own, and a marker job started after it
     * drains the listener bus (events arrive in order). */

@@ -557,7 +557,7 @@ class StreamingSpec extends SparkSpec {
                          batchId: Long) =>
           EventStreams.processDedupAdmissionBatch(batch, batchId,
             root + "/index", root + "/decisions", "doc_id", "text",
-            3, 16, 4, true, -1, 0)
+            3, 16, 4, true, -1)
         }.start()
       try q.processAllAvailable() finally q.stop()
     }
