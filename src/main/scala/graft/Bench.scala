@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — prints ONE compact JSON line as the LAST stdout line.
   *
@@ -133,8 +132,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
+    val spark = Graft.session(cpus.toInt)
     // ERROR, not WARN: late WARN lines on deferred stderr would trail the
     // JSON in the driver's capture window
     spark.sparkContext.setLogLevel("ERROR")

@@ -75,11 +75,12 @@ object Graft {
       df.checkpoint(true)
     } else df.localCheckpoint(true)
 
-  /** Local session with the recommended configuration. */
-  def session(cores: Int = Runtime.getRuntime.availableProcessors(),
-              appName: String = "graft"): SparkSession = {
+  /** Local session with the recommended configuration — the one session
+    * builder of the Bench, Verify and QuickBench mains. Logs at WARN; a
+    * caller that wants less sets its own level afterwards. */
+  def session(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = configure(
-      SparkSession.builder().master(s"local[$cores]").appName(appName), cores)
+      SparkSession.builder().master(s"local[$cores]").appName("graft"), cores)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -314,24 +314,17 @@ object Dedup {
 
   /** Full MinHash-LSH pipeline: shingle -> minhash -> bands -> candidates.
     * The band table feeds BOTH sides of the candidate self-join and Catalyst
-    * does not reuse non-identical exchange subtrees: set
-    * `persistIntermediate` on big corpora to materialize it once instead of
-    * recomputing the shingle explode + two aggregations per side (measured:
-    * a net LOSS below ~100k docs, where recompute beats cache I/O — hence
-    * opt-in, not default). The cache is session-owned: nothing can
-    * unpersist it after this returns (the band table is not reachable from
-    * the result), so long-lived sessions batching many corpora should keep
-    * the default or call spark.catalog.clearCache() between batches. */
+    * does not reuse non-identical exchange subtrees, so each side recomputes
+    * the shingle explode + two aggregations. That is deliberate: caching the
+    * band table was measured a net LOSS below ~100k docs, where recompute
+    * beats cache I/O, and an internal cache would be session-owned (not
+    * reachable from the result, so nothing could unpersist it). */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-                 persistIntermediate: Boolean = false,
                  probeParts: Int = -1): DataFrame = {
     val sh = shingles(docs, idCol, textCol, shingleN)
-    val bandsDf0 = lshBands(minhashWide(sh, idCol, numHashes), idCol, numHashes, bands)
-    val bandsDf = if (persistIntermediate)
-      bandsDf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else bandsDf0
-    lshCandidates(bandsDf, idCol, probeParts)
+    lshCandidates(lshBands(minhashWide(sh, idCol, numHashes), idCol,
+      numHashes, bands), idCol, probeParts)
   }
 
   /** Incremental (delta) dedup: keep/drop DECISIONS for a new batch of
@@ -726,8 +719,9 @@ object Dedup {
     // land in that round's id set, and get freed after round 1 — every
     // later round would then recompute the union+distinct from the pairs
     // input. (The id-set diffing assumes this loop is the only code
-    // persisting RDDs on the session during the rounds — same session-
-    // owned-cache assumption as minhashLsh's persistIntermediate.)
+    // persisting RDDs on the session during the rounds — the same
+    // session-owned-cache assumption as sourceOverlapMatrix's cached
+    // vocabulary.)
     edges.count()
     onEdgesMaterialized()
     val before0 = persistedIds
@@ -1052,6 +1046,10 @@ object Dedup {
         (col("n_overlap") / col("eval_shingles")).as("eval_coverage"))
   }
 
+  /** Bit positions the bloom screen sets and tests per shingle (k; see
+    * [[contaminationBloom]] for the false-positive rate it gives). */
+  private val BloomHashes = 8
+
   /** BLOOM-FILTER contamination screen — the 100 TB-shaped variant of
     * [[contamination]]: instead of broadcasting the eval set's shingle
     * STRINGS (8+ bytes each plus hash-table overhead) and joining, the
@@ -1059,7 +1057,7 @@ object Dedup {
     * bloom bitmap (4 bytes/shingle at the default) that ships ONCE per
     * executor as a broadcast variable, and the probe is a scan:
     * shingles explode, the md5 double-hash runs in codegen, one JVM
-    * probe function tests `numHashes` bit positions against the
+    * probe function tests k = 8 bit positions against the
     * broadcast bitmap, and non-hits drop BEFORE any exchange — the
     * corpus never shuffles; only the FLAGGED ids (≈ true contamination
     * + ~0.2% FP) reach the distinct + the broadcast join-back.
@@ -1104,10 +1102,9 @@ object Dedup {
   def contaminationBloom(train: DataFrame, evalDocs: DataFrame,
                          idCol: String, textCol: String, n: Int = 3,
                          bitsPerShingle: Int = 32,
-                         numHashes: Int = 8,
                          maxBitmapBytes: Long = 64L << 20): DataFrame = {
     val flagged = bloomFlaggedIds(train, evalDocs, idCol, textCol, n,
-      bitsPerShingle, numHashes, maxBitmapBytes)
+      bitsPerShingle, maxBitmapBytes)
       .withColumn("__cb_hit", lit(true))
     train
       .join(flagged, Seq(idCol), "left")
@@ -1124,12 +1121,10 @@ object Dedup {
   private def bloomFlaggedIds(train: DataFrame, evalDocs: DataFrame,
                               idCol: String, textCol: String, n: Int,
                               bitsPerShingle: Int,
-                              numHashes: Int,
                               maxBitmapBytes: Long): DataFrame = {
     require(n >= 1, s"n: $n")
     require(bitsPerShingle >= 2 && bitsPerShingle <= 64,
       s"bitsPerShingle: $bitsPerShingle")
-    require(numHashes >= 1 && numHashes <= 16, s"numHashes: $numHashes")
     require(maxBitmapBytes >= 8, s"maxBitmapBytes: $maxBitmapBytes")
     Seq("bloom_contaminated", "__cb_hit", "__cb_toks", "__cb_sh").foreach(c =>
       require(!train.columns.contains(c),
@@ -1168,7 +1163,7 @@ object Dedup {
         pmod(h1 + lit(i.toLong) * h2, lit(mB))
       }
       val wordRows = evalSh
-        .select(explode(array((0 until numHashes)
+        .select(explode(array((0 until BloomHashes)
           .map(i => posC(col("shingle"), i)): _*)).as("p"))
         .groupBy(floor(col("p") / 64).cast(IntegerType).as("w"))
         .agg(expr(
@@ -1210,7 +1205,7 @@ object Dedup {
     // path. The broadcast itself is freed by the ContextCleaner when the
     // UDF's closure is GC'd.
     val bmB = train.sparkSession.sparkContext.broadcast(bitmap)
-    val kH = numHashes
+    val kH = BloomHashes
     val mB = mBits
     val probe = udf((md5Hex: String) => {
       val h1 = java.lang.Long.parseLong(md5Hex.substring(0, 14), 16)
@@ -1254,14 +1249,13 @@ object Dedup {
                          idCol: String, textCol: String, n: Int = 3,
                          minOverlap: Int = 1,
                          bitsPerShingle: Int = 32,
-                         numHashes: Int = 8,
                          maxBitmapBytes: Long = 64L << 20): DataFrame = {
     // the flagged-id sliver comes straight from the screen's core —
     // routing through contaminationBloom's full output (a corpus-wide
     // left join) and re-filtering it cost an extra corpus scan + join
     // for rows this composition immediately discards (r19)
     val flagged = bloomFlaggedIds(train, evalDocs, idCol, textCol, n,
-      bitsPerShingle, numHashes, maxBitmapBytes)
+      bitsPerShingle, maxBitmapBytes)
     val sliver = train.join(flagged, Seq(idCol), "left_semi")
     val hits = contamination(sliver, evalDocs, idCol, textCol, n,
       minOverlap)
@@ -1284,11 +1278,8 @@ object Dedup {
     * corpus); the SMJ fallback costs the corpus one exchange on id. */
   def decontaminate(train: DataFrame, evalDocs: DataFrame, idCol: String,
                     textCol: String, n: Int = 3,
-                    minOverlap: Int = 1,
-                    shingler: (DataFrame, String, String, Int) => DataFrame =
-                      shingles): DataFrame = {
-    val hits = contamination(train, evalDocs, idCol, textCol, n, minOverlap,
-      shingler)
+                    minOverlap: Int = 1): DataFrame = {
+    val hits = contamination(train, evalDocs, idCol, textCol, n, minOverlap)
       .select(col("train_id").as(idCol)).distinct()
     train.join(hits, Seq(idCol), "left_anti")
   }
@@ -1319,19 +1310,12 @@ object Dedup {
   }
 
   /** Shared tail of the exact pairwise shingle-overlap operators:
-    * (id_a, id_b, inter, na, nb) over DISTINCT n-gram shingles.
-    * Inherits shingles' one-row-per-id PRECONDITION: a duplicated id
-    * inflates both `inter` and the sizes, silently skewing every derived
-    * score. Set graft.dedup.checkIds=true to enforce. Shingles feed the
-    * intersect self-join (twice) AND the size table — persistIntermediate
-    * materializes them once on big corpora (see minhashLsh note for why
-    * this is opt-in). */
-  private def shingleOverlap(docs: DataFrame, idCol: String, textCol: String,
-                             n: Int, persistIntermediate: Boolean): DataFrame = {
-    val sh0 = shingles(docs, idCol, textCol, n)
-    val sh = if (persistIntermediate)
-      sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sh0
+    * (id_a, id_b, inter, na, nb) over DISTINCT shingles of an
+    * already-shingled (id, shingle) frame. Inherits shingles' one-row-
+    * per-id PRECONDITION: a duplicated id inflates both `inter` and the
+    * sizes, silently skewing every derived score. Set
+    * graft.dedup.checkIds=true to enforce. */
+  private def shingleOverlap(sh: DataFrame, idCol: String): DataFrame = {
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
     val a = sh.select(col(idCol).as("id_a"), col("shingle"))
     val b = sh.select(col(idCol).as("id_b"), col("shingle"))
@@ -1349,33 +1333,18 @@ object Dedup {
     * frequency² — candidate-restrict or sample the input at scale
     * (LSH banding is the scale path; this is the exact referee). */
   def jaccardFromShingles(sh: DataFrame, idCol: String,
-                          minJaccard: Double): DataFrame = {
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-    val a = sh.select(col(idCol).as("id_a"), col("shingle"))
-    val b = sh.select(col(idCol).as("id_b"), col("shingle"))
-    a.join(b, Seq("shingle"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col(idCol).as("id_a"), col("n_sh").as("na")),
-        Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("n_sh").as("nb")),
-        Seq("id_b"))
+                          minJaccard: Double): DataFrame =
+    shingleOverlap(sh, idCol)
       .withColumn("jaccard",
         col("inter") / (col("na") + col("nb") - col("inter")))
       .where(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "inter", "jaccard")
-  }
 
   /** Exact pairwise n-gram Jaccard over candidate or sampled docs.
     * inter/union on DISTINCT shingles; `minJaccard` filters output. */
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int, minJaccard: Double,
-                   persistIntermediate: Boolean = false): DataFrame =
-    shingleOverlap(docs, idCol, textCol, n, persistIntermediate)
-      .withColumn("jaccard",
-        col("inter") / (col("na") + col("nb") - col("inter")))
-      .where(col("jaccard") >= minJaccard)
-      .select("id_a", "id_b", "inter", "jaccard")
+                   n: Int, minJaccard: Double): DataFrame =
+    jaccardFromShingles(shingles(docs, idCol, textCol, n), idCol, minJaccard)
 
   /** Cross-document repeated-SPAN detection — the span-level analogue of
     * suffix-array substring dedup ("Deduplicating Training Data Makes
@@ -1576,9 +1545,8 @@ object Dedup {
     * cost shape as [[ngramJaccard]]; run it on LSH/blocked candidates at
     * corpus scale, never all-pairs. */
   def ngramContainment(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, minContainment: Double,
-                       persistIntermediate: Boolean = false): DataFrame =
-    shingleOverlap(docs, idCol, textCol, n, persistIntermediate)
+                       n: Int, minContainment: Double): DataFrame =
+    shingleOverlap(shingles(docs, idCol, textCol, n), idCol)
       .withColumn("containment",
         col("inter") / least(col("na"), col("nb")))
       .where(col("containment") >= minContainment)
@@ -1612,8 +1580,9 @@ object Dedup {
     * string-keyed counts when the vocabulary fits the wire (tests pin
     * both paths equal on collision-free corpora). `persistIntermediate`
     * materializes the (stratum, key) vocabulary once for the self-join's
-    * two branches + the size aggregate (the [[minhashLsh]] contract and
-    * caveat). Unlike the pair-join family, caching wins here even on
+    * two branches + the size aggregate; the cache is session-owned (not
+    * reachable from the result, so nothing can unpersist it after
+    * return). Unlike the pair-join family, caching wins here even on
     * SMALL corpora — the recomputed subtree is the full tokenize+explode
     * +distinct, 3x per call (measured at 5k docs/sf0.1: 2.66 s
     * recomputed vs 2.10 s cached steady-state, 8.1 vs 3.7 cold) — so

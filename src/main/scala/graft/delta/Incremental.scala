@@ -15,8 +15,11 @@ import org.apache.spark.sql.functions._
   *
   * SCALE NOTE: whole-row anti join shuffles both sides on all columns
   * (or broadcasts the smaller side). At 100 TB this is the dominant cost of
-  * an incremental load; [[deltaPartitionPruned]] bounds it by anti-joining
-  * only the partitions of the accumulated table that the increment touches.
+  * an incremental load. The planned bound is ROADMAP direction 4's
+  * semi-join design: first semi-join the stored table against the
+  * broadcast batch on the equality columns, then anti-join the batch
+  * against that batch-sized match, so the history is never built as a
+  * join side.
   */
 object Incremental {
 
@@ -30,17 +33,6 @@ object Incremental {
   def delta(incoming: DataFrame, accumulated: DataFrame): DataFrame = {
     val acc = accumulated.select(incoming.columns.toIndexedSeq.map(col): _*)
     incoming.join(acc, nullSafeCond(incoming, acc), "left_anti")
-  }
-
-  /** J4 variant for huge tables: prune `accumulated` to the partition-key
-    * values present in `incoming` before the anti join, so only touched
-    * partitions are scanned/shuffled. `keyCol` should be the physical
-    * partition column (e.g. fl_date). */
-  def deltaPartitionPruned(incoming: DataFrame, accumulated: DataFrame,
-                           keyCol: String): DataFrame = {
-    val keys = incoming.select(keyCol).distinct()
-    val pruned = accumulated.join(broadcast(keys), Seq(keyCol), "left_semi")
-    delta(incoming, pruned)
   }
 
   /** SCD1 upsert (MERGE semantics, latest-wins): rows of `acc` whose key

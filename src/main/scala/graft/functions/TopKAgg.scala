@@ -42,40 +42,3 @@ object TopKAgg {
   /** Column form: `top_k(col, 5)` usable in any agg. */
   def topK(c: Column, k: Int): Column = udaf(new TopKAgg(k)).apply(c)
 }
-
-/** Bounded-memory group-wise bottom-k over (sortKey, id) pairs, ascending
-  * lexicographic — the deterministic-downsampling twin of [[TopKAgg]]: where
-  * a per-key `row_number` window shuffles and sorts EVERY row of the group
-  * (the whole table, for a cap stage), this keeps an O(k) buffer per group
-  * with map-side partial merge, so a pathologically hot key (one domain
-  * owning half the corpus) costs k slots instead of a single-task sort of
-  * the entire group. Output is the k smallest pairs in rank order. */
-class BottomKPairsAgg(k: Int)
-    extends Aggregator[(Long, Long), Array[(Long, Long)], Array[(Long, Long)]] {
-  require(k > 0)
-
-  def zero: Array[(Long, Long)] = Array.empty
-
-  def reduce(buf: Array[(Long, Long)], x: (Long, Long)): Array[(Long, Long)] =
-    if (buf.length < k) (buf :+ x).sorted
-    else if (Ordering[(Long, Long)].lt(x, buf(k - 1))) {
-      buf(k - 1) = x; buf.sorted
-    } else buf
-
-  def merge(a: Array[(Long, Long)], b: Array[(Long, Long)]): Array[(Long, Long)] =
-    (a ++ b).sorted.take(k)
-
-  def finish(buf: Array[(Long, Long)]): Array[(Long, Long)] = buf.sorted
-
-  def bufferEncoder: Encoder[Array[(Long, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[(Long, Long)]]()
-  def outputEncoder: Encoder[Array[(Long, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[(Long, Long)]]()
-}
-
-object BottomKPairsAgg {
-  /** Column form: `bottomK(sortKey, id, k)` — the tuple input surfaces as
-    * two LONG parameters (udaf flattens product encoders). */
-  def bottomK(sortKey: Column, id: Column, k: Int): Column =
-    udaf(new BottomKPairsAgg(k)).apply(sortKey, id)
-}

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.text.TextOps
 
@@ -96,7 +96,7 @@ object Downsample {
     * the shuffle — every map partition pre-prunes to its local top-k per
     * key, so a hot key ships at most k rows per map partition and the
     * final per-key sort sees <= k x #partitions rows, never the whole
-    * group. Measured against the [[capPerKeyAgg]] alternative at sf0.1:
+    * group. Measured against a bounded-aggregate alternative at sf0.1:
     * identical shuffle bytes, window ~1.6x faster (codegen'd vs udaf
     * object path). See SCALING.md "Top-k-per-key: window vs aggregate". */
   def capPerKey(df: DataFrame, keyCol: String, idCol: String, k: Int): DataFrame = {
@@ -104,45 +104,6 @@ object Downsample {
     val w = Window.partitionBy(col(keyCol)).orderBy(h.asc, col(idCol).asc)
     df.withColumn("sample_rank", row_number().over(w))
       .where(col("sample_rank") <= k)
-  }
-
-  /** [[capPerKey]] with the selection computed as a bounded-memory bottom-k
-    * AGGREGATION (functions.BottomKPairsAgg, O(k) buffer, map-side partial
-    * merge) followed by a join-back for the payload columns. Same rows,
-    * same `sample_rank`, different physical shape: the hot-key bound comes
-    * from the k-slot agg buffer instead of WindowGroupLimit pruning, and
-    * only (hash, id) pairs ride the agg — the payload never enters the
-    * capped stage. Prefer [[capPerKey]] (measured faster on Spark 4, whose
-    * group-limit pushdown already bounds the window's shuffle); this
-    * variant is for engines without that rule, or callers that only need
-    * the keeper id set (skip the join-back). `idCol` must be integral. The
-    * join-back is left unhinted: AQE broadcasts the keeper side when small
-    * and falls back to a shuffle join when key-count x k is itself huge
-    * (10M domains x k=20 = 200M keepers would OOM a forced broadcast). */
-  def capPerKeyAgg(df: DataFrame, keyCol: String, idCol: String, k: Int): DataFrame = {
-    // enforce the integral-id precondition instead of trusting the caller:
-    // a string id would cast(LongType) to NULL silently, and the <=>
-    // join-back would then match every capped row against every NULL-id
-    // input row — wrong rows, no error
-    val idType = df.schema(idCol).dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
-      s"capPerKeyAgg: idCol '$idCol' must be integral (byte/short/int/long), " +
-        s"got $idType — use capPerKey for non-integral ids")
-    val h = TextOps.hash64(concat(lit("cap#"), col(idCol).cast(StringType)))
-    val keep = df
-      .select(col(keyCol), h.as("hv"), col(idCol).cast(LongType).as("idv"))
-      .groupBy(keyCol)
-      .agg(graft.functions.BottomKPairsAgg
-        .bottomK(col("hv"), col("idv"), k).as("keep"))
-      .select(col(keyCol).as("cap_key"),
-        posexplode(col("keep")).as(Seq("pos", "p")))
-      .select(col("cap_key"), col("p._2").as("cap_id"),
-        (col("pos") + 1).cast(IntegerType).as("sample_rank"))
-    // null-safe equality: a NULL key forms a normal window partition in
-    // capPerKey, so the join-back must not drop the NULL-key group
-    df.join(keep,
-        df(keyCol) <=> keep("cap_key") && col(idCol) <=> keep("cap_id"))
-      .drop("cap_key", "cap_id")
   }
 
   /** Budget-constrained corpus selection: keep the BEST documents until a
@@ -192,10 +153,10 @@ object Downsample {
     * the main pass read it instead of each recomputing the caller's score
     * expression — 3 corpus scans become 1 + cache reads, the dominant
     * saving when the score is expensive (regex quality scores). Opt-in
-    * and session-owned, the [[graft.dedup.Dedup.minhashLsh]] contract:
-    * the cached frame is not reachable from the result, so nothing can
-    * unpersist it after return — long-running sessions batching many
-    * corpora should keep the default or clearCache() between batches.
+    * and session-owned: the cached frame is not reachable from the
+    * result, so nothing can unpersist it after return — long-running
+    * sessions batching many corpora should keep the default or
+    * clearCache() between batches.
     * Callers that already hold the scored projection cached (q120 folds
     * its budget aggregate into the same cache) should pass false. */
   def selectWithinBudget(df: DataFrame, idCol: String, scoreCol: String,
@@ -309,10 +270,10 @@ object Downsample {
     * order), a window keyed by (key, bucket) — parallelism keys x
     * buckets — and a (key, bucket) count table turned into per-key rank
     * offsets + quotas by a window over ~buckets rows per key. The
-    * offsets join is left UNHINTED (the capPerKeyAgg rationale): AQE
-    * broadcasts it while keys x buckets is small; at 10M keys a forced
-    * broadcast would OOM the driver, and the SMJ fallback reuses the
-    * (key, bucket) partitioning the main branch already has.
+    * offsets join is left UNHINTED: AQE broadcasts it while keys x
+    * buckets is small; at 10M keys a forced broadcast would OOM the
+    * driver, and the SMJ fallback reuses the (key, bucket) partitioning
+    * the main branch already has.
     *
     * `persistIntermediate` materializes the null-filtered input once so
     * the quantile sketch, offsets aggregate and main pass share it

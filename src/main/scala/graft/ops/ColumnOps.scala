@@ -126,50 +126,12 @@ object ColumnOps {
     * is pinned to an explicit natural-key ordering via `row_number`.
     *
     * SCALE NOTE: a single unpartitioned window is a global sort onto one
-    * task — correct and fine for dimension tables (<10M rows). For
-    * fact-scale keys use [[factSurrogateKey]] instead.
+    * task — correct and fine for dimension tables (<10M rows), the only
+    * tables that carry a positional key. The fact's positional key in the
+    * reference (ET:314) is the delay foreign key, which
+    * [[graft.fact.FlightFact]] recovers by a value join (SURVEY.md J6).
     */
   def withSurrogateKey(df: DataFrame, keyName: String, orderBy: Column*): DataFrame =
     df.withColumn(keyName,
       row_number().over(Window.orderBy(orderBy: _*)).cast(LongType) - 1)
-
-  /** Fact-scale surrogate key: `zipWithIndex` semantics — dense ids in
-    * partition-major order without a global sort — but expressed entirely
-    * in Catalyst so the frame never leaves columnar/whole-stage-codegen
-    * execution (the previous `df.rdd.zipWithIndex` round-tripped every row
-    * through RDD `Row` objects):
-    *  - `monotonically_increasing_id()` encodes (partition << 33 | local
-    *    row number) — partition-local order, no shuffle;
-    *  - a one-row-per-partition count aggregate + running-sum window (tiny:
-    *    #partitions rows on one task) yields each partition's global
-    *    offset;
-    *  - a broadcast join on the partition id adds the offset back.
-    * Like zipWithIndex, this runs two passes over the input and the ids
-    * depend on the physical partitioning — pin the input (cache or stable
-    * scan) if the exact ids must be reproducible across runs.
-    *
-    * WARNING — the input's partitioning must be STABLE ACROSS CONSUMERS,
-    * i.e. a file scan or a cached/checkpointed frame, never directly atop
-    * a fresh Exchange: AQE may coalesce the offsets pass's read of that
-    * shuffle and not the main pass's (AQEShuffleRead is per consuming
-    * stage), `spark_partition_id()` then disagrees between the passes,
-    * and the inner offsets join silently DROPS the partitions one side
-    * no longer sees. Caught live by the scale rehearsal (5000 rows ->
-    * 157) when an early deterministicShuffle draft fed it a
-    * repartitionByRange output; that operator now derives ranks from the
-    * data instead ([[graft.operators.Packing.deterministicShuffle]]). */
-  def factSurrogateKey(df: DataFrame, keyName: String): DataFrame = {
-    val local = df
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__rid",
-        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
-    val offsets = local.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
-      .withColumn("__offset", coalesce(
-        sum(col("__cnt")).over(Window.orderBy("__pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__pid", "__offset")
-    local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(keyName, col("__offset") + col("__rid"))
-      .drop("__pid", "__rid", "__offset")
-  }
 }

@@ -48,10 +48,6 @@ object Quality {
     val name = s"${col0}_matches"
     def violations: Column = count(when(!col(col0).rlike(regex), 1))
   }
-  final case class InSet(col0: String, values: Seq[Any]) extends Rule {
-    val name = s"${col0}_in_set"
-    def violations: Column = count(when(!col(col0).isin(values: _*), 1))
-  }
   /** Custom predicate rule — `pred` marks VALID rows. */
   final case class Satisfies(name: String, pred: Column) extends Rule {
     def violations: Column = count(when(!pred, 1))

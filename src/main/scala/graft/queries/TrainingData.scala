@@ -2587,8 +2587,8 @@ object TrainingData {
     // random total order + round-robin shard assignment for training-data
     // layout. NOT a global row_number window on the Spark side — a range
     // exchange orders partitions, each sorts locally, and the dense rank
-    // is partition offset + local position (factSurrogateKey's two-pass
-    // offset pattern); the md5 sort key makes any doc's position
+    // is partition offset + local position (a two-pass offset pattern);
+    // the md5 sort key makes any doc's position
     // re-derivable from (seed, id) by any engine.
     Q("q118_deterministic_shuffle",
       (s, dir) => graft.operators.Packing.deterministicShuffle(

@@ -147,22 +147,24 @@ object Similarity {
       .select("query_id", "rank", "neighbor_id", "sim")
   }
 
-  /** Uniform scalar quantization of an embedding to `levels` integer codes
-    * (int8-style compression: 4x smaller than float32, the standard storage
-    * format for 100 TB embedding corpora). Range is per-vector [min,max];
-    * codes are exact integers, so results are engine-portable with no float
-    * summation anywhere. `floor` (not `round`) keeps the half-boundary
-    * behavior identical across engines; `least` absorbs the x == max case
-    * where (x-lo)/scale lands on `levels` up to float error. A constant
-    * vector (hi == lo) maps to all-zero codes — the division lives inside
-    * the guarded CaseWhen branch, which Spark evaluates lazily. */
-  def quantizeUniform(vec: Column, levels: Int = 256): Column = {
+  /** Uniform scalar quantization of an embedding to 256 integer codes,
+    * 0..255 (int8-style compression: 4x smaller than float32, the standard
+    * storage format for 100 TB embedding corpora). Range is per-vector
+    * [min,max]; codes are exact integers, so results are engine-portable
+    * with no float summation anywhere. `floor` (not `round`) keeps the
+    * half-boundary behavior identical across engines; `least` absorbs the
+    * x == max case where (x-lo)/scale lands on 256 up to float error. A
+    * constant vector (hi == lo) maps to all-zero codes — the division
+    * lives inside the guarded CaseWhen branch, which Spark evaluates
+    * lazily. */
+  def quantizeUniform(vec: Column): Column = {
+    val top = 255L
     val lo = array_min(vec).cast(DoubleType)
     val hi = array_max(vec).cast(DoubleType)
-    val scale = (hi - lo) / lit((levels - 1).toDouble)
+    val scale = (hi - lo) / lit(top.toDouble)
     transform(vec, x =>
       when(hi > lo,
-        least(lit((levels - 1).toLong), floor((x.cast(DoubleType) - lo) / scale)))
+        least(lit(top), floor((x.cast(DoubleType) - lo) / scale)))
         .otherwise(lit(0L)))
   }
 

@@ -120,16 +120,6 @@ object Sources {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
 
-  /** ORC scan with explicit schema — same no-inference rule as [[json]];
-    * ORC is the other columnar interchange format warehouses exchange
-    * (predicate pushdown and column pruning work as for parquet). */
-  def orc(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).orc(path)
-
-  /** ORC sink. */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
-
   /** Binary-file ingestion for multimodal corpora: each file under `dir`
     * matching `glob` becomes one row of (media_id, kind, content) — the
     * input shape of [[graft.multimodal.Multimodal.withMetadata]] and the
@@ -163,10 +153,6 @@ object Sources {
       .option("batchsize", "10000")
     props.foldLeft(w) { case (acc, (k, v)) => acc.option(k, v) }
   }
-
-  /** S7 — catalog metadata (reference queried INFORMATION_SCHEMA.TABLES,
-    * dags/test_connection.py:16-21). */
-  def listTables(spark: SparkSession): DataFrame = spark.sql("SHOW TABLES")
 
   /** Small-file compaction: rewrite a FLAT parquet directory into files of
     * ~`targetFileBytes` (sized from the CURRENT on-disk bytes, so the

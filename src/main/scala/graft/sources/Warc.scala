@@ -227,11 +227,12 @@ object Warc {
     * splittable (no block index), so the unit of parallelism is the FILE
     * — the standard crawl-job shape (Common Crawl ships ~64k ~1 GiB
     * segments per monthly crawl precisely so file-level parallelism
-    * saturates any cluster). `.gz` members concatenate transparently
-    * (JDK GZIPInputStream reads record-per-member archives end to end). */
+    * saturates any cluster): one partition per file, at most
+    * `defaultParallelism` partitions. `.gz` members concatenate
+    * transparently (JDK GZIPInputStream reads record-per-member archives
+    * end to end). */
   def warcRecords(spark: SparkSession, dir: String,
-                  maxPayloadBytes: Int = 1 << 20,
-                  parallelism: Int = 0): DataFrame = {
+                  maxPayloadBytes: Int = 1 << 20): DataFrame = {
     require(maxPayloadBytes > 0, s"maxPayloadBytes: $maxPayloadBytes")
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
@@ -250,9 +251,8 @@ object Warc {
     val files = buf.sorted.toSeq
     require(files.nonEmpty, s"no .warc/.warc.gz files under $dir")
     import spark.implicits._
-    val n = if (parallelism > 0) parallelism
-      else math.max(1, math.min(files.length,
-        spark.sparkContext.defaultParallelism))
+    val n = math.max(1, math.min(files.length,
+      spark.sparkContext.defaultParallelism))
     val bc = spark.sparkContext.broadcast(conf)
     spark.createDataset(files).repartition(n)
       .mapPartitions { paths =>

@@ -29,14 +29,18 @@ object EventStreams {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
+  /** Event-time watermark of every windowed, deduplicating and joining
+    * stream below: how late an event may arrive and still count. */
+  private val Watermark = "2 hours"
+
   /** Streaming source over a parquet directory of event files. */
   def readEvents(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(eventSchema).parquet(dir)
 
   /** Event-time hourly counts per type with a watermark bounding state. */
-  def hourlyCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+  def hourlyCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("hour_ts"), col("event_type"),
@@ -45,9 +49,9 @@ object EventStreams {
   /** Sliding event-time windows (1h length, 15m slide): each event lands in
     * 4 overlapping windows; watermark bounds the open-window state. The
     * streaming twin of the batch q81 sliding aggregation. */
-  def slidingCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+  def slidingCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
       .groupBy(window(col("ts"), "1 hour", "15 minutes"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("w_start"), col("n"), col("sum_value"))
@@ -82,16 +86,15 @@ object EventStreams {
     * bounded state on BOTH sides regardless of stream volume (without the
     * interval bound a stream-stream join must hold one side forever).
     * The attribution-window join every event pipeline needs. */
-  def viewPurchaseAttribution(events: DataFrame,
-                              watermark: String = "2 hours"): DataFrame = {
+  def viewPurchaseAttribution(events: DataFrame): DataFrame = {
     val views = events.where(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("view_ts"),
         col("event_id").as("view_id"))
-      .withWatermark("view_ts", watermark)
+      .withWatermark("view_ts", Watermark)
     val purchases = events.where(col("event_type") === "purchase")
       .select(col("user_id").as("p_user_id"), col("ts").as("purchase_ts"),
         col("event_id").as("purchase_id"), col("value"))
-      .withWatermark("purchase_ts", watermark)
+      .withWatermark("purchase_ts", Watermark)
     views.join(purchases,
       col("user_id") === col("p_user_id") &&
         col("purchase_ts") >= col("view_ts") &&
@@ -104,9 +107,9 @@ object EventStreams {
     * the watermark horizon (`dropDuplicatesWithinWatermark`) — the streaming
     * twin of exact dedup (q30): at-least-once upstream delivery becomes
     * exactly-once content downstream, without unbounded key state. */
-  def dedupped(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+  def dedupped(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
   // ---- Custom state: gap-based session windows -----------------------
@@ -125,11 +128,10 @@ object EventStreams {
     * timeout against the watermark — kept timeout-free here so an
     * AvailableNow drain terminates deterministically).
     */
-  def sessionizeStateful(spark: SparkSession, events: DataFrame,
-                         gapMinutes: Long = 30): DataFrame = {
+  def sessionizeStateful(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val gapUs = gapMinutes * 60L * 1000000L
+    val gapUs = 30L * 60L * 1000000L
 
     // java.sql.Timestamp: getTime is ms; microseconds live in getNanos.
     def toUs(t: java.sql.Timestamp): Long =
@@ -337,21 +339,17 @@ object EventStreams {
     * signature index accretes — [[processDedupAdmissionBatch]] wired into
     * `foreachBatch` with `Trigger.AvailableNow`. Decisions land at
     * `decisionsPath` (idCol, dup_of_index, dup_of_batch, keep, batch_id);
-    * downstream consumers filter `keep`. */
+    * downstream consumers filter `keep`. The gate runs at the batch
+    * operator's default LSH shape and maintains no component labels. */
   def dedupAdmissionSink(docs: DataFrame, indexPath: String,
                          decisionsPath: String, idCol: String = "doc_id",
-                         textCol: String = "text", shingleN: Int = 3,
-                         numHashes: Int = 16, bands: Int = 4,
-                         broadcastDelta: Boolean = true,
-                         probeParts: Int = -1,
-                         labelsPath: Option[String] = None): StreamingQuery =
+                         textCol: String = "text"): StreamingQuery =
     docs.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processDedupAdmissionBatch(batch, batchId, indexPath, decisionsPath,
-          idCol, textCol, shingleN, numHashes, bands, broadcastDelta,
-          probeParts, labelsPath)
+          idCol, textCol)
       }
       .start()
 
@@ -364,8 +362,8 @@ object EventStreams {
     *     against everything admitted before it (exactly-once under
     *     redelivery via the batch_id index prune + dynamic overwrite);
     *  2. admitted docs pass the quality gate
-    *     ([[graft.text.TextOps.qualityScore]] > `minQuality` — the q85
-    *     funnel's predicate);
+    *     ([[graft.text.TextOps.qualityScore]] > 0.5 — the q85 funnel's
+    *     predicate);
     *  3. survivors get their train/val/test split via the fingerprint
     *     form of [[graft.operators.Downsample.leakageSafeSplit]] keyed on
     *     the CONTENT fingerprint (md5 of text), not the doc id: the split of
@@ -399,21 +397,17 @@ object EventStreams {
   def processCurationBatch(batch: DataFrame, batchId: Long,
                            indexPath: String, decisionsPath: String,
                            keptPath: String, idCol: String = "doc_id",
-                           textCol: String = "text",
-                           minQuality: Double = 0.5,
-                           shingleN: Int = 3, numHashes: Int = 16,
-                           bands: Int = 4,
-                           broadcastDelta: Boolean = true): Unit = {
+                           textCol: String = "text"): Unit = {
     val spark = batch.sparkSession
     processDedupAdmissionBatch(batch, batchId, indexPath, decisionsPath,
-      idCol, textCol, shingleN, numHashes, bands, broadcastDelta)
+      idCol, textCol)
     val admitted = spark.read.parquet(decisionsPath)
       .where(col("batch_id") === batchId && col("keep"))
       .select(col(idCol))
       .join(batch, Seq(idCol))
     val stop = graft.text.TextOps.langStopwords.head._2
     val quality = admitted
-      .where(graft.text.TextOps.qualityScore(col(textCol), stop) > minQuality)
+      .where(graft.text.TextOps.qualityScore(col(textCol), stop) > 0.5)
     // leakageSafeSplit's fingerprint form, inlined map-side: with an
     // (id, md5(text)) component map every doc HAS a component, so the
     // operator's coalesce(component, id) is just the fingerprint and the

@@ -120,21 +120,17 @@ object HtmlOps {
     * [[htmlToText]] pipeline over what survives — so entity decoding
     * and whitespace rules stay identical to the plain extractor.
     *
-    * A block survives when its collapsed visible text is at least
-    * `minChars` AND its link density is at most `maxLinkDensity`. Nav
-    * bars and sidebars die by density, copyright lines and bare
-    * headings by length — both documented trade-offs of every
-    * density-based extractor (a genuinely short first paragraph dies
-    * too, and `<br>` is a boundary, so a poem of short `<br>`-separated
-    * lines fragments below `minChars`; tune per corpus). Comments/
+    * A block survives when its collapsed visible text is at least 20
+    * characters AND its link density is at most 0.4. Nav bars and
+    * sidebars die by density, copyright lines and bare headings by
+    * length — both documented trade-offs of every density-based extractor
+    * (a genuinely short first paragraph dies too, and `<br>` is a
+    * boundary, so a poem of short `<br>`-separated lines fragments below
+    * the length floor). Comments/
     * scripts/styles are stripped BEFORE segmentation so script text can
     * never score as content. */
   def extractMainText(df: DataFrame, htmlCol: String,
-                      outCol: String = "main_text",
-                      minChars: Int = 20,
-                      maxLinkDensity: Double = 0.4): DataFrame = {
-    require(minChars >= 0 && maxLinkDensity >= 0 && maxLinkDensity <= 1,
-      s"minChars=$minChars maxLinkDensity=$maxLinkDensity")
+                      outCol: String = "main_text"): DataFrame = {
     Seq(outCol, "__mc_html").foreach(c =>
       require(!df.columns.contains(c),
         s"HtmlOps.extractMainText: df already has a '$c' column — rename " +
@@ -160,14 +156,19 @@ object HtmlOps {
       val linkLen = length(trim(regexp_replace(linkTxt, "\\s+", " ")))
       val textLen = length(trim(regexp_replace(nonLinkTxt, "\\s+", " ")))
       val total = linkLen + textLen
-      total >= minChars &&
-        linkLen.cast("double") <= lit(maxLinkDensity) * total
+      total >= MinBlockChars &&
+        linkLen.cast("double") <= lit(MaxLinkDensity) * total
     })
     htmlToText(
       df.withColumn("__mc_html", array_join(kept, " ")),
       "__mc_html", outCol)
       .drop("__mc_html")
   }
+
+  /** [[extractMainText]]'s block thresholds: the least visible text a
+    * block keeps, and the largest share of it that may be anchor text. */
+  private val MinBlockChars = 20
+  private val MaxLinkDensity = 0.4
 
   /** Anchor-text capture for [[extractMainText]]'s density score. */
   private def expr_extract_links(b: Column): Column =
@@ -187,8 +188,8 @@ object HtmlOps {
   /** Deterministic boilerplate-heavy pages from an id column — the
     * test/demo source for [[extractMainText]]: a title and heading that
     * die by LENGTH, a nav bar and a link-farm sidebar that die by
-    * DENSITY (their absolute text is above minChars — only the density
-    * rule removes them), two real content paragraphs that survive (the
+    * DENSITY (their absolute text is above the length floor — only the
+    * density rule removes them), two real content paragraphs that survive (the
     * second with an inline link below the density threshold, proving
     * density is a ratio, not a link ban), and a short footer. The q148
     * oracle rebuilds the expected extracted text as id arithmetic. */

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused A/B query timer — the attribution tool behind BASELINE.md's
   * "code-attributable vs window-attributable" calls: run a handful of
   * named SparkEntry queries min-of-N with per-query clearCache, so two
@@ -29,16 +27,15 @@ object QuickBench {
     val runs = if (args.length > 2 && args(2) != "explain")
       args(2).toInt else 3
     val explain = args.length > 2 && args(2) == "explain"
-    // Graft.configure: probes must run under the graded surface's exact
+    // Graft.session: probes must run under the graded surface's exact
     // session config — notably the STATIC codegen-cache sizing, silently
     // ignored if set after getOrCreate (r20 advisor fix).
-    // SPARK_GRAFT_CPUS (default 32) mirrors Bench's core-count contract
-    // so low-vs-high-core scaling pairs can be measured on a subset
-    // without paying a full-suite run (the r20 sf1.0 scaling exhibit).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Graft.configure(SparkSession.builder()
-      .appName("graft-quickbench").master(s"local[$cpus]"), cpus.toInt)
-      .getOrCreate()
+    // SPARK_GRAFT_CPUS (default 4, as in Bench and Verify) mirrors Bench's
+    // core-count contract so low-vs-high-core scaling pairs can be
+    // measured on a subset without paying a full-suite run (the r20 sf1.0
+    // scaling exhibit).
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = graft.Graft.session(cpus.toInt)
     // SPARK_GRAFT_MAXPART (optional): shrink the input split size so a
     // single small rehearsal parquet scans as MANY tasks — the local
     // emulation of a corpus-scale scan (where splits number in the

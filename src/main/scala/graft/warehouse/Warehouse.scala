@@ -27,12 +27,11 @@ object Warehouse {
     * memoized one ([[Sources.events]]), so no call after a session's first
     * reads a parquet footer. Memoized per (session, dir): repeated calls
     * from the same session skip re-resolving the 10 views. A different dir
-    * always re-registers.
-    * Callers that shadowed or dropped one of these views must pass
-    * `force = true` to restore them — the memo cannot see catalog edits. */
-  def registerTestdata(spark: SparkSession, sfDir: String,
-                       force: Boolean = false): Unit = {
-    if (force || testdataDirs.get(spark) != sfDir) {
+    * always re-registers. The memo cannot see catalog edits: a view that a
+    * caller shadows or drops stays so until the session registers another
+    * dir. */
+  def registerTestdata(spark: SparkSession, sfDir: String): Unit = {
+    if (testdataDirs.get(spark) != sfDir) {
       Schemas.testdata.keys.foreach { t =>
         Sources.table(spark, sfDir, t).createOrReplaceTempView(t)
       }
@@ -42,14 +41,11 @@ object Warehouse {
     }
   }
 
-  /** Register curated star-schema tables from a directory of parquet, each
-    * read with its declared schema ([[Schemas.star]]): no parquet footer is
-    * read to infer it, so registering starts no Spark job. */
-  def registerStar(spark: SparkSession, dir: String,
-                   tables: Seq[String] = Schemas.star.keys.toSeq): Unit =
-    tables.foreach { t =>
-      val schema = Schemas.star.getOrElse(t,
-        throw new IllegalArgumentException(s"$t is not a star-schema table"))
+  /** Register the curated star-schema tables from a directory of parquet,
+    * each read with its declared schema ([[Schemas.star]]): no parquet
+    * footer is read to infer it, so registering starts no Spark job. */
+  def registerStar(spark: SparkSession, dir: String): Unit =
+    Schemas.star.foreach { case (t, schema) =>
       spark.read.schema(schema).parquet(s"$dir/$t").createOrReplaceTempView(t)
     }
 

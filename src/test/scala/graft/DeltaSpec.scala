@@ -45,15 +45,6 @@ class DeltaSpec extends SparkSpec {
     assert(Incremental.delta(orders, orders).isEmpty)
   }
 
-  test("partition-pruned delta equals plain delta on touched keys") {
-    val orders = Sources.table(spark, sf, "orders")
-    val acc = orders.where("o_orderkey % 4 <> 1")
-    val inc = orders.where("o_orderkey % 2 = 1")
-    val plain = Incremental.delta(inc, acc)
-    val pruned = Incremental.deltaPartitionPruned(inc, acc, "o_orderstatus")
-    assert(plain.exceptAll(pruned).isEmpty && pruned.exceptAll(plain).isEmpty)
-  }
-
   test("upsertByKey: CDC feed with several versions per key keeps only the latest") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -85,11 +85,4 @@ class OpsSpec extends SparkSpec {
       .as[(String, Long)].collect()
     assert(keyed === Seq(("a", 0L), ("b", 1L), ("c", 2L)))
   }
-
-  test("factSurrogateKey assigns unique dense ids at any partitioning") {
-    val df = spark.range(0, 1000).repartition(7).toDF("v")
-    val keyed = factSurrogateKey(df, "rid")
-    assert(keyed.select("rid").distinct().count() === 1000)
-    assert(keyed.agg(min("rid"), max("rid")).head === Row(0L, 999L))
-  }
 }

@@ -91,17 +91,6 @@ class PropertySpec extends SparkSpec {
     assert(bad.isEmpty)
   }
 
-  test("P20 fact surrogate keys: dense ids regardless of partition count") {
-    val p = Prop.forAll(Gen.choose(1, 8), Gen.choose(1L, 500L)) { (parts, n) =>
-      val keyed = ColumnOps.factSurrogateKey(
-        spark.range(0, n).repartition(parts).toDF("x"), "id")
-      keyed.agg(count_distinct(col("id")), max(col("id")))
-        .head match { case Row(distinct: Long, mx: Long) =>
-          distinct == n && mx == n - 1 }
-    }
-    check(p, n = 8)
-  }
-
   test("banded simhash == all-pairs for ANY legal (bits, maxHamming)") {
     import spark.implicits._
     // fixed deterministic signature table; the property quantifies over the

@@ -27,35 +27,4 @@ class TopKAggSpec extends SparkSpec {
     assert(r("a").toSeq === Seq(5.0, 5.0, 1.0))
     assert(r("b").toSeq === Seq(2.0))
   }
-
-  test("capPerKeyAgg equals capPerKey (rows AND sample_rank) at any partitioning") {
-    import graft.operators.Downsample
-    val docs = Sources.table(spark, sf, "documents").select("doc_id", "source")
-    val viaWindow = Downsample.capPerKey(docs, "source", "doc_id", 5)
-      .select("source", "doc_id", "sample_rank")
-    val viaAgg = Downsample.capPerKeyAgg(docs.repartition(7), "source", "doc_id", 5)
-      .select("source", "doc_id", "sample_rank")
-    assert(viaAgg.exceptAll(viaWindow).isEmpty && viaWindow.exceptAll(viaAgg).isEmpty)
-  }
-
-  test("capPerKeyAgg rejects non-integral id columns") {
-    import graft.operators.Downsample
-    // a string id would cast(Long) to NULL silently and the null-safe
-    // join-back would return wrong rows — must fail fast instead
-    val docs = Seq(("web", "a1"), ("web", "b2")).toDF("source", "sid")
-    val e = intercept[IllegalArgumentException] {
-      Downsample.capPerKeyAgg(docs, "source", "sid", 1)
-    }
-    assert(e.getMessage.contains("must be integral"))
-  }
-
-  test("BottomKPairsAgg keeps the k lexicographically-smallest pairs") {
-    val df = Seq(("a", 3L, 30L), ("a", 1L, 10L), ("a", 1L, 5L), ("a", 2L, 20L),
-      ("b", 9L, 1L)).toDF("g", "hv", "id")
-    val r = df.repartition(3).groupBy("g")
-      .agg(graft.functions.BottomKPairsAgg.bottomK($"hv", $"id", 2).as("k"))
-      .as[(String, Array[(Long, Long)])].collect().toMap
-    assert(r("a").toSeq === Seq((1L, 5L), (1L, 10L)))
-    assert(r("b").toSeq === Seq((9L, 1L)))
-  }
 }
