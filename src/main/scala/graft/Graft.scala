@@ -57,6 +57,15 @@ object Graft {
     * (Dedup.connectedComponents and its incremental form,
     * RedirectResolve, Bpe.learnMerges).
     *
+    * LIFETIME: the snapshot's blocks belong to the returned frame. They
+    * live while that frame (or any plan built on it) is reachable, and
+    * Spark's ContextCleaner frees them once it is not. A snap registers
+    * nothing in the session's CacheManager, so `Dataset.unpersist()`
+    * neither sees nor frees it (a loop that must free a round early
+    * unpersists the snapshot's RDD, as the CC loop does), and nothing
+    * outlives the frame — which is why query bodies and operators share
+    * frames with snap, never with `persist`.
+    *
     * Mode is session-wide via `graft.checkpoint.reliable` (default
     * false): executor-local checkpoint blocks are fast but have NO
     * replicas — at 1000-executor scale, losing one executor

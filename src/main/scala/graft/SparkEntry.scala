@@ -19,16 +19,7 @@ object SparkEntry {
     spark.sql(Relational.sqlQ3)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2.
-    *
-    * CACHE CONTRACT: a few queries persist a query-level intermediate
-    * (MEMORY_AND_DISK) that the returned plan still references — q120's
-    * and q126's scored/vocabulary projections — so they cannot unpersist
-    * before returning. Harnesses that run many queries on one session
-    * (Verify, Bench) call `spark.catalog.clearCache()` between queries;
-    * a long-lived session composing query fns should do the same (or
-    * unpersist after consuming each result) or those entries accumulate,
-    * one corpus-sized cache entry per invocation. */
+  /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     suites.map(q => q.name -> q.run).toMap
 

@@ -21,9 +21,6 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // session-owned caches (q120/q122/q126) must not accumulate
-        // across the suite — same hygiene as Bench's measured loop
-        spark.sharedState.cacheManager.clearCache()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -719,9 +719,7 @@ object Dedup {
     // land in that round's id set, and get freed after round 1 — every
     // later round would then recompute the union+distinct from the pairs
     // input. (The id-set diffing assumes this loop is the only code
-    // persisting RDDs on the session during the rounds — the same
-    // session-owned-cache assumption as sourceOverlapMatrix's cached
-    // vocabulary.)
+    // persisting RDDs on the session during the rounds.)
     edges.count()
     onEdgesMaterialized()
     val before0 = persistedIds
@@ -789,8 +787,8 @@ object Dedup {
           s"connectedComponents: not converged after maxIter=$maxIter rounds; " +
             "rounds needed ~ log2(largest component diameter) — raise maxIter")
       }
-      // the final round's blocks stay persisted — they back the returned
-      // frame; callers free them like any cached result
+      // the final round's snapshot backs the returned frame; its blocks
+      // live as long as that frame (see Graft.snap)
       labels.select(col("id"), col("label").as("component"))
     } finally edges.unpersist()
   }
@@ -1578,20 +1576,18 @@ object Dedup {
     * decision and exactly replayable cross-engine (the [[TextOps.hash64]]
     * md5 arithmetic); pass `hashShingles = false` for exact
     * string-keyed counts when the vocabulary fits the wire (tests pin
-    * both paths equal on collision-free corpora). `persistIntermediate`
-    * materializes the (stratum, key) vocabulary once for the self-join's
-    * two branches + the size aggregate; the cache is session-owned (not
-    * reachable from the result, so nothing can unpersist it after
-    * return). Unlike the pair-join family, caching wins here even on
-    * SMALL corpora — the recomputed subtree is the full tokenize+explode
-    * +distinct, 3x per call (measured at 5k docs/sf0.1: 2.66 s
-    * recomputed vs 2.10 s cached steady-state, 8.1 vs 3.7 cold) — so
-    * set it whenever the session owns its cache; the default stays
-    * false only for the session-owned-cache caveat. */
+    * both paths equal on collision-free corpora).
+    *
+    * EAGER: the (stratum, key) vocabulary is a [[graft.Graft.snap]],
+    * so the call itself runs one job, and the self-join's two branches
+    * and the size aggregate read that one materialization. Unlike the
+    * pair-join family, materializing wins here even on SMALL corpora —
+    * the recomputed subtree is the full tokenize+explode+distinct, 3x
+    * per call (measured at 5k docs/sf0.1: 2.66 s recomputed vs 2.10 s
+    * materialized once). */
   def sourceOverlapMatrix(docs: DataFrame, textCol: String,
                           strataCol: String, n: Int,
-                          hashShingles: Boolean = true,
-                          persistIntermediate: Boolean = false): DataFrame = {
+                          hashShingles: Boolean = true): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val toks = col("__ov_toks")
     val grams = transform(
@@ -1607,9 +1603,7 @@ object Dedup {
         (if (hashShingles) TextOps.hash64(col("__ov_sh"))
          else col("__ov_sh")).as("__ov_k"))
       .distinct()
-    val vocab = if (persistIntermediate)
-      keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else keyed
+    val vocab = Graft.snap(keyed)
     val sizes = vocab.groupBy(col("__ov_stratum")).agg(count(lit(1)).as("n_sh"))
     val inter = vocab.select(col("__ov_stratum").as("stratum_a"), col("__ov_k"))
       .join(vocab.select(col("__ov_stratum").as("stratum_b"), col("__ov_k")),

@@ -148,32 +148,21 @@ object Downsample {
     * column-pruned offsets branch — measured 14 s vs 0.5 s at sf0.1 for
     * a regex-heavy quality score (64 cuts = 64 regex passes per row).
     *
-    * `persistIntermediate` materializes the null-filtered input once
-    * (MEMORY_AND_DISK) so the quantile sketch, the offsets aggregate and
-    * the main pass read it instead of each recomputing the caller's score
-    * expression — 3 corpus scans become 1 + cache reads, the dominant
-    * saving when the score is expensive (regex quality scores). Opt-in
-    * and session-owned: the cached frame is not reachable from the
-    * result, so nothing can unpersist it after return — long-running
-    * sessions batching many corpora should keep the default or
-    * clearCache() between batches.
-    * Callers that already hold the scored projection cached (q120 folds
-    * its budget aggregate into the same cache) should pass false. */
+    * The quantile sketch, the offsets aggregate and the main pass each
+    * read `df`: a caller whose score expression is expensive (regex
+    * quality scores) passes a [[graft.Graft.snap]] of its scored
+    * projection, so the corpus is scored once (q120). */
   def selectWithinBudget(df: DataFrame, idCol: String, scoreCol: String,
                          costCol: String, budget: Long,
-                         buckets: Int = 64,
-                         persistIntermediate: Boolean = false): DataFrame = {
+                         buckets: Int = 64): DataFrame = {
     require(budget >= 0, s"budget must be nonnegative, got $budget")
     require(buckets >= 1 && buckets <= 65536,
       s"buckets must be in [1, 65536], got $buckets")
     Seq("sel_rank", "cum_cost").foreach(c => require(!df.columns.contains(c),
       s"Downsample.selectWithinBudget: df already has a '$c' column — " +
         "rename it first; selectWithinBudget appends its own"))
-    val scored0 = df.where(col(scoreCol).isNotNull && col(costCol).isNotNull &&
+    val scored = df.where(col(scoreCol).isNotNull && col(costCol).isNotNull &&
       !isnan(col(scoreCol).cast("double")))
-    val scored = if (persistIntermediate)
-      scored0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else scored0
     val bucketed = scored.withColumn("__bsel_bucket",
       scoreBucket(scored, scoreCol, buckets))
     val withinW = Window.partitionBy("__bsel_bucket")
@@ -275,14 +264,11 @@ object Downsample {
     * driver, and the SMJ fallback reuses the (key, bucket) partitioning
     * the main branch already has.
     *
-    * `persistIntermediate` materializes the null-filtered input once so
-    * the quantile sketch, offsets aggregate and main pass share it
-    * instead of re-evaluating the score expression per branch — same
-    * contract and session-owned-cache caveat as [[selectWithinBudget]]. */
+    * As in [[selectWithinBudget]], the three passes each read `df`: snap
+    * an expensive scored projection before the call (q122). */
   def topFractionPerKey(df: DataFrame, keyCol: String, idCol: String,
                         scoreCol: String, fracBp: Int,
-                        buckets: Int = 64,
-                        persistIntermediate: Boolean = false): DataFrame = {
+                        buckets: Int = 64): DataFrame = {
     require(fracBp >= 0 && fracBp <= 10000,
       s"fracBp must be basis points in [0, 10000], got $fracBp")
     require(buckets >= 1 && buckets <= 65536,
@@ -290,11 +276,8 @@ object Downsample {
     require(!df.columns.contains("quality_rank"),
       "Downsample.topFractionPerKey: df already has a 'quality_rank' " +
         "column — rename it first; topFractionPerKey appends its own")
-    val scored0 = df.where(col(scoreCol).isNotNull &&
+    val scored = df.where(col(scoreCol).isNotNull &&
       !isnan(col(scoreCol).cast("double")))
-    val scored = if (persistIntermediate)
-      scored0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else scored0
     val bucketed = scored.withColumn("__tf_bucket",
       scoreBucket(scored, scoreCol, buckets))
     val withinW = Window.partitionBy(col(keyCol), col("__tf_bucket"))

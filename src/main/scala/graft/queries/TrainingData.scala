@@ -683,13 +683,9 @@ object TrainingData {
     // most |sources| rows per key. The oracle replays the hash64
     // arithmetic; long/long division is IEEE double in both engines so
     // jaccard/containment hash-gate exactly.
-    // persistIntermediate: the vocabulary subtree (tokenize + explode +
-    // distinct) feeds both self-join branches and the size aggregate —
-    // measured 2.66 -> 2.10 s at sf0.1 when materialized once.
     Q("q126_source_overlap_matrix",
       (s, dir) => Dedup.sourceOverlapMatrix(
-          t(s, dir, "documents"), "text", "source", 3,
-          persistIntermediate = true)
+          t(s, dir, "documents"), "text", "source", 3)
         .orderBy("stratum_a", "stratum_b"),
       Some("""WITH d AS (
              |  SELECT source, regexp_split_to_array(lower(trim(text)), '\s+') AS toks
@@ -1159,19 +1155,15 @@ object TrainingData {
     // a one-row aggregate collected driver-side — the absolute-budget
     // API ("2e12 tokens") is the operator's; only this query derives it
     // from the corpus. The scored (id, score, cost) projection is
-    // PERSISTED at query level so the budget aggregate, the operator's
-    // quantile sketch, its offsets aggregate and its main pass all read
-    // one materialization instead of four regex-scoring corpus scans
-    // (operator persistIntermediate stays false — its filtered frame is
-    // a subtree of this cache, and a second persist would double-store);
-    // CacheManager matches the cached subtree across all four plans.
+    // snapped so the budget aggregate, the operator's quantile sketch,
+    // its offsets aggregate and its main pass all read one
+    // materialization instead of four regex-scoring corpus scans.
     Q("q120_budget_selection",
       (s, dir) => {
-        val d = t(s, dir, "documents").select(col("doc_id"),
+        val d = graft.Graft.snap(t(s, dir, "documents").select(col("doc_id"),
           TextOps.qualityScore(col("text"), enStop).as("quality_score"),
           TextOps.tokenCountWs(col("text")).cast(LongType).as("n_tokens"))
-          .where(col("quality_score").isNotNull)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .where(col("quality_score").isNotNull))
         val budget = d.agg(sum("n_tokens")).head().getLong(0) / 2
         graft.operators.Downsample.selectWithinBudget(
             d, "doc_id", "quality_score", "n_tokens", budget)
@@ -1207,17 +1199,17 @@ object TrainingData {
     // at the identical rank; the operator ranks via (key, score-bucket)
     // windows + per-key offsets, the oracle as the single per-key window
     // it semantically is. quality_score doubles are bit-identical (q38).
-    // persistIntermediate: the operator's three passes (sketch, offsets,
-    // main) share one materialization of the regex-scored projection
-    // instead of re-scoring the corpus per branch.
+    // The scored projection is snapped so the operator's three passes
+    // (sketch, offsets, main) share one materialization instead of
+    // re-scoring the corpus per branch.
     Q("q122_top_fraction_per_source",
       (s, dir) => {
-        val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
+        val d = graft.Graft.snap(t(s, dir, "documents").select(col("doc_id"),
+          col("source"),
           TextOps.qualityScore(col("text"), enStop).as("quality_score"))
-          .where(col("quality_score").isNotNull)
+          .where(col("quality_score").isNotNull))
         graft.operators.Downsample.topFractionPerKey(
-            d, "source", "doc_id", "quality_score", 3000,
-            persistIntermediate = true)
+            d, "source", "doc_id", "quality_score", 3000)
           .select("source", "doc_id", "quality_score", "quality_rank")
           .orderBy("source", "doc_id")
       },

@@ -257,13 +257,14 @@ object Bpe {
       }
       .toDF("cnt", "toks")
       .persist(lvl)
-    val nTypes = hist.count()
-    val learned =
-      if (nTypes <= maxDriverTypes)
+    // unpersist in finally: a failed merge loop must not leave the
+    // cached histogram in the session
+    val learned = try {
+      if (hist.count() <= maxDriverTypes)
         learnMergesLocal(
           hist.as[(Long, Array[String])].collect(), k)
       else learnMergesDistributed(hist, k)
-    hist.unpersist()
+    } finally hist.unpersist()
     learned.toDF("rank", "left_tok", "right_tok", "pair_count")
   }
 

@@ -148,33 +148,37 @@ object HashClassifier {
       .toDF("y", "toks")
       .where(size(col("toks")) > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = docs.count()
-    require(n > 0, "fitLogistic: no non-empty documents to train on")
-    var w = Map.empty[String, Long]
-    for (_ <- 1 to epochs) {
-      val bc = spark.sparkContext.broadcast(w)
-      val grad = docs.as[(Long, Seq[String])]
-        .flatMap { case (y, toks) =>
-          val wm = bc.value
-          var z = 0L
-          toks.foreach(t => z += wm.getOrElse(t, 0L))
-          val p = math.max(0L,
-            math.min(1000L, 500L + Math.floorDiv(z, 4L)))
-          val err = y - p
-          toks.iterator.map(t => (t, err))
-        }
-        .toDF("tok", "err")
-        .groupBy("tok").agg(sum("err").as("g"))
-        .as[(String, Long)]
-        .collect() // vocab-bounded by construction
-      w = grad.map { case (t, gt) =>
-        t -> (w.getOrElse(t, 0L) +
-          Math.floorDiv(lrNum * gt, 1000L * n))
-      }.toMap
-      bc.destroy()
-    }
-    docs.unpersist()
-    w.toSeq.map { case (t, v) => (t, Math.toIntExact(v)) }
+    // unpersist in finally: the empty-corpus require (or a failed epoch)
+    // must not leave the cached docs in the session
+    val weights = try {
+      val n = docs.count()
+      require(n > 0, "fitLogistic: no non-empty documents to train on")
+      var w = Map.empty[String, Long]
+      for (_ <- 1 to epochs) {
+        val bc = spark.sparkContext.broadcast(w)
+        val grad = docs.as[(Long, Seq[String])]
+          .flatMap { case (y, toks) =>
+            val wm = bc.value
+            var z = 0L
+            toks.foreach(t => z += wm.getOrElse(t, 0L))
+            val p = math.max(0L,
+              math.min(1000L, 500L + Math.floorDiv(z, 4L)))
+            val err = y - p
+            toks.iterator.map(t => (t, err))
+          }
+          .toDF("tok", "err")
+          .groupBy("tok").agg(sum("err").as("g"))
+          .as[(String, Long)]
+          .collect() // vocab-bounded by construction
+        w = grad.map { case (t, gt) =>
+          t -> (w.getOrElse(t, 0L) +
+            Math.floorDiv(lrNum * gt, 1000L * n))
+        }.toMap
+        bc.destroy()
+      }
+      w
+    } finally docs.unpersist()
+    weights.toSeq.map { case (t, v) => (t, Math.toIntExact(v)) }
       .toDF("token", "milli_weight").orderBy("token")
   }
 

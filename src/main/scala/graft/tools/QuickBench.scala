@@ -2,10 +2,9 @@ package graft.tools
 
 /** Focused A/B query timer — the attribution tool behind BASELINE.md's
   * "code-attributable vs window-attributable" calls: run a handful of
-  * named SparkEntry queries min-of-N with per-query clearCache, so two
-  * BUILDS (e.g. the previous round's HEAD in a scratch `git worktree`
-  * vs the current HEAD) can be measured back-to-back in the SAME
-  * ambient window. The full Bench harness answers "how fast is the
+  * named SparkEntry queries min-of-N, so two BUILDS (e.g. the previous
+  * round's HEAD in a scratch `git worktree` vs the current HEAD) can be
+  * measured back-to-back in the SAME ambient window. The full Bench harness answers "how fast is the
   * suite"; this answers "did THIS diff move THIS query" without paying
   * for 157 queries per build. Absolute values are NOT comparable to
   * Bench's (no suite-wide JIT warmup); only same-harness ratios are.
@@ -54,7 +53,6 @@ object QuickBench {
         fn(spark, sfDir).explain("formatted")
       } else {
       val times = (1 to runs).map { _ =>
-        spark.catalog.clearCache()
         val t0 = System.nanoTime()
         fn(spark, sfDir).collect()
         (System.nanoTime() - t0) / 1e9

@@ -1122,42 +1122,6 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
-  test("exact-rank operators: persistIntermediate is result-identical " +
-      "and the passes read the cache") {
-    import spark.implicits._
-    val d = graft.sources.Sources.table(spark, sf, "documents")
-      .select(col("doc_id"), col("source"),
-        TextOps.qualityScore(col("text"), TextOps.langStopwords.head._2)
-          .as("score"),
-        TextOps.tokenCountWs(col("text")).cast("long").as("cost"))
-      .where(col("score").isNotNull)
-    try {
-      val budget = d.agg(sum("cost")).head.getLong(0) / 3
-      val want = Downsample
-        .selectWithinBudget(d, "doc_id", "score", "cost", budget)
-        .select("doc_id", "sel_rank", "cum_cost")
-        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-      val cachedSel = Downsample.selectWithinBudget(
-        d, "doc_id", "score", "cost", budget, persistIntermediate = true)
-      assert(cachedSel.select("doc_id", "sel_rank", "cum_cost")
-        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq === want)
-      // the main pass must actually READ the materialized intermediate —
-      // otherwise the flag silently degrades to the 3-scan shape
-      assert(cachedSel.queryExecution.executedPlan.toString
-        .contains("InMemoryTableScan"))
-      val wantTf = Downsample
-        .topFractionPerKey(d, "source", "doc_id", "score", 3000)
-        .select("doc_id", "quality_rank")
-        .as[(Long, Long)].collect().sortBy(_._1).toSeq
-      val cachedTf = Downsample.topFractionPerKey(d, "source", "doc_id",
-        "score", 3000, persistIntermediate = true)
-      assert(cachedTf.select("doc_id", "quality_rank")
-        .as[(Long, Long)].collect().sortBy(_._1).toSeq === wantTf)
-      assert(cachedTf.queryExecution.executedPlan.toString
-        .contains("InMemoryTableScan"))
-    } finally spark.sharedState.cacheManager.clearCache()
-  }
-
   test("sourceOverlapMatrix: mirror and subset sources, hash==string path") {
     import spark.implicits._
     // srcA: two docs with vocab {a b c, b c d, p q r}; srcB mirrors srcA
@@ -1196,14 +1160,23 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("sourceOverlapMatrix plan: hashed keys on the wire, unhinted joins") {
     import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.types.{LongType, StringType}
     val docs = Seq((1L, "A", "a b c d"), (2L, "B", "a b c"))
       .toDF("doc_id", "source", "text")
-    val plan = graft.dedup.Dedup
-      .sourceOverlapMatrix(docs, "text", "source", 3)
-      .queryExecution.optimizedPlan.toString
-    // the self-join key must be the 60-bit hash (conv/md5 arithmetic),
-    // never the shingle string — strings on the wire is the scale bug
-    assert(plan.contains("conv(substring(md5("), plan.take(2000))
+    def optimized(hashShingles: Boolean) = graft.dedup.Dedup
+      .sourceOverlapMatrix(docs, "text", "source", 3, hashShingles)
+      .queryExecution.optimizedPlan
+    // the self-join key must be the 60-bit hash, never the shingle string
+    // — strings on the wire is the scale bug. The md5 arithmetic sits
+    // below the vocabulary's snapshot, so the key's type is what shows it.
+    def keyTypes(p: LogicalPlan) = p.collect { case j: Join => j }
+      .flatMap(_.condition.toSeq.flatMap(_.references))
+      .filter(_.name == "__ov_k").map(_.dataType).distinct
+    val hashed = optimized(hashShingles = true)
+    val plan = hashed.toString
+    assert(keyTypes(hashed) === Seq(LongType), plan.take(2000))
+    assert(keyTypes(optimized(hashShingles = false)) === Seq(StringType))
     // no broadcast HINT anywhere: AQE must stay free to pick SMJ when
     // the vocabulary outgrows the broadcast frame — ResolvedHint in the
     // optimized plan would pin it

@@ -10,12 +10,18 @@ class EntrySmokeSpec extends SparkSpec {
   }
 
   test("every query runs and returns rows at sf0.001") {
-    val empties = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    // and leaves no CacheManager entry behind: a query body shares frames
+    // through Graft.snap, whose blocks go with the returned frame
+    val (empties, caching) = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
+        val before = cacheEntries
         val n = fn(spark, sf).count()
-        if (n == 0) Some(name) else None
-    }
-    assert(empties.isEmpty, s"queries with 0 rows: $empties")
+        (Option.when(n == 0)(name),
+          Option.when(cacheEntries > before)(name))
+    }.unzip
+    assert(empties.flatten.isEmpty, s"queries with 0 rows: ${empties.flatten}")
+    assert(caching.flatten.isEmpty,
+      s"queries that leave a cache entry: ${caching.flatten}")
   }
 
   test("oracle coverage: every query name has an oracle entry") {

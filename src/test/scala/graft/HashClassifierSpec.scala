@@ -115,12 +115,16 @@ class HashClassifierSpec extends SparkSpec {
       HashClassifier.fitLogistic(df, "text", "label", epochs = 2)
         .as[(String, Int)].collect().sortBy(_._1).toSeq
     assert(fit(withBlank) === fit(base))
-    // only empty docs: nothing to train on — loud, not a NaN fit
+    // only empty docs: nothing to train on — loud, not a NaN fit, and
+    // the refusal leaves no cached docs in the session
+    val before = cacheEntries
     intercept[IllegalArgumentException] {
       HashClassifier.fitLogistic(
         Seq((true, "  "), (false, "")).toDF("label", "text"),
         "text", "label")
     }
+    assert(cacheEntries <= before,
+      s"fitLogistic left ${cacheEntries - before} cache entries")
   }
 
   test("fitLogistic is deterministic across repartitionings and " +

@@ -35,6 +35,14 @@ abstract class SparkSpec extends AnyFunSuite {
     finally s.close()
   }
 
+  /** Entries in the session's CacheManager: what `persist`/`cache`
+    * registered and nothing has unpersisted. `numCachedEntries` is
+    * package-private in Scala source but public in bytecode. */
+  def cacheEntries: Int = {
+    val cm = spark.sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
   /** Spark jobs that `body` starts, counted by a listener: `body` runs
     * under a job group of its own, and a marker job started after it
     * drains the listener bus (events arrive in order). */
